@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
 
   /** The one-line bench protocol artifact. The driver parses it out of a
@@ -57,22 +56,10 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // events.ts is a NAIVE parquet timestamp: without the UTC pin a
-      // non-UTC JVM would shift every event instant and bench a
-      // different workload than the one Verify checks
-      .config("spark.sql.session.timeZone", "UTC")
-      // default true (the 100 TB posture); toggle for overhead A/B runs
-      .config("spark.sql.adaptive.enabled",
-        sys.env.getOrElse("SPARK_GRAFT_AQE", "true"))
-      // storage-partitioned joins over bucketed DirSink zones
-      // (q_dsv2_spj must bench the shuffle-free plan, not the fallback)
-      .config("spark.sql.sources.v2.bucketing.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // events.ts is a NAIVE parquet timestamp: Sessions.local pins UTC, so
+    // the bench runs the same workload Verify checks; it also enables the
+    // storage-partitioned joins q_dsv2_spj must bench shuffle-free
+    val spark = Sessions.local(cpus.toInt)
     // Every unpartitioned window in the registry rides a provably
     // bounded relation (limit-100 rank lists, per-language / per-digit
     // / per-bucket counts, d-row iterate vectors — each site carries a
@@ -81,16 +68,6 @@ object Bench {
     // tail stays clean without hiding real warnings elsewhere.
     org.apache.logging.log4j.core.config.Configurator.setLevel(
       "org.apache.spark.sql.execution.window.WindowExec",
-      org.apache.logging.log4j.Level.ERROR)
-    // every query fn re-registers the graft SQL functions idempotently
-    // over the extension-injected set, so SimpleFunctionRegistry logs
-    // ~810 "replaced a previously registered function" WARN lines per
-    // bench run — pure noise that lands in the driver's bounded stdout
-    // tail capture right next to the protocol JSON line; drop that one
-    // logger to ERROR so the tail stays clean (same posture as the
-    // WindowExec suppression above, r16 VERDICT item 6)
-    org.apache.logging.log4j.core.config.Configurator.setLevel(
-      "org.apache.spark.sql.catalyst.analysis.SimpleFunctionRegistry",
       org.apache.logging.log4j.Level.ERROR)
     // JVM/codegen warmup so the first timed query doesn't absorb
     // session bring-up (~3s); standard bench practice, not query work.

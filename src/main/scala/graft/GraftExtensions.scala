@@ -1,13 +1,15 @@
 package graft
 
-import org.apache.spark.sql.SparkSessionExtensions
+import org.apache.spark.SPARK_DOC_ROOT
+import org.apache.spark.sql.{AnalysisException, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
-import graft.functions.{BloomKeysAgg, BloomMightContain, BpeTokens, CmsEstimate, CosineSimilarity, IntersectSize, KmvDistinct, MinHashSig, ShingleHashes, SimHash16, VectorFunctions}
+import graft.functions._
+import graft.functions.VectorFunctions._
 
 /** SparkSessionExtensions hook: makes the engine's native functions
   * available SQL-wide via `spark.sql.extensions=graft.GraftExtensions`
-  * (no per-session registration call needed), and injects the
+  * (every session from [[Sessions.local]] carries it), and injects the
   * [[graft.plans.RangeBinJoinRule]] optimizer rule (fixed-width interval
   * joins → binned equi-joins; kill-switch
   * `spark.graft.binRangeJoin.enabled=false`). */
@@ -23,61 +25,36 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       new ExpressionInfo(graft.plans.TableChanges.getClass.getName,
         graft.plans.TableChanges.Name),
       (exprs: Seq[Expression]) => graft.plans.TableChanges.plan(exprs)))
-    e.injectFunction((
-      FunctionIdentifier(VectorFunctions.COSINE),
-      new ExpressionInfo(classOf[CosineSimilarity].getName,
-        VectorFunctions.COSINE),
-      (exprs: Seq[Expression]) => CosineSimilarity(exprs(0), exprs(1))))
-    e.injectFunction((
-      FunctionIdentifier(VectorFunctions.SHINGLE_HASHES),
-      new ExpressionInfo(classOf[ShingleHashes].getName,
-        VectorFunctions.SHINGLE_HASHES),
-      (exprs: Seq[Expression]) => ShingleHashes(exprs(0))))
-    e.injectFunction((
-      FunctionIdentifier(VectorFunctions.MINHASH_SIG),
-      new ExpressionInfo(classOf[MinHashSig].getName,
-        VectorFunctions.MINHASH_SIG),
-      (exprs: Seq[Expression]) => MinHashSig(exprs(0))))
-    e.injectFunction((
-      FunctionIdentifier(VectorFunctions.SIMHASH),
-      new ExpressionInfo(classOf[SimHash16].getName,
-        VectorFunctions.SIMHASH),
-      (exprs: Seq[Expression]) => SimHash16(exprs(0))))
-    e.injectFunction((
-      FunctionIdentifier(VectorFunctions.INTERSECT_SIZE),
-      new ExpressionInfo(classOf[IntersectSize].getName,
-        VectorFunctions.INTERSECT_SIZE),
-      (exprs: Seq[Expression]) => IntersectSize(exprs(0), exprs(1))))
-    e.injectFunction((
-      FunctionIdentifier(VectorFunctions.KMV_DISTINCT),
-      new ExpressionInfo(classOf[KmvDistinct].getName,
-        VectorFunctions.KMV_DISTINCT),
-      (exprs: Seq[Expression]) => KmvDistinct(exprs.head)))
-    e.injectFunction((
-      FunctionIdentifier(VectorFunctions.BPE_TOKENS),
-      new ExpressionInfo(classOf[BpeTokens].getName,
-        VectorFunctions.BPE_TOKENS),
-      (exprs: Seq[Expression]) => BpeTokens(exprs.head)))
-    e.injectFunction((
-      FunctionIdentifier(VectorFunctions.CMS_ESTIMATE),
-      new ExpressionInfo(classOf[CmsEstimate].getName,
-        VectorFunctions.CMS_ESTIMATE),
-      (exprs: Seq[Expression]) => CmsEstimate(exprs(0), exprs(1))))
-    e.injectFunction((
-      FunctionIdentifier(VectorFunctions.BLOOM_AGG),
-      new ExpressionInfo(classOf[BloomKeysAgg].getName,
-        VectorFunctions.BLOOM_AGG),
-      (exprs: Seq[Expression]) => BloomKeysAgg(exprs.head)))
-    e.injectFunction((
-      FunctionIdentifier(VectorFunctions.BLOOM_CONTAINS),
-      new ExpressionInfo(classOf[BloomMightContain].getName,
-        VectorFunctions.BLOOM_CONTAINS),
-      (exprs: Seq[Expression]) => BloomMightContain(exprs(0), exprs(1))))
-    e.injectFunction((
-      FunctionIdentifier(VectorFunctions.ARGMAX_VEC),
-      new ExpressionInfo(classOf[graft.functions.ArgmaxVec].getName,
-        VectorFunctions.ARGMAX_VEC),
-      (exprs: Seq[Expression]) =>
-        graft.functions.ArgmaxVec(exprs(0), exprs(1), exprs(2))))
+    GraftExtensions.functions.foreach { case (name, cls, arity, build) =>
+      e.injectFunction((FunctionIdentifier(name),
+        new ExpressionInfo(cls.getName, name),
+        (exprs: Seq[Expression]) =>
+          if (exprs.length == arity) build(exprs)
+          else throw new AnalysisException("WRONG_NUM_ARGS.WITHOUT_SUGGESTION",
+            Map("functionName" -> s"`$name`", "expectedNum" -> arity.toString,
+              "actualNum" -> exprs.length.toString,
+              "docroot" -> SPARK_DOC_ROOT))))
+    }
   }
+}
+
+object GraftExtensions {
+
+  /** The native SQL functions: name, expression class, argument count,
+    * builder. The builder only sees argument lists of the declared
+    * length; any other count fails analysis with WRONG_NUM_ARGS. */
+  private val functions: Seq[(String, Class[_], Int, Seq[Expression] => Expression)] =
+    Seq(
+      (COSINE, classOf[CosineSimilarity], 2, a => CosineSimilarity(a(0), a(1))),
+      (SHINGLE_HASHES, classOf[ShingleHashes], 1, a => ShingleHashes(a(0))),
+      (MINHASH_SIG, classOf[MinHashSig], 1, a => MinHashSig(a(0))),
+      (SIMHASH, classOf[SimHash16], 1, a => SimHash16(a(0))),
+      (INTERSECT_SIZE, classOf[IntersectSize], 2, a => IntersectSize(a(0), a(1))),
+      (KMV_DISTINCT, classOf[KmvDistinct], 1, a => KmvDistinct(a(0))),
+      (BPE_TOKENS, classOf[BpeTokens], 1, a => BpeTokens(a(0))),
+      (CMS_ESTIMATE, classOf[CmsEstimate], 2, a => CmsEstimate(a(0), a(1))),
+      (BLOOM_AGG, classOf[BloomKeysAgg], 1, a => BloomKeysAgg(a(0))),
+      (BLOOM_CONTAINS, classOf[BloomMightContain], 2,
+        a => BloomMightContain(a(0), a(1))),
+      (ARGMAX_VEC, classOf[ArgmaxVec], 3, a => ArgmaxVec(a(0), a(1), a(2))))
 }

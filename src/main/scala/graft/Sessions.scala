@@ -7,7 +7,9 @@ import org.apache.spark.sql.SparkSession
   * config). Two profiles:
   *
   *  - [[local]]: single-JVM development/verification — shuffle partitions
-  *    sized to cores (never the 200 default), UTC, AQE on.
+  *    sized to cores (never the 200 default), UTC, AQE on, the
+  *    [[GraftExtensions]] installed. The only session builder: every main
+  *    and the test suites take their session from it.
   *  - [[clusterConf]]: the config pairs a 100 TB deployment starts from —
   *    AQE (coalesce + skew-join), broadcast threshold, shuffle
   *    compression; returned as data so the caller's spark-submit owns the

@@ -31,8 +31,8 @@ private[graft] final class ArgmaxVecBuf(
   * DeclarativeAggregate whose buffer type is immutable, so planning
   * falls back to `SortAggregateExec` — a full sort of the N·C (or
   * N·M·K) joined relation with the vector re-materialized into a fresh
-  * struct for EVERY input row (AnnBisect: +1.1 s over the bare
-  * join+cosine at sf0.1, vs +0.04 s for the scalar argmax). This
+  * struct for EVERY input row (OPTIMIZATION_r17.md V3: +1.1 s over the
+  * bare join+cosine at sf0.1, vs +0.04 s for the scalar argmax). This
   * TypedImperativeAggregate runs in `ObjectHashAggregateExec`
   * (hash-grouped, no sort), compares only the two scalars, and copies
   * the array only when the running maximum improves.

@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -99,9 +99,9 @@ case class CosineSimilarity(left: Expression, right: Expression)
     copy(left = newLeft, right = newRight)
 }
 
-/** Registration + Column-level API for the native functions. Register via
-  * [[VectorFunctions.register]] or session-wide with
-  * `spark.sql.extensions=graft.GraftExtensions`. */
+/** Names + Column-level API for the native functions, which
+  * [[graft.GraftExtensions]] installs session-wide
+  * (`spark.sql.extensions=graft.GraftExtensions`). */
 object VectorFunctions {
   val COSINE = "graft_cosine"
   val SHINGLE_HASHES = "graft_shingle_hashes"
@@ -115,36 +115,10 @@ object VectorFunctions {
   val BLOOM_CONTAINS = "graft_bloom_contains"
   val ARGMAX_VEC = "graft_argmax_vec"
 
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction(
-      COSINE, exprs => CosineSimilarity(exprs(0), exprs(1)), "built-in")
-    reg.createOrReplaceTempFunction(
-      SHINGLE_HASHES, exprs => ShingleHashes(exprs(0)), "built-in")
-    reg.createOrReplaceTempFunction(
-      MINHASH_SIG, exprs => MinHashSig(exprs(0)), "built-in")
-    reg.createOrReplaceTempFunction(
-      SIMHASH, exprs => SimHash16(exprs(0)), "built-in")
-    reg.createOrReplaceTempFunction(
-      INTERSECT_SIZE, exprs => IntersectSize(exprs(0), exprs(1)), "built-in")
-    reg.createOrReplaceTempFunction(
-      KMV_DISTINCT, exprs => KmvDistinct(exprs.head), "built-in")
-    reg.createOrReplaceTempFunction(
-      BPE_TOKENS, exprs => BpeTokens(exprs.head), "built-in")
-    reg.createOrReplaceTempFunction(
-      CMS_ESTIMATE, exprs => CmsEstimate(exprs(0), exprs(1)), "built-in")
-    reg.createOrReplaceTempFunction(
-      BLOOM_AGG, exprs => BloomKeysAgg(exprs.head), "built-in")
-    reg.createOrReplaceTempFunction(
-      BLOOM_CONTAINS, exprs => BloomMightContain(exprs(0), exprs(1)), "built-in")
-    reg.createOrReplaceTempFunction(
-      ARGMAX_VEC, exprs => ArgmaxVec(exprs(0), exprs(1), exprs(2)), "built-in")
-  }
-
   /** BPE token array of a cleaned-word column. */
   def bpeTokens(word: Column): Column = call_function(BPE_TOKENS, word)
 
-  /** Fused cosine similarity column (requires [[register]] on the session). */
+  /** Fused cosine similarity column. */
   def cosine(a: Column, b: Column): Column = call_function(COSINE, a, b)
 
   /** Hash-grouped argmax carrying a vector payload by reference — the

@@ -689,7 +689,6 @@ object Layouts extends QueryModule {
     * type gate) while vec_id/label still skip. */
   private def qDsv2EmbedStore(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    graft.functions.VectorFunctions.register(s)
     val path = s"${layoutRoot(dir)}/embed_dirsink"
     if (!graft.sources.v2.DirSink.zoneFormat(path)
         .contains(graft.sources.v2.DirSink.FormatParquet)) {

@@ -462,7 +462,6 @@ object MlOps extends QueryModule {
     * label asc, best-rank) — fully ordered, no float comparison. */
   private def qKnnClassify(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    graft.functions.VectorFunctions.register(s)
     val emb = t(s, dir, "embeddings")
     val cand = emb.select($"vec_id".as("cid"), $"embedding".as("ce"),
       $"label".as("clabel"))
@@ -640,7 +639,6 @@ object MlOps extends QueryModule {
     * IVF/LSH index family with identical declared semantics. */
   private def qNdcg(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    graft.functions.VectorFunctions.register(s)
     val emb = t(s, dir, "embeddings")
     val labelCnt = emb.groupBy($"label").agg(count(lit(1)).as("n_label"))
     val qs = emb.filter($"vec_id" % 20 === 0)

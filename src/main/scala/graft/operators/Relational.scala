@@ -355,7 +355,6 @@ object Relational extends QueryModule {
     * exact ≤ estimate ≤ exact + εN with the same-seed sketch. */
   private def qAggCms(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    graft.functions.VectorFunctions.register(s)
     val sk = t(s, dir, "documents")
       .select(explode(split(lower($"text"), " ")).as("tok"))
       .filter(length($"tok") > 0)
@@ -395,7 +394,6 @@ object Relational extends QueryModule {
     * unlike HLL (A4). Exact count included for calibration. */
   private def qAggKmv(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    graft.functions.VectorFunctions.register(s)
     t(s, dir, "lineitem")
       .groupBy($"l_returnflag")
       .agg(
@@ -957,7 +955,6 @@ object Relational extends QueryModule {
     * `graft_bloom_contains` (functions/BloomFilterOps.scala) make it a
     * first-class user-directed operator. */
   private def qJoinBloom(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.VectorFunctions.register(s)
     t(s, dir, "customer").createOrReplaceTempView("bl_customer")
     t(s, dir, "orders").createOrReplaceTempView("bl_orders")
     s.sql(

@@ -42,7 +42,6 @@ object Similarity extends QueryModule {
     * subset (vec_id % 100 = 0). Query set broadcasts; candidates stream. */
   private def qSimilarityTopk(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    graft.functions.VectorFunctions.register(s)
     val cand = Tables.load(s, dir, "embeddings")
       .select($"vec_id".as("cid"), $"embedding".as("ce"))
     val qs = Tables.load(s, dir, "embeddings").filter($"vec_id" % 100 === 0)
@@ -183,7 +182,6 @@ object Similarity extends QueryModule {
     * lesson. */
   private def qBitextMine(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    graft.functions.VectorFunctions.register(s)
     val n = Tables.load(s, dir, "embeddings")
     val a = n.select($"vec_id".as("aid"), $"label", $"embedding".as("ae"))
       .filter($"aid" % 2 === 0)
@@ -246,7 +244,6 @@ object Similarity extends QueryModule {
     * from the raw embeddings. */
   private def qBitextMineIndexed(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    graft.functions.VectorFunctions.register(s)
     val (_, cells, _, _) = annIndex(s, dir)
     val n = Tables.load(s, dir, "embeddings")
       .join(cells.select($"vec_id", $"cell"), Seq("vec_id"))
@@ -279,7 +276,6 @@ object Similarity extends QueryModule {
     * measures the FIX, not just the failure. */
   private def qBitextPipeline(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    graft.functions.VectorFunctions.register(s)
     val raw = Tables.load(s, dir, "embeddings")
     val keep = raw.groupBy($"embedding").agg(min($"vec_id").as("vec_id"))
       .select($"vec_id")
@@ -312,7 +308,6 @@ object Similarity extends QueryModule {
     * declared semantics, indexed candidate generation. */
   private def qHardNegatives(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    graft.functions.VectorFunctions.register(s)
     val cand = Tables.load(s, dir, "embeddings")
       .select($"vec_id".as("cid"), $"label".as("clabel"),
         $"embedding".as("ce"))
@@ -374,7 +369,6 @@ object Similarity extends QueryModule {
   private[graft] def lshRankedOn(s: SparkSession, vin: DataFrame,
                                  bits: Int): DataFrame = {
     import s.implicits._
-    graft.functions.VectorFunctions.register(s)
     val v = vin.withColumn("bucket", bucketExpr(bits))
     val cand = v.select($"vec_id".as("cid"), $"embedding".as("ce"),
       $"bucket".as("cb"))
@@ -474,7 +468,6 @@ object Similarity extends QueryModule {
     * bit-equal to `aggregate(zip_with)` and DuckDB `list_dot_product`). */
   private[graft] def ivfVectors(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    graft.functions.VectorFunctions.register(s)
     Tables.load(s, dir, "embeddings")
       .select($"vec_id", transform($"embedding", _.cast("double")).as("e"))
   }
@@ -743,9 +736,7 @@ object Similarity extends QueryModule {
   private[graft] val PqDefaultM = 16
   private[graft] val PqDefaultK = 64
 
-  // private[graft] so measurement tools (AnnBisect, ArgmaxAb) time the
-  // REAL training chain instead of a hand-kept replica (r16 ADVICE)
-  private[graft] def pqTrain(nmAll: DataFrame, k: Int = PqDefaultK): DataFrame = {
+  private def pqTrain(nmAll: DataFrame, k: Int = PqDefaultK): DataFrame = {
     val s = nmAll.sparkSession; import s.implicits._
     // Seed selection orders by md5(vec_id) — INDEPENDENT of m — so the
     // per-m top-k rows are the same k vec_ids in the same order for
@@ -829,8 +820,9 @@ object Similarity extends QueryModule {
     val nmF = graft.Exec.fanOut(nmAll)
     // NOT sealed: both consumers below (assign join + query lookup
     // join) embed the training chain in their own broadcast, but
-    // r17 SealAb pairs measured the eager checkpoint a WASH at 32
-    // cores and a consistent LOSS on q_ann_ivfpq at 8 (the duplicate
+    // r17 single-JVM A/B pairs (OPTIMIZATION_r17.md V2, item 2)
+    // measured the eager checkpoint a WASH at 32 cores and a
+    // consistent LOSS on q_ann_ivfpq at 8 (the duplicate
     // broadcast builds overlap on idle cores, while the checkpoint
     // action serializes the query) — the r16 q_collocations lesson
     // again. Duplicated-at-scale training is instead bounded by the
@@ -1264,16 +1256,16 @@ object Similarity extends QueryModule {
     * nearest-frozen-centroid cosine vs the base generation's, above
     * which the frozen cell boundaries have demonstrably skewed and the
     * operator should retrain ([[annIndexBuild]] at a new content-keyed
-    * root). The value is MEASURED, not folklore (AnnDriftSpec +
-    * tools.DriftProbe on the planted-cluster fixture the recall gates
-    * use): an in-distribution append reads |drift| ≈ 0.0001 — held-out
+    * root). The value is MEASURED, not folklore (AnnDriftSpec + the
+    * planted-cluster probe recorded in PLANS.md, "Round-15: measured ANN
+    * retrain trigger"): an in-distribution append reads |drift| ≈ 0.0001 — held-out
     * noise around the base's mean, because the CLUSTER structure, not
     * the training sample, owns the centroid positions — while an
     * append from clusters the training never saw reads 0.65, an order
     * of magnitude past this line; 0.05 splits the regimes with wide
     * margin on both sides. Honesty: on a STRUCTURELESS corpus the
     * statistic reads ~0.17 even in-distribution (C=√N cells fit noise,
-    * so the training mean is selection optimism — DriftProbe prints
+    * so the training mean is selection optimism — PLANS.md records
     * that row labeled); operationally still the right verdict, since
     * an index over noise has no recall to protect. The OTHER trigger
     * (cumulative delta fraction > 20% of base) is [[annIndexDrift]]'s
@@ -1395,7 +1387,6 @@ object Similarity extends QueryModule {
     * block (a < b, cosine ≥ 0.4). Blocking key = label. */
   private def qDedupEmbedding(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    graft.functions.VectorFunctions.register(s)
     val a = Tables.load(s, dir, "embeddings").select($"vec_id".as("a"), $"label",
       $"embedding".as("ae"))
     val b = Tables.load(s, dir, "embeddings").select($"vec_id".as("b"), $"label",
@@ -1482,7 +1473,6 @@ object Similarity extends QueryModule {
     * no N×L product — each vector meets exactly its own centroid. */
   private def qEmbedCoherence(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    graft.functions.VectorFunctions.register(s)
     val n = Tables.load(s, dir, "embeddings")
       .select($"vec_id", $"label",
         transform($"embedding", _.cast("double")).as("e"))
@@ -1510,7 +1500,6 @@ object Similarity extends QueryModule {
     * any collision is replayed bit-for-bit by the oracle. */
   private def shingleHashed(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    graft.functions.VectorFunctions.register(s)
     Tables.load(s, dir, "documents")
       .select($"doc_id", $"source",
         graft.functions.VectorFunctions.shingleHashes($"text").as("hs"))
@@ -1860,7 +1849,6 @@ object Similarity extends QueryModule {
     * the collision groups (same simhash = near-dup cluster). */
   private def qDedupSimhash(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    graft.functions.VectorFunctions.register(s)
     Tables.load(s, dir, "documents")
       .withColumn("simhash", graft.functions.VectorFunctions.simhash($"text"))
       .groupBy($"simhash")

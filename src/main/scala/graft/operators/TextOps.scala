@@ -242,7 +242,6 @@ object TextOps extends QueryModule {
 
   private def qTokenBpe(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    graft.functions.VectorFunctions.register(s)
     val vocab = BPE_VOCAB.toDF("token_id", "token")
     // fanOut: the per-word BPE merge loop is the heaviest projection in
     // TextOps and the fixture scan plans one partition (profiled: a
@@ -278,7 +277,6 @@ object TextOps extends QueryModule {
     * which would shuffle fact-sized state for a docs-sized answer. */
   private def qTokenizerFertility(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    graft.functions.VectorFunctions.register(s)
     // (measured: fanOut here regresses ~0.15 s — the 5-row rollup's
     // map-side combine is cheaper from one partition than 32 tiny tasks)
     val perLang = docs(s, dir)

@@ -1,6 +1,5 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.Inner
 import org.apache.spark.sql.catalyst.plans.logical._
@@ -52,14 +51,6 @@ import org.apache.spark.sql.types.{IntegerType, LongType}
 object RangeBinJoinRule extends Rule[LogicalPlan] with PredicateHelper {
 
   private val FLAG = "spark.graft.binRangeJoin.enabled"
-
-  /** Install on a live session (for sessions built without
-    * `spark.sql.extensions=graft.GraftExtensions`). Idempotent. */
-  def install(spark: SparkSession): Unit =
-    if (!spark.experimental.extraOptimizations.contains(this)) {
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ this
-    }
 
   /** One inequality conjunct, read as a bound on `point`: lower means
     * `point >= base + off`, upper means `point < base + off` (strictness

@@ -38,7 +38,7 @@ import org.apache.spark.sql.types.StructType
   * keeps small zones on the loop: a Spark job costs ~100 ms fixed,
   * the loop ~10 µs/entry — the crossover sits around 10⁴–10⁵ entries
   * and the default is deliberately above it (never slower in the
-  * common case; [[graft.tools.PruneProbe]] measures both curves).
+  * common case; PLANS.md "Round-14 wave 4" records both curves).
   */
 object DirSinkPrune {
 

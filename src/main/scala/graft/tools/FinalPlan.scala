@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Prints the POST-EXECUTION adaptive plan of a declared query (the
   * initial-plan Explain can never show AQE stage reuse / coalescing).
   * runMain graft.tools.FinalPlan <sfDir> <query...> */
@@ -10,12 +8,7 @@ object FinalPlan {
     val dir = args(0)
     val names = args.drop(1)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Sessions.local(cpus.toInt)
     spark.sparkContext.setLogLevel("ERROR")
     graft.sources.Tables.schemas.keys.foreach { t =>
       graft.sources.Tables.load(spark, dir, t).count()

@@ -59,7 +59,6 @@ object PlantedFixture {
   def bruteTop5(v: DataFrame): DataFrame = {
     val s = v.sparkSession
     import s.implicits._
-    graft.functions.VectorFunctions.register(s)
     val cand = v.select($"vec_id".as("cid"), $"embedding".as("ce"))
     val qs = v.filter($"vec_id" % 100 === 0)
       .select($"vec_id".as("qid"), $"embedding".as("qe"))

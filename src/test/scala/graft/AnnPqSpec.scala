@@ -76,7 +76,6 @@ class AnnPqSpec extends AnyFunSuite {
 
   test("ADC recall@5 vs exact brute-force cosine clears the floor") {
     import spark.implicits._
-    graft.functions.VectorFunctions.register(spark)
     val n = graft.sources.Tables.load(spark, dir, "embeddings")
       .select($"vec_id", transform($"embedding", _.cast("double")).as("e"))
     val q = n.filter($"vec_id" % 100 === 0)

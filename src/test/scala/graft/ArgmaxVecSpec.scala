@@ -12,8 +12,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * bit-identical. The adversarial rows exercise every branch of the
   * struct ordering the built-in applies: null cs / null nc / null array
   * (nulls FIRST, i.e. they lose under max), NaN (greatest double),
-  * -0.0 < 0.0 (IEEE total order via java.lang.Double.compare), and exact
-  * (cs, nc) ties that fall through to the element-wise array ordering
+  * -0.0 == 0.0 under the SQL ordering (SQLOrderingUtil), so nc breaks
+  * the tie, and exact (cs, nc) ties that fall through to the element-wise array ordering
   * (shorter-prefix and null-element cases included). */
 class ArgmaxVecSpec extends AnyFunSuite {
   private lazy val spark = TestSession.spark
@@ -37,7 +37,7 @@ class ArgmaxVecSpec extends AnyFunSuite {
       // g=5: NaN is the greatest double
       (5, Some(Double.NaN), Some(-8L), Some(Seq(Some(1.0)))),
       (5, Some(Double.PositiveInfinity), Some(-1L), Some(Seq(Some(2.0)))),
-      // g=6: -0.0 < 0.0 under the struct ordering
+      // g=6: -0.0 == 0.0 under the struct ordering, so nc -1 wins
       (6, Some(-0.0), Some(-1L), Some(Seq(Some(1.0)))),
       (6, Some(0.0), Some(-9L), Some(Seq(Some(2.0)))),
       // g=7: exact (cs, nc) tie -> array ordering decides
@@ -66,7 +66,6 @@ class ArgmaxVecSpec extends AnyFunSuite {
 
   private def assertParity(df: DataFrame): Unit = {
     import spark.implicits._
-    VectorFunctions.register(spark)
     val a = df.groupBy($"g")
       .agg(max(struct($"cs".as("cs"), $"nc".as("nc"), $"e".as("e"))).as("m"))
     val b = df.groupBy($"g")
@@ -91,7 +90,6 @@ class ArgmaxVecSpec extends AnyFunSuite {
 
   test("global aggregate over an empty frame returns null, like the built-in") {
     import spark.implicits._
-    VectorFunctions.register(spark)
     val empty = adversarial.filter($"g" < 0)
     val a = empty.agg(
       max(struct($"cs".as("cs"), $"nc".as("nc"), $"e".as("e"))).as("m")).first()
@@ -102,7 +100,6 @@ class ArgmaxVecSpec extends AnyFunSuite {
 
   test("real training shape: per-(m, vec_id) argmax over PQ subspaces is identical") {
     import spark.implicits._
-    VectorFunctions.register(spark)
     val e = graft.sources.Tables.load(spark, TestSession.sfDir, "embeddings")
       .limit(40)
       .select($"vec_id", transform($"embedding", _.cast("double")).as("e"))
@@ -122,7 +119,6 @@ class ArgmaxVecSpec extends AnyFunSuite {
 
   test("unorderable payload types are rejected at analysis time, like max(struct)") {
     import spark.implicits._
-    VectorFunctions.register(spark)
     val df = Seq((1, 0.5, -1L)).toDF("g", "cs", "nc")
       .withColumn("e", array(map(lit("k"), lit(1))))
     val err = intercept[org.apache.spark.sql.AnalysisException] {
@@ -136,7 +132,6 @@ class ArgmaxVecSpec extends AnyFunSuite {
 
   test("plans as ObjectHashAggregate, not the built-in's SortAggregate") {
     import spark.implicits._
-    VectorFunctions.register(spark)
     val plan = adversarial.groupBy($"g")
       .agg(VectorFunctions.argmaxVec($"cs", $"nc", $"e").as("m"))
       .queryExecution.executedPlan.toString

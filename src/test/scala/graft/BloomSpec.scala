@@ -17,7 +17,6 @@ class BloomSpec extends AnyFunSuite {
 
   private def bloomOf(parts: Int): Array[Byte] = {
     import spark.implicits._
-    VectorFunctions.register(spark)
     spark.range(0, 2000).toDF("k").repartition(parts)
       .agg(VectorFunctions.bloomAgg($"k").as("bf"))
       .as[Array[Byte]].head()

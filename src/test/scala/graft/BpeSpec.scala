@@ -12,7 +12,6 @@ class BpeSpec extends AnyFunSuite {
 
   private def encode(words: String*): Map[String, Seq[String]] = {
     import spark.implicits._
-    graft.functions.VectorFunctions.register(spark)
     words.toDF("word")
       .select($"word", operators.TextOps.bpeEncode($"word").as("toks"))
       .collect().map(r => r.getString(0) -> r.getSeq[String](1).toList).toMap
@@ -89,7 +88,6 @@ class BpeSpec extends AnyFunSuite {
 
   test("native == SQL chain exhaustively over merge-dense short words") {
     import spark.implicits._
-    graft.functions.VectorFunctions.register(spark)
     // every length-4 word over the 6 chars that drive the t/th/the/in/ing
     // chains (1296) + every length-3 word over the an/and/er/es/st chars
     // (216): exhaustive coverage of rank-collision and overlap cases far
@@ -112,7 +110,6 @@ class BpeSpec extends AnyFunSuite {
 
   test("native single-pass encoder equals the SQL replace chain on every corpus word") {
     import spark.implicits._
-    graft.functions.VectorFunctions.register(spark)
     val words = graft.sources.Tables
       .load(spark, TestSession.sfDir, "documents")
       .select(explode(split(lower($"text"), " ")).as("w"))

@@ -19,7 +19,6 @@ class CosineSimilaritySpec extends AnyFunSuite {
 
   test("fused expression == HOF composition, bit for bit, on real embeddings") {
     import spark.implicits._
-    VectorFunctions.register(spark)
     val e = graft.sources.Tables.load(spark, TestSession.sfDir, "embeddings")
     val pairs = e.select($"vec_id".as("a_id"), $"embedding".as("a"))
       .crossJoin(e.select($"vec_id".as("b_id"), $"embedding".as("b")))
@@ -34,7 +33,6 @@ class CosineSimilaritySpec extends AnyFunSuite {
 
   test("ARRAY<DOUBLE> inputs: fused == HOF, bit for bit (the IVF training path)") {
     import spark.implicits._
-    VectorFunctions.register(spark)
     val e = graft.sources.Tables.load(spark, TestSession.sfDir, "embeddings")
       .select($"vec_id", transform($"embedding", _.cast("double")).as("d"))
     val pairs = e.select($"vec_id".as("a_id"), $"d".as("a"))
@@ -50,7 +48,6 @@ class CosineSimilaritySpec extends AnyFunSuite {
 
   test("mixed FLOAT/DOUBLE sides agree with the all-double fold") {
     import spark.implicits._
-    VectorFunctions.register(spark)
     val df = Seq((Array(0.5f, -0.25f, 3.125f), Array(1.5, 2.75, -0.5)))
       .toDF("f", "d")
     val row = df.select(
@@ -62,7 +59,6 @@ class CosineSimilaritySpec extends AnyFunSuite {
 
   test("interpreted (non-codegen) path agrees too") {
     import spark.implicits._
-    VectorFunctions.register(spark)
     val prev = spark.conf.getOption("spark.sql.codegen.factoryMode")
     spark.conf.set("spark.sql.codegen.factoryMode", "NO_CODEGEN")
     try {
@@ -79,7 +75,6 @@ class CosineSimilaritySpec extends AnyFunSuite {
 
   test("null and length-mismatch inputs yield null") {
     import spark.implicits._
-    VectorFunctions.register(spark)
     val df = Seq(
       (Array(1.0f, 2.0f), Option(Array(1.0f))),
       (Array(1.0f), None))
@@ -89,27 +84,28 @@ class CosineSimilaritySpec extends AnyFunSuite {
   }
 
   test("GraftExtensions injects the function session-wide") {
-    val s2 = org.apache.spark.sql.SparkSession.builder()
-      .master("local[1]")
-      .appName("ext-test")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    try {
-      val r = s2.sql(
-        "SELECT graft_cosine(array(CAST(1 AS FLOAT)), array(CAST(2 AS FLOAT)))")
-        .first().getDouble(0)
-      assert(math.abs(r - 1.0) < 1e-12)
-      val toks = s2.sql("SELECT graft_bpe_tokens('thing')")
-        .first().getSeq[String](0)
-      assert(toks == Seq("th", "ing"))
-      val hit = s2.sql(
-        """SELECT graft_bloom_contains(
-          |  (SELECT graft_bloom_agg(x)
-          |   FROM (VALUES (CAST(7 AS BIGINT)), (CAST(9 AS BIGINT))) t(x)),
-          |  CAST(7 AS BIGINT))""".stripMargin)
-        .first().getBoolean(0)
-      assert(hit)
-    } finally () // shared JVM: do not stop the underlying context
+    val r = spark.sql(
+      "SELECT graft_cosine(array(CAST(1 AS FLOAT)), array(CAST(2 AS FLOAT)))")
+      .first().getDouble(0)
+    assert(math.abs(r - 1.0) < 1e-12)
+    val toks = spark.sql("SELECT graft_bpe_tokens('thing')")
+      .first().getSeq[String](0)
+    assert(toks == Seq("th", "ing"))
+    val hit = spark.sql(
+      """SELECT graft_bloom_contains(
+        |  (SELECT graft_bloom_agg(x)
+        |   FROM (VALUES (CAST(7 AS BIGINT)), (CAST(9 AS BIGINT))) t(x)),
+        |  CAST(7 AS BIGINT))""".stripMargin)
+      .first().getBoolean(0)
+    assert(hit)
+    // a wrong argument count fails analysis, too few or too many
+    Seq(
+      "SELECT graft_argmax_vec(1.0D, 2L) FROM VALUES (1) t(x)",
+      "SELECT graft_cosine(array(1.0D), array(1.0D), array(1.0D))"
+    ).foreach { q =>
+      val e = intercept[org.apache.spark.sql.AnalysisException](
+        spark.sql(q).collect())
+      assert(e.getCondition == "WRONG_NUM_ARGS.WITHOUT_SUGGESTION", q)
+    }
   }
 }

@@ -11,7 +11,6 @@ class KmvSpec extends AnyFunSuite {
 
   test("exact below k; within 30% above k; partition-invariant") {
     import spark.implicits._
-    VectorFunctions.register(spark)
     val df = (1 to 5000).map(i => (if (i % 10 == 0) "big" else "small",
       if (i % 10 == 0) i.toLong else (i % 40).toLong))
       .toDF("g", "v")

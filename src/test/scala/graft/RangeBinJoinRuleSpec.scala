@@ -8,11 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * writes naively must re-plan as a binned equi-join — losslessly — and
   * must NOT fire where it doesn't apply. */
 class RangeBinJoinRuleSpec extends AnyFunSuite {
-  private lazy val spark = {
-    val s = TestSession.spark
-    graft.plans.RangeBinJoinRule.install(s)
-    s
-  }
+  private lazy val spark = TestSession.spark
   private val dir = TestSession.sfDir
   private val FLAG = "spark.graft.binRangeJoin.enabled"
 

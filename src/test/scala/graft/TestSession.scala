@@ -3,22 +3,9 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** One shared local session for all suites (SURVEY.md §5.2; one session
-  * per JVM, suites run sequentially in the forked test JVM). */
+  * per JVM, suites run sequentially in the forked test JVM): the same
+  * factory and extension set as every main. */
 object TestSession {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      // the production extension set (Sessions.local carries the same):
-      // native SQL functions, the range-bin join rule, and the
-      // OPTIMIZE/VACUUM maintenance statements
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val spark: SparkSession = Sessions.local(4, "graft-test")
   val sfDir = "/root/testdata/sf0.001"
 }

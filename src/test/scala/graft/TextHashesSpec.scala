@@ -23,7 +23,6 @@ class TextHashesSpec extends AnyFunSuite {
 
   test("native shingle hashes == SQL md5-fold pipeline on real documents") {
     import spark.implicits._
-    VectorFunctions.register(spark)
     // native output is SORTED (IntersectSize contract); the SQL pipeline
     // keeps first-occurrence order — compare as sets
     val diffs = graft.sources.Tables.load(spark, TestSession.sfDir, "documents")
@@ -37,7 +36,6 @@ class TextHashesSpec extends AnyFunSuite {
 
   test("native intersect size == array_intersect size on real shingle sets") {
     import spark.implicits._
-    VectorFunctions.register(spark)
     val sh = graft.sources.Tables.load(spark, TestSession.sfDir, "documents")
       .select($"doc_id", VectorFunctions.shingleHashes($"text").as("hs"))
     val a = sh.select($"doc_id".as("a"), $"hs".as("ha"))
@@ -53,7 +51,6 @@ class TextHashesSpec extends AnyFunSuite {
 
   test("native minhash signature == SQL affine-permutation pipeline") {
     import spark.implicits._
-    VectorFunctions.register(spark)
     val diffs = graft.sources.Tables.load(spark, TestSession.sfDir, "documents")
       .select(VectorFunctions.shingleHashes($"text").as("hs"))
       .select(
@@ -69,7 +66,6 @@ class TextHashesSpec extends AnyFunSuite {
 
   test("native simhash == SQL 16-bit vote pipeline on real documents") {
     import spark.implicits._
-    VectorFunctions.register(spark)
     val diffs = graft.sources.Tables.load(spark, TestSession.sfDir, "documents")
       .withColumn("hs", expr("transform(split(lower(text), ' '), t -> md5(t))"))
       .select(

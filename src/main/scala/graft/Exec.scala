@@ -78,7 +78,10 @@ object Exec {
     * independent subtrees) — the 100 TB scale-killer. So route on the
     * input's size: small → return the hub as-is (recompute), large →
     * persist MEMORY_AND_DISK. `release()` unpersists iff persisted;
-    * call it after the result is sealed.
+    * call it after the result is sealed. The route is for WIDE hubs,
+    * whose cache write is what recomputing saves; a narrow hub whose
+    * derivation is costly (q_bm25's ~40 B/doc tokenized counts)
+    * persists unconditionally instead.
     *
     * Like `Baskets.capPerItem`'s hot-item probe, the size probe makes
     * the physical shape data-dependent (PlanShapeSpec pins the fixture

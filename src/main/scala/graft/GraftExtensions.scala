@@ -56,5 +56,6 @@ object GraftExtensions {
       (BLOOM_AGG, classOf[BloomKeysAgg], 1, a => BloomKeysAgg(a(0))),
       (BLOOM_CONTAINS, classOf[BloomMightContain], 2,
         a => BloomMightContain(a(0), a(1))),
-      (ARGMAX_VEC, classOf[ArgmaxVec], 3, a => ArgmaxVec(a(0), a(1), a(2))))
+      (NEAREST, classOf[NearestCentroid], 2, a => NearestCentroid(a(0), a(1))),
+      (QMEAN_VEC, classOf[QMeanVec], 1, a => QMeanVec(a(0))))
 }

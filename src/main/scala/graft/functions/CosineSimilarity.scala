@@ -27,17 +27,14 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
 case class CosineSimilarity(left: Expression, right: Expression)
     extends BinaryExpression {
 
-  private def elemOk(t: DataType): Boolean = t match {
-    case ArrayType(FloatType, _) | ArrayType(DoubleType, _) => true
-    case _ => false
-  }
   private def isDouble(t: DataType): Boolean = t match {
     case ArrayType(DoubleType, _) => true
     case _ => false
   }
 
   override def checkInputDataTypes(): TypeCheckResult =
-    if (elemOk(left.dataType) && elemOk(right.dataType))
+    if (CosineSimilarity.isVector(left.dataType) &&
+        CosineSimilarity.isVector(right.dataType))
       TypeCheckResult.TypeCheckSuccess
     else TypeCheckResult.TypeCheckFailure(
       s"$prettyName requires two ARRAY<FLOAT|DOUBLE> arguments, " +
@@ -47,24 +44,12 @@ case class CosineSimilarity(left: Expression, right: Expression)
   override def dataType: DataType = DoubleType
   override def nullable: Boolean = true
 
-  @inline private def fold(a: ArrayData, b: ArrayData): Double = {
-    val n = a.numElements()
-    val (ad, bd) = (isDouble(left.dataType), isDouble(right.dataType))
-    var dot = 0.0; var na = 0.0; var nb = 0.0
-    var i = 0
-    while (i < n) {
-      val x = if (ad) a.getDouble(i) else a.getFloat(i).toDouble
-      val y = if (bd) b.getDouble(i) else b.getFloat(i).toDouble
-      dot += x * y; na += x * x; nb += y * y
-      i += 1
-    }
-    dot / (math.sqrt(na) * math.sqrt(nb))
-  }
-
   override def nullSafeEval(l: Any, r: Any): Any = {
     val a = l.asInstanceOf[ArrayData]
     val b = r.asInstanceOf[ArrayData]
-    if (a.numElements() != b.numElements()) null else fold(a, b)
+    if (a.numElements() != b.numElements()) null
+    else CosineSimilarity.fold(a, isDouble(left.dataType), b,
+      isDouble(right.dataType))
   }
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
@@ -99,6 +84,31 @@ case class CosineSimilarity(left: Expression, right: Expression)
     copy(left = newLeft, right = newRight)
 }
 
+object CosineSimilarity {
+  /** dot(a,b) / (‖a‖·‖b‖) over two equal-length arrays as three
+    * left-to-right double folds; `ad`/`bd` say whether each side holds
+    * doubles (else floats, widened exactly). The interpreted path of
+    * [[CosineSimilarity]] and of [[NearestCentroid]]. */
+  def fold(a: ArrayData, ad: Boolean, b: ArrayData, bd: Boolean): Double = {
+    val n = a.numElements()
+    var dot = 0.0; var na = 0.0; var nb = 0.0
+    var i = 0
+    while (i < n) {
+      val x = if (ad) a.getDouble(i) else a.getFloat(i).toDouble
+      val y = if (bd) b.getDouble(i) else b.getFloat(i).toDouble
+      dot += x * y; na += x * x; nb += y * y
+      i += 1
+    }
+    dot / (math.sqrt(na) * math.sqrt(nb))
+  }
+
+  /** ARRAY<FLOAT> or ARRAY<DOUBLE>: the vector types the functions accept. */
+  private[functions] def isVector(t: DataType): Boolean = t match {
+    case ArrayType(FloatType, _) | ArrayType(DoubleType, _) => true
+    case _ => false
+  }
+}
+
 /** Names + Column-level API for the native functions, which
   * [[graft.GraftExtensions]] installs session-wide
   * (`spark.sql.extensions=graft.GraftExtensions`). */
@@ -113,7 +123,8 @@ object VectorFunctions {
   val CMS_ESTIMATE = "graft_cms_estimate"
   val BLOOM_AGG = "graft_bloom_agg"
   val BLOOM_CONTAINS = "graft_bloom_contains"
-  val ARGMAX_VEC = "graft_argmax_vec"
+  val NEAREST = "graft_nearest"
+  val QMEAN_VEC = "graft_qmean_vec"
 
   /** BPE token array of a cleaned-word column. */
   def bpeTokens(word: Column): Column = call_function(BPE_TOKENS, word)
@@ -121,11 +132,13 @@ object VectorFunctions {
   /** Fused cosine similarity column. */
   def cosine(a: Column, b: Column): Column = call_function(COSINE, a, b)
 
-  /** Hash-grouped argmax carrying a vector payload by reference — the
-    * bit-equivalent fast form of `max(struct(cs, nc, e))` (see
-    * [[ArgmaxVec]]). */
-  def argmaxVec(cs: Column, nc: Column, e: Column): Column =
-    call_function(ARGMAX_VEC, cs, nc, e)
+  /** Nearest codebook entry of a vector: `struct(cell, csim)` (see
+    * [[NearestCentroid]]). */
+  def nearest(e: Column, codebook: Column): Column =
+    call_function(NEAREST, e, codebook)
+
+  /** Exact per-dimension mean of a vector column (see [[QMeanVec]]). */
+  def qmeanVec(e: Column): Column = call_function(QMEAN_VEC, e)
 
   /** Hashed distinct 3-shingles of a text column. */
   def shingleHashes(text: Column): Column = call_function(SHINGLE_HASHES, text)

@@ -400,10 +400,10 @@ object Similarity extends QueryModule {
     * (one parquet scan feeds every Lloyd round) — and the small ranked
     * result is eagerly checkpointed so the cache is dropped before return.
     *
-    * Scale shape: centroids BROADCAST (a codebook is KBs even at 100 TB);
-    * assignment is a map-side crossJoin + per-vector argmax aggregate
-    * whose exchange carries only (vec_id, cid, csim) — the vector payload
-    * is projected OUT before any exchange and re-joined by id afterwards.
+    * Scale shape: centroids BROADCAST as one codebook row (KBs even at
+    * 100 TB); assignment is a per-row nearest-centroid expression in the
+    * map-side projection ([[nearestCells]]) — no N×C rows, no exchange —
+    * and each Lloyd round adds one exchange of per-cell mean buffers.
     * The probe→cell candidate join is a plain equi-join on `cell` (AQE
     * may broadcast it at runtime if stats allow, but nothing forces an
     * O(N)-derived frame to the driver). [[tools.ScaleProbe]] runs the
@@ -434,8 +434,8 @@ object Similarity extends QueryModule {
     * sampling, which oversamples dense regions).
     *
     * Scale: training and assignment are the [[kmeansCodebook]] /
-    * [[assignCells]] machinery (broadcast C-row codebook, fused codegen
-    * cosine, map-combinable argmax — N·C work, no window over N); the
+    * [[assignCells]] machinery (broadcast one-row codebook, per-row
+    * nearest-centroid expression — N·C work, no window over N); the
     * per-cell representative is then a C-group max(struct) argmax —
     * round6'd similarity first, smallest-vec_id ties, so the pick can
     * never flip on an ulp. */
@@ -444,13 +444,7 @@ object Similarity extends QueryModule {
     val n = ivfVectors(s, dir)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
-      val cent = kmeansCodebook(n, 8, 2)
-      val asg = n.crossJoin(broadcast(cent))
-        .withColumn("csim",
-          graft.Det.round6(graft.functions.VectorFunctions.cosine($"e", $"ce")))
-        .groupBy($"vec_id")
-        .agg(max(struct($"csim".as("cs"), (-$"cid").as("nc"))).as("m"))
-        .select($"vec_id", (-$"m.nc").as("cell"), $"m.cs".as("csim"))
+      val asg = assignCellsSim(n, kmeansCodebook(n, 8, 2))
       asg.groupBy($"cell")
         .agg(count(lit(1)).as("cell_size"),
           max(struct($"csim".as("cs"), (-$"vec_id").as("nv"))).as("r"))
@@ -472,12 +466,7 @@ object Similarity extends QueryModule {
       .select($"vec_id", transform($"embedding", _.cast("double")).as("e"))
   }
 
-  /** Nearest-centroid assignment: (vec_id, cell). A map-side-combinable
-    * max(struct) argmax — no window, so the N×C similarity rows reduce
-    * to N rows before any exchange. Ties break to the smallest cid, and
-    * csim is round6'd first, so the argmax can never flip on an ulp.
-    * The N×C cosine runs as the fused native expression inside
-    * whole-stage codegen — this loop is the training hot path. */
+  /** Nearest-centroid assignment: (vec_id, cell). */
   private[graft] def assignCells(n: DataFrame, cent: DataFrame): DataFrame = {
     val s = n.sparkSession; import s.implicits._
     assignCellsSim(n, cent).select($"vec_id", $"cell")
@@ -485,15 +474,60 @@ object Similarity extends QueryModule {
 
   /** [[assignCells]] WITH the winning similarity — the drift statistic
     * ([[annIndexDrift]]) needs the assignment quality, not just the
-    * assignment. Same plan shape: map-combinable argmax, no window. */
+    * assignment. A pure map over n (see [[nearestCells]]): no N×C rows,
+    * no exchange. */
   private[graft] def assignCellsSim(n: DataFrame, cent: DataFrame): DataFrame = {
     val s = n.sparkSession; import s.implicits._
-    n.crossJoin(broadcast(cent))
+    nearestCells(n, cent)
+      .select($"vec_id", $"nn.cell".as("cell"), $"nn.csim".as("csim"))
+  }
+
+  /** Every row of `n` (columns `e` plus `keys`) with `nn` =
+    * `graft_nearest(e, cb)` = struct(cell, csim) against its codebook:
+    * `cent` (keys…, cid, ce) gathered into one `cb` row per key value
+    * and BROADCAST (KBs at any corpus size). The argmax — round6'd
+    * cosine first, smallest cid on a tie, so it can never flip on an
+    * ulp — runs per row inside the map-side projection
+    * ([[graft.functions.NearestCentroid]]); it replaces an N×C
+    * crossJoin reduced by a per-vector exchange. An empty codebook is
+    * dropped before the broadcast, so rows then drop as they did from
+    * the empty crossJoin. */
+  private def nearestCells(n: DataFrame, cent: DataFrame,
+                           keys: String*): DataFrame = {
+    val s = n.sparkSession; import s.implicits._
+    val cb = broadcast(cent.groupBy(keys.map(col): _*)
+      .agg(collect_list(struct($"cid", $"ce")).as("cb"))
+      .filter(size($"cb") > 0))
+    (if (keys.isEmpty) n.crossJoin(cb) else n.join(cb, keys))
+      .withColumn("nn", graft.functions.VectorFunctions.nearest($"e", $"cb"))
+  }
+
+  /** One Lloyd round: assign every row to its nearest centroid, then
+    * average each cell's vectors EXACTLY
+    * ([[graft.functions.QMeanVec]]) — one map stage (nearest + partial
+    * mean) and one exchange grouped by (keys…, cell). Returns the next
+    * codebook (keys…, cid, ce); cells that empty out drop. */
+  private def lloydRound(n: DataFrame, cent: DataFrame,
+                         keys: String*): DataFrame = {
+    val s = n.sparkSession; import s.implicits._
+    nearestCells(n, cent, keys: _*)
+      .groupBy(keys.map(col) :+ $"nn.cell".as("cid"): _*)
+      .agg(graft.functions.VectorFunctions.qmeanVec($"e").as("ce"))
+      .filter($"ce".isNotNull)
+  }
+
+  /** The query rows' (vec_id % 100 = 0) `nprobe` nearest cells,
+    * (qid, cell): round6'd similarity first, smallest cid on a tie. The
+    * rank window covers only |Q|·C rows, never N·C. */
+  private def probeCells(n: DataFrame, cent: DataFrame, nprobe: Int): DataFrame = {
+    val s = n.sparkSession; import s.implicits._
+    val wq = Window.partitionBy($"vec_id").orderBy($"csim".desc, $"cid")
+    n.filter($"vec_id" % 100 === 0).crossJoin(broadcast(cent))
       .withColumn("csim",
         graft.Det.round6(graft.functions.VectorFunctions.cosine($"e", $"ce")))
-      .groupBy($"vec_id")
-      .agg(max(struct($"csim".as("cs"), (-$"cid").as("nc"))).as("m"))
-      .select($"vec_id", (-$"m.nc").as("cell"), $"m.cs".as("csim"))
+      .withColumn("arn", row_number().over(wq))
+      .filter($"arn" <= nprobe)
+      .select($"vec_id".as("qid"), $"cid".as("cell"))
   }
 
   /** Deterministic Lloyd k-means codebook: C seeds in md5(vec_id) order,
@@ -514,34 +548,16 @@ object Similarity extends QueryModule {
       .withColumn("cid",
         row_number().over(Window.orderBy(seedOrd: _*)).cast("long"))
       .select($"cid", $"e".as("ce"))
-    (1 to iters).foldLeft(seeds: DataFrame) { (cent, _) =>
-      // The vector rides THROUGH the argmax (carried payload — never
-      // compared: (csim, -cid) is already unique per vec_id) instead of
-      // joining the assignment back to n: one exchange of n·(e+8B)
-      // replaces an exchange of the assignment PLUS a join re-shuffling
-      // n.e — one less exchange and no join per Lloyd round, same exact
-      // integer means, so the trained centroids stay bit-identical.
-      // argmax_vec is the hash-grouped bit-equivalent of
-      // max(struct(cs, nc, e)): the built-in Max over a struct-with-
-      // array buffer falls back to SortAggregateExec and materializes
-      // the vector into a fresh struct per input row (guide §4 — see
-      // [[graft.functions.ArgmaxVec]]).
-      n.crossJoin(broadcast(cent))
-        .withColumn("csim",
-          graft.Det.round6(graft.functions.VectorFunctions.cosine($"e", $"ce")))
-        .groupBy($"vec_id")
-        .agg(graft.functions.VectorFunctions
-          .argmaxVec($"csim", -$"cid", $"e").as("m"))
-        .select((-$"m.nc").as("cell"), posexplode($"m.e"))
-        .groupBy($"cell", $"pos")
-        .agg(sum(floor($"col" * 10000.0 + 0.5).cast("long")).as("sv"),
-          count(lit(1)).as("cnt"))
-        .withColumn("v", $"sv".cast("double") / ($"cnt" * 10000.0))
-        .groupBy($"cell")
-        .agg(collect_list(struct($"pos", $"v")).as("pv"))
-        .select($"cell".as("cid"),
-          expr("transform(array_sort(pv), x -> x.v)").as("ce"))
-    }
+    // Each round is [[lloydRound]]: the nearest centroid per row, then
+    // graft_qmean_vec's exact mean per cell — one map stage and one
+    // exchange by cell, where the relational form crossJoined N×C rows,
+    // reduced them by vec_id, posexploded N×D (cell, pos) rows and
+    // re-assembled them with collect_list. The mean aggregate is NOT
+    // the round-16 static-column negative (OPTIMIZATION_r16.md: d
+    // `sum` columns in one codegen'd aggregate, slower at d=64): its
+    // buffer is ONE Long[] object in an ObjectHashAggregate, whatever
+    // d is, so no aggregate grows wider with the vectors.
+    (1 to iters).foldLeft(seeds: DataFrame)((cent, _) => lloydRound(n, cent))
   }
 
   /** RecallProbe-backed IVF DEFAULTS (PLANS.md round-11 sweep, re-pinned
@@ -574,21 +590,8 @@ object Similarity extends QueryModule {
                                c: Int, iters: Int, nprobe: Int): DataFrame = {
     import s.implicits._
     val cent = kmeansCodebook(n, c, iters)
-    val asg = n.crossJoin(broadcast(cent))
-      .withColumn("csim",
-        graft.Det.round6(graft.functions.VectorFunctions.cosine($"e", $"ce")))
-      .select($"vec_id", $"cid", $"csim")
-    val cells = asg
-      .groupBy($"vec_id")
-      .agg(max(struct($"csim".as("cs"), (-$"cid").as("nc"))).as("m"))
-      .select($"vec_id".as("cand_id"), (-$"m.nc").as("cell"))
-    // the probe ranking windows only the QUERY rows (|Q|·C, not N·C)
-    val wq = Window.partitionBy($"vec_id").orderBy($"csim".desc, $"cid")
-    val probes = asg.filter($"vec_id" % 100 === 0)
-      .withColumn("arn", row_number().over(wq))
-      .filter($"arn" <= nprobe)
-      .select($"vec_id".as("qid"), $"cid".as("cell"))
-    val pairs = cells.join(probes, Seq("cell"))
+    val cells = assignCells(n, cent).select($"vec_id".as("cand_id"), $"cell")
+    val pairs = cells.join(probeCells(n, cent, nprobe), Seq("cell"))
       .filter($"cand_id" =!= $"qid")
       .join(n.select($"vec_id".as("qid"), $"e".as("qe")), Seq("qid"))
       .join(n.select($"vec_id".as("cand_id"), $"e".as("ke")), Seq("cand_id"))
@@ -614,20 +617,9 @@ object Similarity extends QueryModule {
       val total = n.count()
       val nQ = n.filter($"vec_id" % 100 === 0).count()
       val cent = kmeansCodebook(n, c, iters = 2)
-      val asg = n.crossJoin(broadcast(cent))
-        .withColumn("csim",
-          graft.Det.round6(graft.functions.VectorFunctions.cosine($"e", $"ce")))
-        .select($"vec_id", $"cid", $"csim")
-      val cellSizes = asg
-        .groupBy($"vec_id")
-        .agg(max(struct($"csim".as("cs"), (-$"cid").as("nc"))).as("m"))
-        .select((-$"m.nc").as("cell"))
+      val cellSizes = assignCells(n, cent)
         .groupBy($"cell").agg(count(lit(1)).as("sz"))
-      val wq = Window.partitionBy($"vec_id").orderBy($"csim".desc, $"cid")
-      val probed = asg.filter($"vec_id" % 100 === 0)
-        .withColumn("arn", row_number().over(wq))
-        .filter($"arn" <= nprobe)
-        .select($"cid".as("cell"))
+      val probed = probeCells(n, cent, nprobe)
         .join(cellSizes, Seq("cell"))
         .agg(coalesce(sum($"sz"), lit(0L)))
         .head().getLong(0)
@@ -695,16 +687,11 @@ object Similarity extends QueryModule {
   }
 
   /** Per-subspace nearest-centroid assignment over a keyed subspace
-    * relation: (m, vec_id, cell) — same argmax discipline as
-    * [[assignCells]] with m as an extra key. */
+    * relation: (m, vec_id, cell) — [[assignCells]] with m as an extra
+    * key (one codebook row per subspace). */
   private[graft] def pqAssign(nm: DataFrame, cent: DataFrame): DataFrame = {
     val s = nm.sparkSession; import s.implicits._
-    nm.join(broadcast(cent), Seq("m"))
-      .withColumn("csim", graft.Det.round6(
-        graft.functions.VectorFunctions.cosine($"e", $"ce")))
-      .groupBy($"m", $"vec_id")
-      .agg(max(struct($"csim".as("cs"), (-$"cid").as("nc"))).as("x"))
-      .select($"m", $"vec_id", (-$"x.nc").as("cell"))
+    nearestCells(nm, cent, "m").select($"m", $"vec_id", $"nn.cell".as("cell"))
   }
 
   /** One-Lloyd-round PQ codebook (m, cid, ce) over a keyed subspace
@@ -752,28 +739,8 @@ object Similarity extends QueryModule {
         row_number().over(Window.orderBy(seedOrd: _*)).cast("long"))
     val seeds = nmAll.join(broadcast(seedIds), Seq("vec_id"))
       .select($"m", $"cid", $"e".as("ce"))
-    // Same fusion as the Lloyd round in [[kmeansCodebook]]: the subspace
-    // vector rides through the argmax (carried payload, never compared
-    // — (csim, -cid) is unique per (m, vec_id)) instead of joining the
-    // assignment back to the N·M relation — one exchange, no join, the
-    // exact same integer means, bit-identical codebooks. argmax_vec =
-    // hash-grouped max(struct(cs, nc, e)) without the per-row vector
-    // copy (see [[graft.functions.ArgmaxVec]]).
-    nmAll.join(broadcast(seeds), Seq("m"))
-      .withColumn("csim", graft.Det.round6(
-        graft.functions.VectorFunctions.cosine($"e", $"ce")))
-      .groupBy($"m", $"vec_id")
-      .agg(graft.functions.VectorFunctions
-        .argmaxVec($"csim", -$"cid", $"e").as("x"))
-      .select($"m", (-$"x.nc").as("cell"), posexplode($"x.e"))
-      .groupBy($"m", $"cell", $"pos")
-      .agg(sum(floor($"col" * 10000.0 + 0.5).cast("long")).as("sv"),
-        count(lit(1)).as("cnt"))
-      .withColumn("v", $"sv".cast("double") / ($"cnt" * 10000.0))
-      .groupBy($"m", $"cell")
-      .agg(collect_list(struct($"pos", $"v")).as("pv"))
-      .select($"m", $"cell".as("cid"),
-        expr("transform(array_sort(pv), x -> x.v)").as("ce"))
+    // the [[kmeansCodebook]] Lloyd round with m as an extra key
+    lloydRound(nmAll, seeds, "m")
   }
 
   /** Query ADC lookup table (qid, m, code, lq) from a trained PQ
@@ -901,20 +868,7 @@ object Similarity extends QueryModule {
                              pqM: Int = PqDefaultM): DataFrame = {
     import s.implicits._
     val coarse = kmeansCodebook(n, c = cC, iters = 1)
-    val asg = n.crossJoin(broadcast(coarse))
-      .withColumn("csim",
-        graft.Det.round6(graft.functions.VectorFunctions.cosine($"e", $"ce")))
-      .select($"vec_id", $"cid", $"csim")
-    val cells = asg
-      .groupBy($"vec_id")
-      .agg(max(struct($"csim".as("cs"), (-$"cid").as("nc"))).as("x"))
-      .select($"vec_id", (-$"x.nc").as("cell"))
-    val wq = Window.partitionBy($"vec_id").orderBy($"csim".desc, $"cid")
-    val probes = asg.filter($"vec_id" % 100 === 0)
-      .withColumn("arn", row_number().over(wq))
-      .filter($"arn" <= nprobe)
-      .select($"vec_id".as("qid"), $"cid".as("cell"))
-    val pairs = cells.join(probes, Seq("cell"))
+    val pairs = assignCells(n, coarse).join(probeCells(n, coarse, nprobe), Seq("cell"))
       .filter($"vec_id" =!= $"qid")
       .select($"qid", $"vec_id")
     val (codes, lookups) = pqCodesLookups(pqSubspaces(n, pqM), pqK)
@@ -1360,18 +1314,9 @@ object Similarity extends QueryModule {
     val q = ivfVectors(s, dir).filter($"vec_id" % 100 === 0)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
-      // probes: |Q|×C similarities, rank window over query rows only
-      val asg = q.crossJoin(broadcast(coarse))
-        .withColumn("csim",
-          graft.Det.round6(graft.functions.VectorFunctions.cosine($"e", $"ce")))
-        .select($"vec_id", $"cid", $"csim")
-      val wq = Window.partitionBy($"vec_id").orderBy($"csim".desc, $"cid")
       // nprobe from the STORED codebook's size (the artifact remembers
       // its own C), so search and build stay consistent across sessions
-      val probes = asg
-        .withColumn("arn", row_number().over(wq))
-        .filter($"arn" <= ivfDefaultNprobe(coarse.count().toInt))
-        .select($"vec_id".as("qid"), $"cid".as("cell"))
+      val probes = probeCells(q, coarse, ivfDefaultNprobe(coarse.count().toInt))
       val pairs = cells.join(probes, Seq("cell"))
         .filter($"vec_id" =!= $"qid")
         .select($"qid", $"vec_id")

@@ -656,13 +656,18 @@ object TextOps extends QueryModule {
     * wide exchange at any size. Determinism: per-term scores are
     * quantized to 1e-6 BIGINTs before the cross-term sum (integer adds
     * are order-free), `ln` stays inside the quantization like
-    * [[qTfidf]]; the emitted double is one exact integer division. */
+    * [[qTfidf]]; the emitted double is one exact integer division.
+    *
+    * The per-doc relation is persisted at every size: its three
+    * consumers (stats broadcast, range sample, scoring) would otherwise
+    * each re-tokenize the corpus, and at ~40 B per doc the cache write
+    * costs less than one re-tokenization ([[graft.Exec.sizedHub]]'s
+    * recompute route is for wide hubs). */
   private def qBm25(s: SparkSession, dir: String): DataFrame = {
-    val perDoc0 = bm25PerDoc(s, dir)
-    val (perDoc, perDocRel) = graft.Exec.sizedHub(perDoc0,
-      Tables.rowCount(s, dir, "documents"))
+    val perDoc = bm25PerDoc(s, dir)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try bm25Scored(s, perDoc).transform(graft.Exec.seal)
-    finally perDocRel()
+    finally perDoc.unpersist(false)
   }
 
   private val Bm25Terms = Seq("spark", "vector", "dup")

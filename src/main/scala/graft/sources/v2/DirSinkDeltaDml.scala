@@ -161,7 +161,7 @@ class DirSinkDeltaBatchWrite(path: String, schema: StructType,
             partialsByFile.keySet.toSeq))
     }
     f.delete(new Path(root, s"_staging/$queryId"), true)
-    dropStagingRoot(f, root)
+    DirSink.dropStagingRootIfEmpty(f, root)
   }
 
   override def abort(messages: Array[WriterCommitMessage]): Unit = {
@@ -170,16 +170,8 @@ class DirSinkDeltaBatchWrite(path: String, schema: StructType,
       .flatMap(m => DirSink.flattenMsgs(m.inserts))
       .foreach(m => f.delete(new Path(path, m.stagedName), false))
     f.delete(new Path(path, s"_staging/$queryId"), true)
-    dropStagingRoot(f, new Path(path))
+    DirSink.dropStagingRootIfEmpty(f, new Path(path))
   }
-
-  private def dropStagingRoot(f: org.apache.hadoop.fs.FileSystem,
-                              root: Path): Unit =
-    try {
-      val staging = new Path(root, "_staging")
-      if (f.exists(staging) && f.listStatus(staging).isEmpty)
-        f.delete(staging, false)
-    } catch { case _: java.io.IOException => () } // a concurrent writer owns it
 }
 
 /** Executor side: inserts lazily open the ordinary staged writer;

@@ -67,6 +67,7 @@ object DirSinkDv {
                         dir: String = DirName): String = {
     val name = s"$dir/dv-${java.util.UUID.randomUUID()}"
     val f = DirSink.execFs(zonePath)
+    DirSink.ensureStagingDir(f, new Path(zonePath, dir))
     val out = new java.io.DataOutputStream(
       new java.io.BufferedOutputStream(
         f.create(new Path(zonePath, name), true)))

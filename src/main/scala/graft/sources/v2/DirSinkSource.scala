@@ -470,6 +470,46 @@ object DirSink {
     new Path(path).getFileSystem(
       new org.apache.hadoop.conf.Configuration())
 
+  /** Executor side: create a task's staging directory
+    * (`_staging/<queryId>`) before its first staged file. The
+    * `_staging` root is shared by every write to the zone and removed
+    * by [[dropStagingRootIfEmpty]] when a committer leaves it empty, so
+    * a mkdirs racing that removal can find its parent gone between the
+    * parent check and the child mkdir (the local FS then fails the
+    * mkdirs). Retry through that window: once this directory exists the
+    * root is non-empty and no other committer can remove it. */
+  private[v2] def ensureStagingDir(f: FileSystem, dir: Path): Unit = {
+    var attempt = 0
+    while (!(try f.mkdirs(dir) || f.getFileStatus(dir).isDirectory
+             catch { case _: java.io.IOException => false })) {
+      attempt += 1
+      if (attempt >= 20) throw new java.io.IOException(
+        s"could not create staging directory $dir")
+      Thread.sleep(10)
+    }
+  }
+
+  /** Committer side: remove the zone's `_staging` root if it is empty,
+    * never a concurrent writer's staging under it. The local FS's
+    * non-recursive delete is check-then-delete-recursively, so it could
+    * sweep a directory another write's task creates in between; a
+    * direct rmdir there fails atomically on a non-empty directory.
+    * Other filesystems refuse a non-recursive delete of a non-empty
+    * directory on their own. */
+  private[v2] def dropStagingRootIfEmpty(f: FileSystem, root: Path): Unit =
+    try {
+      val staging = new Path(root, "_staging")
+      f match {
+        case l: org.apache.hadoop.fs.LocalFileSystem =>
+          java.nio.file.Files.deleteIfExists(l.pathToFile(staging).toPath)
+        case r: org.apache.hadoop.fs.RawLocalFileSystem =>
+          java.nio.file.Files.deleteIfExists(r.pathToFile(staging).toPath)
+        case _ =>
+          if (f.exists(staging) && f.listStatus(staging).isEmpty)
+            f.delete(staging, false)
+      }
+    } catch { case _: java.io.IOException => () } // concurrent writer owns it
+
   /** Commit publish — one SMALL log segment per publish
     * ([[DirSinkLog.publish]]): O(delta) bytes inside the zone lock for
     * appends/deletes, a full snapshot segment only when the operation
@@ -2772,17 +2812,9 @@ class DirSinkBatchWrite(path: String, schema: StructType, queryId: String,
         else DirSinkLog.DeltaCommit(lines, Nil), queryId)
       // staging leftovers of THIS query (loser speculative attempts)
       f.delete(new Path(root, s"_staging/$queryId"), true)
-      dropStagingRootIfEmpty(f, root)
+      DirSink.dropStagingRootIfEmpty(f, root)
     }
   }
-
-  private def dropStagingRootIfEmpty(f: org.apache.hadoop.fs.FileSystem,
-                                     root: Path): Unit =
-    try {
-      val staging = new Path(root, "_staging")
-      if (f.exists(staging) && f.listStatus(staging).isEmpty)
-        f.delete(staging, false)
-    } catch { case _: java.io.IOException => () } // concurrent writer owns it
 
   /** Job abort: delete the files of tasks that already committed;
     * running tasks clean their own staging through DataWriter.abort. */
@@ -2793,7 +2825,7 @@ class DirSinkBatchWrite(path: String, schema: StructType, queryId: String,
     deadletter.foreach(dl => DirSinkChecks.dropQuarantineStaging(dl,
       DirSink.quarantinedMsgs(messages)))
     f.delete(new Path(path, s"_staging/$queryId"), true)
-    dropStagingRootIfEmpty(f, new Path(path))
+    DirSink.dropStagingRootIfEmpty(f, new Path(path))
   }
 }
 
@@ -3112,6 +3144,7 @@ class DirSinkWriter(path: String, schema: StructType, queryId: String,
     extends DataWriter[InternalRow] {
   private val stagedName = s"_staging/$queryId/$attempt"
   private val f = DirSink.execFs(path) // executor side: no active session
+  DirSink.ensureStagingDir(f, new Path(path, s"_staging/$queryId"))
   private val out = f.create(new Path(path, stagedName), true)
   private var rows = 0L
   private val stats = new DirSinkStats.Collector(schema)
@@ -3154,6 +3187,7 @@ class DirSinkParquetWriter(path: String, schema: StructType, queryId: String,
     extends DataWriter[InternalRow] {
   private val stagedName = s"_staging/$queryId/$attempt"
   private val f = DirSink.execFs(path)
+  DirSink.ensureStagingDir(f, new Path(path, s"_staging/$queryId"))
   private val writer = DirSinkParquet.openWriter(owf, conf,
     DirSink.asNullable(schema), new Path(path, stagedName).toString,
     partitionId, taskId)

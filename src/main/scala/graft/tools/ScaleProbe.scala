@@ -7,7 +7,10 @@ import org.apache.spark.sql.functions._
   * duplicated — the "more data means more duplicates" regime) and times
   * the heavy operators at each multiplier. Usage:
   *   runMain graft.tools.ScaleProbe [k1 k2 ...]   (default 1 2 4)
-  * Emits one JSON line per (k, query). The point is the SLOPE: candidate
+  * Emits one JSON line per (k, query); each query is timed as the query
+  * function plus a noop-sink write of its full result (every column
+  * computed, as in TimeQ), and its row count comes from a separate,
+  * untimed `count()`. The point is the SLOPE: candidate
   * generation via LSH banding should grow ~linearly with corpus size
   * while blocked all-pairs Jaccard grows quadratically per block —
   * the measured basis for the 100 TB path choice (SURVEY.md §2.9 T4).
@@ -94,15 +97,17 @@ object ScaleProbe {
           .write.mode(SaveMode.Overwrite).parquet(s"$dir/$tbl.parquet")
       }
 
-      probes.foreach { name =>
+      def timed(name: String): (Double, Long) = {
         val t0 = System.nanoTime()
-        val n = graft.SparkEntry.queries(name)(spark, dir).count()
-        val sec = (System.nanoTime() - t0) / 1e9
+        val df = graft.SparkEntry.queries(name)(spark, dir)
+        df.write.format("noop").mode("overwrite").save()
+        ((System.nanoTime() - t0) / 1e9, df.count())
+      }
+      probes.foreach { name =>
+        val (sec, n) = timed(name)
         println(f"""{"k":$k,"query":"$name","sec":$sec%.2f,"rows":$n}""")
         if (twoPass(name)) {
-          val t1 = System.nanoTime()
-          val n1 = graft.SparkEntry.queries(name)(spark, dir).count()
-          val s1 = (System.nanoTime() - t1) / 1e9
+          val (s1, n1) = timed(name)
           println(
             f"""{"k":$k,"query":"${name}_warm","sec":$s1%.2f,"rows":$n1}""")
         }

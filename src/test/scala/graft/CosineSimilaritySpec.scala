@@ -100,7 +100,8 @@ class CosineSimilaritySpec extends AnyFunSuite {
     assert(hit)
     // a wrong argument count fails analysis, too few or too many
     Seq(
-      "SELECT graft_argmax_vec(1.0D, 2L) FROM VALUES (1) t(x)",
+      "SELECT graft_nearest(array(1.0D))",
+      "SELECT graft_qmean_vec(array(1.0D), array(1.0D)) FROM VALUES (1) t(x)",
       "SELECT graft_cosine(array(1.0D), array(1.0D), array(1.0D))"
     ).foreach { q =>
       val e = intercept[org.apache.spark.sql.AnalysisException](

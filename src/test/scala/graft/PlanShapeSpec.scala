@@ -117,6 +117,9 @@ class PlanShapeSpec extends AnyFunSuite {
     assert(p.split("BroadcastNestedLoopJoin").length >= 4,
       "codebook broadcasts lost")
     assert(!p.contains("CartesianProduct"), "unbroadcast corpus product")
+    // a Lloyd round is a nearest-centroid map + one exact-mean aggregate:
+    // no posexplode of the vectors into (cell, pos) rows
+    assert(!p.contains("Generate"), "a Lloyd round explodes the vectors")
   }
 
   test("q_tfidf partially aggregates tf before any exchange") {

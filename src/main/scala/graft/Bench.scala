@@ -1,4 +1,7 @@
 package graft
+
+import org.apache.spark.sql.{DataFrame, SparkSession}
+
 object Bench {
 
   /** The one-line bench protocol artifact. The driver parses it out of a
@@ -8,8 +11,10 @@ object Bench {
     * epilogue — so the whole line must stay ≤ ~1900B. The headline
     * `value` is emitted LAST so the total survives in the tail even if a
     * longer epilogue ever clips the head. BenchJsonSpec pins validity +
-    * size. */
-  def renderJson(results: Map[String, Double], sfDir: String): String = {
+    * size. `errors` counts the queries that threw: they carry no time
+    * and are absent from `queries` and the total. */
+  def renderJson(results: Map[String, Double], sfDir: String,
+                 errors: Int = 0): String = {
     def r(v: Double, scale: Int): String = BigDecimal(v)
       .setScale(scale, BigDecimal.RoundingMode.HALF_UP).toString
     // adaptive per-query width: centiseconds only for the 1–10s leaders
@@ -21,7 +26,8 @@ object Bench {
       else if (v >= 1) r(v, 2) else r(v, 1)
     val total = if (results.nonEmpty) results.values.sum else 0.0
     val head = s"""{"metric":"total","unit":"sec","queries":{"""
-    val tail = s"""},"sf":"$sfDir","value":${r(total, 3)}}"""
+    val tail =
+      s"""},"sf":"$sfDir","errors":$errors,"value":${r(total, 3)}}"""
     def assemble(entries: Seq[String]): String =
       head + entries.mkString(",") + tail
     val full = results.toSeq.sortBy { case (k, v) => (-v, k) }
@@ -53,6 +59,42 @@ object Bench {
     * declared query at worst believable widths against this bound. */
   private[graft] val Budget = 1600
 
+  /** One timed pass as the caller gets it: the query function (its
+    * driver-side build) plus a noop-sink write of the full result, so
+    * every column is computed — a `.count()` would let column pruning
+    * skip most of the work. Returns the seconds and the result frame;
+    * throws whatever the query throws. */
+  def timed(spark: SparkSession, q: (SparkSession, String) => DataFrame,
+            dir: String): (Double, DataFrame) = {
+    val t0 = System.nanoTime()
+    val df = q(spark, dir)
+    df.write.format("noop").mode("overwrite").save()
+    ((System.nanoTime() - t0) / 1e9, df)
+  }
+
+  /** Min-of-2 [[timed]] passes per query: a one-off GC pause /
+    * page-cache miss / scheduler hiccup in a single timed pass once
+    * inflated the round artifact ~2.5× (BENCH_r02 86s vs 35s
+    * reproducible); the min of two passes is the standard defense. A
+    * query that throws gets no time: it is left out of the result map
+    * and counted in the returned error count. */
+  private[graft] def measure(
+      spark: SparkSession,
+      queries: Map[String, (SparkSession, String) => DataFrame],
+      dir: String): (Map[String, Double], Int) = {
+    var errors = 0
+    val results = queries.flatMap { case (name, q) =>
+      try Some(name -> math.min(timed(spark, q, dir)._1,
+        timed(spark, q, dir)._1))
+      catch { case e: Throwable =>
+        System.err.println(s"[bench] $name failed: ${e.getMessage}")
+        errors += 1
+        None
+      }
+    }
+    (results, errors)
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
@@ -79,19 +121,8 @@ object Bench {
     graft.sources.Tables.schemas.keys.foreach { t =>
       graft.sources.Tables.load(spark, sfDir, t).count()
     }
-    // min-of-2 per query: a one-off GC pause / page-cache miss / scheduler
-    // hiccup in a single timed pass once inflated the round artifact ~2.5×
-    // (BENCH_r02 86s vs 35s reproducible); the min of two passes is the
-    // standard defense and keeps the one-line protocol unchanged.
-    val results = SparkEntry.queries.map { case (name, fn) =>
-      def once(): Double = {
-        val t0 = System.nanoTime()
-        try { fn(spark, sfDir).count() } catch { case _: Throwable => () }
-        (System.nanoTime() - t0) / 1e9
-      }
-      name -> math.min(once(), once())
-    }
+    val (results, errors) = measure(spark, SparkEntry.queries, sfDir)
     spark.stop()
-    println(renderJson(results, sfDir))
+    println(renderJson(results, sfDir, errors))
   }
 }

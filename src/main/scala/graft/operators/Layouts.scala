@@ -129,6 +129,12 @@ object Layouts extends QueryModule {
     s"/tmp/graft_layout_${layoutKey(dir)}"
   }
 
+  /** Build guard for the DirSink zones under [[layoutRoot]]: the root
+    * ends in this JVM's pid, so any zone committed there was written by
+    * this build — existence alone means built. */
+  private def zoneExists(path: String): Boolean =
+    graft.sources.v2.DirSink.zoneExists(path)
+
   /** Cluster-real "is this artifact complete?" probe: resolves the
     * path's [[org.apache.hadoop.fs.FileSystem]] from the session's
     * Hadoop configuration and asks IT for `_SUCCESS`, so the guard
@@ -330,10 +336,7 @@ object Layouts extends QueryModule {
   private def qDsv2SinkRoundtrip(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val path = s"${layoutRoot(dir)}/docs_dirsink"
-    if (!graft.sources.v2.DirSink.zoneFormat(path)
-        .contains(graft.sources.v2.DirSink.FormatParquet)) {
-      // (re)build: missing, or committed before the parquet data
-      // plane landed — the overwrite upgrades the zone in place
+    if (!zoneExists(path)) {
       Tables.load(s, dir, "documents")
         .select($"doc_id", $"text", $"lang", $"source", $"n_chars")
         .write.format("graft.sources.v2.DirSinkSource")
@@ -367,10 +370,7 @@ object Layouts extends QueryModule {
   private def qDsv2Skipping(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val path = s"${layoutRoot(dir)}/docs_dirsink_rng"
-    if (!graft.sources.v2.DirSink.zoneFormat(path)
-        .contains(graft.sources.v2.DirSink.FormatParquet)) {
-      // (re)build: missing, or committed before the parquet data
-      // plane landed — the overwrite upgrades the zone in place
+    if (!zoneExists(path)) {
       Tables.load(s, dir, "documents")
         .select($"doc_id", $"text", $"lang", $"source", $"n_chars")
         .repartitionByRange(8, $"doc_id")
@@ -413,11 +413,7 @@ object Layouts extends QueryModule {
     }
     val tbl = s"$cat.corpus.docs"
     val zonePath = s"$root/dml_wh/corpus/docs"
-    val zoneFmt = graft.sources.v2.DirSink.zoneFormat(zonePath)
-    if (!zoneFmt.contains(graft.sources.v2.DirSink.FormatParquet)) {
-      // (re)create: missing, or a pre-parquet-plane zone — DML must
-      // exercise the current default data plane
-      if (zoneFmt.isDefined) s.sql(s"DROP TABLE IF EXISTS $tbl")
+    if (!zoneExists(zonePath)) {
       s.sql(s"CREATE NAMESPACE IF NOT EXISTS $cat.corpus")
       Tables.load(s, dir, "documents")
         .select($"doc_id", $"lang", $"n_chars", lit("raw").as("tier"))
@@ -472,8 +468,7 @@ object Layouts extends QueryModule {
     }
     val tbl = s"$cat.corpus.docs"
     val zonePath = s"$root/dmldv_wh/corpus/docs"
-    if (!graft.sources.v2.DirSink.zoneFormat(zonePath)
-        .contains(graft.sources.v2.DirSink.FormatParquet)) {
+    if (!zoneExists(zonePath)) {
       s.sql(s"CREATE NAMESPACE IF NOT EXISTS $cat.corpus")
       Tables.load(s, dir, "documents")
         .select($"doc_id", $"lang", $"n_chars", lit("raw").as("tier"))
@@ -526,10 +521,8 @@ object Layouts extends QueryModule {
     val root = layoutRoot(dir)
     val path = s"$root/colmap_zone"
     val fmtName = "graft.sources.v2.DirSinkSource"
-    val ready = graft.sources.v2.DirSink.zoneFormat(path)
-      .contains(graft.sources.v2.DirSink.FormatParquet) &&
-      scala.util.Try(graft.sources.v2.DirSink.zoneColMap(path))
-        .toOption.exists(_.nonEmpty)
+    val ready = zoneExists(path) &&
+      graft.sources.v2.DirSink.zoneColMap(path).nonEmpty
     if (!ready) {
       val docs = Tables.load(s, dir, "documents")
       docs.filter($"doc_id" < 300)
@@ -576,10 +569,7 @@ object Layouts extends QueryModule {
   private def eventsZone(s: SparkSession, dir: String): String = {
     import s.implicits._
     val path = s"${layoutRoot(dir)}/events_dirsink_time"
-    if (!graft.sources.v2.DirSink.zoneFormat(path)
-        .contains(graft.sources.v2.DirSink.FormatParquet)) {
-      // (re)build: missing, or committed before the parquet data
-      // plane landed — the overwrite upgrades the zone in place
+    if (!zoneExists(path)) {
       Tables.load(s, dir, "events")
         .select($"event_id", $"ts", $"event_type", $"value")
         .repartitionByRange(8, $"ts")
@@ -648,8 +638,7 @@ object Layouts extends QueryModule {
   private def qDsv2AggNulls(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val path = s"${layoutRoot(dir)}/events_dirsink_nulls"
-    if (!graft.sources.v2.DirSink.zoneFormat(path)
-        .contains(graft.sources.v2.DirSink.FormatParquet)) {
+    if (!zoneExists(path)) {
       Tables.load(s, dir, "events")
         .select($"event_id",
           expr("nullif(event_type, 'click')").as("etype_n"),
@@ -672,9 +661,9 @@ object Layouts extends QueryModule {
   /** q_dsv2_embed_store — EMBEDDINGS LIVING IN THE ENGINE'S OWN TABLE
     * FORMAT (round 13, the parquet data plane's type-surface proof):
     * the embeddings corpus — `vec_id BIGINT, embedding ARRAY<FLOAT>,
-    * label INT` — is CTAS'd into a DirSink zone (the scalar-only text
-    * codec could never hold it; the parquet plane stores the array
-    * column natively under the same manifest/commit/stats machinery),
+    * label INT` — is CTAS'd into a DirSink zone (the parquet plane
+    * stores the array column natively under the manifest/commit/stats
+    * machinery),
     * and the brute-force cosine top-3 search then runs OVER THE ZONE
     * READ-BACK: every float of every vector must survive the round
     * trip bit-exactly or the similarity ranking diverges from the
@@ -690,8 +679,7 @@ object Layouts extends QueryModule {
   private def qDsv2EmbedStore(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val path = s"${layoutRoot(dir)}/embed_dirsink"
-    if (!graft.sources.v2.DirSink.zoneFormat(path)
-        .contains(graft.sources.v2.DirSink.FormatParquet)) {
+    if (!zoneExists(path)) {
       Tables.load(s, dir, "embeddings")
         .select($"vec_id", $"embedding", $"label")
         .write.format("graft.sources.v2.DirSinkSource")

@@ -103,11 +103,6 @@ object Tables {
   def load(spark: SparkSession, dir: String, name: String): DataFrame =
     spark.read.schema(schemas(name)).parquet(s"$dir/$name.parquet")
 
-  /** Kept for tooling compatibility — identical to [[load]] now that the
-    * events scan has no normalization step. */
-  def loadRaw(spark: SparkSession, dir: String, name: String): DataFrame =
-    load(spark, dir, name)
-
   private val rowCounts =
     new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
 

@@ -38,7 +38,7 @@ import org.apache.spark.unsafe.types.UTF8String
   *   - REWRITE generations (DELETE/UPDATE/MERGE/compact/overwrite)
   *     run the [[ChangeFeed]] multiset diff AS A SPARK JOB at planning
   *     time and STAGE the net changed rows (carried rows cancel in
-  *     exceptAll — a compaction is an empty change set) as line-codec
+  *     exceptAll — a compaction is an empty change set) as parquet
   *     files under the zone's `_cdf-scratch/<query scope>/`, planned
   *     as staged-file partitions read back on EXECUTORS. No row data
   *     ever materializes on the driver — a MERGE that nets 1 TB of
@@ -104,12 +104,11 @@ case class DirSinkCdfOffset(gen: Long) extends StreamOffset {
   override def json(): String = s"""{"gen":$gen}"""
 }
 
-/** One staged diff file of a rewrite generation: line-codec-encoded
-  * net-change rows under the zone's `_cdf-scratch`, read back (and
-  * decoded) executor-side — the driver only ever holds the file NAME. */
-case class DirSinkCdfStagedPartition(file: String, ddl: String,
-                                     changeType: String, gen: Long,
-                                     tsMs: Option[Long])
+/** One staged diff file of a rewrite generation: net-change rows as a
+  * parquet file under the zone's `_cdf-scratch`, read back
+  * executor-side — the driver only ever holds the file NAME. */
+case class DirSinkCdfStagedPartition(file: String, changeType: String,
+                                     gen: Long, tsMs: Option[Long])
     extends InputPartition
 
 /** One appended file of an append generation, read executor-side. */
@@ -200,21 +199,22 @@ class DirSinkCdfStream(path: String, zoneSchema: StructType,
         s"($s, $e] — restart the consumer from the evolve generation")
     val spark = SparkSession.active
     val fmtName = classOf[DirSinkSource].getName
-    val allIdx = zoneSchema.indices.toArray
 
-    // the stream's OWN schema (fixed at subscription) is the encode
-    // AND decode schema for collected diff rows — a generation's era
-    // DDL may be narrower (the rewrite predates a later evolve inside
-    // the replayed history) and decoding with it would mis-shape the
-    // rows the head-width consumer expects
+    // the stream's OWN schema (fixed at subscription) is the staging
+    // schema for diff rows — a generation's era DDL may be narrower
+    // (the rewrite predates a later evolve inside the replayed history)
+    // and staging with it would mis-shape the rows the head-width
+    // consumer expects. Staged files carry the subscription-time
+    // PHYSICAL names, so one parquet reader serves appended and staged
+    // files alike ([[createReaderFactory]])
     val streamSchema = DirSink.asNullable(zoneSchema)
-    val streamDdl = streamSchema.toDDL
+    val stagedSchema = DirSink.toPhysical(streamSchema, subscriptionColMap)
 
     // a\b and b\a from ONE pair of cached inputs (each side read once,
-    // not once per direction), encoded through the zone line codec and
-    // WRITTEN as scratch files — both jobs run entirely on executors;
-    // the driver handles only surviving file NAMES (round-15: the old
-    // shape collect()ed the net rows, which a 1%-of-100TB MERGE kills)
+    // not once per direction), WRITTEN as parquet scratch files — both
+    // jobs run entirely on executors; the driver handles only the
+    // written file NAMES (round-15: the old shape collect()ed the net
+    // rows, which a 1%-of-100TB MERGE kills)
     def stagedDiff(c: DirSinkLog.GenChange): Seq[InputPartition] = {
       def rd(g: Long, fs: Seq[String]) = {
         val df =
@@ -239,14 +239,29 @@ class DirSinkCdfStream(path: String, zoneSchema: StructType,
         val dir = new Path(scratchScope, s"g${c.gen}-$tag")
         val f = DirSink.fs(path)
         if (f.exists(dir)) f.delete(dir, true) // replayed batch: re-derive
-        df.queryExecution.toRdd
-          .mapPartitions(it => it.map(r => DirSink.encode(r, streamSchema)))
-          .saveAsTextFile(dir.toString)
-        f.listStatus(dir).toSeq
-          .filter(st => st.getPath.getName.startsWith("part-") &&
-            st.getLen > 0)
-          .map(st => DirSinkCdfStagedPartition(st.getPath.toString,
-            streamDdl, tpe, c.gen, c.ts): InputPartition)
+        val (owf, conf) = DirSinkParquet.writerFactory(stagedSchema)
+        val dirName = dir.toString
+        // one file per non-empty partition under a DETERMINISTIC name
+        // (a re-planned batch re-derives the same files), written under
+        // an attempt-private name and renamed into place: a failed or
+        // losing attempt never leaves a partial file at the final name
+        df.queryExecution.toRdd.mapPartitionsWithIndex { (i, rows) =>
+          if (!rows.hasNext) Iterator.empty
+          else {
+            val attempt = org.apache.spark.TaskContext.get().taskAttemptId()
+            val fin = new Path(dirName, s"part-$i.parquet")
+            val tmp = new Path(dirName, s".part-$i.parquet.a$attempt")
+            val w = DirSinkParquet.openWriter(owf, conf, stagedSchema,
+              tmp.toString, i, attempt)
+            try rows.foreach(w.write) finally w.close()
+            val fs = DirSink.execFs(dirName)
+            fs.delete(fin, false)
+            if (!fs.rename(tmp, fin)) throw new java.io.IOException(
+              s"could not publish staged change file $fin")
+            Iterator.single(fin.toString)
+          }
+        }.collect().toSeq.map(file =>
+          DirSinkCdfStagedPartition(file, tpe, c.gen, c.ts): InputPartition)
       }
       val a = rd(c.gen, c.addNames).persist()
       val b = rd(c.gen - 1, c.removeNames).persist()
@@ -260,8 +275,8 @@ class DirSinkCdfStream(path: String, zoneSchema: StructType,
         case (Nil, Nil) => Nil // metadata-only commit
         case (adds, Nil) =>
           adds.map(f => DirSinkCdfFilePartition(
-            DirSinkFilePartition(path, f, c.schemaDdl, allIdx),
-            "insert", c.gen, c.ts): InputPartition)
+            DirSinkFilePartition(path, f), "insert", c.gen, c.ts)
+            : InputPartition)
         case _ => stagedDiff(c)
       }
     }.toArray
@@ -283,14 +298,16 @@ class DirSinkCdfStream(path: String, zoneSchema: StructType,
   private lazy val subscriptionColMap: Map[String, String] =
     DirSink.zoneColMap(path)
 
-  override def createReaderFactory(): PartitionReaderFactory =
+  override def createReaderFactory(): PartitionReaderFactory = {
     // a column-mapped zone's parquet files resolve by PHYSICAL names;
     // the row layout is positional, so the feed's output names are
     // whatever the consumer's schema says regardless
-    DirSinkCdfReaderFactory(
-      DirSink.zoneFormat(path).contains(DirSink.FormatParquet),
-      DirSink.toPhysical(DirSink.asNullable(zoneSchema),
-        subscriptionColMap).toDDL)
+    val data = DirSink.toPhysical(DirSink.asNullable(zoneSchema),
+      subscriptionColMap)
+    DirSinkCdfReaderFactory(DirSinkParquetReaderFactory(
+      DirSinkParquet.readerClosure(data, data, Seq.empty),
+      data.toDDL, data.toDDL))
+  }
 
   /** The batch up to `end` is durably committed — its staged diff
     * files can never be re-read (a restart replays only LATER ranges),
@@ -303,10 +320,10 @@ class DirSinkCdfStream(path: String, zoneSchema: StructType,
   override def stop(): Unit = ()
 }
 
-/** Executor side: decode the partition's rows (committed file via the
-  * zone's data plane, staged diff file via the line codec) and append
-  * the three CDF columns as constants. */
-case class DirSinkCdfReaderFactory(parquetPlane: Boolean, ddl: String)
+/** Executor side: read the partition's parquet file (a committed zone
+  * file or a staged diff file) and append the three CDF columns as
+  * constants. */
+case class DirSinkCdfReaderFactory(files: DirSinkParquetReaderFactory)
     extends PartitionReaderFactory {
 
   private def suffixed(inner: PartitionReader[InternalRow],
@@ -326,31 +343,13 @@ case class DirSinkCdfReaderFactory(parquetPlane: Boolean, ddl: String)
   override def createReader(
       partition: InputPartition): PartitionReader[InternalRow] =
     partition match {
-      case DirSinkCdfStagedPartition(file, pddl, tpe, gen, ts) =>
-        val sch = StructType.fromDDL(pddl)
+      case DirSinkCdfStagedPartition(file, tpe, gen, ts) =>
         val p = new Path(file)
-        val in = DirSink.execFs(file).open(p)
-        val reader = new java.io.BufferedReader(
-          new java.io.InputStreamReader(in, "UTF-8"))
-        suffixed(new PartitionReader[InternalRow] {
-          private var cur: InternalRow = _
-          override def next(): Boolean = {
-            val line = reader.readLine()
-            if (line == null) false
-            else { cur = DirSink.decode(line, sch); true }
-          }
-          override def get(): InternalRow = cur
-          override def close(): Unit = reader.close()
-        }, tpe, gen, ts)
+        suffixed(files.createReader(
+          DirSinkFilePartition(p.getParent.toString, p.getName)),
+          tpe, gen, ts)
       case DirSinkCdfFilePartition(base, tpe, gen, ts) =>
-        val inner =
-          if (parquetPlane) {
-            val data = StructType.fromDDL(ddl)
-            DirSinkParquetReaderFactory(
-              DirSinkParquet.readerClosure(data, data, Seq.empty),
-              ddl, ddl).createReader(base)
-          } else new DirSinkReaderFactory().createReader(base)
-        suffixed(inner, tpe, gen, ts)
+        suffixed(files.createReader(base), tpe, gen, ts)
       case p => throw new IllegalStateException(s"unexpected partition $p")
     }
 }

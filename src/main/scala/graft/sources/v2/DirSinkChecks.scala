@@ -161,13 +161,13 @@ object DirSinkChecks {
   /** The quarantine column appended to the write schema. */
   val DeadLetterCol = "_check"
 
-  /** Driver-resolved quarantine target: schema, data-plane format, and
-    * (parquet) the prepared writer factory — a self-contained
-    * serializable value the task writers build their side writer from. */
+  /** Driver-resolved quarantine target: schema and the prepared parquet
+    * writer factory — a self-contained serializable value the task
+    * writers build their side writer from. */
   case class DeadLetter(
-      qpath: String, qschema: StructType, format: String,
-      parquet: Option[(org.apache.spark.sql.execution.datasources
-        .OutputWriterFactory, DirSinkParquet.SerializableConf)])
+      qpath: String, qschema: StructType,
+      parquet: (org.apache.spark.sql.execution.datasources
+        .OutputWriterFactory, DirSinkParquet.SerializableConf))
     extends Serializable
 
   /** DRIVER side, at write-plan time: validate and resolve the
@@ -197,11 +197,7 @@ object DirSinkChecks {
             "constraints — a quarantine must accept everything routed to it")
       val qschema = StructType(DirSink.asNullable(schema).fields :+
         StructField(DeadLetterCol, StringType, nullable = true))
-      val fmt = DirSink.resolveWriteFormat(qpath, None, truncate = false)
-      DeadLetter(qpath, qschema, fmt,
-        if (fmt == DirSink.FormatParquet)
-          Some(DirSinkParquet.writerFactory(qschema, Seq.empty))
-        else None)
+      DeadLetter(qpath, qschema, DirSinkParquet.writerFactory(qschema))
     }
 
   /** EXECUTOR side: the routing writer. Clean rows flow to `inner`;
@@ -218,11 +214,8 @@ object DirSinkChecks {
     private var qw: DataWriter[InternalRow] = _
 
     private def quarantine(record: InternalRow, check: String): Unit = {
-      if (qw == null) qw = dl.parquet match {
-        case Some((owf, conf)) => new DirSinkParquetWriter(dl.qpath,
-          dl.qschema, queryId, attempt, owf, conf, partitionId, taskId)
-        case None => new DirSinkWriter(dl.qpath, dl.qschema, queryId, attempt)
-      }
+      if (qw == null) qw = new DirSinkParquetWriter(dl.qpath, dl.qschema,
+        queryId, attempt, dl.parquet._1, dl.parquet._2, partitionId, taskId)
       val vals = new Array[Any](n + 1)
       var i = 0
       while (i < n) {
@@ -313,8 +306,7 @@ object DirSinkChecks {
         e => DirSink.mergeTxn(
           parent.map(m => DirSink.parseTxn(m.header)).getOrElse(Map.empty),
           Map(DirSink.txnQid(queryId) -> e)))
-      val header = DirSink.nextHeader(parent, newEpoch = epoch) +
-        (DirSink.FormatKey -> dl.format) ++
+      val header = DirSink.nextHeader(parent, newEpoch = epoch) ++
         (if (txn.nonEmpty)
           Some(DirSink.TxnKey -> DirSink.renderTxn(txn)) else None)
       val lines = committed.map { m =>

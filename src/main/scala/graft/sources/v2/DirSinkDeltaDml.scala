@@ -100,7 +100,6 @@ class DirSinkDeltaBatchWrite(path: String, schema: StructType,
       info: PhysicalWriteInfo): DeltaWriterFactory =
     DirSinkDeltaWriterFactory(path, queryId,
       DirSinkWriterFactory.resolved(path, schema, queryId,
-        DirSink.zoneFormat(path).getOrElse(DirSink.FormatText),
         DirSink.zoneBucket(path)))
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {

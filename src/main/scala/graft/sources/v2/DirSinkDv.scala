@@ -20,12 +20,11 @@ import org.apache.hadoop.fs.Path
   * and emits clean files, so compaction is also the vector GC.
   *
   * Positions are ROW ORDINALS WITHIN THE COMMITTED FILE, the same
-  * enumeration on both planes and both sides (the writer's `_pos`
-  * metadata column and the reader's skip counter are the same code
-  * path): the text plane counts decoded lines; the parquet plane uses
-  * Spark's own row-index machinery
-  * (`ParquetFileFormat.ROW_INDEX_TEMPORARY_COLUMN_NAME`), which is
-  * split-stable — a byte-range slice sees the file-global index.
+  * enumeration on both sides (the writer's `_pos` metadata column and
+  * the reader's skip both come from Spark's own parquet row-index
+  * machinery, `ParquetFileFormat.ROW_INDEX_TEMPORARY_COLUMN_NAME`),
+  * which is split-stable — a byte-range slice sees the file-global
+  * index.
   *
   * Vectors are IMMUTABLE: a second DELETE on the same file writes a
   * NEW vector holding the union and re-tags the line, so every

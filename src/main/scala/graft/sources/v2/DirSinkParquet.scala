@@ -11,27 +11,20 @@ import org.apache.spark.sql.sources.Filter
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.vectorized.ColumnarBatch
 
-/** The PARQUET DATA PLANE of the DirSink table format (round 13): the
-  * commit protocol, manifest, per-file stats, skipping, DML, time
-  * travel, and streaming machinery were always format-agnostic — this
-  * module swaps the payload under them from the demo-grade escaped-text
-  * line codec to real Parquet files, which is the difference between a
-  * format you demo and one you point 100 TB at:
+/** The DATA PLANE of the DirSink table format: every committed file is
+  * a Parquet file, under the format-agnostic commit protocol, manifest,
+  * per-file stats, skipping, DML, time travel, and streaming machinery:
   *
   *   - COLUMNAR I/O: a 2-column projection over a 30-column zone reads
-  *     2 column chunks, not every byte of every line (the text codec's
-  *     `decodeProjected` skipped CONVERSION but still paid full-line
-  *     read + tokenize);
-  *   - COMPRESSION: snappy/zstd column chunks are 3–5× smaller than
-  *     uncompressed text — at 100 TB that is the storage bill and the
-  *     scan time;
+  *     2 column chunks;
+  *   - COMPRESSION: snappy/zstd column chunks — at 100 TB that is the
+  *     storage bill and the scan time;
   *   - SPLITTABLE READS: a committed file is planned as multiple
   *     byte-range [[PartitionedFile]] slices aligned to row groups, so
   *     scan parallelism is sized by data volume, not file count — after
   *     `compact(targetFiles = 4)` a zone still fans out to every core;
   *   - FULL TYPE SURFACE: arrays (embeddings), binary (multimodal
-  *     payloads), decimals, maps, structs — the north-star columns the
-  *     scalar-only text codec had to reject — round-trip natively.
+  *     payloads), decimals, maps, structs round-trip natively.
   *
   * Implementation: the writer and reader ARE Spark's own Parquet
   * machinery, driven through its `FileFormat` surface —
@@ -149,8 +142,7 @@ object DirSinkParquet {
     * so Spark re-evaluates row-level semantics regardless and the
     * reader may only ever skip provably-dead stripes. Missing columns
     * (a file committed before a schema evolution widened the zone) read
-    * as NULL by Parquet's name-based resolution — the same contract
-    * `decodeProjected` gives text zones. */
+    * as NULL by Parquet's name-based resolution. */
   def readerClosure(dataSchema: StructType, requiredSchema: StructType,
                     filters: Seq[Filter])
       : PartitionedFile => Iterator[InternalRow] = {

@@ -86,15 +86,13 @@ class DirSinkReplaceDataWrite(path: String, schema: StructType,
                               op: DirSinkRowLevelOperation)
     extends BatchWrite {
 
-  /** The rewrite inherits the ZONE's committed data-plane format and
-    * bucket layout — a row-level DML must never mix planes or break
-    * bucket purity under one manifest (an UPDATE may even move a row's
-    * bucket column; the router re-hashes per row, so the rewritten
-    * files stay pure). */
+  /** The rewrite inherits the ZONE's committed bucket layout — a
+    * row-level DML must never break bucket purity under one manifest
+    * (an UPDATE may even move a row's bucket column; the router
+    * re-hashes per row, so the rewritten files stay pure). */
   override def createBatchWriterFactory(
       info: PhysicalWriteInfo): DataWriterFactory =
     DirSinkWriterFactory.resolved(path, schema, queryId,
-      DirSink.zoneFormat(path).getOrElse(DirSink.FormatText),
       DirSink.zoneBucket(path))
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {

@@ -54,11 +54,11 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   * All file ops go through the Hadoop [[FileSystem]] resolved from the
   * session configuration (works on hdfs:/s3a: roots, same as the
-  * Layouts artifact guard). The row format is a plain escaped-text
-  * line codec ([[DirSink.encode]]) over long/int/double/boolean/string
-  * fields — the protocol is the point, the payload format is
-  * deliberately trivial. Round-trip, retry, abort, and overwrite
-  * semantics are pinned by DirSinkSpec.
+  * Layouts artifact guard). Every committed file is a Parquet file
+  * written and read by Spark's own Parquet machinery
+  * ([[DirSinkParquet]]): columnar, compressed, splittable, and open to
+  * the full type surface (arrays, decimals, maps, structs). Round-trip,
+  * retry, abort, and overwrite semantics are pinned by DirSinkSpec.
   *
   * The full table-format surface (one commit protocol under all of it):
   *
@@ -155,27 +155,32 @@ object DirSink {
   val ManifestName = "_GRAFT_COMMIT"
   val LockName = "_GRAFT_LOCK"
 
-  /** Zone data-plane formats (`#format=` manifest header). PARQUET is
-    * the default for new zones — columnar, compressed, splittable
-    * ([[DirSinkParquet]]); TEXT is the original line codec, kept for
-    * zones that predate the parquet plane (a manifest with no `#format`
-    * header reads as text — full backward compatibility) and for specs
-    * that pin the codec itself. The format is a ZONE property: every
-    * file under one manifest shares it, so maintenance rewrites
-    * (compact, DELETE, row-level DML) inherit it and never mix planes
-    * within a zone. */
+  /** The data plane (`#format=` manifest header). Parquet is the one
+    * payload ([[DirSinkParquet]]): every publish stamps
+    * `#format=parquet` ([[publishCommit]]), and a manifest without it
+    * is refused at [[readManifestRaw]] rather than misread. The
+    * `format` write option and table property accept only `parquet`
+    * ([[checkFormat]]). */
   val FormatKey = "format"
   val FormatParquet = "parquet"
-  val FormatText = "text"
 
   /** Write option: `option("mergeSchema", "true")` lets a batch append
     * auto-widen the zone schema (nullable tail columns) in the same
     * commit as its data — the Delta `mergeSchema` ergonomic. */
   val MergeSchemaKey = "mergeSchema"
 
-  /** The zone's committed data-plane format; None = no zone yet. */
+  /** The zone's `#format` header; None = no zone yet. */
   def zoneFormat(path: String): Option[String] =
-    readManifestRaw(path).map(_.header.getOrElse(FormatKey, FormatText))
+    readManifestRaw(path).flatMap(_.header.get(FormatKey))
+
+  /** Refuse a `format` write option or table property naming anything
+    * but parquet — never silently ignored. */
+  private[v2] def checkFormat(format: Option[String]): Unit =
+    format.filter(_ != FormatParquet).foreach { f =>
+      throw new IllegalArgumentException(
+        s"unsupported DirSink format '$f' — the only data plane is " +
+          FormatParquet)
+    }
 
   /** BUCKETED ZONES (`#bucket=<col>:<n>` manifest header) — the
     * co-location tier of the table format: every committed file is PURE
@@ -191,7 +196,7 @@ object DirSink {
     * Equality predicates on the bucket column additionally prune to the
     * matching bucket's files at plan time, clustered or not.
     *
-    * Like the data-plane format, bucketing is a ZONE property: appends
+    * Bucketing is a ZONE property: appends
     * inherit it (a mismatched `bucket` option is an error), maintenance
     * rewrites (compact, DELETE copy-on-write, row-level DML) re-route
     * rows through the same bucket function so purity survives every
@@ -268,9 +273,9 @@ object DirSink {
     * through the pushed predicates — the manifest only records WHICH
     * columns carry them, never the filter bytes (a manifest-level bloom
     * sized for a 100M-row file would be megabytes per line). A zone
-    * property with the same law as the data-plane format: appends
+    * property with the same law as the bucket layout: appends
     * inherit, a mismatched option errors, TRUNCATE may re-set,
-    * `bloomfor=none` drops. Parquet zones only. */
+    * `bloomfor=none` drops. */
   val BloomKey = "bloomfor"
 
   /** The zone's bloom-filtered columns; empty = none (or no zone). */
@@ -298,10 +303,10 @@ object DirSink {
     }
   }
 
-  /** Bucket layout for a write — the same law as [[resolveWriteFormat]]:
-    * an existing zone's layout binds appends (mismatch = error, never a
-    * silently half-bucketed zone); TRUNCATE may re-bucket or drop
-    * (`bucket=none`); a fresh zone takes the option. */
+  /** Bucket layout for a write: an existing zone's layout binds
+    * appends (mismatch = error, never a silently half-bucketed zone);
+    * TRUNCATE may re-bucket or drop (`bucket=none`); a fresh zone takes
+    * the option. */
   private[v2] def resolveWriteBucket(path: String, option: Option[String],
                                      truncate: Boolean): Option[BucketSpec] = {
     val opt = option.map(o =>
@@ -325,31 +330,6 @@ object DirSink {
         }
         opt.flatten
       case existing => opt.getOrElse(existing)
-    }
-  }
-
-  /** Format for a write: an existing zone's format is LAW for appends
-    * (a mismatched option is an error, not a silent mixed zone);
-    * TRUNCATE may re-format (it replaces every file anyway); a fresh
-    * zone takes the option, defaulting to parquet. */
-  private[v2] def resolveWriteFormat(path: String, option: Option[String],
-                                     truncate: Boolean): String = {
-    option.foreach { o =>
-      if (o != FormatParquet && o != FormatText)
-        throw new IllegalArgumentException(
-          s"unknown DirSink format '$o' — supported: " +
-            s"$FormatParquet (default), $FormatText")
-    }
-    zoneFormat(path) match {
-      case Some(existing) if !truncate =>
-        option.filter(_ != existing).foreach { o =>
-          throw new IllegalArgumentException(
-            s"zone $path is committed as format=$existing; appending " +
-              s"format=$o would mix data planes under one manifest — " +
-              "overwrite the zone to re-format it")
-        }
-        existing
-      case existing => option.orElse(existing).getOrElse(FormatParquet)
     }
   }
 
@@ -454,11 +434,10 @@ object DirSink {
     }
     try body finally f.delete(lock, false)
   }
-  private val Sep = '\u0001'
 
   /** Driver side: the session's Hadoop configuration (credentials,
-    * fs.* overrides). Executor side ([[DirSinkWriter]], the read-back
-    * reader) has no active session — those use the executor's own
+    * fs.* overrides). Executor side ([[DirSinkParquetWriter]], the
+    * read-back reader) has no active session — those use the executor's own
     * Hadoop configuration via [[execFs]], the standard site-config
     * path. */
   private[v2] def fs(path: String): FileSystem =
@@ -515,12 +494,14 @@ object DirSink {
     * appends/deletes, a full snapshot segment only when the operation
     * replaces history anyway (overwrite/compact/DROP COLUMN). The
     * publish is a fresh-name rename: atomic, never a window without a
-    * readable state, and a duplicate generation claim fails loudly. */
+    * readable state, and a duplicate generation claim fails loudly.
+    * Every publish stamps the data plane (`#format=parquet`). */
   private[v2] def publishCommit(path: String, schema: StructType,
                                 header: Map[String, String],
                                 body: DirSinkLog.CommitBody,
                                 tmpSuffix: String): Unit =
-    DirSinkLog.publish(path, asNullable(schema), header, body, tmpSuffix)
+    DirSinkLog.publish(path, asNullable(schema),
+      header + (FormatKey -> FormatParquet), body, tmpSuffix)
 
   /** Manifest layout: line 1 = DDL schema; then one
     * `<fileName>\t<rowCount>[\t<epochId>][\t<statsField>]` per
@@ -576,8 +557,16 @@ object DirSink {
     val m = DirSinkLog.head(path).orElse(legacyManifest(path))
     // protocol gate at the ONE funnel every metadata probe reads
     // through: a `#features` list naming a reader feature this build
-    // does not implement refuses loudly instead of misreading
-    m.foreach(x => DirSinkProtocol.checkRead(x.header, path))
+    // does not implement refuses loudly instead of misreading, and so
+    // does a manifest that does not declare the parquet data plane
+    m.foreach { x =>
+      DirSinkProtocol.checkRead(x.header, path)
+      if (!x.header.get(FormatKey).contains(FormatParquet))
+        throw new IllegalStateException(
+          s"zone $path declares no #$FormatKey=$FormatParquet data plane " +
+            s"(got ${x.header.getOrElse(FormatKey, "none")}) — refusing to " +
+            "read its files as parquet")
+    }
     m
   }
 
@@ -904,7 +893,7 @@ object DirSink {
     *     offset vocabulary, unchanged.
     *
     * Returns the resolved manifest (schema/header AT the snapshot — a
-    * pre-evolution snapshot reads with its own columns and data plane)
+    * pre-evolution snapshot reads with its own columns and layout)
     * plus the visible entry list. */
   private[v2] def resolveState(path: String, asOfOffset: Option[Int],
                                asOfTimestamp: Option[Long],
@@ -1035,9 +1024,9 @@ object DirSink {
       throw new IllegalArgumentException(
         s"no ${ManifestName} manifest under $path — nothing was committed"))
 
-  /** Manifest schema lines are published ALL-NULLABLE: the line codec
-    * has a NULL token for every column, and schema evolution reads old
-    * files with NULL tails — so a writer's NOT NULL attribute (a
+  /** Manifest schema lines are published ALL-NULLABLE: every parquet
+    * column is written nullable, and schema evolution reads old files
+    * with NULL tails — so a writer's NOT NULL attribute (a
     * literal INSERT, a non-null DataFrame) must never narrow the ZONE's
     * contract. (Before this normalization an INSERT of literals flipped
     * manifest columns to NOT NULL, and a post-evolution read of an old
@@ -1064,14 +1053,14 @@ object DirSink {
   /** SCHEMA EVOLUTION guard for appends: the only supported evolution
     * is APPENDING NULLABLE COLUMNS — the previous schema must be a
     * prefix of the new one (same names and types, in order). Old files
-    * then decode naturally (their lines are field-prefixes; missing
-    * tail positions read as NULL, [[decodeProjected]]), the manifest's
-    * single schema line advances to the widest schema, and old files'
-    * stats fields simply lack the new columns (parsed as never-skip —
-    * conservative). Renames, drops, reorders, and type changes are
-    * REJECTED: positional line codecs cannot re-map them, and silently
-    * misreading every old row is the failure mode this guard exists to
-    * prevent (the Hive/CSV schema-drift classic). */
+    * then read naturally (parquet resolves columns by name; a column a
+    * file lacks reads as NULL), the manifest's single schema line
+    * advances to the widest schema, and old files' stats fields simply
+    * lack the new columns (parsed as never-skip — conservative).
+    * Renames, drops, reorders, and type changes are REJECTED here:
+    * stats are positional, and renames and drops have their own
+    * metadata paths ([[renameColumn]], [[dropColumn]]) that keep them
+    * aligned. */
   private[v2] def checkEvolution(prev: StructType, next: StructType): Unit = {
     val ok = prev.length <= next.length &&
       prev.fields.zip(next.fields).forall { case (a, b) =>
@@ -1199,14 +1188,12 @@ object DirSink {
     logSwept ++ swept.toSeq
   }
 
-  // ---- the line codec: \u0001-separated fields; backslash escapes;
-  // a lone \0 token is SQL NULL
   /** SCHEMA EVOLUTION — advance the zone's schema to `next` (which must
     * pass [[checkEvolution]]: the current schema plus appended nullable
     * columns) by republishing the manifest with the wider DDL line and
     * the SAME file lines, through the usual atomic pointer swap. Old
-    * files are untouched: their lines are field-prefixes of the new
-    * schema and decode with NULL tails ([[decodeProjected]]). After the
+    * files are untouched: they lack the appended columns, which read
+    * as NULL. After the
     * evolve, ordinary appends with the wider schema just work (the
     * commit guard sees equal schemas), and the catalog surfaces this as
     * `ALTER TABLE … ADD COLUMNS` ([[GraftCatalog.alterTable]]). */
@@ -1264,8 +1251,7 @@ object DirSink {
   // rename without rewriting every file needs the read/write paths to
   // speak the PHYSICAL name at the file boundary while the schema,
   // stats (positional), checks, and SQL stay logical — Delta's
-  // column-mapping discipline. Text zones need no mapping at all
-  // (the line codec is positional; names live only in the DDL line).
+  // column-mapping discipline.
 
   val ColMapKey = "colmap"
 
@@ -1301,18 +1287,16 @@ object DirSink {
       colmap.get(f.name).fold(f)(p => f.copy(name = p))))
 
   /** RENAME COLUMN — the remaining ALTER direction: republish the
-    * manifest with the field renamed in the schema line and, on
-    * parquet zones, the logical→physical mapping recorded in the
-    * `#colmap` header so every committed file keeps resolving by its
-    * write-time (physical) name — zero data rewritten, the Delta
-    * column-mapping shape. Text zones rename for free (positional
-    * codec). Stats are positional, so bounds stay aligned with no
-    * rewrite — the property DROP COLUMN had to excise for. Refused
-    * when a CHECK constraint references the column (its stored SQL
-    * would dangle), when the target name collides with another
-    * column's LOGICAL name (ambiguous resolution) or, on parquet,
-    * another column's PHYSICAL name (two fields would resolve to one
-    * file chunk). The bucket layout and bloom coverage follow the
+    * manifest with the field renamed in the schema line and the
+    * logical→physical mapping recorded in the `#colmap` header so every
+    * committed file keeps resolving by its write-time (physical) name
+    * — zero data rewritten, the Delta column-mapping shape. Stats are
+    * positional, so bounds stay aligned with no rewrite — the property
+    * DROP COLUMN had to excise for. Refused when a CHECK constraint
+    * references the column (its stored SQL would dangle), when the
+    * target name collides with another column's LOGICAL name
+    * (ambiguous resolution) or another column's PHYSICAL name (two
+    * fields would resolve to one file chunk). The bucket layout and bloom coverage follow the
     * rename (their headers speak logical names; the writer maps). */
   def renameColumn(path: String, from: String, to: String): Unit =
     withZoneLock(path) {
@@ -1329,22 +1313,17 @@ object DirSink {
         throw new IllegalArgumentException(
           s"cannot rename $from to $to — the zone already has a column " +
             "with that name")
-      val fmt = m.header.getOrElse(FormatKey, FormatText)
       val colmap = parseColMap(m.header)
-      val nmap: Map[String, String] =
-        if (fmt != FormatParquet) Map.empty // positional codec: free
-        else {
-          val othersPhysical = m.schema.fieldNames.filterNot(_ == from)
-            .map(c => colmap.getOrElse(c, c))
-          if (othersPhysical.exists(_.equalsIgnoreCase(to)))
-            throw new IllegalArgumentException(
-              s"cannot rename $from to $to — another column's PHYSICAL " +
-                s"(file-level) name is $to; two fields would resolve to " +
-                "one parquet chunk")
-          val physical = colmap.getOrElse(from, from)
-          val base = colmap - from
-          if (physical == to) base else base + (to -> physical)
-        }
+      val othersPhysical = m.schema.fieldNames.filterNot(_ == from)
+        .map(c => colmap.getOrElse(c, c))
+      if (othersPhysical.exists(_.equalsIgnoreCase(to)))
+        throw new IllegalArgumentException(
+          s"cannot rename $from to $to — another column's PHYSICAL " +
+            s"(file-level) name is $to; two fields would resolve to " +
+            "one parquet chunk")
+      val physical = colmap.getOrElse(from, from)
+      val nmap = if (physical == to) colmap - from
+        else colmap - from + (to -> physical)
       val idx = m.schema.fieldIndex(from)
       val next = StructType(m.schema.fields.updated(idx,
         m.schema.fields(idx).copy(name = to)))
@@ -1374,18 +1353,15 @@ object DirSink {
         DirSinkLog.DeltaCommit(Nil, Nil), "rename")
     }
 
-  /** DROP COLUMN — schema evolution's other direction, PARQUET ZONES
-    * ONLY: republish the manifest with the column removed from the
+  /** DROP COLUMN — schema evolution's other direction: republish the
+    * manifest with the column removed from the
     * schema line and its entry excised from every per-file stats field
     * (without the excision a middle drop would shift every later
     * column's bounds one slot left — the skipper and the DELETE
     * metadata fast path would then prune files against the WRONG
     * column's min/max, a silent-wrong-answer class, not a perf bug).
     * Data files are untouched: Parquet resolves columns BY NAME, so old
-    * files simply stop projecting the dropped chunk — which is exactly
-    * why the positional text codec cannot support this (field i's
-    * removal shifts every later field's position in every line).
-    * Refused for the bucket column (the layout hashes it) and for the
+    * files simply stop projecting the dropped chunk. Refused for the bucket column (the layout hashes it) and for the
     * last remaining column. Like every manifest rewrite, snapshots that
     * predate the drop see the NEW schema — rewritten history, the
     * caveat `evolveSchema` already carries. */
@@ -1534,11 +1510,6 @@ object DirSink {
     val m = readManifestRaw(path).getOrElse(
       throw new IllegalArgumentException(
         s"no ${ManifestName} manifest under $path — nothing was committed"))
-    val fmt = m.header.getOrElse(FormatKey, FormatText)
-    if (fmt != FormatParquet) throw new UnsupportedOperationException(
-      s"DROP COLUMN requires the parquet data plane; zone $path is " +
-        s"format=$fmt (the text codec decodes fields positionally — " +
-        "removing one shifts every later field in every committed line)")
     if (!m.schema.fieldNames.contains(colName))
       throw new IllegalArgumentException(
         s"column $colName is not in the zone schema " +
@@ -1777,8 +1748,8 @@ object DirSink {
     * Mechanics mirror the CoW DELETE's rewrite: the small files read
     * through the connector (optionally range-clustered on `clusterBy`
     * so the packed tail gains skippable bounds), write to a scratch
-    * zone inheriting the parent's data plane / bucket layout / bloom
-    * coverage / column mapping, move in under their globally-unique
+    * zone inheriting the parent's bucket layout / bloom coverage /
+    * column mapping, move in under their globally-unique
     * names, and ONE gen-verified delta commit swaps small-out /
     * packed-in — big files' lines (and their stats) never re-serialize,
     * and pre-optimize generations stay time-travelable through the
@@ -1835,7 +1806,6 @@ object DirSink {
      else shaped.toDF(parent.schema.fieldNames.map(phys).toSeq: _*))
       .write.format(fmt)
       .option("path", scratch.toString)
-      .option(FormatKey, parent.header.getOrElse(FormatKey, FormatText))
       .option(BucketKey, bucketOf(parent.header)
         .fold(BucketNone)(b => b.copy(col = phys(b.col)).render))
       .option(BloomKey, parent.header.get(BloomKey)
@@ -1893,7 +1863,6 @@ object DirSink {
        .toDF(parent.schema.fieldNames.map(phys).toSeq: _*))
       .write.format(fmt)
       .option("path", scratch.toString)
-      .option(FormatKey, parent.header.getOrElse(FormatKey, FormatText))
       .option(BucketKey, bucketOf(parent.header)
         .fold(BucketNone)(b => b.copy(col = phys(b.col)).render))
       .option(BloomKey, parent.header.get(BloomKey)
@@ -1925,85 +1894,6 @@ object DirSink {
         scala.util.Try((p.substring(0, c).toInt,
           p.substring(c + 1).toInt)).toOption
       }
-
-  private def escape(s: String): String =
-    s.flatMap {
-      case '\\' => "\\\\"
-      case '\u0001' => "\\c"
-      case '\n' => "\\n"
-      case c => c.toString
-    }
-
-  private def unescape(s: String): String = {
-    val b = new StringBuilder
-    var i = 0
-    while (i < s.length) {
-      if (s(i) == '\\' && i + 1 < s.length) {
-        s(i + 1) match {
-          case '\\' => b += '\\'
-          case 'c' => b += '\u0001'
-          case 'n' => b += '\n'
-          case o => b += o
-        }
-        i += 2
-      } else { b += s(i); i += 1 }
-    }
-    b.toString
-  }
-
-  def encode(row: InternalRow, schema: StructType): String =
-    schema.fields.zipWithIndex.map { case (f, i) =>
-      if (row.isNullAt(i)) "\\0"
-      else f.dataType match {
-        case LongType => row.getLong(i).toString
-        case IntegerType => row.getInt(i).toString
-        case DoubleType => row.getDouble(i).toString
-        case BooleanType => row.getBoolean(i).toString
-        case StringType => escape(row.getUTF8String(i).toString)
-        // temporal types ride their internal integer encodings (micros
-        // since epoch / days since epoch) — absolute, timezone-free,
-        // and ORDERED, so the same bounds machinery skips on them
-        case TimestampType => row.getLong(i).toString
-        case DateType => row.getInt(i).toString
-        case dt => throw new IllegalArgumentException(
-          s"DirSink supports long/int/double/boolean/string/timestamp/" +
-            s"date, got $dt")
-      }
-    }.mkString("\u0001")
-
-  def decode(line: String, schema: StructType): InternalRow =
-    decodeProjected(line, schema, schema.indices.toArray, null)
-
-  /** Column-pruned decode: parse ONLY the projected field positions
-    * (`idx`, positions in the FULL schema) — a 2-column projection over
-    * a wide zone converts 2 fields per line, not all of them. A
-    * position past the line's field count decodes as NULL: that is a
-    * file committed BEFORE a schema-evolution append widened the zone
-    * (new columns append at the tail, so old lines are prefixes).
-    * Position -1 is the [[FileNameCol]] metadata column — constant
-    * `fileName` per partition. */
-  def decodeProjected(line: String, schema: StructType,
-                      idx: Array[Int], fileName: String,
-                      pos: Long = -1L): InternalRow = {
-    // limit -1: a trailing EMPTY string field must survive the split
-    val parts = line.split(Sep.toString, -1)
-    new GenericInternalRow(idx.map { i =>
-      if (i == -1) UTF8String.fromString(fileName): Any
-      else if (i == -2) pos: Any else {
-      val p = if (i < parts.length) parts(i) else "\\0"
-      if (p == "\\0") null
-      else schema(i).dataType match {
-        case LongType => p.toLong
-        case IntegerType => p.toInt
-        case DoubleType => p.toDouble
-        case BooleanType => p.toBoolean
-        case StringType => UTF8String.fromString(unescape(p))
-        case TimestampType => p.toLong // micros since epoch
-        case DateType => p.toInt // days since epoch
-        case dt => throw new IllegalArgumentException(s"unsupported $dt")
-      }
-    }}.toArray[Any])
-  }
 }
 
 /** `pinned` carries catalog-level TIME TRAVEL (`VERSION AS OF` /
@@ -2087,8 +1977,7 @@ class DirSinkTable(path: String, schema0: StructType,
   override def properties(): util.Map[String, String] = {
     val m = new util.HashMap[String, String]()
     DirSink.readManifestRaw(path).foreach { raw =>
-      m.put(DirSink.FormatKey,
-        raw.header.getOrElse(DirSink.FormatKey, DirSink.FormatText))
+      m.put(DirSink.FormatKey, DirSink.FormatParquet)
       m.put("generation", raw.gen.toString)
       m.put("files", raw.lines.size.toString)
       raw.header.get(DirSink.BucketKey).foreach(b =>
@@ -2141,17 +2030,18 @@ class DirSinkTable(path: String, schema0: StructType,
     caps
   }
 
-  override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder =
+  override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder = {
+    DirSink.checkFormat(Option(info.options.get(DirSink.FormatKey)))
     new DirSinkWriteBuilder(path, info.schema(), info.queryId(),
       Option(info.options.get("compactRemapFrom")).map(_.toInt),
       Option(info.options.get("compactRemapChain")).filter(_.nonEmpty),
-      Option(info.options.get(DirSink.FormatKey)),
       Option(info.options.get(DirSink.BucketKey)).orElse(
         pinned.get(DirSink.BucketKey)),
       Option(info.options.get(DirSink.BloomKey)).orElse(
         pinned.get(DirSink.BloomKey)),
       Option(info.options.get(DirSinkChecks.DeadLetterKey)).orElse(
         pinned.get(DirSinkChecks.DeadLetterKey)))
+  }
 
   /** HYBRID DELETE (`DELETE FROM … WHERE …`): the metadata fast path
     * first — per-file stats PROVE a file all-match
@@ -2263,11 +2153,9 @@ class DirSinkTable(path: String, schema0: StructType,
        else surviving.toDF(manifestSchema.fieldNames.map(phys).toSeq: _*))
         .write.format(classOf[DirSinkSource].getName)
         .option("path", scratch.toString)
-        // the rewrite inherits the parent zone's data plane AND bucket
-        // layout: its files MOVE into the parent manifest, which must
-        // stay single-format and bucket-pure
-        .option(DirSink.FormatKey, parent.header.getOrElse(
-          DirSink.FormatKey, DirSink.FormatText))
+        // the rewrite inherits the parent zone's bucket layout: its
+        // files MOVE into the parent manifest, which must stay
+        // bucket-pure
         .option(DirSink.BucketKey, DirSink.bucketOf(parent.header)
           .fold(DirSink.BucketNone)(b => b.copy(col = phys(b.col)).render))
         .option(DirSink.BloomKey, parent.header.get(DirSink.BloomKey)
@@ -2415,9 +2303,9 @@ class DirSinkTable(path: String, schema0: StructType,
   *     remembered set is what `pushedFilters` reports — it shows in
   *     `explain` as `PushedFilters`, which is exactly what it is: the
   *     predicates the planner used against file-level metadata.
-  *   - `SupportsPushDownRequiredColumns` — the reader decodes only the
-  *     projected fields of each line; a 2-column projection over a
-  *     30-column zone parses 2 fields per row.
+  *   - `SupportsPushDownRequiredColumns` — the reader reads only the
+  *     projected column chunks; a 2-column projection over a 30-column
+  *     zone reads 2 columns.
   */
 class DirSinkScanBuilder(path: String, schema: StructType,
                          asOfOffset: Option[Int],
@@ -2641,7 +2529,6 @@ case class DirSinkAggPartition(ddl: String, values: Seq[Option[String]])
 class DirSinkWriteBuilder(path: String, schema: StructType, queryId: String,
                           remapFrom: Option[Int] = None,
                           remapChain: Option[String] = None,
-                          formatOption: Option[String] = None,
                           bucketOption: Option[String] = None,
                           bloomOption: Option[String] = None,
                           deadLetterOption: Option[String] = None)
@@ -2649,17 +2536,13 @@ class DirSinkWriteBuilder(path: String, schema: StructType, queryId: String,
   private var doTruncate = false
   override def truncate(): WriteBuilder = { doTruncate = true; this }
   override def build(): Write = new Write {
-    // the data-plane format, bucket layout, and bloom coverage are
-    // resolved ONCE, on the driver, before any task runs: appends
-    // inherit the zone's committed values, truncate may re-set them,
-    // fresh zones default to parquet/unbucketed/unfiltered
-    private val fmt = DirSink.resolveWriteFormat(path, formatOption, doTruncate)
+    // the bucket layout and bloom coverage are resolved ONCE, on the
+    // driver, before any task runs: appends inherit the zone's
+    // committed values, truncate may re-set them, fresh zones default
+    // to unbucketed/unfiltered
     private val bkt = DirSink.resolveWriteBucket(path, bucketOption, doTruncate)
     private val blm = DirSink.resolveWriteBloom(path, bloomOption, doTruncate)
     bkt.foreach(DirSink.checkBucketable(schema, _))
-    if (blm.nonEmpty && fmt != DirSink.FormatParquet)
-      throw new IllegalArgumentException(
-        s"bloomfor=${blm.mkString(",")} requires the parquet data plane")
     blm.foreach { c =>
       if (!schema.fieldNames.contains(c))
         throw new IllegalArgumentException(
@@ -2672,9 +2555,9 @@ class DirSinkWriteBuilder(path: String, schema: StructType, queryId: String,
       schema, DirSinkChecks.zoneChecks(path))
     override def toBatch: BatchWrite =
       new DirSinkBatchWrite(path, schema, queryId, doTruncate,
-        remapFrom, remapChain, fmt, bkt, blm, dl)
+        remapFrom, remapChain, bkt, blm, dl)
     override def toStreaming: StreamingWrite =
-      new DirSinkStreamingWrite(path, schema, queryId, doTruncate, fmt, bkt,
+      new DirSinkStreamingWrite(path, schema, queryId, doTruncate, bkt,
         blm, dl)
   }
 }
@@ -2699,7 +2582,6 @@ class DirSinkBatchWrite(path: String, schema: StructType, queryId: String,
                         truncate: Boolean,
                         remapFrom: Option[Int] = None,
                         remapChain: Option[String] = None,
-                        format: String = DirSink.FormatText,
                         bucket: Option[DirSink.BucketSpec] = None,
                         bloom: Seq[String] = Seq.empty,
                         deadletter: Option[DirSinkChecks.DeadLetter] = None)
@@ -2707,7 +2589,7 @@ class DirSinkBatchWrite(path: String, schema: StructType, queryId: String,
 
   override def createBatchWriterFactory(
       info: PhysicalWriteInfo): DataWriterFactory =
-    DirSinkWriterFactory.resolved(path, schema, queryId, format, bucket,
+    DirSinkWriterFactory.resolved(path, schema, queryId, bucket,
       bloom = bloom, deadletter = deadletter,
       colmap = if (truncate) Map.empty else null)
 
@@ -2786,7 +2668,7 @@ class DirSinkBatchWrite(path: String, schema: StructType, queryId: String,
         remapFrom.map { from =>
           val pair = s"$from:${committed.size}"
           "remap" -> remapChain.fold(pair)(old => s"$old,$pair")
-        } + (DirSink.FormatKey -> format) ++
+        } ++
         bucket.map(b => DirSink.BucketKey -> b.render) ++
         (if (bloom.nonEmpty) Some(DirSink.BloomKey -> bloom.mkString(","))
          else None)
@@ -2830,31 +2712,23 @@ class DirSinkBatchWrite(path: String, schema: StructType, queryId: String,
 }
 
 /** Ships to executors; `parquet` carries the driver-prepared Parquet
-  * writer factory + configuration when the zone's data plane is
-  * parquet (None = the text line codec). Built via the companion so
-  * every batch/row-level write path resolves the plane identically. */
+  * writer factory + configuration. Built via the companion so every
+  * batch/row-level write path resolves it identically. */
 case class DirSinkWriterFactory(
     path: String, schema: StructType, queryId: String,
-    format: String,
-    parquet: Option[(org.apache.spark.sql.execution.datasources.OutputWriterFactory,
-      DirSinkParquet.SerializableConf)],
+    parquet: (org.apache.spark.sql.execution.datasources.OutputWriterFactory,
+      DirSinkParquet.SerializableConf),
     bucket: Option[DirSink.BucketSpec],
     checks: Seq[DirSinkChecks.Bound],
     deadletter: Option[DirSinkChecks.DeadLetter] = None,
     colmap: Map[String, String] = Map.empty)
     extends DataWriterFactory {
 
+  // a column-mapped zone's files are written under PHYSICAL names
   private def plain(attempt: String, partitionId: Int,
                     taskId: Long): DataWriter[InternalRow] =
-    parquet match {
-      case Some((owf, conf)) =>
-        // a column-mapped zone's files are written under PHYSICAL names
-        new DirSinkParquetWriter(path,
-          DirSink.toPhysical(schema, colmap), queryId,
-          attempt, owf, conf, partitionId, taskId)
-      case None =>
-        new DirSinkWriter(path, schema, queryId, attempt)
-    }
+    new DirSinkParquetWriter(path, DirSink.toPhysical(schema, colmap),
+      queryId, attempt, parquet._1, parquet._2, partitionId, taskId)
 
   override def createWriter(partitionId: Int,
                             taskId: Long): DataWriter[InternalRow] = {
@@ -2879,7 +2753,6 @@ object DirSinkWriterFactory {
     * (Named `resolved`, not `apply` — an `apply` overload would erase
     * identically to the case-class constructor.) */
   def resolved(path: String, schema: StructType, queryId: String,
-               format: String,
                bucket: Option[DirSink.BucketSpec] = None,
                checks: Option[Seq[(String, String)]] = None,
                bloom: Seq[String] = null,
@@ -2889,13 +2762,11 @@ object DirSinkWriterFactory {
     // an overwrite passes Map.empty explicitly — its fresh schema
     // speaks physical == logical again
     val cmap = Option(colmap).getOrElse(DirSink.zoneColMap(path))
-    DirSinkWriterFactory(path, schema, queryId, format,
-      if (format == DirSink.FormatParquet)
-        Some(DirSinkParquet.writerFactory(
-          DirSink.toPhysical(DirSink.asNullable(schema), cmap),
-          Option(bloom).getOrElse(DirSink.zoneBloom(path))
-            .map(c => cmap.getOrElse(c, c))))
-      else None,
+    DirSinkWriterFactory(path, schema, queryId,
+      DirSinkParquet.writerFactory(
+        DirSink.toPhysical(DirSink.asNullable(schema), cmap),
+        Option(bloom).getOrElse(DirSink.zoneBloom(path))
+          .map(c => cmap.getOrElse(c, c))),
       bucket,
       DirSinkChecks.bindAll(schema,
         checks.getOrElse(DirSinkChecks.zoneChecks(path))),
@@ -2959,7 +2830,6 @@ class DirSinkBucketRouter(schema: StructType, spec: DirSink.BucketSpec,
   * swap. */
 class DirSinkStreamingWrite(path: String, schema: StructType,
                             queryId: String, truncate: Boolean,
-                            format: String = DirSink.FormatText,
                             bucket: Option[DirSink.BucketSpec] = None,
                             bloom: Seq[String] = Seq.empty,
                             deadletter: Option[DirSinkChecks.DeadLetter] =
@@ -2977,12 +2847,10 @@ class DirSinkStreamingWrite(path: String, schema: StructType,
       info: PhysicalWriteInfo): StreamingDataWriterFactory = {
     val colmap =
       if (truncate) Map.empty[String, String] else DirSink.zoneColMap(path)
-    DirSinkStreamingWriterFactory(path, schema, queryId, format,
-      if (format == DirSink.FormatParquet)
-        Some(DirSinkParquet.writerFactory(
-          DirSink.toPhysical(DirSink.asNullable(schema), colmap),
-          bloomCols.map(c => colmap.getOrElse(c, c))))
-      else None,
+    DirSinkStreamingWriterFactory(path, schema, queryId,
+      DirSinkParquet.writerFactory(
+        DirSink.toPhysical(DirSink.asNullable(schema), colmap),
+        bloomCols.map(c => colmap.getOrElse(c, c))),
       bucketSpec,
       DirSinkChecks.bindAll(schema, DirSinkChecks.zoneChecks(path)),
       deadletter, colmap)
@@ -3040,7 +2908,7 @@ class DirSinkStreamingWrite(path: String, schema: StructType,
         parent.map(m => DirSink.parseTxn(m.header)).getOrElse(Map.empty),
         Map(DirSink.txnQid(queryId) -> epochId))
       val header0 = DirSink.nextHeader(parent, newEpoch = Some(epochId),
-        truncate = truncate) + (DirSink.FormatKey -> format) +
+        truncate = truncate) +
         (DirSink.TxnKey -> DirSink.renderTxn(txn)) ++
         bucketSpec.map(b => DirSink.BucketKey -> b.render) ++
         (if (bloomCols.nonEmpty)
@@ -3089,12 +2957,10 @@ class DirSinkStreamingWrite(path: String, schema: StructType,
   * [[DirSinkStreamingWrite]] along as its outer reference). */
 case class DirSinkStreamingWriterFactory(path: String, schema: StructType,
                                          queryId: String,
-                                         format: String = DirSink.FormatText,
-                                         parquet: Option[(
+                                         parquet: (
                                            org.apache.spark.sql.execution
                                              .datasources.OutputWriterFactory,
-                                           DirSinkParquet.SerializableConf)] =
-                                           None,
+                                           DirSinkParquet.SerializableConf),
                                          bucket: Option[DirSink.BucketSpec] =
                                            None,
                                          checks: Seq[DirSinkChecks.Bound] =
@@ -3107,14 +2973,8 @@ case class DirSinkStreamingWriterFactory(path: String, schema: StructType,
 
   private def plain(attempt: String, partitionId: Int,
                     taskId: Long): DataWriter[InternalRow] =
-    parquet match {
-      case Some((owf, conf)) =>
-        new DirSinkParquetWriter(path,
-          DirSink.toPhysical(schema, colmap), queryId,
-          attempt, owf, conf, partitionId, taskId)
-      case None =>
-        new DirSinkWriter(path, schema, queryId, attempt)
-    }
+    new DirSinkParquetWriter(path, DirSink.toPhysical(schema, colmap),
+      queryId, attempt, parquet._1, parquet._2, partitionId, taskId)
 
   override def createWriter(partitionId: Int, taskId: Long,
                             epochId: Long): DataWriter[InternalRow] = {
@@ -3135,42 +2995,7 @@ case class DirSinkStreamingWriterFactory(path: String, schema: StructType,
 
 /** One task attempt's writer: a private staging file named by the
   * attempt-unique suffix (`p<part>-t<task>`, epoch-prefixed for
-  * streaming) — speculation never collides. Collects per-column
-  * min/max/null stats in the same pass ([[DirSinkStats.Collector]]);
-  * the commit message carries them into the manifest line so the scan
-  * can data-skip whole files. */
-class DirSinkWriter(path: String, schema: StructType, queryId: String,
-                    attempt: String)
-    extends DataWriter[InternalRow] {
-  private val stagedName = s"_staging/$queryId/$attempt"
-  private val f = DirSink.execFs(path) // executor side: no active session
-  DirSink.ensureStagingDir(f, new Path(path, s"_staging/$queryId"))
-  private val out = f.create(new Path(path, stagedName), true)
-  private var rows = 0L
-  private val stats = new DirSinkStats.Collector(schema)
-
-  override def write(record: InternalRow): Unit = {
-    out.write((DirSink.encode(record, schema) + "\n").getBytes("UTF-8"))
-    stats.observe(record)
-    rows += 1
-  }
-
-  override def commit(): WriterCommitMessage = {
-    out.close()
-    val len = f.getFileStatus(new Path(path, stagedName)).getLen
-    DirSinkCommitMessage(stagedName, rows, stats.encode(), len)
-  }
-
-  override def abort(): Unit = {
-    out.close()
-    f.delete(new Path(path, stagedName), false)
-  }
-
-  override def close(): Unit = ()
-}
-
-/** One task attempt's PARQUET writer — the same private-staging /
-  * commit-message protocol as [[DirSinkWriter]], with the payload
+  * streaming) — speculation never collides — with the payload
   * written by Spark's own Parquet [[org.apache.spark.sql.execution
   * .datasources.OutputWriter]] (driver-prepared factory, executor-side
   * instantiation — see [[DirSinkParquet]]). Stats are collected from
@@ -3216,14 +3041,11 @@ class DirSinkParquetWriter(path: String, schema: StructType, queryId: String,
 
 // ------------------------------------------------------- read-back scan
 
-/** `ddl` is the FULL zone schema (field positions in the line codec);
-  * `requiredIdx` the projected positions the reader materializes.
-  * `start`/`length` are the byte-range SLICE of the file this partition
-  * covers (parquet zones split large files so scan parallelism tracks
-  * data volume, not file count; text zones always read whole files —
-  * start 0, length = fileLen); `fileLen` is the full committed size. */
-case class DirSinkFilePartition(path: String, file: String, ddl: String,
-                                requiredIdx: Array[Int],
+/** `start`/`length` are the byte-range SLICE of the file this partition
+  * covers (large files split so scan parallelism tracks data volume,
+  * not file count); `fileLen` is the full committed size (-1 = stat it
+  * on the executor). */
+case class DirSinkFilePartition(path: String, file: String,
                                 start: Long = 0L, length: Long = Long.MaxValue,
                                 fileLen: Long = -1L,
                                 dv: Option[String] = None)
@@ -3247,50 +3069,6 @@ private[v2] object DirSinkFilePartition {
   def of(p: InputPartition): DirSinkFilePartition = p match {
     case b: DirSinkBucketedFilePartition => b.base
     case f: DirSinkFilePartition => f
-  }
-}
-
-/** Executor-side file reader shared by the batch scan and the
-  * micro-batch stream: decode one committed file per partition,
-  * materializing only the projected columns. */
-class DirSinkReaderFactory extends PartitionReaderFactory {
-  override def createReader(
-      partition: InputPartition): PartitionReader[InternalRow] = {
-    val p = DirSinkFilePartition.of(partition)
-    val sch = StructType.fromDDL(p.ddl)
-    // STREAM the file line by line — never materialize it: a committed
-    // file can be GBs (one compacted range of a 100 TB zone), and the
-    // previous whole-file mkString would hold every byte of it on the
-    // executor heap at once. One buffered line in flight is the
-    // text-source contract (the same shape Spark's own text reader has).
-    val in = new java.io.BufferedReader(new java.io.InputStreamReader(
-      DirSink.execFs(p.path).open(new Path(p.path, p.file)), "UTF-8"),
-      1 << 16)
-    // the deletion vector (if any) is applied HERE, by row ordinal —
-    // the same counter that materializes the `_pos` metadata column,
-    // so the writer's coordinates and the reader's skip agree by
-    // construction
-    val dead = p.dv.map(DirSinkDv.read(p.path, _))
-    new PartitionReader[InternalRow] {
-      private var cur: InternalRow = _
-      private var ord = -1L
-      override def next(): Boolean = {
-        while (true) {
-          var line = in.readLine()
-          while (line != null && line.isEmpty) line = in.readLine()
-          if (line == null) return false
-          ord += 1
-          if (!dead.exists(_.get(ord.toInt))) {
-            cur = DirSink.decodeProjected(line, sch, p.requiredIdx,
-              p.file, ord)
-            return true
-          }
-        }
-        false
-      }
-      override def get(): InternalRow = cur
-      override def close(): Unit = in.close()
-    }
   }
 }
 
@@ -3329,15 +3107,6 @@ class DirSinkScan(path: String, schema: StructType,
     s"DirSinkScan($path${asOfOffset.map(k => s", asOf=$k").getOrElse("")}" +
       (if (skipFilters.nonEmpty)
         s", skip=[${skipFilters.mkString(", ")}]" else "") + ")"
-
-  private def requiredIdx: Array[Int] =
-    required.fieldNames.map { n =>
-      if (schema.fieldNames.contains(n)) schema.fieldIndex(n)
-      else if (n == DirSink.FileNameCol) -1 // metadata column
-      else if (n == DirSinkDv.PosCol) -2 // metadata column (row ordinal)
-      else throw new IllegalArgumentException(
-        s"column $n is neither in the zone schema nor a metadata column")
-    }
 
   /** RUNTIME file skipping — DPP for a manifest-driven table: when this
     * zone is the fact side of a join whose dim side is selective, Spark
@@ -3395,15 +3164,12 @@ class DirSinkScan(path: String, schema: StructType,
     * current head, a generation, a timestamp-resolved generation, or a
     * prefix), whose GENERATION is the optimistic-concurrency token a
     * row-level operation's commit verifies, and whose header carries
-    * the data-plane FORMAT and BUCKET layout the snapshot was written
-    * under. */
+    * the BUCKET layout the snapshot was written under. */
   private lazy val resolved: (DirSink.Manifest, Seq[DirSink.FileEntry]) =
     DirSink.resolveState(path, asOfOffset, asOfTimestamp, asOfVersion,
       onlyFiles)
 
   private[graft] def manifestGen: Long = resolved._1.gen
-  private def zoneFmt: String =
-    resolved._1.header.getOrElse(DirSink.FormatKey, DirSink.FormatText)
   private def zoneBucketSpec: Option[DirSink.BucketSpec] =
     DirSink.bucketOf(resolved._1.header)
 
@@ -3519,7 +3285,6 @@ class DirSinkScan(path: String, schema: StructType,
     // a row-level operation captures WHICH groups this scan covers (and
     // at what generation) — its commit replaces exactly these files
     planListener.foreach(_(manifestGen, files.map(_.name)))
-    val ddl = schema.toDDL
     // under a reported key-grouped layout every partition must carry its
     // bucket id as the partition KEY (Spark groups same-key partitions
     // into one co-located task)
@@ -3527,76 +3292,71 @@ class DirSinkScan(path: String, schema: StructType,
       manifestEntries.nonEmpty && manifestEntries.forall(_.bucket.isDefined)
     def part(e: DirSink.FileEntry, s: Long, l: Long,
              len: Long): InputPartition = {
-      val base = DirSinkFilePartition(path, e.name, ddl, requiredIdx,
-        s, l, len, e.dv.map(_._1))
+      val base = DirSinkFilePartition(path, e.name, s, l, len,
+        e.dv.map(_._1))
       if (keyed) DirSinkBucketedFilePartition(base, e.bucket.get) else base
     }
-    if (zoneFmt == DirSink.FormatParquet) {
-      // SPLIT large files into byte ranges (Parquet assigns a row group
-      // to the split containing its midpoint) so parallelism is sized
-      // by data volume, not file count — a zone compacted to 4 files
-      // still fans out across the cluster
-      val maxSplit = org.apache.spark.sql.SparkSession.active
-        .sessionState.conf.filesMaxPartitionBytes
-      files.flatMap { e =>
-        val len = e.bytes.getOrElse(
-          DirSink.fs(path).getFileStatus(new Path(path, e.name)).getLen)
-        DirSinkParquet.splitRanges(len, maxSplit).map { case (s, l) =>
-          part(e, s, l, len)
-        }
-      }.toArray
-    } else files.map(e =>
-      part(e, 0L, Long.MaxValue, -1L)).toArray
+    // SPLIT large files into byte ranges (Parquet assigns a row group
+    // to the split containing its midpoint) so parallelism is sized
+    // by data volume, not file count — a zone compacted to 4 files
+    // still fans out across the cluster
+    val maxSplit = org.apache.spark.sql.SparkSession.active
+      .sessionState.conf.filesMaxPartitionBytes
+    files.flatMap { e =>
+      val len = e.bytes.getOrElse(
+        DirSink.fs(path).getFileStatus(new Path(path, e.name)).getLen)
+      DirSinkParquet.splitRanges(len, maxSplit).map { case (s, l) =>
+        part(e, s, l, len)
+      }
+    }.toArray
   }
 
-  /** Parquet zones read through Spark's own Parquet machinery (driver-
-    * built, executor-shipped closure): columnar pruning to the
-    * projected DATA columns (the `_file` metadata column is appended as
-    * a per-partition constant), plus the scan's stats-supported filters
-    * handed down for row-group/page pruning. Text zones keep the line
-    * codec reader. */
-  override def createReaderFactory(): PartitionReaderFactory =
-    if (zoneFmt == DirSink.FormatParquet) {
-      val data0 = StructType(required.fields.filter(f =>
-        schema.fieldNames.contains(f.name)))
-      // DELETION VECTORS / `_pos`: when any planned file carries a
-      // vector (or the scan projects the position column), ask
-      // Spark's parquet machinery for its OWN row index — the
-      // split-stable file-global ordinal — by appending the reserved
-      // row-index field to the read schema; the factory filters dead
-      // positions and the projection strips the extra column
-      val needPos = required.fieldNames.contains(DirSinkDv.PosCol) ||
-        manifestEntries.exists(_.dv.isDefined)
-      // the reserved TEMPORARY name is what the parquet machinery
-      // matches (ROW_INDEX_FIELD's pretty name is the user-facing
-      // `_metadata.row_index` alias); nullable, or the missing-column
-      // check refuses before the generator gets to fill it
-      val data = if (!needPos) data0 else StructType(data0.fields :+
-        org.apache.spark.sql.types.StructField(
-          org.apache.spark.sql.execution.datasources.parquet
-            .ParquetFileFormat.ROW_INDEX_TEMPORARY_COLUMN_NAME,
-          LongType, nullable = true))
-      // a column-mapped (renamed) zone's files resolve by PHYSICAL
-      // names. The mapping must come from the SAME manifest the scan's
-      // logical schema came from: a snapshot read speaks ITS era's
-      // logical names, so it resolves through ITS era's #colmap (the
-      // head's map is keyed by head names — under a double rename
-      // a→b→c, an era-b read through the head map would miss and
-      // silently go all-NULL: the round-14 advisor's finding). The
-      // `eraSchema=false` surfaces (change feed) decode era files
-      // through the HEAD's logical schema, so they map through the
-      // head's colmap — physical names are stable for a file's life.
-      val colmap =
-        if (headDecode) DirSink.zoneColMap(path)
-        else DirSink.parseColMap(resolved._1.header)
-      val closure = DirSinkParquet.readerClosure(
-        DirSink.toPhysical(DirSink.asNullable(schema), colmap),
-        DirSink.toPhysical(DirSink.asNullable(data), colmap),
-        DirSinkParquet.mapFilters(
-          (skipFilters ++ runtimeFilters).toSeq, colmap))
-      DirSinkParquetReaderFactory(closure, required.toDDL,
-        DirSink.asNullable(data).toDDL)
-    } else new DirSinkReaderFactory
+  /** Reads go through Spark's own Parquet machinery (driver-built,
+    * executor-shipped closure): columnar pruning to the projected DATA
+    * columns (the `_file` metadata column is appended as a
+    * per-partition constant), plus the scan's stats-supported filters
+    * handed down for row-group/page pruning. */
+  override def createReaderFactory(): PartitionReaderFactory = {
+    val data0 = StructType(required.fields.filter(f =>
+      schema.fieldNames.contains(f.name)))
+    // DELETION VECTORS / `_pos`: when any planned file carries a
+    // vector (or the scan projects the position column), ask
+    // Spark's parquet machinery for its OWN row index — the
+    // split-stable file-global ordinal — by appending the reserved
+    // row-index field to the read schema; the factory filters dead
+    // positions and the projection strips the extra column
+    val needPos = required.fieldNames.contains(DirSinkDv.PosCol) ||
+      manifestEntries.exists(_.dv.isDefined)
+    // the reserved TEMPORARY name is what the parquet machinery
+    // matches (ROW_INDEX_FIELD's pretty name is the user-facing
+    // `_metadata.row_index` alias); nullable, or the missing-column
+    // check refuses before the generator gets to fill it
+    val data = if (!needPos) data0 else StructType(data0.fields :+
+      org.apache.spark.sql.types.StructField(
+        org.apache.spark.sql.execution.datasources.parquet
+          .ParquetFileFormat.ROW_INDEX_TEMPORARY_COLUMN_NAME,
+        LongType, nullable = true))
+    // a column-mapped (renamed) zone's files resolve by PHYSICAL
+    // names. The mapping must come from the SAME manifest the scan's
+    // logical schema came from: a snapshot read speaks ITS era's
+    // logical names, so it resolves through ITS era's #colmap (the
+    // head's map is keyed by head names — under a double rename
+    // a→b→c, an era-b read through the head map would miss and
+    // silently go all-NULL: the round-14 advisor's finding). The
+    // `eraSchema=false` surfaces (change feed) decode era files
+    // through the HEAD's logical schema, so they map through the
+    // head's colmap — physical names are stable for a file's life.
+    val colmap =
+      if (headDecode) DirSink.zoneColMap(path)
+      else DirSink.parseColMap(resolved._1.header)
+    val closure = DirSinkParquet.readerClosure(
+      DirSink.toPhysical(DirSink.asNullable(schema), colmap),
+      DirSink.toPhysical(DirSink.asNullable(data), colmap),
+      DirSinkParquet.mapFilters(
+        (skipFilters ++ runtimeFilters).toSeq, colmap))
+    DirSinkParquetReaderFactory(closure, required.toDDL,
+      DirSink.asNullable(data).toDDL)
+  }
 
   override def toMicroBatchStream(
       checkpointLocation: String): MicroBatchStream =
@@ -3751,9 +3511,6 @@ class DirSinkMicroBatchStream(path: String, schema: StructType,
                               maxFilesPerTrigger: Option[Int] = None)
     extends MicroBatchStream with SupportsAdmissionControl
     with org.apache.spark.sql.connector.read.streaming.SupportsTriggerAvailableNow {
-
-  private def requiredIdx: Array[Int] =
-    required.fieldNames.map(schema.fieldIndex)
 
   /** `Trigger.AvailableNow` support: capture the zone's size ONCE at
     * query start; every later `latestOffset(start, limit)` caps at it.
@@ -3929,8 +3686,7 @@ class DirSinkMicroBatchStream(path: String, schema: StructType,
     // tags: a vectored file's dead positions must be skipped even by a
     // fresh tail (wrong data, not just replay)
     entries.slice(s, e).map { en =>
-      DirSinkFilePartition(path, en.name, schema.toDDL,
-        requiredIdx, dv = en.dv.map(_._1)): InputPartition
+      DirSinkFilePartition(path, en.name, dv = en.dv.map(_._1)): InputPartition
     }.toArray
   }
 
@@ -3946,30 +3702,29 @@ class DirSinkMicroBatchStream(path: String, schema: StructType,
     DirSink.zoneColMap(path)
 
   /** Streaming batches keep ONE partition per committed file (offsets
-    * are file counts; landing-zone files are micro-batch-sized), but
-    * the READER still dispatches on the zone's data plane. */
-  override def createReaderFactory(): PartitionReaderFactory =
-    if (DirSink.zoneFormat(path).contains(DirSink.FormatParquet)) {
-      val data0 = DirSink.asNullable(required)
-      // a vectored zone needs the parquet row index to skip dead
-      // positions (same plumbing as the batch scan); a vector landing
-      // AFTER this factory is built fails the reader loudly (its
-      // partition carries a dv the schema lacks) — never silently
-      // emits deleted rows
-      val data =
-        if (entryList.forall(_.dv.isEmpty)) data0
-        else StructType(data0.fields :+
-          org.apache.spark.sql.types.StructField(
-            org.apache.spark.sql.execution.datasources.parquet
-              .ParquetFileFormat.ROW_INDEX_TEMPORARY_COLUMN_NAME,
-            LongType, nullable = true))
-      val colmap = subscriptionColMap
-      DirSinkParquetReaderFactory(
-        DirSinkParquet.readerClosure(
-          DirSink.toPhysical(DirSink.asNullable(schema), colmap),
-          DirSink.toPhysical(data, colmap), Seq.empty),
-        data0.toDDL, data.toDDL)
-    } else new DirSinkReaderFactory
+    * are file counts; landing-zone files are micro-batch-sized), read
+    * through the same parquet reader as the batch scan. */
+  override def createReaderFactory(): PartitionReaderFactory = {
+    val data0 = DirSink.asNullable(required)
+    // a vectored zone needs the parquet row index to skip dead
+    // positions (same plumbing as the batch scan); a vector landing
+    // AFTER this factory is built fails the reader loudly (its
+    // partition carries a dv the schema lacks) — never silently
+    // emits deleted rows
+    val data =
+      if (entryList.forall(_.dv.isEmpty)) data0
+      else StructType(data0.fields :+
+        org.apache.spark.sql.types.StructField(
+          org.apache.spark.sql.execution.datasources.parquet
+            .ParquetFileFormat.ROW_INDEX_TEMPORARY_COLUMN_NAME,
+          LongType, nullable = true))
+    val colmap = subscriptionColMap
+    DirSinkParquetReaderFactory(
+      DirSinkParquet.readerClosure(
+        DirSink.toPhysical(DirSink.asNullable(schema), colmap),
+        DirSink.toPhysical(data, colmap), Seq.empty),
+      data0.toDDL, data.toDDL)
+  }
 
   override def commit(end: StreamOffset): Unit = ()
   override def stop(): Unit = ()

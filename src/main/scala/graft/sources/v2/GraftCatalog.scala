@@ -184,6 +184,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
                            properties: util.Map[String, String]): Table = {
     val bucket = bucketOf(ident, partitions)
     bucket.foreach(DirSink.checkBucketable(schema, _))
+    DirSink.checkFormat(Option(properties.get(DirSink.FormatKey)))
     val dir = dirOf(ident)
     // existence check + zero-file-manifest publish under the zone's
     // commit lock: two racing CREATEs serialize, and the loser gets
@@ -193,19 +194,10 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
         throw new TableAlreadyExistsException(
           (ident.namespace() :+ ident.name()).toSeq)
       // a zero-file manifest IS the table: schema line, no data lines —
-      // published through the same atomic pointer swap as every commit.
-      // The data-plane format is a CREATE-time table property
-      // (`'format' = 'text'` opts into the legacy line codec); parquet
-      // is the default, and every later INSERT inherits it.
-      val fmt = Option(properties.get(DirSink.FormatKey))
-        .getOrElse(DirSink.FormatParquet)
-      if (fmt != DirSink.FormatParquet && fmt != DirSink.FormatText)
-        throw new IllegalArgumentException(
-          s"unknown table format '$fmt' — supported: " +
-            s"${DirSink.FormatParquet} (default), ${DirSink.FormatText}")
+      // published through the same atomic pointer swap as every commit
       DirSink.publishCommit(dir, schema,
         DirSink.withHistory(
-          Map("gen" -> "0", DirSink.FormatKey -> fmt) ++
+          Map("gen" -> "0") ++
             bucket.map(b => DirSink.BucketKey -> b.render) ++
             checksHeader(schema, properties) ++
             {
@@ -247,8 +239,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
 
   // ---- atomic CTAS / RTAS (StagingTableCatalog): see GraftStagedTable
 
-  /** Common staging path: resolve the staged definition's data-plane
-    * format (`format` property, default parquet) and bucket layout
+  /** Common staging path: resolve the staged definition's bucket layout
     * (`PARTITIONED BY (bucket(n, col))`), and hand a [[GraftStagedTable]]
     * whose `commitStagedChanges` publishes the whole table in one
     * manifest swap. `mustExist`: Some(false) = CREATE (fails on
@@ -258,13 +249,8 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
                     partitions: Array[Transform],
                     properties: util.Map[String, String],
                     mustExist: Option[Boolean]): StagedTable = {
-    val fmt = Option(properties.get(DirSink.FormatKey))
-      .getOrElse(DirSink.FormatParquet)
-    if (fmt != DirSink.FormatParquet && fmt != DirSink.FormatText)
-      throw new IllegalArgumentException(
-        s"unknown table format '$fmt' — supported: " +
-          s"${DirSink.FormatParquet} (default), ${DirSink.FormatText}")
-    new GraftStagedTable(ident, dirOf(ident), schema, fmt,
+    DirSink.checkFormat(Option(properties.get(DirSink.FormatKey)))
+    new GraftStagedTable(ident, dirOf(ident), schema,
       bucketOf(ident, partitions), mustExist, checksOf(properties),
       bloomOf(schema, properties))
   }
@@ -325,18 +311,16 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
       .NoSuchFunctionException(ident)
 
   /** Supported alterations: `ALTER TABLE … ADD COLUMNS` (top-level,
-    * nullable, appended at the tail — existing files decode with NULL
-    * tails) on every zone; `ALTER TABLE … DROP COLUMN` on PARQUET
-    * zones ([[DirSink.dropColumn]] — name-based resolution lets old
-    * files simply stop projecting the chunk; the manifest rewrite
-    * excises the column's per-file stats entry so skipping stays
-    * aligned); and `ALTER TABLE … RENAME COLUMN` everywhere
-    * ([[DirSink.renameColumn]] — text zones are positional so the
-    * rename is a pure schema rewrite, parquet zones record the
-    * Delta-style logical→physical column mapping so old files keep
+    * nullable, appended at the tail — existing files read the new
+    * columns as NULL); `ALTER TABLE … DROP COLUMN`
+    * ([[DirSink.dropColumn]] — name-based resolution lets old files
+    * simply stop projecting the chunk; the manifest rewrite excises the
+    * column's per-file stats entry so skipping stays aligned); and
+    * `ALTER TABLE … RENAME COLUMN` ([[DirSink.renameColumn]] — the
+    * Delta-style logical→physical column mapping keeps old files
     * resolving by their write-time names with zero data rewritten).
-    * Reorders and type changes stay rejected: the positional codec
-    * cannot re-map them. */
+    * Reorders and type changes stay rejected: the per-file stats are
+    * positional and cannot re-map them. */
   override def alterTable(ident: Identifier,
                           changes: TableChange*): Table = {
     val dir = dirOf(ident)
@@ -349,9 +333,8 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
           return new DirSinkTable(dir, prev)
         DirSink.dropColumn(dir, name)
         return new DirSinkTable(dir, DirSink.readManifestSchema(dir))
-      // RENAME COLUMN: zero data rewritten — parquet zones record the
-      // logical→physical mapping ([[DirSink.ColMapKey]]), text zones
-      // rename for free (positional codec)
+      // RENAME COLUMN: zero data rewritten — the zone records the
+      // logical→physical mapping ([[DirSink.ColMapKey]])
       case Seq(r: TableChange.RenameColumn) if r.fieldNames().length == 1 =>
         DirSink.renameColumn(dir, r.fieldNames()(0), r.newName())
         return new DirSinkTable(dir, DirSink.readManifestSchema(dir))
@@ -401,16 +384,16 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
       case a: TableChange.AddColumn if a.fieldNames().length == 1 &&
         a.isNullable =>
         // positions are rejected, not ignored: FIRST/AFTER would demand
-        // re-mapping every existing line's field order — honoring the
+        // re-mapping every file's positional stats — honoring the
         // request silently at the tail would misplace the column
         if (a.position() != null) throw new UnsupportedOperationException(
           s"ADD COLUMN ${a.fieldNames()(0)} FIRST/AFTER is not supported: " +
-            "the positional line codec appends new columns at the tail")
+            "the zone appends new columns at the tail")
         org.apache.spark.sql.types.StructField(
           a.fieldNames()(0), a.dataType(), nullable = true)
       case c => throw new UnsupportedOperationException(
         s"graft catalog supports ADD COLUMNS (top-level nullable), " +
-          s"DROP COLUMN (parquet zones), and RENAME COLUMN; got $c")
+          s"DROP COLUMN, and RENAME COLUMN; got $c")
     }
     added.groupBy(_.name.toLowerCase(java.util.Locale.ROOT))
       .collect { case (n, fs) if fs.size > 1 => n } ++

@@ -35,11 +35,11 @@ import org.apache.spark.sql.types.StructType
   *
   * Until step 2 the old table (or its absence, for CREATE) is exactly
   * intact; after it, the new one is complete. A REPLACE's new
-  * definition WINS wholesale: schema, data-plane format (`format`
-  * property) and bucket layout (`PARTITIONED BY (bucket(n, col))`)
-  * all come from the staged definition, not the old zone. */
+  * definition WINS wholesale: schema, bucket layout
+  * (`PARTITIONED BY (bucket(n, col))`), checks and bloom coverage all
+  * come from the staged definition, not the old zone. */
 class GraftStagedTable(ident: Identifier, dir: String, schema0: StructType,
-                       fmt: String, bucket: Option[DirSink.BucketSpec],
+                       bucket: Option[DirSink.BucketSpec],
                        mustExist: Option[Boolean],
                        checks: Seq[(String, String)] = Seq.empty,
                        bloom: Seq[String] = Seq.empty)
@@ -53,9 +53,6 @@ class GraftStagedTable(ident: Identifier, dir: String, schema0: StructType,
         s"bloomfor column $c is not in the schema " +
           s"${schema0.fieldNames.mkString(", ")}")
   }
-  if (bloom.nonEmpty && fmt != DirSink.FormatParquet)
-    throw new IllegalArgumentException(
-      s"bloomfor=${bloom.mkString(",")} requires the parquet data plane")
 
   /** Deferred publish state: the staged write's committed task-file
     * messages, with names still under `_staging/<queryId>/` — sweeps
@@ -85,7 +82,7 @@ class GraftStagedTable(ident: Identifier, dir: String, schema0: StructType,
           override def createBatchWriterFactory(
               phys: PhysicalWriteInfo): DataWriterFactory =
             DirSinkWriterFactory.resolved(dir, info.schema(),
-              info.queryId(), fmt, bucket, Some(checks), bloom,
+              info.queryId(), bucket, Some(checks), bloom,
               colmap = Map.empty) // a (re)placed definition starts unmapped
 
           /** Park the committed task files — STILL IN STAGING. All
@@ -141,8 +138,7 @@ class GraftStagedTable(ident: Identifier, dir: String, schema0: StructType,
       }
       // the staged definition wins WHOLESALE: its checks replace the
       // old table's (an atomic REPLACE is a new table at the old name)
-      val header2 = DirSink.nextHeader(parent, truncate = true) +
-        (DirSink.FormatKey -> fmt) ++
+      val header2 = DirSink.nextHeader(parent, truncate = true) ++
         bucket.map(b => DirSink.BucketKey -> b.render) ++
         (if (bloom.nonEmpty) Some(DirSink.BloomKey -> bloom.mkString(","))
          else None)

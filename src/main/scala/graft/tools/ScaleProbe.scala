@@ -73,7 +73,7 @@ object ScaleProbe {
     ks.foreach { k =>
       val dir = s"/tmp/graft_scale_$k"
       def replicate(table: String, idCols: Seq[String]): Unit = {
-        val src = graft.sources.Tables.loadRaw(spark, base, table)
+        val src = graft.sources.Tables.load(spark, base, table)
         val copies = (0 until k).map { i =>
           idCols.foldLeft(src) { (df, c) =>
             df.withColumn(c, col(c) + lit(i.toLong * 100000000L))
@@ -93,15 +93,14 @@ object ScaleProbe {
       // dimensions don't scale with the fact (the 100 TB posture): one
       // verbatim copy each, so star-schema probes resolve their joins
       Seq("region", "nation", "part", "supplier").foreach { tbl =>
-        graft.sources.Tables.loadRaw(spark, base, tbl)
+        graft.sources.Tables.load(spark, base, tbl)
           .write.mode(SaveMode.Overwrite).parquet(s"$dir/$tbl.parquet")
       }
 
       def timed(name: String): (Double, Long) = {
-        val t0 = System.nanoTime()
-        val df = graft.SparkEntry.queries(name)(spark, dir)
-        df.write.format("noop").mode("overwrite").save()
-        ((System.nanoTime() - t0) / 1e9, df.count())
+        val (sec, df) =
+          graft.Bench.timed(spark, graft.SparkEntry.queries(name), dir)
+        (sec, df.count())
       }
       probes.foreach { name =>
         val (sec, n) = timed(name)

@@ -43,8 +43,12 @@ class BenchJsonSpec extends AnyFunSuite {
     // (tenths <1s, centiseconds 1–10s, tenths <100s, integer beyond),
     // so even the pathological case
     // stays narrow.
+    // …with the widest errors field too: every declared query failed
     val worst = SparkEntry.queries.keys.map(_ -> 999.4).toMap
-    val line = Bench.renderJson(worst, "/root/testdata/sf0.1")
+    val line = Bench.renderJson(worst, "/root/testdata/sf0.1",
+      errors = SparkEntry.queries.size)
+    assert(mapper.readTree(line).path("errors").asInt() ==
+      SparkEntry.queries.size)
     val wq = mapper.readTree(line).path("queries")
     assert(wq.path("q_agg_hash").asDouble() == 999.0 ||
       wq.has("other"), "leader entries must survive at full precision")
@@ -81,5 +85,27 @@ class BenchJsonSpec extends AnyFunSuite {
   test("empty result map renders a parseable zero line") {
     val root = mapper.readTree(Bench.renderJson(Map.empty, "x"))
     assert(root.path("value").asDouble() == 0.0)
+    assert(root.path("errors").asInt() == 0)
+  }
+
+  test("a query that throws gets no time and counts as an error") {
+    val spark = TestSession.spark
+    val queries: Map[String, (org.apache.spark.sql.SparkSession, String) =>
+      org.apache.spark.sql.DataFrame] = Map(
+      "q_ok" -> ((s, _) => s.range(3).toDF("id")),
+      // fails while the query function builds its plan
+      "q_build" -> ((_, _) => throw new IllegalStateException("build")),
+      // fails only when the full result is materialized: a pruned
+      // `.count()` would never evaluate the failing column
+      "q_late" -> ((s, _) => s.range(3)
+        .selectExpr("id", "raise_error(concat('late ', id)) AS boom")))
+    val (results, errors) = Bench.measure(spark, queries, "unused")
+    assert(results.keySet == Set("q_ok") && errors == 2,
+      s"results $results, errors $errors")
+    val root = mapper.readTree(Bench.renderJson(results, "x", errors))
+    assert(root.path("errors").asInt() == 2)
+    assert(root.path("queries").has("q_ok") &&
+      !root.path("queries").has("q_build") &&
+      !root.path("queries").has("q_late"))
   }
 }

@@ -50,7 +50,7 @@ class BitextSpec extends AnyFunSuite {
     // mode CCMatrix documents and round 11 measured honestly
     val dup = java.nio.file.Files.createTempDirectory("graft_bitext_dup")
       .toString
-    val src = graft.sources.Tables.loadRaw(spark, TestSession.sfDir,
+    val src = graft.sources.Tables.load(spark, TestSession.sfDir,
       "embeddings")
     (1 to 3).map(i => src.withColumn("vec_id",
         $"vec_id" + lit(i * 100000000L)))

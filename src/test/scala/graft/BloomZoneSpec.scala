@@ -84,7 +84,7 @@ class BloomZoneSpec extends AnyFunSuite {
     df.write.format(fmt).option("path", dir)
       .option("bloomfor", "none").mode(SaveMode.Overwrite).save()
     assert(DirSink.zoneBloom(dir).isEmpty)
-    // text zones refuse (no parquet metadata to carry the filter)
+    // a text zone is refused outright: parquet is the one data plane
     val txt = tmpDir()
     val e2 = intercept[Exception] {
       df.write.format(fmt).option("path", txt)

@@ -224,4 +224,52 @@ class CdfStreamSpec extends AnyFunSuite {
     assert(batches.filter(_ > 0).toSeq == Seq(5L, 5L, 5L, 5L),
       s"one generation per micro-batch, got $batches")
   }
+
+  test("rewrite diffs of a zone with array and decimal columns stream intact") {
+    val wh = Files.createTempDirectory("graft_cdfw_wh").toString
+    val chk = Files.createTempDirectory("graft_cdfw_chk").toString
+    val cat = s"cdfwcat_${math.abs(wh.hashCode)}"
+    spark.conf.set(s"spark.sql.catalog.$cat", "graft.sources.v2.GraftCatalog")
+    spark.conf.set(s"spark.sql.catalog.$cat.warehouse", wh)
+    spark.sql(s"CREATE NAMESPACE IF NOT EXISTS $cat.db")
+    val tbl = s"$cat.db.w"
+    spark.sql(s"CREATE TABLE $tbl (id BIGINT, emb ARRAY<DOUBLE>, " +
+      "amt DECIMAL(12,2))")
+    def insert(from: Long, until: Long): Unit =
+      spark.sql(s"INSERT INTO $tbl SELECT id, array(id * 0.5D, id + 0.25D), " +
+        s"CAST(id * 1.25 AS DECIMAL(12,2)) FROM range($from, $until, 1, 1)")
+    insert(0, 5)  // two appends: one file each
+    insert(5, 10)
+    val dir = s"$wh/db/w"
+    val before = DirSink.currentGen(dir).get
+    spark.sql(s"DELETE FROM $tbl WHERE id = 3")
+    spark.sql(s"UPDATE $tbl SET emb = array(-1.0D, id * 2.0D), " +
+      "amt = amt + 100.5 WHERE id = 7")
+    type Change = (Long, Seq[Double], BigDecimal, String)
+    val out = scala.collection.mutable.ArrayBuffer[Change]()
+    val q = spark.readStream.format(fmt)
+      .option("path", dir).option("readChangeFeed", "true")
+      .option("startingVersion", (before + 1).toString)
+      .load()
+      .writeStream
+      .foreachBatch { (df: org.apache.spark.sql.DataFrame, _: Long) =>
+        out.synchronized {
+          out ++= df.select(col("id"), col("emb"), col("amt"),
+            col(ChangeFeed.ChangeTypeCol)).collect().map(r =>
+            (r.getLong(0), r.getSeq[Double](1), BigDecimal(r.getDecimal(2)),
+              r.getString(3)))
+        }
+        ()
+      }
+      .option("checkpointLocation", chk)
+      .trigger(Trigger.AvailableNow())
+      .start()
+    try q.awaitTermination(120000) finally q.stop()
+    val want: Seq[Change] = Seq(
+      (3L, Seq(1.5, 3.25), BigDecimal("3.75"), "delete"),
+      (7L, Seq(3.5, 7.25), BigDecimal("8.75"), "delete"),
+      (7L, Seq(-1.0, 14.0), BigDecimal("109.25"), "insert"))
+    assert(out.sortBy(c => (c._1, c._4)).toSeq == want,
+      s"exactly the deleted row and the updated row's pre/post images: $out")
+  }
 }

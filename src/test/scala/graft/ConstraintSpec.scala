@@ -85,8 +85,7 @@ class ConstraintSpec extends AnyFunSuite {
     val dir = s"$wh/db/st"
     val schema = org.apache.spark.sql.types.StructType.fromDDL("k BIGINT")
     val sw = new graft.sources.v2.DirSinkStreamingWrite(dir, schema,
-      "check-stream", truncate = false,
-      format = graft.sources.v2.DirSink.FormatParquet)
+      "check-stream", truncate = false)
     // valid epoch lands
     val w0 = sw.createStreamingWriterFactory(null).createWriter(0, 0L, 0L)
     w0.write(new GenericInternalRow(Array[Any](7L)))

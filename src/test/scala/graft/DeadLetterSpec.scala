@@ -115,8 +115,7 @@ class DeadLetterSpec extends AnyFunSuite {
     val dl = DirSinkChecks.resolveDeadLetter(dir, Some(q), schema,
       DirSinkChecks.zoneChecks(dir))
     val sw = new graft.sources.v2.DirSinkStreamingWrite(dir, schema,
-      "dl-stream", truncate = false,
-      format = DirSink.FormatParquet, deadletter = dl)
+      "dl-stream", truncate = false, deadletter = dl)
     def runEpoch(e: Long, vals: Seq[Long]): Unit = {
       val w = sw.createStreamingWriterFactory(null).createWriter(0, 0L, e)
       vals.foreach(v => w.write(new GenericInternalRow(Array[Any](v))))

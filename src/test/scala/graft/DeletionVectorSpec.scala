@@ -13,8 +13,8 @@ import org.scalatest.funsuite.AnyFunSuite
   *     unchanged, each touched line gains a `dv=` tag, and every read
   *     path (projection, filters, aggregates, count(*)) answers as if
   *     the rows were rewritten away;
-  *   - both planes agree (text counts ordinals, parquet rides Spark's
-  *     split-stable row index — same coordinates);
+  *   - positions are file ordinals from Spark's split-stable parquet
+  *     row index — the writer's `_pos` and the reader's skip agree;
   *   - vectors are immutable and UNION on re-delete: time travel to
   *     the generation between two DELETEs sees exactly the first;
   *   - a file whose union covers every physical row drops entirely;
@@ -37,12 +37,12 @@ class DeletionVectorSpec extends AnyFunSuite {
 
   /** 4 range-clustered files, ids 0..99 — scattered predicates are
     * undecidable by bounds, the vector case. */
-  private def build(dir: String, format: String): Unit = {
+  private def build(dir: String): Unit = {
     (0 until 4).foreach { k =>
       spark.range(k * 25L, k * 25L + 25L)
         .select(col("id"), (col("id") % 7).as("v"))
         .coalesce(1)
-        .write.format(fmt).option("path", dir).option("format", format)
+        .write.format(fmt).option("path", dir)
         .mode(SaveMode.Append).save()
     }
   }
@@ -61,36 +61,35 @@ class DeletionVectorSpec extends AnyFunSuite {
     try body finally spark.conf.unset(DirSinkDv.EnabledKey)
   }
 
-  for (plane <- Seq("parquet", "text"))
-    test(s"[$plane] a scattered DELETE writes vectors, not files: list unchanged, answers exact") {
-      val dir = tmp()
-      build(dir, plane)
-      val before = names(dir)
-      val dead = Array(3L, 7L, 31L, 64L, 65L, 99L)
-      withDv { table(dir).deleteWhere(Array[Filter](In("id", dead.map(_.asInstanceOf[AnyRef])))) }
-      assert(names(dir) == before,
-        "merge-on-read: the data file list must not change")
-      assert(DirSink.readManifestLines(dir).get._2
-        .count(_.contains("dv=")) == 4, "every touched file is tagged")
-      val live = load(dir)
-      assert(live.count() == 94)
-      assert(live.agg(sum("id")).head.getLong(0) ==
-        (0L until 100L).sum - dead.sum)
-      assert(live.filter(col("id") === 31L).count() == 0)
-      assert(live.filter(col("id") === 30L).count() == 1)
-      // the `_pos` coordinates the vectors address are the reader's:
-      // file 0 lost ordinals 3 and 7, so its positions skip them
-      val pos0 = load(dir).select(col("_file"), col(DirSinkDv.PosCol),
-        col("id")).filter(col("id") < 25)
-        .collect().map(r => (r.getLong(1), r.getLong(2))).sortBy(_._2)
-      assert(pos0.forall { case (p, id) => p == id },
-        s"parquet/text positions are file ordinals: ${pos0.take(10).toSeq}")
-      assert(!pos0.map(_._1).contains(3L) && !pos0.map(_._1).contains(7L))
-    }
+  test("[parquet] a scattered DELETE writes vectors, not files: list unchanged, answers exact") {
+    val dir = tmp()
+    build(dir)
+    val before = names(dir)
+    val dead = Array(3L, 7L, 31L, 64L, 65L, 99L)
+    withDv { table(dir).deleteWhere(Array[Filter](In("id", dead.map(_.asInstanceOf[AnyRef])))) }
+    assert(names(dir) == before,
+      "merge-on-read: the data file list must not change")
+    assert(DirSink.readManifestLines(dir).get._2
+      .count(_.contains("dv=")) == 4, "every touched file is tagged")
+    val live = load(dir)
+    assert(live.count() == 94)
+    assert(live.agg(sum("id")).head.getLong(0) ==
+      (0L until 100L).sum - dead.sum)
+    assert(live.filter(col("id") === 31L).count() == 0)
+    assert(live.filter(col("id") === 30L).count() == 1)
+    // the `_pos` coordinates the vectors address are the reader's:
+    // file 0 lost ordinals 3 and 7, so its positions skip them
+    val pos0 = load(dir).select(col("_file"), col(DirSinkDv.PosCol),
+      col("id")).filter(col("id") < 25)
+      .collect().map(r => (r.getLong(1), r.getLong(2))).sortBy(_._2)
+    assert(pos0.forall { case (p, id) => p == id },
+      s"positions are file ordinals: ${pos0.take(10).toSeq}")
+    assert(!pos0.map(_._1).contains(3L) && !pos0.map(_._1).contains(7L))
+  }
 
   test("re-DELETE unions; time travel between the two sees exactly the first") {
     val dir = tmp()
-    build(dir, "parquet")
+    build(dir)
     withDv {
       table(dir).deleteWhere(Array[Filter](
         In("id", Array(5L, 6L).map(_.asInstanceOf[AnyRef])))) // gen 4
@@ -111,7 +110,7 @@ class DeletionVectorSpec extends AnyFunSuite {
 
   test("a union covering every physical row drops the file; count(*) stays metadata-only") {
     val dir = tmp()
-    build(dir, "parquet")
+    build(dir)
     withDv {
       table(dir).deleteWhere(Array[Filter](
         In("id", (26L until 50L).map(_.asInstanceOf[AnyRef]).toArray)))
@@ -132,7 +131,7 @@ class DeletionVectorSpec extends AnyFunSuite {
 
   test("the change feed emits exactly the newly vector-deleted rows") {
     val dir = tmp()
-    build(dir, "parquet")
+    build(dir)
     val gen = DirSink.currentGen(dir).get
     withDv {
       table(dir).deleteWhere(Array[Filter](
@@ -148,7 +147,7 @@ class DeletionVectorSpec extends AnyFunSuite {
 
   test("OPTIMIZE re-materializes; vacuum protects retained vectors and sweeps aged ones") {
     val dir = tmp()
-    build(dir, "text")
+    build(dir)
     withDv {
       table(dir).deleteWhere(Array[Filter](
         In("id", Array(1L, 98L).map(_.asInstanceOf[AnyRef]))))
@@ -172,7 +171,7 @@ class DeletionVectorSpec extends AnyFunSuite {
 
   test("the zone declares the deletion-vectors reader feature") {
     val dir = tmp()
-    build(dir, "parquet")
+    build(dir)
     withDv {
       table(dir).deleteWhere(Array[Filter](
         In("id", Array(2L).map(_.asInstanceOf[AnyRef]))))
@@ -185,7 +184,7 @@ class DeletionVectorSpec extends AnyFunSuite {
 
   test("a shallow clone of a vectored zone reads live rows only (absolute vector pointers)") {
     val src = tmp(); val dst = tmp()
-    build(src, "parquet")
+    build(src)
     withDv {
       table(src).deleteWhere(Array[Filter](
         In("id", Array(10L, 20L).map(_.asInstanceOf[AnyRef]))))
@@ -198,7 +197,7 @@ class DeletionVectorSpec extends AnyFunSuite {
   test("a vector DELETE under a running tail fails the stream loudly — never a silent re-emit") {
     import graft.sources.v2.{DirSinkMicroBatchStream, DirSinkOffset}
     val dir = tmp()
-    build(dir, "parquet") // 4 files
+    build(dir) // 4 files
     val schema = StructType.fromDDL("id BIGINT, v BIGINT")
     val stream = new DirSinkMicroBatchStream(dir, schema, schema)
     val s0 = stream.initialOffset()
@@ -244,7 +243,7 @@ class DeletionVectorSpec extends AnyFunSuite {
 
   test("CoW and vectors agree: same answers either way") {
     val a = tmp(); val b = tmp()
-    build(a, "parquet"); build(b, "parquet")
+    build(a); build(b)
     val pred = Array[Filter](LessThan("v", 3L),
       In("id", (10L until 90L).map(_.asInstanceOf[AnyRef]).toArray))
     table(a).deleteWhere(pred) // CoW

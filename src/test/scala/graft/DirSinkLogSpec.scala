@@ -84,20 +84,18 @@ class DirSinkLogSpec extends AnyFunSuite {
   test("a legacy single-manifest zone migrates into the log on first commit") {
     import spark.implicits._
     val dir = tmpDir()
-    // hand-build a LEGACY zone: one text-codec data file + _GRAFT_COMMIT
-    java.nio.file.Files.write(java.nio.file.Paths.get(dir, "legacy-f0"),
-      "7old\n".getBytes("UTF-8"))
+    // hand-build a LEGACY zone: one parquet data file + _GRAFT_COMMIT
+    TestSession.parquetRowFile(dir, "legacy-f0", 7L, "old")
     java.nio.file.Files.write(
       java.nio.file.Paths.get(dir, DirSink.ManifestName),
-      "id BIGINT,v STRING\n#format=text\n#gen=3\nlegacy-f0\t1"
+      "id BIGINT,v STRING\n#format=parquet\n#gen=3\nlegacy-f0\t1"
         .getBytes("UTF-8"))
     assert(spark.read.format(fmt).option("path", dir).load().count() == 1,
       "the legacy manifest must read as before")
     // first NEW commit migrates: manifest -> checkpoint at gen 3,
     // the append lands as segment gen 4, the legacy file goes
     Seq((8L, "new")).toDF("id", "v").coalesce(1).write.format(fmt)
-      .option("path", dir).option("format", "text")
-      .mode(SaveMode.Append).save()
+      .option("path", dir).mode(SaveMode.Append).save()
     assert(!new java.io.File(dir, DirSink.ManifestName).exists(),
       "the legacy manifest is replaced by the log")
     assert(logFiles(dir).map(_.getName).contains(

@@ -5,9 +5,8 @@ import org.apache.spark.sql.SaveMode
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The PARQUET DATA PLANE of the DirSink table format (round 13):
-  * everything the scalar-text line codec could not give the engine's
-  * own format —
+/** The PARQUET DATA PLANE of the DirSink table format (round 13), the
+  * format's one payload —
   *
   *   1. the FULL TYPE SURFACE: arrays (embeddings), binary (multimodal
   *      payloads), decimal, map, struct, float round-trip through a
@@ -15,14 +14,12 @@ import org.scalatest.funsuite.AnyFunSuite
   *   2. SPLITTABLE READS: one large committed file plans as multiple
   *      byte-range partitions, so `compact(4)` no longer caps scan
   *      parallelism at 4 tasks;
-  *   3. BACKWARD COMPATIBILITY: a `format=text` zone still writes and
-  *      reads through the line codec, a manifest with no `#format`
-  *      header reads as text, and appending a mismatched format to a
-  *      committed zone is an error (never a mixed-plane manifest);
+  *   3. ONE PLANE, LOUDLY: a `format` write option other than parquet
+  *      is refused (never silently ignored), and a manifest that does
+  *      not declare `#format=parquet` is refused rather than misread;
   *   4. the manifest machinery (stats skipping, schema evolution,
-  *      DML, snapshots) is format-agnostic — those laws run against
-  *      parquet zones in their own suites now that parquet is the
-  *      default; this suite pins what is parquet-SPECIFIC.
+  *      DML, snapshots) runs against parquet zones in its own suites;
+  *      this suite pins what is parquet-SPECIFIC.
   */
 class DirSinkParquetSpec extends AnyFunSuite {
   private lazy val spark = TestSession.spark
@@ -102,54 +99,61 @@ class DirSinkParquetSpec extends AnyFunSuite {
     assert(DirSinkParquet.splitRanges(3L << 20, 512 << 10).size == 3)
   }
 
-  test("format=text still writes the line codec; no-header manifests read as text") {
-    import spark.implicits._
-    val dir = tmpDir()
-    Seq((1L, "a"), (2L, "b")).toDF("id", "v")
-      .write.format(fmt).option("path", dir)
-      .option("format", "text").mode(SaveMode.Append).save()
-    assert(DirSink.zoneFormat(dir).contains(DirSink.FormatText))
-    // the committed payload IS the escaped-text codec
-    val name = DirSink.readManifest(dir).get._2.head._1
-    val bytes = java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get(dir, name))
-    assert(new String(bytes, "UTF-8").contains(""),
-      "text zone files must be the line codec, not parquet")
-    assert(spark.read.format(fmt).option("path", dir).load().count() == 2)
-    // a LEGACY zone (pre-log `_GRAFT_COMMIT`, no #format header) reads
-    // as text too: hand-build one from this zone's committed file
-    val legacyDir = tmpDir()
-    java.nio.file.Files.copy(
-      java.nio.file.Paths.get(dir, name),
-      java.nio.file.Paths.get(legacyDir, name))
-    java.nio.file.Files.write(
-      java.nio.file.Paths.get(legacyDir, DirSink.ManifestName),
-      s"id BIGINT,v STRING\n#gen=0\n$name\t2".getBytes("UTF-8"))
-    assert(DirSink.zoneFormat(legacyDir).contains(DirSink.FormatText),
-      "a manifest without #format reads as the text plane")
-    assert(spark.read.format(fmt).option("path", legacyDir).load()
-      .count() == 2)
-  }
+  private def msgs(t: Throwable): Seq[String] =
+    if (t == null) Seq.empty
+    else String.valueOf(t.getMessage) +: msgs(t.getCause)
 
   test("appending a mismatched format to a committed zone is refused") {
     import spark.implicits._
     val dir = tmpDir()
     Seq((1L, "a")).toDF("id", "v").write.format(fmt)
-      .option("path", dir).option("format", "text")
-      .mode(SaveMode.Append).save()
-    val e = intercept[Exception] {
-      Seq((2L, "b")).toDF("id", "v").write.format(fmt)
-        .option("path", dir).option("format", "parquet")
-        .mode(SaveMode.Append).save()
+      .option("path", dir).mode(SaveMode.Append).save()
+    // parquet is the one data plane: any other `format` option fails
+    // the write — on append AND on overwrite, never silently ignored
+    for (mode <- Seq(SaveMode.Append, SaveMode.Overwrite)) {
+      val e = intercept[Exception] {
+        Seq((2L, "b")).toDF("id", "v").write.format(fmt)
+          .option("path", dir).option("format", "text").mode(mode).save()
+      }
+      assert(msgs(e).exists(m => m.contains("'text'") &&
+        m.contains("parquet")), s"$mode must refuse format=text, got: $e")
     }
-    assert(e.getMessage != null && e.getMessage.contains("mix"),
-      s"must refuse a mixed-plane append, got: ${e.getMessage}")
-    // …but OVERWRITE may re-format (it replaces every file)
+    // the explicit default is accepted; the zone is untouched otherwise
     Seq((3L, "c")).toDF("id", "v").write.format(fmt)
       .option("path", dir).option("format", "parquet")
-      .mode(SaveMode.Overwrite).save()
+      .mode(SaveMode.Append).save()
     assert(DirSink.zoneFormat(dir).contains(DirSink.FormatParquet))
-    assert(spark.read.format(fmt).option("path", dir).load().count() == 1)
+    assert(spark.read.format(fmt).option("path", dir).load()
+      .as[(Long, String)].collect().toSeq.sorted == Seq((1L, "a"), (3L, "c")))
+  }
+
+  test("a manifest without #format=parquet is refused, not read as parquet") {
+    import spark.implicits._
+    val dir = tmpDir()
+    Seq((1L, "a"), (2L, "b")).toDF("id", "v").coalesce(1)
+      .write.format(fmt).option("path", dir).mode(SaveMode.Append).save()
+    val name = DirSink.readManifest(dir).get._2.head._1
+    // a hand-made pre-log `_GRAFT_COMMIT` over a real parquet file, but
+    // with no `#format` header: the data plane is undeclared
+    val legacyDir = tmpDir()
+    java.nio.file.Files.copy(java.nio.file.Paths.get(dir, name),
+      java.nio.file.Paths.get(legacyDir, name))
+    java.nio.file.Files.write(
+      java.nio.file.Paths.get(legacyDir, DirSink.ManifestName),
+      s"id BIGINT,v STRING\n#gen=0\n$name\t2".getBytes("UTF-8"))
+    val e = intercept[IllegalStateException](DirSink.zoneFormat(legacyDir))
+    assert(e.getMessage.contains("#format=parquet"), e.getMessage)
+    val r = intercept[Exception] {
+      spark.read.format(fmt).option("path", legacyDir).load().count()
+    }
+    assert(msgs(r).exists(_.contains("#format=parquet")), s"got: $r")
+    // the same manifest WITH the header reads the file as before
+    java.nio.file.Files.write(
+      java.nio.file.Paths.get(legacyDir, DirSink.ManifestName),
+      s"id BIGINT,v STRING\n#format=parquet\n#gen=0\n$name\t2"
+        .getBytes("UTF-8"))
+    assert(spark.read.format(fmt).option("path", legacyDir).load()
+      .count() == 2)
   }
 
   test("maintenance inherits the plane: compact + DELETE keep a parquet zone parquet") {

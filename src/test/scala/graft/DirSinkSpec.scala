@@ -116,7 +116,7 @@ class DirSinkSpec extends AnyFunSuite {
     val dir = tmpDir()
     val schema = StructType.fromDDL("id BIGINT, name STRING")
     val queryId = "q-test-1"
-    val factory = DirSinkWriterFactory.resolved(dir, schema, queryId, DirSink.FormatText)
+    val factory = DirSinkWriterFactory.resolved(dir, schema, queryId)
     def row(id: Long, s: String) =
       new GenericInternalRow(Array[Any](id, UTF8String.fromString(s)))
     // two attempts of partition 0 run concurrently (speculation)
@@ -158,7 +158,7 @@ class DirSinkSpec extends AnyFunSuite {
     def row(id: Long, s: String) =
       new GenericInternalRow(Array[Any](id, UTF8String.fromString(s)))
     Seq("app-one", "app-two").zipWithIndex.foreach { case (qid, i) =>
-      val w = DirSinkWriterFactory.resolved(dir, schema, qid, DirSink.FormatText)
+      val w = DirSinkWriterFactory.resolved(dir, schema, qid)
         .createWriter(0, taskId = 0L) // identical ids across applications
       w.write(row(i.toLong, s"gen$i"))
       val m = w.commit()
@@ -383,7 +383,7 @@ class DirSinkSpec extends AnyFunSuite {
     Seq((7L, "gen1")).toDF("id", "name").write.format(fmt)
       .option("path", dir).mode(SaveMode.Append).save()
     val queryId = "q-test-2"
-    val factory = DirSinkWriterFactory.resolved(dir, schema, queryId, DirSink.FormatText)
+    val factory = DirSinkWriterFactory.resolved(dir, schema, queryId)
     val w = factory.createWriter(0, taskId = 20L)
     w.write(new GenericInternalRow(
       Array[Any](8L, UTF8String.fromString("doomed"))))

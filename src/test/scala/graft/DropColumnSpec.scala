@@ -6,14 +6,13 @@ import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** `ALTER TABLE … DROP COLUMN` on parquet zones ([[DirSink.dropColumn]]):
+/** `ALTER TABLE … DROP COLUMN` ([[DirSink.dropColumn]]):
   * the manifest rewrite removes the column from the schema line AND
   * excises its entry from every per-file stats field — without the
   * excision a MIDDLE drop shifts every later column's bounds one slot
   * left and the skipper/DELETE-metadata path prunes files against the
   * wrong column's min/max (silent wrong answers). Data files are
-  * untouched (parquet name-based resolution), which is also why the
-  * positional text codec refuses the operation. */
+  * untouched (parquet name-based resolution). */
 class DropColumnSpec extends AnyFunSuite {
   private lazy val spark = TestSession.spark
 
@@ -120,16 +119,8 @@ class DropColumnSpec extends AnyFunSuite {
     assert(DirSink.zoneBloom(dir).isEmpty)
   }
 
-  test("refusals: text zone, bucket column, only column, missing column") {
+  test("refusals: bucket column, only column, missing column") {
     import spark.implicits._
-    val txt = tmpDir()
-    Seq((1L, "a")).toDF("k", "s").write.format(fmt)
-      .option("path", txt).option("format", "text")
-      .mode(SaveMode.Append).save()
-    assert(intercept[UnsupportedOperationException] {
-      DirSink.dropColumn(txt, "s")
-    }.getMessage.contains("parquet"))
-
     val bkt = tmpDir()
     Seq((1L, 2L)).toDF("k", "v").write.format(fmt)
       .option("path", bkt).option("bucket", "k:4")

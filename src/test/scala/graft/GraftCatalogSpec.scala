@@ -61,8 +61,8 @@ class GraftCatalogSpec extends AnyFunSuite {
   test("unsupported schema changes are rejected; DROP COLUMN is parquet-plane-only") {
     spark.sql("CREATE NAMESPACE IF NOT EXISTS graftcat.dbev2")
     spark.sql("CREATE TABLE graftcat.dbev2.t (id BIGINT, v STRING)")
-    // type changes stay rejected on every plane (the positional codec
-    // cannot re-map them); RENAME COLUMN became supported in round 14
+    // type changes stay rejected (the positional per-file stats cannot
+    // re-map them); RENAME COLUMN became supported in round 14
     // via Delta-style column mapping — RenameColumnSpec owns it
     for (ddl <- Seq(
       "ALTER TABLE graftcat.dbev2.t ALTER COLUMN id TYPE STRING")) {
@@ -74,18 +74,37 @@ class GraftCatalogSpec extends AnyFunSuite {
         (m.contains("ADD COLUMNS") || m.contains("not supported") ||
           m.contains("Unsupported"))), s"unexpected error for $ddl: $e")
     }
-    // DROP COLUMN succeeds on the (default) parquet plane — round 13,
-    // DropColumnSpec owns the deep coverage — and stays rejected on a
-    // text zone, where the positional codec cannot re-map
+    // DROP COLUMN succeeds on the parquet plane — round 13,
+    // DropColumnSpec owns the deep coverage; no other plane can be
+    // created (see the 'format' property refusal below)
     spark.sql("ALTER TABLE graftcat.dbev2.t DROP COLUMN v")
     assert(spark.table("graftcat.dbev2.t").columns.toSeq == Seq("id"))
-    spark.sql("CREATE TABLE graftcat.dbev2.txt (id BIGINT, v STRING) " +
-      "TBLPROPERTIES ('format' = 'text')")
-    val e = intercept[Exception](
-      spark.sql("ALTER TABLE graftcat.dbev2.txt DROP COLUMN v"))
+  }
+
+  test("CREATE and CTAS refuse a 'format' property other than parquet") {
+    spark.sql("CREATE NAMESPACE IF NOT EXISTS graftcat.dbfmt")
+    val wh = spark.conf.get("spark.sql.catalog.graftcat.warehouse")
     def msgs(t: Throwable): Seq[String] =
       if (t == null) Seq.empty else t.getMessage +: msgs(t.getCause)
-    assert(msgs(e).exists(m => m != null && m.contains("parquet")))
+    for (ddl <- Seq(
+      "CREATE TABLE graftcat.dbfmt.c (id BIGINT) " +
+        "TBLPROPERTIES ('format' = 'text')",
+      "CREATE TABLE graftcat.dbfmt.s TBLPROPERTIES ('format' = 'text') " +
+        "AS SELECT id FROM range(3)")) {
+      val e = intercept[Exception](spark.sql(ddl))
+      assert(msgs(e).exists(m => m != null && m.contains("'text'") &&
+        m.contains("parquet")), s"unexpected error for $ddl: $e")
+    }
+    assert(!spark.catalog.tableExists("graftcat.dbfmt.c") &&
+      !spark.catalog.tableExists("graftcat.dbfmt.s"),
+      "a refused definition must leave no table behind")
+    assert(!graft.sources.v2.DirSink.zoneExists(s"$wh/dbfmt/c") &&
+      !graft.sources.v2.DirSink.zoneExists(s"$wh/dbfmt/s"))
+    // the explicit default is accepted and stamped
+    spark.sql("CREATE TABLE graftcat.dbfmt.p (id BIGINT) " +
+      "TBLPROPERTIES ('format' = 'parquet')")
+    assert(graft.sources.v2.DirSink.zoneFormat(s"$wh/dbfmt/p")
+      .contains(graft.sources.v2.DirSink.FormatParquet))
   }
 
   test("file-aligned DELETE: aligned predicates swap the manifest; splitting predicates are refused") {

@@ -60,17 +60,12 @@ class ProtocolFeatureSpec extends AnyFunSuite {
     DirSinkLog.invalidate(dir)
   }
 
-  test("a plain text-codec zone stamps no feature keys; a parquet zone declares parquet-plane") {
-    val plain = tmpDir()
-    write(plain, Map("format" -> "text"))
-    val mh = headHeader(plain)
-    assert(!mh.contains("features") && !mh.contains("wfeatures"),
-      s"legacy-shaped zones stay byte-stable: $mh")
-
+  test("a parquet zone declares parquet-plane") {
     val pq = tmpDir()
-    write(pq) // default plane is parquet
+    write(pq)
     val h = headHeader(pq)
-    assert(h.get("features").exists(_.contains("parquet-plane")), s"$h")
+    assert(h.get("format").contains("parquet") &&
+      h.get("features").exists(_.contains("parquet-plane")), s"$h")
   }
 
   test("RENAME COLUMN adds column-mapping to the reader list; the list carries forward") {

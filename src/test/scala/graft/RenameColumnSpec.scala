@@ -21,8 +21,7 @@ import org.scalatest.funsuite.AnyFunSuite
   *   - time travel to before the rename reads the old names;
   *   - collisions (logical or physical) and CHECK references refuse;
   *   - a rename back to the original name drops the mapping;
-  *   - OPTIMIZE un-maps (rewritten files are written logically);
-  *   - text zones rename for free (positional codec). */
+  *   - OPTIMIZE un-maps (rewritten files are written logically). */
 class RenameColumnSpec extends AnyFunSuite {
   private lazy val spark = TestSession.spark
   private val fmt = "graft.sources.v2.DirSinkSource"
@@ -155,7 +154,7 @@ class RenameColumnSpec extends AnyFunSuite {
     assert(back.filter(col("key") === 7L).count() == 1)
   }
 
-  test("catalog SQL: ALTER TABLE RENAME COLUMN; text zones rename positionally for free") {
+  test("catalog SQL: ALTER TABLE RENAME COLUMN") {
     val wh = java.nio.file.Files.createTempDirectory("graft_ren_cat").toString
     val cat = s"rencat_${math.abs(wh.hashCode)}"
     spark.conf.set(s"spark.sql.catalog.$cat", "graft.sources.v2.GraftCatalog")
@@ -165,15 +164,6 @@ class RenameColumnSpec extends AnyFunSuite {
     spark.sql(s"ALTER TABLE $cat.db.r RENAME COLUMN v TO score")
     assert(spark.table(s"$cat.db.r").columns.toSeq == Seq("id", "score"))
     assert(spark.table(s"$cat.db.r").agg(sum("score")).head.getLong(0) == 90L)
-    // text zone: positional codec — rename is a pure schema rewrite
-    val tdir = java.nio.file.Files.createTempDirectory("graft_ren_txt")
-      .toString
-    spark.range(5).select(col("id"), (col("id") + 1).as("v"))
-      .write.format(fmt).option("path", tdir)
-      .option("format", "text").mode(SaveMode.Overwrite).save()
-    DirSink.renameColumn(tdir, "v", "succ")
-    assert(DirSink.zoneColMap(tdir).isEmpty, "text zones need no mapping")
-    assert(load(tdir).agg(sum("succ")).head.getLong(0) == 15L)
   }
 
   test("a streaming row tail reads a renamed zone's values (not NULLs)") {

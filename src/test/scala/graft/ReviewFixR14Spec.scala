@@ -119,13 +119,11 @@ class ReviewFixR14Spec extends AnyFunSuite {
   test("TIMESTAMP AS OF inside pre-migration legacy history still resolves") {
     import spark.implicits._
     val dir = tmp()
-    java.nio.file.Files.write(java.nio.file.Paths.get(dir, "legacy-f0"),
-      "7a\n".getBytes("UTF-8"))
-    java.nio.file.Files.write(java.nio.file.Paths.get(dir, "legacy-f1"),
-      "8b\n".getBytes("UTF-8"))
+    TestSession.parquetRowFile(dir, "legacy-f0", 7L, "a")
+    TestSession.parquetRowFile(dir, "legacy-f1", 8L, "b")
     java.nio.file.Files.write(
       java.nio.file.Paths.get(dir, DirSink.ManifestName),
-      ("id BIGINT,v STRING\n#format=text\n#gen=3\n" +
+      ("id BIGINT,v STRING\n#format=parquet\n#gen=3\n" +
         "legacy-f0\t1\tt=1000\nlegacy-f1\t1\tt=2000").getBytes("UTF-8"))
     // pre-migration: the line-level prefix rule serves t=1500
     def rowsAt(t: Long): Long =
@@ -134,8 +132,7 @@ class ReviewFixR14Spec extends AnyFunSuite {
     assert(rowsAt(1500L) == 1L)
     // migrate: the first post-log commit moves history into the log
     Seq((9L, "c")).toDF("id", "v").coalesce(1).write.format(fmt)
-      .option("path", dir).option("format", "text")
-      .mode(SaveMode.Append).save()
+      .option("path", dir).mode(SaveMode.Append).save()
     assert(rowsAt(1500L) == 1L,
       "a timestamp inside the pre-log history must keep resolving " +
         "after migration (line-level prefix over the checkpoint base)")

@@ -1,6 +1,6 @@
 package graft
 
-import graft.sources.v2.{DirSink, DirSinkFilePartition, DirSinkMicroBatchStream, DirSinkOffset, DirSinkReaderFactory}
+import graft.sources.v2.{DirSink, DirSinkFilePartition, DirSinkMicroBatchStream, DirSinkOffset}
 import org.apache.spark.sql.SaveMode
 import org.apache.spark.sql.connector.read.streaming.ReadLimit
 import org.apache.spark.sql.types.StructType
@@ -32,8 +32,7 @@ class TailMigrationLawSpec extends AnyFunSuite {
     val end = stream.latestOffset(from, ReadLimit.allAvailable())
       .asInstanceOf[DirSinkOffset]
     val parts = stream.planInputPartitions(from, end)
-    // the stream's own factory dispatches on the zone's data plane
-    // (parquet by default since round 13)
+    // the stream's own factory: the same parquet reader as the batch scan
     val factory = stream.createReaderFactory()
     val ids = parts.flatMap { p =>
       val r = factory.createReader(p.asInstanceOf[DirSinkFilePartition])

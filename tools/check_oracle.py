@@ -4,8 +4,9 @@ not part of the library). Usage:
   python3 tools/check_oracle.py <sfDir> <verifyOutDir> [query ...]
 Compares each verify parquet dump against the oracle SQL run by DuckDB on
 views named after the testdata tables, strictly: schema (column names),
-row count, and exact values (after sorting columns by name)."""
-import sys, json, math, decimal
+row count, and exact values (after sorting columns by name). Every entry
+of Verify's failures.json (a query that threw) counts as bad."""
+import os, sys, json, math, decimal
 import duckdb
 
 TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
@@ -33,9 +34,17 @@ def main():
     for t in TABLES:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
     oracle = json.load(open(f"{out_dir}/oracle_sql.json"))
+    failures_path = f"{out_dir}/failures.json"
+    failures = (json.load(open(failures_path))
+                if os.path.exists(failures_path) else {})
     n_ok = n_bad = 0
-    for name, sql in sorted(oracle.items()):
+    for name, msg in sorted(failures.items()):
         if only and name not in only:
+            continue
+        print(f"FAIL {name}: query threw: {msg}")
+        n_bad += 1
+    for name, sql in sorted(oracle.items()):
+        if only and name not in only or name in failures:
             continue
         try:
             got_rel = con.execute(

@@ -75,7 +75,9 @@ object Bench {
   /** Min-of-2 [[timed]] passes per query: a one-off GC pause /
     * page-cache miss / scheduler hiccup in a single timed pass once
     * inflated the round artifact ~2.5× (BENCH_r02 86s vs 35s
-    * reproducible); the min of two passes is the standard defense. A
+    * reproducible); the min of two passes is the standard defense. The
+    * cache is cleared before each pass (off the clock), so the second
+    * pass cannot hit InMemoryRelations the first one left registered. A
     * query that throws gets no time: it is left out of the result map
     * and counted in the returned error count. */
   private[graft] def measure(
@@ -84,8 +86,8 @@ object Bench {
       dir: String): (Map[String, Double], Int) = {
     var errors = 0
     val results = queries.flatMap { case (name, q) =>
-      try Some(name -> math.min(timed(spark, q, dir)._1,
-        timed(spark, q, dir)._1))
+      def pass(): Double = { spark.catalog.clearCache(); timed(spark, q, dir)._1 }
+      try Some(name -> math.min(pass(), pass()))
       catch { case e: Throwable =>
         System.err.println(s"[bench] $name failed: ${e.getMessage}")
         errors += 1

@@ -37,6 +37,16 @@ import org.apache.spark.sql.DataFrame
   *    canonicalization before a single task runs, so truncation must
   *    fire even during plan inspection — which is why those loop BODIES
   *    get their own direct fragment sweep in PlanShapeSpec instead.
+  *  - A BOUNDED driver collect still runs under [[withLazyPlans]], as
+  *    [[graft.sources.Tables.rowCount]]'s memoized count does: a
+  *    result the build needs as a value — a k-means codebook round
+  *    ([[graft.operators.Similarity.kmeansCodebook]]), a stored index's
+  *    codebook — is collected while the query function runs, and the
+  *    lazy plan then holds it as a LocalRelation. Bounded means no
+  *    larger than a broadcast of the same rows, which the driver builds
+  *    anyway: a codebook is C·d·8 bytes, KBs on the fixtures but
+  *    ~300 MB at √N cells over 100 TB. A result with a row per input
+  *    row or per query row is never collected this way.
   *  - The flag is a [[scala.util.DynamicVariable]] (thread-scoped,
   *    reentrant): concurrent suites on other threads never observe the
   *    block's value, and nested blocks restore correctly.

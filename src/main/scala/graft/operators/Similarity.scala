@@ -2,9 +2,11 @@ package graft.operators
 
 import graft.QueryModule
 import graft.sources.Tables
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, LongType, StructField, StructType}
+import scala.jdk.CollectionConverters._
 
 /** Similarity search and near-duplicate detection (SURVEY.md §2.9 T3/T4 +
   * north-star dedup family): brute-force cosine top-k (the correctness
@@ -400,14 +402,22 @@ object Similarity extends QueryModule {
     * (one parquet scan feeds every Lloyd round) — and the small ranked
     * result is eagerly checkpointed so the cache is dropped before return.
     *
-    * Scale shape: centroids BROADCAST as one codebook row (KBs even at
-    * 100 TB); assignment is a per-row nearest-centroid expression in the
-    * map-side projection ([[nearestCells]]) — no N×C rows, no exchange —
-    * and each Lloyd round adds one exchange of per-cell mean buffers.
-    * The probe→cell candidate join is a plain equi-join on `cell` (AQE
-    * may broadcast it at runtime if stats allow, but nothing forces an
-    * O(N)-derived frame to the driver). [[tools.ScaleProbe]] runs the
-    * C≈√N regime via [[ivfProbedPairs]]. */
+    * Scale shape: the codebook is trained ON THE DRIVER
+    * ([[kmeansCodebook]]) — MLlib's posture for iterative ML: the model
+    * lives on the driver and each Lloyd round is ONE relational pass
+    * over the corpus (a per-row nearest-centroid map plus one exchange
+    * of per-cell mean buffers) whose C result rows are collected. The
+    * codebook is C·d·8 bytes ([[Codebook]]: 23 KB on the sf0.1 fixture,
+    * ~300 MB at √N cells over 100 TB), the rows a BroadcastExchange of
+    * it would collect to the driver anyway, and every consumer sees it
+    * as a broadcast LocalRelation — never a nested plan re-derived
+    * under each consumer. Assignment is the per-row nearest-centroid
+    * expression in the map-side projection ([[nearestCells]]) — no N×C
+    * rows, no exchange. Candidate rows keep their vector and probe rows
+    * carry the query's, so the search never joins back to the vector
+    * relation; the probe rows grow as N^1.5 and are not forced to
+    * broadcast ([[ivfRanked]]).
+    * [[tools.ScaleProbe]] runs the C≈√N regime via [[ivfProbedPairs]]. */
   private def qAnnIvf(s: SparkSession, dir: String): DataFrame = {
     val n = ivfVectors(s, dir)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -434,7 +444,8 @@ object Similarity extends QueryModule {
     * sampling, which oversamples dense regions).
     *
     * Scale: training and assignment are the [[kmeansCodebook]] /
-    * [[assignCells]] machinery (broadcast one-row codebook, per-row
+    * [[assignCells]] machinery (driver-held codebook broadcast as one
+    * row, per-row
     * nearest-centroid expression — N·C work, no window over N); the
     * per-cell representative is then a C-group max(struct) argmax —
     * round6'd similarity first, smallest-vec_id ties, so the pick can
@@ -466,98 +477,145 @@ object Similarity extends QueryModule {
       .select($"vec_id", transform($"embedding", _.cast("double")).as("e"))
   }
 
+  /** A trained codebook held on the DRIVER: `(keys…, cid, ce)` rows
+    * sorted by (keys…, cid) — no key for an IVF codebook, `m` for the
+    * keyed PQ subspace codebooks. It is C·d·8 bytes: KBs for PQ (a
+    * fixed K ≤ 64 cells per subspace) and on the fixtures, but ~300 MB
+    * for an IVF codebook of C = √N cells at 100 TB (N ≈ 4·10¹¹ vectors,
+    * d = 64), and the driver holds several copies while a consumer
+    * plans (these Rows with boxed doubles, the LocalRelation, the
+    * broadcast). A BroadcastExchange of the codebook would collect the
+    * same rows to the driver anyway; holding them there keeps every
+    * consumer's plan free of the training subtree. Consumers see it as
+    * a LocalRelation — the C-row [[Codebook.frame]] or the
+    * one-row-per-key [[Codebook.packed]] — and never as a literal,
+    * which would ship with every task. */
+  private[graft] final case class Codebook(schema: StructType, rows: Seq[Row]) {
+    /** Every column but the trailing (cid, ce). */
+    def keys: Seq[String] = schema.fieldNames.toSeq.dropRight(2)
+
+    /** The C-row relation (keys…, cid, ce). */
+    def frame(s: SparkSession): DataFrame = s.createDataFrame(rows.asJava, schema)
+
+    /** One row per key value, (keys…, cb: ARRAY<STRUCT<cid, ce>>) — the
+      * `graft_nearest` argument. An empty codebook has no row, so the
+      * vectors joined to it drop, as they did from the empty crossJoin. */
+    def packed(s: SparkSession): DataFrame = {
+      val k = keys.size
+      val cb = StructField("cb", ArrayType(StructType(schema.fields.drop(k))))
+      val byKey = rows.map(_.toSeq.take(k)).distinct.map { key =>
+        Row.fromSeq(key :+ rows.filter(_.toSeq.take(k) == key)
+          .map(r => Row.fromSeq(r.toSeq.drop(k))))
+      }
+      s.createDataFrame(byKey.asJava, StructType(schema.fields.take(k) :+ cb))
+    }
+  }
+
+  private[graft] object Codebook {
+    /** Collect a small (keys…, cid, ce) relation — a Lloyd round or a
+      * stored index part — into a driver codebook. The collect order is
+      * irrelevant: rows are re-sorted, and `graft_nearest` breaks
+      * similarity ties by cid whatever the entry order. */
+    def of(df: DataFrame): Codebook = {
+      def key(r: Row): Seq[Long] =
+        (0 until r.length - 1).map(i => r.getAs[Number](i).longValue)
+      Codebook(df.schema,
+        df.collect().toSeq.sortBy(key)(Ordering.Implicits.seqOrdering))
+    }
+  }
+
   /** Nearest-centroid assignment: (vec_id, cell). */
-  private[graft] def assignCells(n: DataFrame, cent: DataFrame): DataFrame = {
+  private[graft] def assignCells(n: DataFrame, cb: Codebook): DataFrame = {
     val s = n.sparkSession; import s.implicits._
-    assignCellsSim(n, cent).select($"vec_id", $"cell")
+    assignCellsSim(n, cb).select($"vec_id", $"cell")
   }
 
   /** [[assignCells]] WITH the winning similarity — the drift statistic
     * ([[annIndexDrift]]) needs the assignment quality, not just the
     * assignment. A pure map over n (see [[nearestCells]]): no N×C rows,
     * no exchange. */
-  private[graft] def assignCellsSim(n: DataFrame, cent: DataFrame): DataFrame = {
+  private[graft] def assignCellsSim(n: DataFrame, cb: Codebook): DataFrame = {
     val s = n.sparkSession; import s.implicits._
-    nearestCells(n, cent)
+    nearestCells(n, cb)
       .select($"vec_id", $"nn.cell".as("cell"), $"nn.csim".as("csim"))
   }
 
-  /** Every row of `n` (columns `e` plus `keys`) with `nn` =
-    * `graft_nearest(e, cb)` = struct(cell, csim) against its codebook:
-    * `cent` (keys…, cid, ce) gathered into one `cb` row per key value
-    * and BROADCAST (KBs at any corpus size). The argmax — round6'd
-    * cosine first, smallest cid on a tie, so it can never flip on an
-    * ulp — runs per row inside the map-side projection
-    * ([[graft.functions.NearestCentroid]]); it replaces an N×C
-    * crossJoin reduced by a per-vector exchange. An empty codebook is
-    * dropped before the broadcast, so rows then drop as they did from
-    * the empty crossJoin. */
-  private def nearestCells(n: DataFrame, cent: DataFrame,
-                           keys: String*): DataFrame = {
+  /** Every row of `n` (columns `e` plus the codebook's keys) with `nn` =
+    * `graft_nearest(e, cb)` = struct(cell, csim) against its codebook,
+    * [[Codebook.packed]] into one `cb` row per key value and BROADCAST.
+    * The argmax — round6'd cosine first, smallest cid on a tie, so it
+    * can never flip on an ulp — runs per row inside the map-side
+    * projection ([[graft.functions.NearestCentroid]]); it replaces an
+    * N×C crossJoin reduced by a per-vector exchange. */
+  private def nearestCells(n: DataFrame, cb: Codebook): DataFrame = {
     val s = n.sparkSession; import s.implicits._
-    val cb = broadcast(cent.groupBy(keys.map(col): _*)
-      .agg(collect_list(struct($"cid", $"ce")).as("cb"))
-      .filter(size($"cb") > 0))
-    (if (keys.isEmpty) n.crossJoin(cb) else n.join(cb, keys))
+    val packed = broadcast(cb.packed(s))
+    (if (cb.keys.isEmpty) n.crossJoin(packed) else n.join(packed, cb.keys))
       .withColumn("nn", graft.functions.VectorFunctions.nearest($"e", $"cb"))
   }
 
-  /** One Lloyd round: assign every row to its nearest centroid, then
-    * average each cell's vectors EXACTLY
+  /** One Lloyd round as a frame: assign every row to its nearest
+    * centroid, then average each cell's vectors EXACTLY
     * ([[graft.functions.QMeanVec]]) — one map stage (nearest + partial
-    * mean) and one exchange grouped by (keys…, cell). Returns the next
-    * codebook (keys…, cid, ce); cells that empty out drop. */
-  private def lloydRound(n: DataFrame, cent: DataFrame,
-                         keys: String*): DataFrame = {
+    * mean) and one exchange grouped by (keys…, cell). Its rows are the
+    * next codebook (keys…, cid, ce); cells that empty out drop. */
+  private[graft] def lloydFrame(n: DataFrame, cb: Codebook): DataFrame = {
     val s = n.sparkSession; import s.implicits._
-    nearestCells(n, cent, keys: _*)
-      .groupBy(keys.map(col) :+ $"nn.cell".as("cid"): _*)
+    nearestCells(n, cb)
+      .groupBy(cb.keys.map(col) :+ $"nn.cell".as("cid"): _*)
       .agg(graft.functions.VectorFunctions.qmeanVec($"e").as("ce"))
       .filter($"ce".isNotNull)
   }
 
-  /** The query rows' (vec_id % 100 = 0) `nprobe` nearest cells,
-    * (qid, cell): round6'd similarity first, smallest cid on a tie. The
-    * rank window covers only |Q|·C rows, never N·C. */
-  private def probeCells(n: DataFrame, cent: DataFrame, nprobe: Int): DataFrame = {
+  /** One Lloyd round, collected: the next driver codebook. */
+  private[graft] def lloydRound(n: DataFrame, cb: Codebook): Codebook =
+    Codebook.of(lloydFrame(n, cb))
+
+  /** The query rows' (vec_id % 100 = 0) `nprobe` nearest cells with the
+    * query vector, (qid, cell, qe): round6'd similarity first, smallest
+    * cid on a tie. The rank window covers only |Q|·C rows, never N·C. */
+  private def probeCells(n: DataFrame, cb: Codebook, nprobe: Int): DataFrame = {
     val s = n.sparkSession; import s.implicits._
     val wq = Window.partitionBy($"vec_id").orderBy($"csim".desc, $"cid")
-    n.filter($"vec_id" % 100 === 0).crossJoin(broadcast(cent))
+    n.filter($"vec_id" % 100 === 0).crossJoin(broadcast(cb.frame(s)))
       .withColumn("csim",
         graft.Det.round6(graft.functions.VectorFunctions.cosine($"e", $"ce")))
       .withColumn("arn", row_number().over(wq))
       .filter($"arn" <= nprobe)
-      .select($"vec_id".as("qid"), $"cid".as("cell"))
+      .select($"vec_id".as("qid"), $"cid".as("cell"), $"e".as("qe"))
   }
 
-  /** Deterministic Lloyd k-means codebook: C seeds in md5(vec_id) order,
-    * `iters` fixed assign→mean rounds (no convergence test — a fixed
-    * iteration count is what the oracle can replay). Per-dimension means
-    * are EXACT: each component is half-up-quantized to 1e-4 with pure IEEE
-    * ops (floor(x·1e4+0.5), identical bits in both engines), summed as
-    * BIGINT (order-independent; overflows only past ~10¹³ rows per cell),
-    * and finished with one correctly-rounded double division — so the
-    * trained centroids are bit-identical under any aggregation order or
-    * partitioning. Cells that empty out drop from the codebook (same rule
-    * both engines). */
-  private[graft] def kmeansCodebook(n: DataFrame, c: Int, iters: Int): DataFrame = {
+  /** Deterministic Lloyd k-means codebook, trained on the driver: C seeds
+    * in md5(vec_id) order (one bounded top-C collect, numbered 1..C),
+    * then `iters` fixed assign→mean rounds (no convergence test — a
+    * fixed iteration count is what the oracle can replay). Each round is
+    * ONE relational pass over `n` ([[lloydFrame]]: the nearest centroid
+    * per row against the broadcast one-row codebook, then
+    * graft_qmean_vec's exact mean per cell — one map stage and one
+    * exchange by cell) whose ≤C result rows are collected as the next
+    * codebook. That is MLlib's posture for iterative ML: the model —
+    * here C·d·8 bytes ([[Codebook]]) — lives on the driver and each
+    * iteration is a job over the data, so no consumer re-plans a nested
+    * chain of rounds. Per-dimension means are EXACT: each component is
+    * half-up-quantized to 1e-4 with pure IEEE ops (floor(x·1e4+0.5),
+    * identical bits in both engines), summed as BIGINT
+    * (order-independent; overflows only past ~10¹³ rows per cell), and
+    * finished with one correctly-rounded double division — so the
+    * trained centroids are bit-identical under any aggregation order,
+    * partitioning or collect order. Cells that empty out drop from the
+    * codebook (same rule both engines). The mean aggregate is NOT the
+    * round-16 static-column negative (OPTIMIZATION_r16.md: d `sum`
+    * columns in one codegen'd aggregate, slower at d=64): its buffer is
+    * ONE Long[] object in an ObjectHashAggregate, whatever d is. */
+  private[graft] def kmeansCodebook(n: DataFrame, c: Int, iters: Int): Codebook = {
     val s = n.sparkSession; import s.implicits._
-    val seedOrd = Seq(md5($"vec_id".cast("string")), $"vec_id")
-    val seeds = n.select($"vec_id", $"e").orderBy(seedOrd: _*).limit(c)
-      // bounded: numbers the ≤C seed rows the limit above selected
-      .withColumn("cid",
-        row_number().over(Window.orderBy(seedOrd: _*)).cast("long"))
-      .select($"cid", $"e".as("ce"))
-    // Each round is [[lloydRound]]: the nearest centroid per row, then
-    // graft_qmean_vec's exact mean per cell — one map stage and one
-    // exchange by cell, where the relational form crossJoined N×C rows,
-    // reduced them by vec_id, posexploded N×D (cell, pos) rows and
-    // re-assembled them with collect_list. The mean aggregate is NOT
-    // the round-16 static-column negative (OPTIMIZATION_r16.md: d
-    // `sum` columns in one codegen'd aggregate, slower at d=64): its
-    // buffer is ONE Long[] object in an ObjectHashAggregate, whatever
-    // d is, so no aggregate grows wider with the vectors.
-    (1 to iters).foldLeft(seeds: DataFrame)((cent, _) => lloydRound(n, cent))
+    val seeds = n.select($"vec_id", $"e")
+      .orderBy(md5($"vec_id".cast("string")), $"vec_id").limit(c).collect()
+    val cb = Codebook(
+      StructType(Seq(StructField("cid", LongType, nullable = false),
+        StructField("ce", n.schema("e").dataType))),
+      seeds.toSeq.zipWithIndex.map { case (r, i) => Row(i + 1L, r.get(1)) })
+    (1 to iters).foldLeft(cb)((cent, _) => lloydRound(n, cent))
   }
 
   /** RecallProbe-backed IVF DEFAULTS (PLANS.md round-11 sweep, re-pinned
@@ -585,16 +643,24 @@ object Similarity extends QueryModule {
          FROM n)"""
 
   /** Trained-codebook IVF search over a caller-managed (cached) vector
-    * relation: top-5 per query (vec_id % 100 = 0) probing nprobe cells. */
+    * relation: top-5 per query (vec_id % 100 = 0) probing nprobe cells.
+    * Trains the driver codebook, then returns the search frame: every
+    * candidate row keeps its vector as `ke` and every probe row carries
+    * its query's as `qe`, so the cell-keyed candidate join needs no join
+    * back to `n` for either vector. The join carries no broadcast hint:
+    * the probe rows number |Q|·nprobe, and with |Q| = N/100 and
+    * nprobe = √N/2 that is ~N^1.5/200 rows of d doubles (~2.6 GB at
+    * N = 10⁶) — so Spark picks the strategy from the two sides' sizes
+    * (the cached relation's statistics, then AQE's runtime sizes); on
+    * the fixtures one side is small enough to broadcast. */
   private[graft] def ivfRanked(s: SparkSession, n: DataFrame,
                                c: Int, iters: Int, nprobe: Int): DataFrame = {
     import s.implicits._
-    val cent = kmeansCodebook(n, c, iters)
-    val cells = assignCells(n, cent).select($"vec_id".as("cand_id"), $"cell")
-    val pairs = cells.join(probeCells(n, cent, nprobe), Seq("cell"))
+    val cb = kmeansCodebook(n, c, iters)
+    val pairs = nearestCells(n, cb)
+      .select($"vec_id".as("cand_id"), $"nn.cell".as("cell"), $"e".as("ke"))
+      .join(probeCells(n, cb, nprobe), Seq("cell"))
       .filter($"cand_id" =!= $"qid")
-      .join(n.select($"vec_id".as("qid"), $"e".as("qe")), Seq("qid"))
-      .join(n.select($"vec_id".as("cand_id"), $"e".as("ke")), Seq("cand_id"))
       .withColumn("sim",
         graft.Det.round6(graft.functions.VectorFunctions.cosine($"qe", $"ke")))
     val w = Window.partitionBy($"qid").orderBy($"sim".desc, $"cand_id")
@@ -616,10 +682,10 @@ object Similarity extends QueryModule {
     try {
       val total = n.count()
       val nQ = n.filter($"vec_id" % 100 === 0).count()
-      val cent = kmeansCodebook(n, c, iters = 2)
-      val cellSizes = assignCells(n, cent)
+      val cb = kmeansCodebook(n, c, iters = 2)
+      val cellSizes = assignCells(n, cb)
         .groupBy($"cell").agg(count(lit(1)).as("sz"))
-      val probed = probeCells(n, cent, nprobe)
+      val probed = probeCells(n, cb, nprobe)
         .join(cellSizes, Seq("cell"))
         .agg(coalesce(sum($"sz"), lit(0L)))
         .head().getLong(0)
@@ -638,8 +704,8 @@ object Similarity extends QueryModule {
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
       val total = n.count()
-      val cent = kmeansCodebook(n, c, iters = 2)
-      val pairs = assignCells(n, cent)
+      val cb = kmeansCodebook(n, c, iters = 2)
+      val pairs = assignCells(n, cb)
         .groupBy($"cell").agg(count(lit(1)).as("sz"))
         .agg(coalesce(sum(expr("(sz * (sz - 1)) div 2")), lit(0L)))
         .head().getLong(0)
@@ -689,14 +755,11 @@ object Similarity extends QueryModule {
   /** Per-subspace nearest-centroid assignment over a keyed subspace
     * relation: (m, vec_id, cell) — [[assignCells]] with m as an extra
     * key (one codebook row per subspace). */
-  private[graft] def pqAssign(nm: DataFrame, cent: DataFrame): DataFrame = {
+  private[graft] def pqAssign(nm: DataFrame, cb: Codebook): DataFrame = {
     val s = nm.sparkSession; import s.implicits._
-    nearestCells(nm, cent, "m").select($"m", $"vec_id", $"nn.cell".as("cell"))
+    nearestCells(nm, cb).select($"m", $"vec_id", $"nn.cell".as("cell"))
   }
 
-  /** One-Lloyd-round PQ codebook (m, cid, ce) over a keyed subspace
-    * relation — md5-ordered seeds per subspace, exact quantized means
-    * (the [[kmeansCodebook]] arithmetic with m as an extra group key). */
   /** The embedding dimensionality the PQ splitter assumes (the
     * fixture's `embeddings.embedding` width). */
   private[graft] val PqDims = 64
@@ -723,50 +786,50 @@ object Similarity extends QueryModule {
   private[graft] val PqDefaultM = 16
   private[graft] val PqDefaultK = 64
 
-  private def pqTrain(nmAll: DataFrame, k: Int = PqDefaultK): DataFrame = {
+  /** One-Lloyd-round PQ codebook (m, cid, ce) over a keyed subspace
+    * relation, trained on the driver — md5-ordered seeds per subspace,
+    * exact quantized means (the [[kmeansCodebook]] arithmetic with m as
+    * an extra group key). */
+  private[graft] def pqTrain(nmAll: DataFrame, k: Int = PqDefaultK): Codebook = {
     val s = nmAll.sparkSession; import s.implicits._
     // Seed selection orders by md5(vec_id) — INDEPENDENT of m — so the
     // per-m top-k rows are the same k vec_ids in the same order for
-    // every subspace. Compute that k-row id→rank table once from one
-    // subspace's rows (TakeOrdered, no full shuffle; the rank window is
-    // bounded by the limit) and broadcast-join it back, instead of
-    // ranking the whole N·M keyed relation through a window exchange.
-    val seedOrd = Seq(md5($"vec_id".cast("string")), $"vec_id")
-    val seedIds = nmAll.filter($"m" === 0).select($"vec_id")
-      .orderBy(seedOrd: _*).limit(k)
-      // bounded: numbers the ≤k seed rows the limit above selected
-      .withColumn("cid",
-        row_number().over(Window.orderBy(seedOrd: _*)).cast("long"))
-    val seeds = nmAll.join(broadcast(seedIds), Seq("vec_id"))
-      .select($"m", $"cid", $"e".as("ce"))
+    // every subspace. Collect that k-id list once from one subspace's
+    // rows (TakeOrdered, no full shuffle), number it on the driver, and
+    // broadcast-join it back to gather every subspace's seed slices.
+    val ids = nmAll.filter($"m" === 0).select($"vec_id")
+      .orderBy(md5($"vec_id".cast("string")), $"vec_id").limit(k)
+      .collect().map(_.getLong(0))
+    val seedIds = ids.toSeq.zipWithIndex.map { case (v, i) => (v, i + 1L) }
+      .toDF("vec_id", "cid")
+    val seeds = Codebook.of(nmAll.join(broadcast(seedIds), Seq("vec_id"))
+      .select($"m", $"cid", $"e".as("ce")))
     // the [[kmeansCodebook]] Lloyd round with m as an extra key
-    lloydRound(nmAll, seeds, "m")
+    lloydRound(nmAll, seeds)
   }
 
   /** Query ADC lookup table (qid, m, code, lq) from a trained PQ
     * codebook: lq is the BIGINT-quantized query↔centroid cosine, so
     * downstream ADC sums are exact integer math. */
-  private def pqLookups(qm: DataFrame, cent: DataFrame): DataFrame = {
+  private def pqLookups(qm: DataFrame, cb: Codebook): DataFrame = {
     val s = qm.sparkSession; import s.implicits._
-    qm.join(broadcast(cent), Seq("m"))
+    qm.join(broadcast(cb.frame(s)), Seq("m"))
       .select($"vec_id".as("qid"), $"m", $"cid".as("code"),
         floor(graft.functions.VectorFunctions.cosine($"e", $"ce")
           * 1000000.0 + 0.5).cast("long").as("lq"))
   }
 
+  /** The subspace count a TRAINED codebook was built with — a stored
+    * index is self-describing, so append/search against it must slice
+    * the vectors the way the artifact does, not the way the current
+    * session default would. */
+  private def pqMOf(cb: Codebook): Int =
+    cb.rows.map(_.getAs[Number](0).intValue).max + 1
+
   /** Trained PQ codes + query ADC lookup table over a caller-persisted
     * keyed subspace relation: (codes (vec_id, m, code),
     * lookups (qid, m, code, lq)). Shared by [[qAnnPq]] and
     * [[qAnnIvfPq]]; [[annIndex]] persists the same parts. */
-  /** The subspace count a TRAINED codebook was built with — a stored
-    * index is self-describing, so append/search against it must slice
-    * the vectors the way the artifact does, not the way the current
-    * session default would (the codebook is KBs; one tiny action). */
-  private def pqMOf(pqCent: DataFrame): Int = {
-    val s = pqCent.sparkSession; import s.implicits._
-    pqCent.agg(max($"m".cast("int"))).head.getInt(0) + 1
-  }
-
   private def pqCodesLookups(nmAll: DataFrame,
                              k: Int = PqDefaultK): (DataFrame, DataFrame) = {
     val s = nmAll.sparkSession; import s.implicits._
@@ -785,19 +848,12 @@ object Similarity extends QueryModule {
     // partial/final overlap. Recorded in OPTIMIZATION_r17.md and on
     // Exec's closing comment (the helper was removed as dead API).
     val nmF = graft.Exec.fanOut(nmAll)
-    // NOT sealed: both consumers below (assign join + query lookup
-    // join) embed the training chain in their own broadcast, but
-    // r17 single-JVM A/B pairs (OPTIMIZATION_r17.md V2, item 2)
-    // measured the eager checkpoint a WASH at 32 cores and a
-    // consistent LOSS on q_ann_ivfpq at 8 (the duplicate
-    // broadcast builds overlap on idle cores, while the checkpoint
-    // action serializes the query) — the r16 q_collocations lesson
-    // again. Duplicated-at-scale training is instead bounded by the
-    // index artifact path (annIndex checkpoints its codebooks).
-    val cent = pqTrain(nmF, k)
-    val codes = pqAssign(nmF, cent)
+    // trained once on the driver: both consumers below (assignment and
+    // query lookups) broadcast the same KB-sized LocalRelation
+    val cb = pqTrain(nmF, k)
+    val codes = pqAssign(nmF, cb)
       .select($"vec_id", $"m", $"cell".as("code"))
-    val lookups = pqLookups(nmAll.filter($"vec_id" % 100 === 0), cent)
+    val lookups = pqLookups(nmAll.filter($"vec_id" % 100 === 0), cb)
     (codes, lookups)
   }
 
@@ -868,7 +924,8 @@ object Similarity extends QueryModule {
                              pqM: Int = PqDefaultM): DataFrame = {
     import s.implicits._
     val coarse = kmeansCodebook(n, c = cC, iters = 1)
-    val pairs = assignCells(n, coarse).join(probeCells(n, coarse, nprobe), Seq("cell"))
+    val pairs = assignCells(n, coarse)
+      .join(probeCells(n, coarse, nprobe), Seq("cell"))
       .filter($"vec_id" =!= $"qid")
       .select($"qid", $"vec_id")
     val (codes, lookups) = pqCodesLookups(pqSubspaces(n, pqM), pqK)
@@ -1047,8 +1104,8 @@ object Similarity extends QueryModule {
         // probe-backed default C = ⌈√N⌉; N is in the index content key,
         // so the same corpus always trains the same codebook
         val coarse = kmeansCodebook(n, c = ivfDefaultC(n.count()), iters = 1)
-          .localCheckpoint(true) // train once, both consumers below
-        coarse.write.mode("overwrite").parquet(s"$gen/coarse")
+        // each codebook (C·d·8 bytes) lands as one file
+        coarse.frame(s).coalesce(1).write.mode("overwrite").parquet(s"$gen/coarse")
         val asg = assignCellsSim(n, coarse)
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         try {
@@ -1063,8 +1120,8 @@ object Similarity extends QueryModule {
         // stages are N·M·K-cosine dense and the fixture scan plans one
         // partition; identity at real scale
         val nm = graft.Exec.fanOut(pqSubspaces(n))
-        val pqCent = pqTrain(nm).localCheckpoint(true)
-        pqCent.write.mode("overwrite").parquet(s"$gen/pq")
+        val pqCent = pqTrain(nm)
+        pqCent.frame(s).coalesce(1).write.mode("overwrite").parquet(s"$gen/pq")
         pqAssign(nm, pqCent)
           .select($"vec_id", $"m", $"cell".as("code"))
           .write.mode("overwrite").parquet(s"$gen/codes")
@@ -1165,7 +1222,7 @@ object Similarity extends QueryModule {
       graft.Artifacts.publish(s, root) { gen =>
         coarse.write.parquet(s"$gen/coarse") // codebooks frozen, verbatim
         pqCent.write.parquet(s"$gen/pq")
-        val asg = assignCellsSim(d, coarse)
+        val asg = assignCellsSim(d, Codebook.of(coarse))
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         try {
           asg.select($"vec_id", $"cell").write.parquet(s"$gen/cells")
@@ -1177,7 +1234,8 @@ object Similarity extends QueryModule {
           writeDrift(s, gen, r.getLong(0), r.getDouble(1),
             readDrift(s, base).map(_.baseMean).getOrElse(r.getDouble(1)))
         } finally asg.unpersist(false)
-        pqAssign(pqSubspaces(d, pqMOf(pqCent)), pqCent)
+        val pqCb = Codebook.of(pqCent)
+        pqAssign(pqSubspaces(d, pqMOf(pqCb)), pqCb)
           .select($"vec_id", $"m", $"cell".as("code"))
           .write.parquet(s"$gen/codes")
         val p = new org.apache.hadoop.fs.Path(gen, "_PARENT")
@@ -1294,8 +1352,10 @@ object Similarity extends QueryModule {
   /** T3e q_ann_search_indexed — the SEARCH half of the train-once/
     * search-many split [[annIndex]] provides (q_ann_ivfpq re-trains its
     * codebooks inside the declared query; real deployments don't). At
-    * search time the only relations touched are: the two codebooks
-    * (KB-sized, broadcast), the |Q|-row query slice of the raw vectors
+    * search time the only relations touched are: the two stored
+    * codebooks (collected to the driver as a [[Codebook]] each — the
+    * jobs that replace a count and a max-m aggregate — and broadcast),
+    * the |Q|-row query slice of the raw vectors
     * (the one float-math input a search genuinely needs), and the
     * CODES/CELLS artifacts — the corpus's raw embeddings are never
     * re-read or re-encoded. Per-query work is the IVF-PQ promise:
@@ -1310,13 +1370,15 @@ object Similarity extends QueryModule {
     * beyond the query slice). */
   private def qAnnSearchIndexed(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val (coarse, cells, pqCent, codes) = annIndex(s, dir)
+    val (coarseParts, cells, pqParts, codes) = annIndex(s, dir)
+    val coarse = Codebook.of(coarseParts)
+    val pqCent = Codebook.of(pqParts)
     val q = ivfVectors(s, dir).filter($"vec_id" % 100 === 0)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
       // nprobe from the STORED codebook's size (the artifact remembers
       // its own C), so search and build stay consistent across sessions
-      val probes = probeCells(q, coarse, ivfDefaultNprobe(coarse.count().toInt))
+      val probes = probeCells(q, coarse, ivfDefaultNprobe(coarse.rows.size))
       val pairs = cells.join(probes, Seq("cell"))
         .filter($"vec_id" =!= $"qid")
         .select($"qid", $"vec_id")
@@ -1371,11 +1433,12 @@ object Similarity extends QueryModule {
     val n = ivfVectors(s, dir)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
-      val cent = kmeansCodebook(n, 8, 2)
+      val cb = kmeansCodebook(n, 8, 2)
       // m feeds both pair-join arms plus the final decision join — seal
       // it or the N·C assignment replans three times (the Selection
       // tree-duplication lesson, same round)
-      val m = graft.Exec.seal(n.join(assignCells(n, cent), Seq("vec_id")))
+      val m = graft.Exec.seal(nearestCells(n, cb)
+        .select($"vec_id", $"e", $"nn.cell".as("cell")))
       val l = m.select($"cell", $"vec_id".as("a"), $"e".as("ea"))
       val r = m.select($"cell", $"vec_id".as("b"), $"e".as("eb"))
       val dup = l.join(r, Seq("cell")).filter($"a" < $"b")

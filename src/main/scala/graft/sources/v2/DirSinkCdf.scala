@@ -184,10 +184,24 @@ class DirSinkCdfStream(path: String, zoneSchema: StructType,
         case s => s.toLong
       })
 
+  // the last planned range and its partitions: Spark may plan one
+  // micro-batch more than once, and each planning would re-run both
+  // exceptAll diff jobs and restage every rewrite generation. Dropped
+  // in `commit`, which sweeps the staged files the memo names.
+  private var planned: Option[((Long, Long), Array[InputPartition])] = None
+
   override def planInputPartitions(start: StreamOffset,
                                    end: StreamOffset): Array[InputPartition] = {
-    val s = start.asInstanceOf[DirSinkCdfOffset].gen
-    val e = end.asInstanceOf[DirSinkCdfOffset].gen
+    val range = (start.asInstanceOf[DirSinkCdfOffset].gen,
+      end.asInstanceOf[DirSinkCdfOffset].gen)
+    planned.collect { case (`range`, parts) => parts }.getOrElse {
+      val parts = planRange(range._1, range._2)
+      planned = Some(range -> parts)
+      parts
+    }
+  }
+
+  private def planRange(s: Long, e: Long): Array[InputPartition] = {
     if (e <= s) return Array.empty
     val changes = DirSinkLog.changesBetween(path, s, e)
     // a RENAME inside the range is positionally harmless (physical
@@ -314,6 +328,7 @@ class DirSinkCdfStream(path: String, zoneSchema: StructType,
     * so this query's scratch subtree sweeps eagerly. Vacuum age-sweeps
     * whole `_cdf-scratch` scopes as the crash backstop. */
   override def commit(end: StreamOffset): Unit = {
+    planned = None
     val f = DirSink.fs(path)
     if (f.exists(scratchScope)) f.delete(scratchScope, true)
   }

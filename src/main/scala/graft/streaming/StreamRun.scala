@@ -345,9 +345,10 @@ object StreamRun {
     def sortedRows(df: org.apache.spark.sql.DataFrame) =
       df.collect().toSeq.map(_.toSeq).sortBy(_.toString)
     val cellsMatch = sortedRows(chainCells) ==
-      sortedRows(Similarity.assignCells(vecsAll, coarse0))
+      sortedRows(Similarity.assignCells(vecsAll, Similarity.Codebook.of(coarse0)))
     val codesMatch = sortedRows(chainCodes) ==
-      sortedRows(Similarity.pqAssign(Similarity.pqSubspaces(vecsAll), pq0)
+      sortedRows(Similarity.pqAssign(Similarity.pqSubspaces(vecsAll),
+        Similarity.Codebook.of(pq0))
         .select($"vec_id", $"m", $"cell".as("code")))
     val codebooksFrozen =
       sortedRows(coarseL) == sortedRows(coarse0) &&

@@ -72,7 +72,7 @@ class AnnDriftSpec extends AnyFunSuite {
     // recompute the drifted delta's mean against the live frozen coarse
     val live = Artifacts.ready(spark, root).get
     val coarse = spark.read.parquet(s"$live/coarse")
-    val recomputed = Similarity.assignCellsSim(drifted, coarse)
+    val recomputed = Similarity.assignCellsSim(drifted, Similarity.Codebook.of(coarse))
       .agg(avg(col("csim"))).head.getDouble(0)
     assert(math.abs(d.head.meanCsim - recomputed) < 1e-9,
       s"stored ${d.head.meanCsim} vs recomputed $recomputed")

@@ -1,7 +1,8 @@
 package graft
 
-import org.apache.spark.sql.execution.FileSourceScanExec
-import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The train-once/search-many contract behind q_ann_search_indexed:
@@ -11,8 +12,41 @@ import org.scalatest.funsuite.AnyFunSuite
   * the stored index returns bit-identical rows to the retrain-per-run
   * q_ann_ivfpq composition. */
 class AnnIndexSpec extends AnyFunSuite {
+  import scala.jdk.CollectionConverters._
   private lazy val spark = TestSession.spark
   private val dir = "/root/testdata/sf0.001"
+
+  /** Parquet roots scanned by the driver actions `body` runs (the
+    * codebook collects): each action's executed plan, delivered on the
+    * asynchronous listener bus, so wait until `want` shows up or 20 s
+    * pass. */
+  private def actionScans(want: Set[String])(body: => Unit): Set[String] = {
+    val seen = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+    def walk(p: SparkPlan): Unit = {
+      p match {
+        case a: AdaptiveSparkPlanExec => walk(a.executedPlan)
+        case q: QueryStageExec => walk(q.plan)
+        case f: FileSourceScanExec =>
+          f.relation.location.rootPaths.foreach(r => seen.add(r.getName))
+        case _ =>
+      }
+      p.children.foreach(walk)
+    }
+    val l = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        walk(qe.executedPlan)
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(l)
+    try {
+      body
+      var waited = 0
+      while (!want.forall(seen.contains) && waited < 100) {
+        Thread.sleep(200); waited += 1
+      }
+    } finally spark.listenerManager.unregister(l)
+    seen.asScala.toSet
+  }
 
   private def scanCounts(name: String): Map[String, Int] = {
     val df = Exec.withLazyPlans(SparkEntry.queries(name)(spark, dir))
@@ -97,14 +131,25 @@ class AnnIndexSpec extends AnyFunSuite {
   test("search plan reads the index, never a training subtree") {
     // build the artifact first so the lazy plan is the steady state
     SparkEntry.queries("q_ann_search_indexed")(spark, dir).count()
-    val scans = scanCounts("q_ann_search_indexed")
+    // the KB-sized codebooks are collected to the driver while the
+    // search frame is built, so they are read by those actions; the
+    // inverted lists and codes are read by the search plan itself
+    var scans = Map.empty[String, Int]
+    val collected = actionScans(Set("coarse", "pq")) {
+      scans = scanCounts("q_ann_search_indexed")
+    }
     // the raw corpus appears only as the query-slice reads (q + its
     // PQ-subspace view share the scan twice in the lazy tree); the
     // retraining composition plans 16 of them (q_ann_ivfpq's pin)
     assert(scans.getOrElse("embeddings.parquet", 0) <= 3,
       s"search must not retrain over the corpus: $scans")
-    Seq("coarse", "cells", "pq", "codes").foreach { p =>
+    assert(!collected.contains("embeddings.parquet"),
+      s"building the search must not retrain over the corpus: $collected")
+    Seq("cells", "codes").foreach { p =>
       assert(scans.getOrElse(p, 0) >= 1, s"index part $p not read: $scans")
+    }
+    Seq("coarse", "pq").foreach { p =>
+      assert(collected.contains(p), s"index codebook $p not read: $collected")
     }
   }
 
@@ -156,13 +201,13 @@ class AnnIndexSpec extends AnyFunSuite {
       // nothing vs a full re-assignment pass
       val (coarse, chainCells, pqCent, chainCodes) =
         Similarity.annIndexParts(spark, root)
-      val wantCells = Similarity.assignCells(vecs, coarse)
+      val wantCells = Similarity.assignCells(vecs, Similarity.Codebook.of(coarse))
         .as[(Long, Long)].collect().toSeq.sorted
       val gotCells = chainCells
         .as[(Long, Long)].collect().toSeq.sorted
       assert(gotCells == wantCells)
       val wantCodes = Similarity
-        .pqAssign(Similarity.pqSubspaces(vecs), pqCent)
+        .pqAssign(Similarity.pqSubspaces(vecs), Similarity.Codebook.of(pqCent))
         .select($"vec_id", $"m", $"cell".as("code"))
         .as[(Long, Int, Long)].collect().toSeq.sorted
       val gotCodes = chainCodes

@@ -108,4 +108,24 @@ class BenchJsonSpec extends AnyFunSuite {
       !root.path("queries").has("q_build") &&
       !root.path("queries").has("q_late"))
   }
+
+  test("each timed pass starts with an empty cache") {
+    val spark = TestSession.spark
+    var entries = 0
+    // the query leaves its result cached: without the clear, the second
+    // pass would find the first pass's InMemoryRelation still registered
+    val q: (org.apache.spark.sql.SparkSession, String) =>
+      org.apache.spark.sql.DataFrame = (s, _) => {
+        entries += 1
+        assert(s.sharedState.cacheManager.isEmpty,
+          s"pass $entries started with a registered cache")
+        s.range(5).toDF("id").persist()
+      }
+    spark.range(2).toDF("warm").persist().count()
+    try {
+      val (results, errors) = Bench.measure(spark, Map("q_cached" -> q), "unused")
+      assert(entries == 2 && errors == 0 && results.keySet == Set("q_cached"),
+        s"entries $entries, results $results, errors $errors")
+    } finally spark.catalog.clearCache()
+  }
 }

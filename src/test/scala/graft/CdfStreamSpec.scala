@@ -162,6 +162,66 @@ class CdfStreamSpec extends AnyFunSuite {
       "the committed batch's staged files must be swept")
   }
 
+  test("planning one range twice runs no job the second time and returns the same staged files") {
+    val dir = Files.createTempDirectory("graft_cdfm").toString
+    append(dir, 0, 10)  // gen 0
+    append(dir, 10, 20) // gen 1
+    deleteWhere(dir, org.apache.spark.sql.sources.LessThan("id", 5L)) // gen 2
+    val head = DirSink.currentGen(dir).get
+    val stream = new graft.sources.v2.DirSinkCdfStream(dir,
+      org.apache.spark.sql.types.StructType.fromDDL("id BIGINT, v BIGINT"),
+      Some(0L), None, Files.createTempDirectory("graft_cdfm_chk").toString)
+    val from = graft.sources.v2.DirSinkCdfOffset(0L)
+    val to = graft.sources.v2.DirSinkCdfOffset(head)
+    // job starts in listener-bus order; a marker job closes each window,
+    // so once both markers arrive every job before them has too
+    val sc = spark.sparkContext
+    val starts = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        starts.add(Option(j.properties)
+          .flatMap(p => Option(p.getProperty("spark.job.description")))
+          .getOrElse(""))
+    }
+    def marker(): Unit = {
+      sc.setJobDescription("cdf-marker")
+      try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
+    }
+    def files(parts: Array[org.apache.spark.sql.connector.read.InputPartition]) =
+      parts.toSeq.map {
+        case p: graft.sources.v2.DirSinkCdfStagedPartition => p.file
+        case p: graft.sources.v2.DirSinkCdfFilePartition => p.toString
+      }
+    sc.addSparkListener(l)
+    val (first, second) = try {
+      val a = stream.planInputPartitions(from, to)
+      marker()
+      val b = stream.planInputPartitions(from, to)
+      marker()
+      var waited = 0
+      while (starts.toArray.count(_ == "cdf-marker") < 2 && waited < 100) {
+        Thread.sleep(100); waited += 1
+      }
+      (a, b)
+    } finally sc.removeSparkListener(l)
+    val seen = starts.toArray.toSeq.map(_.toString)
+    val firstMarker = seen.indexOf("cdf-marker")
+    assert(firstMarker > 0, s"the first planning must run the diff jobs: $seen")
+    assert(seen.drop(firstMarker + 1) == Seq("cdf-marker"),
+      s"the second planning of the same range ran jobs: $seen")
+    assert(first.toSeq.nonEmpty && files(second) == files(first))
+    val staged = first.collect {
+      case p: graft.sources.v2.DirSinkCdfStagedPartition => p.file }
+    assert(staged.nonEmpty && staged.forall(f => new java.io.File(
+      new java.net.URI(f).getPath).exists() || new java.io.File(f).exists()),
+      s"the memoized plan must name live staged files: ${staged.toSeq}")
+    // commit drops the memo with the scratch: the range plans afresh
+    stream.commit(to)
+    val third = stream.planInputPartitions(from, to)
+    assert(files(third) == files(first))
+  }
+
   test("_commit_timestamp: the segment stamp as a column, constant per generation, on batch and stream") {
     val dir = Files.createTempDirectory("graft_cdft").toString
     val chk = Files.createTempDirectory("graft_cdft_chk").toString

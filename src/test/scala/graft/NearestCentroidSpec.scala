@@ -132,7 +132,8 @@ class NearestCentroidSpec extends AnyFunSuite {
       .groupBy($"m", $"vec_id")
       .agg(max(struct($"csim".as("cs"), (-$"cid").as("nc"))).as("x"))
       .select($"m", $"vec_id", (-$"x.nc").as("cell"))
-    val got = operators.Similarity.pqAssign(nm, pqCent)
+    val got = operators.Similarity.pqAssign(nm,
+      operators.Similarity.Codebook.of(pqCent))
     assert(want.count() > 0)
     assert(want.exceptAll(got).isEmpty && got.exceptAll(want).isEmpty)
   }
@@ -285,7 +286,7 @@ class NearestCentroidSpec extends AnyFunSuite {
         .transform(qmeanReference)
         .select($"g".as("cid"), $"ce")
     }
-    val got = operators.Similarity.kmeansCodebook(n, c, 2)
+    val got = operators.Similarity.kmeansCodebook(n, c, 2).frame(spark)
     def bits(df: DataFrame): Map[Long, Seq[Long]] =
       df.collect().map(r => r.getLong(0) ->
         r.getSeq[Double](1).map(java.lang.Double.doubleToRawLongBits)).toMap

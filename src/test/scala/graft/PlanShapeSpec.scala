@@ -108,18 +108,50 @@ class PlanShapeSpec extends AnyFunSuite {
   }
 
   test("q_ann_ivf broadcasts the codebook at every Lloyd round, never the corpus") {
-    // q_ann_ivf itself returns an eagerly-checkpointed result (opaque
-    // plan); guard the inner ranked frame over an uncached vector relation.
+    // Training runs on the driver (one collect per Lloyd round), so
+    // guard the two frames it plans: one Lloyd round over an uncached
+    // vector relation, and the search frame ivfRanked returns.
+    import org.apache.spark.sql.execution.{FileSourceScanExec, LocalTableScanExec, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.joins.{BaseJoinExec, BroadcastNestedLoopJoinExec}
+    import org.apache.spark.sql.catalyst.expressions.AttributeReference
+    import org.apache.spark.sql.catalyst.optimizer.BuildRight
+    def nodes(p: SparkPlan): Seq[SparkPlan] = p match {
+      case a: AdaptiveSparkPlanExec => nodes(a.inputPlan)
+      case _ => p +: (p.children ++ p.subqueries).flatMap(nodes)
+    }
     val n = operators.Similarity.ivfVectors(spark, dir)
-    val p = operators.Similarity.ivfRanked(spark, n, c = 8, iters = 2, nprobe = 2)
-      .queryExecution.executedPlan.toString()
-    // 2 training assignments + the final assignment each broadcast cent
-    assert(p.split("BroadcastNestedLoopJoin").length >= 4,
-      "codebook broadcasts lost")
-    assert(!p.contains("CartesianProduct"), "unbroadcast corpus product")
+    val cb = operators.Similarity.kmeansCodebook(n, c = 8, iters = 1)
+    val round = operators.Similarity.lloydFrame(n, cb).queryExecution.executedPlan
+    val bnlj = nodes(round).collect { case j: BroadcastNestedLoopJoinExec => j }
+    assert(bnlj.size == 1, s"one codebook broadcast per round:\n$round")
+    val built = nodes(
+      if (bnlj.head.buildSide == BuildRight) bnlj.head.right else bnlj.head.left)
+    assert(built.exists(_.isInstanceOf[LocalTableScanExec]) &&
+      !built.exists(_.isInstanceOf[FileSourceScanExec]),
+      s"the broadcast side must be the driver codebook:\n$round")
+    val r = round.toString()
+    assert(!r.contains("CartesianProduct"), "unbroadcast corpus product")
     // a Lloyd round is a nearest-centroid map + one exact-mean aggregate:
     // no posexplode of the vectors into (cell, pos) rows
-    assert(!p.contains("Generate"), "a Lloyd round explodes the vectors")
+    assert(!r.contains("Generate"), "a Lloyd round explodes the vectors")
+    // the search: candidates keep their vector, the probe rows carry the
+    // query's — the corpus is read once for each, never joined back by
+    // id. The one equi-join is keyed on the cell, whatever strategy
+    // AQE picks for it (the probe side carries no broadcast hint).
+    val search = nodes(operators.Similarity
+      .ivfRanked(spark, n, c = 8, iters = 2, nprobe = 2).queryExecution.executedPlan)
+    val scans = search.collect { case f: FileSourceScanExec => f }
+    assert(scans.size == 2, s"candidates + query slice only, got ${scans.size} scans")
+    val equiKeys = search.collect {
+      case j: BaseJoinExec if j.leftKeys.nonEmpty => j.leftKeys ++ j.rightKeys
+    }
+    assert(equiKeys.size == 1 && equiKeys.head.forall {
+      case a: AttributeReference => a.name == "cell"
+      case _ => false
+    }, s"the search frame joins back to the vector relation: $equiKeys")
+    assert(!search.exists(_.nodeName == "CartesianProduct"), "unbroadcast search product")
+    assert(!search.exists(_.nodeName == "Generate"), "the search explodes the vectors")
   }
 
   test("q_tfidf partially aggregates tf before any exchange") {
@@ -524,19 +556,18 @@ class PlanShapeSpec extends AnyFunSuite {
     * falling count means a seal was added — update the pin either way,
     * and check the warm TimeQ cost when raising one. */
   private val scanMultiplicity: Map[String, Int] = Map(
-    // q_ann_pq raised 8→10 (round 16): pqTrain's seed ranks now come
-    // from a k-row TakeOrdered + broadcast join (2 raw refs of the
-    // PERSISTED subspace relation, narrow at runtime) instead of ONE
-    // ref through a full N·M-row window exchange — two cache reads
-    // bought the removal of the training path's widest shuffle.
-    "q_ann_ivf" -> 14, "q_ann_ivfpq" -> 16, "q_ann_pq" -> 10,
-    // q_ann_rerank = the q_ann_ivfpq tree (16) + the exact-re-rank
-    // tail's two id-equi-joins against the PERSISTED vector relation —
-    // runtime reads the cache, the raw lazy tree counts the two refs
-    "q_ann_rerank" -> 18,
-    // q_ann_recall_ivf composes q_ann_ivf's lazy tree (14, sealed at
-    // runtime) with the brute exact side (2) — raw union, paid once
-    "q_ann_recall_ivf" -> 16,
+    // The ANN codebooks train on the driver (one collect per Lloyd
+    // round), so no lazy tree carries a training chain any more:
+    // q_ann_ivf 14→2: the search frame's candidates + query slice.
+    // q_ann_ivfpq 16→4: coarse assignment, probes, PQ codes, lookups.
+    // q_ann_pq 10→2: PQ codes + the query slice's lookups.
+    "q_ann_ivf" -> 2, "q_ann_ivfpq" -> 4, "q_ann_pq" -> 2,
+    // q_ann_rerank 18→6: the q_ann_ivfpq tree (4) + the exact-re-rank
+    // tail's two id-equi-joins against the PERSISTED vector relation
+    "q_ann_rerank" -> 6,
+    // q_ann_recall_ivf 16→4: q_ann_ivf's search frame (2) + the brute
+    // exact side (2)
+    "q_ann_recall_ivf" -> 4,
     "q_conformal" -> 17,
     "q_curation_pipeline" -> 9, "q_graph_bfs" -> 36,
     "q_graph_jaccard" -> 96, "q_graph_modularity" -> 51,
@@ -561,7 +592,10 @@ class PlanShapeSpec extends AnyFunSuite {
     // scans), and the sealed pairs relation has 3 consumers — 12 in the
     // raw lazy tree, ONE physical execution of the subtree via Exec.seal
     "q_bitext_pipeline" -> 12,
-    "q_recommend_cooccur" -> 5, "q_rfm" -> 4, "q_semdedup" -> 21,
+    "q_recommend_cooccur" -> 5, "q_rfm" -> 4,
+    // q_semdedup 21→3: the sealed assignment keeps each vector (no join
+    // back to it), read by both pair-join arms and the decision join
+    "q_semdedup" -> 3,
     "q_dsir" -> 18,
     "q_sketch_intersect" -> 10, "q_triangles" -> 30, "q_winsorize" -> 9)
 

@@ -5,9 +5,8 @@ import org.apache.spark.sql.SparkSession
 
 /** Shared publish/ready protocol for on-disk derived artifacts (the
   * trained ANN index, the layout tables): GENERATION DIRS plus an
-  * atomically-swapped POINTER file, the same manifest-pointer shape as
-  * [[graft.sources.v2.DirSinkSource]]'s `_GRAFT_COMMIT` and every
-  * catalog-backed table format.
+  * atomically-swapped POINTER file, the manifest-pointer shape of
+  * every catalog-backed table format.
   *
   *   - a builder writes every part of the artifact under a PRIVATE
   *     generation dir `<root>/gen-<pid>` — never into a shared live

@@ -1001,6 +1001,13 @@ object Similarity extends QueryModule {
     } finally n.unpersist(false)
   }
 
+  /** Version of the IVF-PQ training code, part of the index key
+    * ([[annIndexPath]]). Any training change that alters the stored
+    * codebooks, cell assignments or PQ codes (seeding, Lloyd rounds,
+    * quantization, geometry) MUST bump it: an index trained by the
+    * old code is then rebuilt, never served to the new. */
+  private[graft] val AnnTrainVersion = 1
+
   /** On-disk root of the trained IVF-PQ index artifact (test aid:
     * AnnIndexSpec checks the parts, the rebuild guard, and the key's
     * content-purity).
@@ -1019,8 +1026,11 @@ object Similarity extends QueryModule {
     * residual "same path, same lengths, different bytes" case is
     * accepted as the cost of a fingerprint that never reads data pages.
     * Concurrent-writer safety comes from the build's write-then-rename
-    * publish ([[annIndex]]), not from key isolation. */
-  private[graft] def annIndexPath(s: SparkSession, dir: String): String = {
+    * publish ([[annIndex]]), not from key isolation. The training
+    * version ([[AnnTrainVersion]]) is in the key too, so a build whose
+    * training differs never reads another build's index. */
+  private[graft] def annIndexPath(s: SparkSession, dir: String,
+                                  version: Int = AnnTrainVersion): String = {
     Layouts.reapStaleRoots
     val src = new org.apache.hadoop.fs.Path(s"$dir/embeddings.parquet")
     val fs = src.getFileSystem(s.sparkContext.hadoopConfiguration)
@@ -1041,8 +1051,8 @@ object Similarity extends QueryModule {
     // replays the current constants, so serving an old-geometry index
     // to them would hash-mismatch
     val key = java.security.MessageDigest.getInstance("MD5")
-      .digest(s"$dir:$cnt:$fp:C${ivfDefaultC(cnt)}:M${PqDefaultM}K$PqDefaultK"
-        .getBytes("UTF-8"))
+      .digest((s"$dir:$cnt:$fp:C${ivfDefaultC(cnt)}:M${PqDefaultM}K" +
+        s"$PqDefaultK:V$version").getBytes("UTF-8"))
       .map("%02x".format(_)).mkString
     s"/tmp/graft_ann_index_$key"
   }

@@ -152,7 +152,7 @@ object DirSinkChecks {
     * clean zone's commit: a crash between the two can duplicate
     * quarantine rows on retry (batch) but can never lose them, and
     * for streaming epochs the quarantine commit is idempotent by the
-    * zone's own `#emax` high-water mark, so replay-after-crash stays
+    * query's own `#txn` mark in that zone, so replay-after-crash stays
     * exactly-once on BOTH zones (quarantine first: a replayed epoch
     * drops its quarantine files at the mark, then the clean zone
     * publishes — or drops too if it had already committed). */
@@ -264,7 +264,7 @@ object DirSinkChecks {
     DirSink.withZoneLock(dl.qpath) {
       // replayed-epoch idempotency, checked INSIDE the quarantine
       // zone's lock: two streams sharing one quarantine (or one stream
-      // racing its own replay) serialize on the lock, so the emax read
+      // racing its own replay) serialize on the lock, so the mark read
       // and the publish below are one atomic step — the
       // one-stream-per-quarantine doc assumption is no longer the only
       // thing standing between a race and a double-published epoch

@@ -54,10 +54,8 @@ import org.apache.spark.sql.types.StructType
   * segments (vacuum's cutoff governs both segments and the superseded
   * data files they reference; see [[DirSink.vacuum]]).
   *
-  * Zones committed before the log (a bare `_GRAFT_COMMIT`) stay
-  * readable forever; the first new commit MIGRATES them — the legacy
-  * manifest republishes as a checkpoint at its own generation, then
-  * the commit lands as segment gen+1 and the legacy file is removed.
+  * The log is the zone's only history: a directory holding a bare
+  * `_GRAFT_COMMIT` and no log is refused ([[DirSink.readManifestRaw]]).
   *
   * Driver-side state cache: every read lists the log directory (one
   * RPC) and fingerprints the segment statuses (name/length/mtime) —
@@ -123,7 +121,7 @@ object DirSinkLog {
     }.sortBy(s => (s.gen, s.ckpt))
   }
 
-  /** Does this zone have a commit log (vs legacy single-manifest)? */
+  /** Does this zone have a commit log? */
   private[v2] def hasLog(f: FileSystem, path: String): Boolean =
     listSegs(f, path).nonEmpty
 
@@ -190,22 +188,25 @@ object DirSinkLog {
         seg.lines
     }
 
+  /** The newest commit segment's generation. Every publish writes a
+    * commit segment before any checkpoint at its generation, so a log
+    * of checkpoints alone was not written by this format — refused. */
+  private def headGen(path: String, segs: Seq[Seg]): Long = {
+    val commits = segs.filter(!_.ckpt)
+    if (commits.isEmpty) throw new IllegalStateException(
+      s"commit log of zone $path has no commit segment, only " +
+        "checkpoints — refusing to read it")
+    commits.map(_.gen).max
+  }
+
   /** Replay the log to `target` (None = head). Throws if the target
     * generation is not (or no longer) reconstructible. */
   private def replay(f: FileSystem, path: String, segs: Seq[Seg],
                      target: Option[Long]): DirSink.Manifest = {
-    // a CHECKPOINT-ONLY log is valid: the legacy-migration publish
-    // writes the checkpoint, deletes the legacy manifest, THEN renames
-    // the commit segment in — a reader in that window (or after a
-    // crash in it) must replay the bare checkpoint, not die on an
-    // empty .max
-    val headGen = {
-      val commits = segs.filter(!_.ckpt).map(_.gen)
-      if (commits.nonEmpty) commits.max else segs.map(_.gen).max
-    }
-    val tgt = target.getOrElse(headGen)
-    if (tgt > headGen) throw new IllegalArgumentException(
-      s"generation $tgt exceeds zone $path's head generation $headGen")
+    val head = headGen(path, segs)
+    val tgt = target.getOrElse(head)
+    if (tgt > head) throw new IllegalArgumentException(
+      s"generation $tgt exceeds zone $path's head generation $head")
     // base: the newest checkpoint at or below the target
     val base = segs.filter(s => s.ckpt && s.gen <= tgt)
       .sortBy(_.gen).lastOption
@@ -269,9 +270,9 @@ object DirSinkLog {
   }
 
   /** The zone's current state from the log, cached by fingerprint;
-    * None if the zone has no log (caller falls back to the legacy
-    * manifest). Retries through a concurrent vacuum's segment delete
-    * (the listing and the read race by nature). */
+    * None if the zone has no log. Retries through a concurrent
+    * vacuum's segment delete (the listing and the read race by
+    * nature). */
   private[v2] def head(path: String): Option[DirSink.Manifest] = {
     val f = DirSink.fs(path)
     val key = f.makeQualified(new Path(path)).toString
@@ -300,16 +301,8 @@ object DirSinkLog {
   private[v2] def at(path: String, gen: Long): DirSink.Manifest = {
     val f = DirSink.fs(path)
     val segs = listSegs(f, path)
-    if (segs.isEmpty) {
-      // legacy zone: the only addressable generation is the live one
-      val m = DirSink.legacyManifest(path).getOrElse(
-        throw new IllegalArgumentException(
-          s"no committed zone under $path"))
-      if (m.gen != gen) throw new IllegalArgumentException(
-        s"zone $path has no commit log; only its live generation " +
-          s"${m.gen} is addressable, not $gen")
-      return m
-    }
+    if (segs.isEmpty) throw new IllegalArgumentException(
+      s"no committed zone under $path")
     val era = replay(f, path, segs, Some(gen))
     // era reads gate like head reads: a generation written by a newer
     // build refuses rather than misreads
@@ -317,43 +310,25 @@ object DirSinkLog {
     era
   }
 
-  /** Resolve `TIMESTAMP AS OF t` to a GENERATION plus an optional
-    * RESIDUAL line-level timestamp: normally the newest commit whose
-    * stamp is <= t (segment stamps are monotone — commits are
-    * wall-clock-ordered under the zone lock), scanned newest first
-    * with early exit so a recent t reads O(1) segments. When t
-    * PREDATES every commit segment but a checkpoint base sits below
-    * them (a MIGRATED LEGACY zone: its pre-log history has per-file
-    * `t=` stamps but no segments), resolve to that base and hand t
-    * back for the line-level prefix rule — the pre-log resolution a
-    * working query relied on must survive the migration. Returns None
-    * if the zone has no log at all; throws only when no base can
-    * serve t (the line-level slice then owns the predates-first-commit
-    * error). */
-  private[v2] def genAsOfTimestamp(path: String,
-                                   t: Long): Option[(Long, Option[Long])] = {
+  /** Resolve `TIMESTAMP AS OF t` to the GENERATION of the newest
+    * commit whose stamp is <= t (segment stamps are monotone — commits
+    * are wall-clock-ordered under the zone lock), scanned newest first
+    * with early exit so a recent t reads O(1) segments. Throws when no
+    * retained commit qualifies. */
+  private[v2] def genAsOfTimestamp(path: String, t: Long): Long = {
     val f = DirSink.fs(path)
-    val segs = listSegs(f, path)
-    val commits = segs.filter(!_.ckpt)
-    if (segs.isEmpty) return None
-    commits.reverseIterator.foreach { c =>
+    listSegs(f, path).filter(!_.ckpt).reverseIterator.foreach { c =>
       val ts = parseSegment(readText(f, c.status.getPath), ckpt = false)
         .header.get(TsKey).flatMap(s => scala.util.Try(s.toLong).toOption)
-      if (ts.forall(_ <= t)) return Some((c.gen, None))
+      if (ts.forall(_ <= t)) return c.gen
     }
-    val base = segs.filter(s => s.ckpt &&
-      commits.headOption.forall(s.gen < _.gen)).map(_.gen).sorted.headOption
-    base match {
-      case Some(g) => Some((g, Some(t))) // legacy history: line-level slice
-      case None => throw new IllegalArgumentException(
-        s"asOfTimestamp $t predates the zone's first commit under $path")
-    }
+    throw new IllegalArgumentException(
+      s"asOfTimestamp $t predates the zone's first commit under $path")
   }
 
   /** Publish one commit segment — MUST run under the zone lock. The
     * header must already carry the bumped `gen`; this layer adds the
-    * wall-clock stamp, migrates a legacy zone's manifest into the log
-    * on first contact, claims the generation by fresh-name rename, and
+    * wall-clock stamp, claims the generation by fresh-name rename, and
     * writes the periodic checkpoint (+ its columnar sidecar). */
   private[v2] def publish(path: String, schema: StructType,
                           header: Map[String, String], body: CommitBody,
@@ -361,19 +336,6 @@ object DirSinkLog {
     val f = DirSink.fs(path)
     val dir = logPath(path)
     f.mkdirs(dir)
-    var segs = listSegs(f, path)
-    if (segs.isEmpty) {
-      DirSink.legacyManifest(path).foreach { legacy =>
-        // MIGRATION: the legacy manifest becomes the log's first
-        // checkpoint at its own generation; the legacy file then goes
-        // (a crash in between leaves both — readers prefer the log,
-        // whose checkpoint is byte-equivalent)
-        writeSeg(f, dir, segName(legacy.gen, ckpt = true), s"mig-$tmpSuffix",
-          DirSink.renderManifest(legacy.schema, legacy.header, legacy.lines))
-        f.delete(new Path(path, DirSink.ManifestName), false)
-        segs = listSegs(f, path)
-      }
-    }
     val gen = header.getOrElse("gen",
       throw new IllegalArgumentException("publish without a gen header"))
       .toLong
@@ -594,16 +556,10 @@ object DirSinkLog {
     val segs = listSegs(f, path)
     if (segs.isEmpty) throw new IllegalArgumentException(
       s"zone $path has no commit log — no change feed to read")
-    // a checkpoint-only log (crashed-migration window, which replay()
-    // explicitly supports) has no commit segments — fall back to the
-    // checkpoint generation instead of dying on empty.max
-    val headGen = {
-      val commits = segs.filter(!_.ckpt).map(_.gen)
-      if (commits.nonEmpty) commits.max else segs.map(_.gen).max
-    }
-    if (toInclusive > headGen) throw new IllegalArgumentException(
+    val head = headGen(path, segs)
+    if (toInclusive > head) throw new IllegalArgumentException(
       s"endingVersion $toInclusive exceeds zone $path's head " +
-        s"generation $headGen")
+        s"generation $head")
     // parent name-state at fromExclusive (empty before the log's
     // birth; a generation behind retention fails in at() — loudly)
     var names: Seq[String] =
@@ -615,15 +571,14 @@ object DirSinkLog {
     // commit segment itself: if vacuum retention truncated it, the
     // checkpoint-anchored suffix could only yield the changes SINCE
     // the anchor — silently missing every row that survived into it.
-    // Fail loudly instead (the scaladoc's promise); legacy-migrated
-    // zones hit this too (their pre-log history has no segments).
+    // Fail loudly instead (the scaladoc's promise).
     if (fromExclusive < 0 && commits.headOption.forall(_.gen != 0L))
       throw new IllegalArgumentException(
         s"change feed from generation 0 of zone $path is not " +
           s"reconstructible: the oldest retained commit segment is " +
           s"${commits.headOption.map(_.gen).getOrElse(-1L)} (vacuum " +
-          "retention or a legacy migration truncated the birth) — " +
-          "start the consumer from a retained generation instead")
+          "retention truncated the birth) — start the consumer from a " +
+          "retained generation instead")
     commits.map { c =>
       val p = parseSegment(readText(f, c.status.getPath), ckpt = false)
       val ts = p.header.get(TsKey).flatMap(s =>

@@ -81,8 +81,8 @@ object DirSinkProtocol {
       .flatMap(_.split(",").iterator.map(_.trim).filter(_.nonEmpty))
 
   /** The header as published: declared ∪ inferred, both directions.
-    * Empty sets stamp no key (legacy zones stay byte-stable until a
-    * gated feature is actually in use). */
+    * Empty sets stamp no key (a zone's header stays byte-stable until
+    * a gated feature is actually in use). */
   private[graft] def stamp(header: Map[String, String]): Map[String, String] = {
     val (ir, iw) = infer(header)
     val r = parse(header, ReaderKey) ++ ir

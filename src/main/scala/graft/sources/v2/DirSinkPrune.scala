@@ -28,10 +28,9 @@ import org.apache.spark.sql.types.StructType
   *   - files REMOVED since the checkpoint may survive the job's
   *     filter but are absent from the live entry list, so membership
   *     intersection drops them for free;
-  *   - a missing sidecar (its write is failure-tolerant), a snapshot
-  *     segment after the base (overwrite/compact replaced the state
-  *     the sidecar describes), or a legacy zone all fall back to the
-  *     driver loop — the job path is an optimization with a proof
+  *   - a missing sidecar (its write is failure-tolerant) or a
+  *     snapshot segment after the base (overwrite/compact replaced the
+  *     state the sidecar describes) falls back to the driver loop — the job path is an optimization with a proof
   *     obligation, never a correctness dependency.
   *
   * The threshold (`spark.graft.prune.jobThreshold`, default 100 000)

@@ -32,17 +32,15 @@ import org.apache.spark.unsafe.types.UTF8String
   *     (`g<queryId>-p<partition>-t<taskId>` — task ids restart per
   *     application, so the per-write queryId UUID is what keeps a later
   *     application's append from colliding with an earlier generation's
-  *     file), throwing if any rename fails, then publishes a MANIFEST
-  *     (`_GRAFT_COMMIT`) by ATOMIC OVERWRITE rename
-  *     (`FileContext.rename(…, Options.Rename.OVERWRITE)`, atomic on
-  *     local FS and HDFS) — readers resolve the file list from the
-  *     manifest alone, so a crash mid-commit leaves the previous
-  *     generation fully readable with NO window in which the manifest
-  *     is absent, and a straggling speculative attempt's orphan file is
-  *     invisible,
-  *   - `overwrite` (via `SupportsTruncate`) is a manifest swap: the new
-  *     generation publishes atomically and superseded files are swept
-  *     best-effort afterwards.
+  *     file), throwing if any rename fails, then publishes ONE
+  *     commit-log segment (`_graft_log/<gen>.commit`, [[DirSinkLog]])
+  *     by fresh-name rename — readers resolve the file list from the
+  *     log alone, so a crash mid-commit leaves the previous generation
+  *     fully readable, and a straggling speculative attempt's orphan
+  *     file is invisible,
+  *   - `overwrite` (via `SupportsTruncate`) is a snapshot segment: the
+  *     new generation publishes atomically and superseded files are
+  *     swept best-effort afterwards.
   *
   * CONSTRAINT — single writer per directory: append commits read the
   * live manifest and republish it extended, so two jobs appending to
@@ -146,12 +144,15 @@ object DirSinkSource {
     if (headDecode(options.get)) None
     else Option(options.get("asOfVersion"))
       .map(g => DirSinkLog.at(path, g.toLong).schema)
-      .orElse(Option(options.get("asOfTimestamp")).flatMap(t =>
-        DirSinkLog.genAsOfTimestamp(path, t.toLong)
-          .map { case (g, _) => DirSinkLog.at(path, g).schema }))
+      .orElse(Option(options.get("asOfTimestamp")).map(t =>
+        DirSinkLog.at(path, DirSinkLog.genAsOfTimestamp(path, t.toLong))
+          .schema))
 }
 
 object DirSink {
+  /** The pre-log single-file manifest. Never written: a directory that
+    * holds one and no commit log is refused ([[readManifestRaw]]) yet
+    * still occupied ([[zoneExists]]). */
   val ManifestName = "_GRAFT_COMMIT"
   val LockName = "_GRAFT_LOCK"
 
@@ -510,15 +511,7 @@ object DirSink {
     * [[DirSinkStats]] encoding) on lines written since data skipping
     * landed. Field tags keep old and new lines co-parseable: anything
     * at index ≥2 is an epoch if it parses as a bare long, stats if it
-    * starts with `s=`.
-    *
-    * Reads retry on [[org.apache.hadoop.fs.ChecksumException]]: on the
-    * LOCAL filesystem the client-side `.crc` sidecar is a second file
-    * the atomic manifest rename can't cover, so a reader racing a
-    * publish can transiently see the new manifest against the old
-    * checksum. The window is one publish long — a bounded retry reads
-    * through it. HDFS/S3A checksum server-side (no sidecar), so the
-    * race doesn't exist there. */
+    * starts with `s=`. */
   /** Parsed manifest: schema line, `#key=value` HEADER lines (zone-level
     * metadata that must survive manifest rewrites), then file lines.
     * Header fields:
@@ -526,8 +519,10 @@ object DirSink {
     *               optimistic-concurrency token slow committers verify
     *   - `emax`  — committed-epoch high-water mark: survives compaction
     *               and DELETE rewriting streaming-committed lines out of
-    *               the manifest, so a recovering streaming writer can
-    *               never re-commit (duplicate) an epoch that maintenance
+    *               the manifest
+    *   - `txn`   — per-query epoch marks, the streaming replay guard
+    *               ([[epochReplayed]]): a recovering writer can never
+    *               re-commit (duplicate) an epoch that maintenance
     *               erased the evidence of
     *   - `remap` — compaction offset remaps (`old:new` pairs, comma
     *               separated): lets a streaming tail that had consumed
@@ -538,8 +533,8 @@ object DirSink {
     * the CHECKPOINT base (whose columnar sidecar covers every line
     * not in `recentAdds`) and the names added by delta segments since
     * it (≤ [[DirSinkLog.CheckpointInterval]]-1 commits' worth). None/
-    * empty for legacy zones or states whose base is a snapshot
-    * segment — [[DirSinkPrune]] then uses the driver loop. */
+    * empty for states whose base is a snapshot segment —
+    * [[DirSinkPrune]] then uses the driver loop. */
   private[v2] case class Manifest(schema: StructType,
                                   header: Map[String, String],
                                   lines: Seq[String],
@@ -549,12 +544,20 @@ object DirSink {
     def gen: Long = header.get("gen").map(_.toLong).getOrElse(0L)
   }
 
-  /** The zone's current state: the COMMIT LOG when one exists
-    * ([[DirSinkLog.head]] — replay of the newest checkpoint + deltas,
-    * fingerprint-cached), else the legacy single-file manifest. Every
-    * metadata probe in the connector funnels through here. */
+  /** The zone's current state: the COMMIT LOG ([[DirSinkLog.head]] —
+    * replay of the newest checkpoint + deltas, fingerprint-cached);
+    * None when nothing was committed. Every metadata probe in the
+    * connector funnels through here. */
   private[v2] def readManifestRaw(path: String): Option[Manifest] = {
-    val m = DirSinkLog.head(path).orElse(legacyManifest(path))
+    val m = DirSinkLog.head(path)
+    // the log is the only history this build reads: a bare
+    // `_GRAFT_COMMIT` with no log is refused, never taken for an
+    // empty directory (a writer would otherwise start a log beside it)
+    if (m.isEmpty && fs(path).exists(new Path(path, ManifestName)))
+      throw new IllegalStateException(
+        s"zone $path holds a bare $ManifestName and no " +
+          s"${DirSinkLog.LogDirName}/ commit log — refusing to read or " +
+          "write it")
     // protocol gate at the ONE funnel every metadata probe reads
     // through: a `#features` list naming a reader feature this build
     // does not implement refuses loudly instead of misreading, and so
@@ -570,46 +573,8 @@ object DirSink {
     m
   }
 
-  /** Pre-log zones: parse `_GRAFT_COMMIT` directly. Still the read
-    * path for any zone never committed to since the log landed; also
-    * the migration source ([[DirSinkLog.publish]]). */
-  private[v2] def legacyManifest(path: String): Option[Manifest] = {
-    var attempt = 0
-    while (true) {
-      try {
-        val f = fs(path)
-        val m = new Path(path, ManifestName)
-        if (!f.exists(m)) return None
-        val in = f.open(m)
-        val text = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-          finally in.close()
-        val lines = text.split("\n").filter(_.nonEmpty)
-        val (hdr, files) = lines.tail.partition(_.startsWith("#"))
-        val header = hdr.map { h =>
-          val body = h.drop(1)
-          val eq = body.indexOf('=')
-          if (eq < 0) (body, "") else (body.substring(0, eq), body.substring(eq + 1))
-        }.toMap
-        return Some(Manifest(StructType.fromDDL(lines.head), header,
-          files.toSeq))
-      } catch {
-        // ChecksumException: new manifest against the old .crc sidecar.
-        // FileNotFoundException AFTER exists()==true: the local
-        // checksummed rename is internally delete-then-rename, so the
-        // live manifest vanishes for the length of one publish. Both
-        // are the same transient window — retry through it.
-        case _: org.apache.hadoop.fs.ChecksumException if attempt < 20 =>
-          attempt += 1
-          Thread.sleep(50)
-        case _: java.io.FileNotFoundException if attempt < 20 =>
-          attempt += 1
-          Thread.sleep(50)
-      }
-    }
-    throw new IllegalStateException("unreachable")
-  }
-
-  /** Is there a committed zone (log-based or legacy) at this path? */
+  /** Is this path occupied by a zone — a commit log, or a bare
+    * `_GRAFT_COMMIT` that [[readManifestRaw]] refuses? */
   def zoneExists(path: String): Boolean = {
     val f = fs(path)
     DirSinkLog.hasLog(f, path) || f.exists(new Path(path, ManifestName))
@@ -686,12 +651,12 @@ object DirSink {
   /** ZONE HISTORY — `DESCRIBE HISTORY` for the table format: every
     * publish appends a `gen:tsMillis:op:files` record to the `#hist`
     * header (`|`-separated, newest last, capped at [[HistoryCap]] —
-    * the manifest is rewritten whole each publish, so an unbounded log
-    * would grow every commit's write cost linearly with age). This
+    * every commit segment carries the full header, so an unbounded
+    * history would grow every commit's write cost linearly with age). This
     * makes time-travel targets DISCOVERABLE: a history row's `n_files`
     * is exactly the `VERSION AS OF` offset (manifest-prefix count) and
     * its timestamp the `TIMESTAMP AS OF` target — no more reading
-    * `_GRAFT_COMMIT` by hand. Surfaced as [[DirSink.history]] and as
+    * the commit log by hand. Surfaced as [[DirSink.history]] and as
     * the catalog's `<table>$history` metadata table
     * ([[GraftCatalog.loadTable]]). */
   private val HistoryCap = 64
@@ -859,26 +824,6 @@ object DirSink {
       (schema, lines.map(parseEntry))
     }
 
-  /** The asOf/onlyFiles slice of a zone's entry list — ONE definition
-    * shared by the batch scan and the aggregate-pushdown decision.
-    *
-    * `asOfOffset` k: the manifest's file list is append-only, so its
-    * first k lines ARE the zone as a tail reader had consumed it at
-    * stream offset k. Reading past the current size is an error (an
-    * offset from a different zone), not a silent truncation.
-    *
-    * `asOfTimestamp` t (TIMESTAMP TIME TRAVEL): commits are time-ordered
-    * and the manifest append-only, so the snapshot as of wall-clock t
-    * is the longest prefix whose commit timestamps are all <= t.
-    * History-REWRITING operations (compact, DELETE, row-level
-    * UPDATE/MERGE) replace lines in place, so snapshots that predate
-    * the rewrite are REWRITTEN HISTORY afterwards — the caveat every
-    * manifest-rewriting table format carries. Lines without a `t=`
-    * field (pre-time-travel commits) are conservatively IN every
-    * snapshot — they can only sit at the front of the history. A t
-    * predating the zone's first commit is an error, mirroring the
-    * offset guard — silently returning an empty corpus would make a
-    * mis-clocked training cut unfindable. */
   /** Snapshot resolution for a scan — ONE definition shared by the
     * batch scan and the aggregate-pushdown decision. Three vocabularies:
     *
@@ -886,11 +831,12 @@ object DirSink {
     *     log generation g, replayed via [[DirSinkLog.at]] — survives
     *     history-rewriting maintenance while retention keeps g;
     *   - `asOfTimestamp` t: resolved to the newest generation committed
-    *     at or before t when the zone has a log (so it, too, survives
-    *     rewrites); legacy zones fall back to the manifest-prefix rule
-    *     ([[sliceEntries]]);
+    *     at or before t ([[DirSinkLog.genAsOfTimestamp]]), so it, too,
+    *     survives rewrites; a t predating every retained commit is an
+    *     error — silently returning an empty corpus would make a
+    *     mis-clocked training cut unfindable;
     *   - `asOfOffset` k: the file-prefix rule — the streaming tail's
-    *     offset vocabulary, unchanged.
+    *     offset vocabulary ([[sliceEntries]]).
     *
     * Returns the resolved manifest (schema/header AT the snapshot — a
     * pre-evolution snapshot reads with its own columns and layout)
@@ -900,47 +846,36 @@ object DirSink {
                                asOfVersion: Option[Long],
                                onlyFiles: Option[Set[String]])
       : (Manifest, Seq[FileEntry]) = {
-    val (m, residualOffset, residualTs) = asOfVersion match {
-      case Some(g) => (DirSinkLog.at(path, g), None, None)
-      case None => asOfTimestamp match {
-        case Some(t) => DirSinkLog.genAsOfTimestamp(path, t) match {
-          // residual = t predates every commit SEGMENT but a migrated
-          // legacy checkpoint holds line-stamped pre-log history — the
-          // line-level prefix rule finishes the resolution there
-          case Some((g, residual)) => (DirSinkLog.at(path, g), None, residual)
-          case None => (currentOrThrow(path), None, Some(t)) // legacy zone
-        }
-        case None => (currentOrThrow(path), asOfOffset, None)
-      }
+    val (m, offset) = (asOfVersion, asOfTimestamp) match {
+      case (Some(g), _) => (DirSinkLog.at(path, g), None)
+      case (None, Some(t)) =>
+        (DirSinkLog.at(path, DirSinkLog.genAsOfTimestamp(path, t)), None)
+      case (None, None) => (currentOrThrow(path), asOfOffset)
     }
-    (m, sliceEntries(path, m.lines.map(parseEntry), residualOffset,
-      residualTs, onlyFiles))
+    (m, sliceEntries(path, m.lines.map(parseEntry), offset, onlyFiles))
   }
 
+  /** The zone's current state, or an error when nothing was committed. */
   private def currentOrThrow(path: String): Manifest =
     readManifestRaw(path).getOrElse(
       throw new IllegalArgumentException(
         s"no ${ManifestName} manifest or commit log under $path — " +
           "nothing was committed"))
 
-  private[v2] def sliceEntries(path: String, all: Seq[FileEntry],
-                               asOfOffset: Option[Int],
-                               asOfTimestamp: Option[Long],
-                               onlyFiles: Option[Set[String]]): Seq[FileEntry] = {
-    val sliced = (asOfOffset, asOfTimestamp) match {
-      case (Some(k), _) =>
-        if (k > all.size) throw new IllegalArgumentException(
-          s"asOfOffset $k exceeds the zone's ${all.size} committed files " +
-            s"under $path — offsets name a PREFIX of this zone's history")
-        all.take(k)
-      case (None, Some(t)) =>
-        val prefix = all.takeWhile(e => e.ts.forall(_ <= t))
-        if (prefix.isEmpty && all.nonEmpty)
-          throw new IllegalArgumentException(
-            s"asOfTimestamp $t predates the zone's first commit " +
-              s"(${all.head.ts.getOrElse("unknown")}) under $path")
-        prefix
-      case (None, None) => all
+  /** The asOfOffset/onlyFiles slice of a zone's entry list.
+    *
+    * `asOfOffset` k: the manifest's file list is append-only, so its
+    * first k lines ARE the zone as a tail reader had consumed it at
+    * stream offset k. Reading past the current size is an error (an
+    * offset from a different zone), not a silent truncation. */
+  private def sliceEntries(path: String, all: Seq[FileEntry],
+                           asOfOffset: Option[Int],
+                           onlyFiles: Option[Set[String]]): Seq[FileEntry] = {
+    val sliced = asOfOffset.fold(all) { k =>
+      if (k > all.size) throw new IllegalArgumentException(
+        s"asOfOffset $k exceeds the zone's ${all.size} committed files " +
+          s"under $path — offsets name a PREFIX of this zone's history")
+      all.take(k)
     }
     // `files` option (internal surface, used by the copy-on-write
     // DELETE): restrict the scan to the named committed files
@@ -952,13 +887,6 @@ object DirSink {
     readManifestEntries(path)
       .map(_._2.flatMap(_.epoch).toSet).getOrElse(Set.empty)
 
-  /** The committed-epoch HIGH-WATER MARK — header `emax` ∪ line epochs.
-    * This, not [[committedEpochs]] membership, is what the streaming
-    * commit consults: micro-batch epochs are monotonic per query, so
-    * `epochId <= emax` ⇒ already durable, and the mark SURVIVES
-    * maintenance (compact / DELETE) rewriting epoch-carrying lines out
-    * of the manifest — a recovering writer can never replay an epoch
-    * that a compaction erased the line-level evidence of. */
   /** PER-QUERY streaming transaction marks — `#txn=qid:epoch,…`
     * (round 16; Delta's SetTransaction appId→version shape). The
     * zone-wide `#emax` cannot serve TWO concurrent streaming writers:
@@ -970,9 +898,7 @@ object DirSink {
     * checkpoint's `id`, not the per-run `runId` — verified against
     * MicroBatchExecution), so a crash-restarted stream finds its own
     * mark and a genuinely new stream (fresh checkpoint, fresh id)
-    * commits independently instead of being silently dropped. Zones
-    * whose streaming history predates the key (no `#txn` at all) keep
-    * the legacy global-`#emax` guard. */
+    * commits independently instead of being silently dropped. */
   private[v2] val TxnKey = "txn"
 
   /** Query ids embed in the header's `qid:epoch` pairs and in file
@@ -999,30 +925,28 @@ object DirSink {
       k -> math.max(a.getOrElse(k, Long.MinValue),
         b.getOrElse(k, Long.MinValue))).toMap
 
-  /** The zone's committed per-query marks (empty = legacy zone). */
+  /** The zone's committed per-query marks (empty = no streaming commit). */
   def committedTxn(path: String): Map[String, Long] =
     readManifestRaw(path).map(m => parseTxn(m.header)).getOrElse(Map.empty)
 
   /** The streaming replay guard, one definition for the clean zone and
     * the quarantine zone: a committer's epoch is a replay iff it is at
-    * or below ITS OWN recorded mark — falling back to the zone-global
-    * `#emax` only when no `#txn` was ever recorded (legacy single-
-    * writer history). */
+    * or below ITS OWN recorded `#txn` mark. */
   private[v2] def epochReplayed(m: Option[Manifest], queryId: String,
                                 epochId: Long): Boolean =
-    m.exists { man =>
-      val txn = parseTxn(man.header)
-      if (txn.nonEmpty) txn.get(txnQid(queryId)).exists(epochId <= _)
-      else epochMaxOf(man).exists(epochId <= _)
-    }
+    m.exists(man =>
+      parseTxn(man.header).get(txnQid(queryId)).exists(epochId <= _))
 
+  /** The committed-epoch HIGH-WATER MARK — header `emax` ∪ line epochs.
+    * It SURVIVES maintenance (compact / DELETE) rewriting
+    * epoch-carrying lines out of the manifest, and restore and clone
+    * carry it forward; the replay guard itself is per query
+    * ([[epochReplayed]]). */
   def committedEpochMax(path: String): Option[Long] =
     readManifestRaw(path).flatMap(epochMaxOf)
 
   def readManifestSchema(path: String): StructType =
-    readManifest(path).map(_._1).getOrElse(
-      throw new IllegalArgumentException(
-        s"no ${ManifestName} manifest under $path — nothing was committed"))
+    currentOrThrow(path).schema
 
   /** Manifest schema lines are published ALL-NULLABLE: every parquet
     * column is written nullable, and schema evolution reads old files
@@ -1104,7 +1028,11 @@ object DirSink {
     val root = new Path(path)
     if (!f.exists(root)) return Seq.empty
     val cutoff = System.currentTimeMillis() - olderThanMs
-    // log retention FIRST: what survives it defines the retained
+    // the head FIRST: a directory this build refuses to read
+    // ([[readManifestRaw]]) is refused before anything is swept
+    val head = readManifest(path).map(_._2.map(_._1).toSet)
+      .getOrElse(Set.empty)
+    // log retention next: what survives it defines the retained
     // generations, whose union of references is the data-plane live set
     val logSwept = DirSinkLog.vacuumLog(f, path, cutoff, dryRun)
     // dry runs did not actually drop segments — exclude them from the
@@ -1114,8 +1042,7 @@ object DirSink {
         .toSet
       else Set.empty[String]
     val live: Set[String] =
-      DirSinkLog.retainedLiveSet(f, path, excluded) ++
-        readManifest(path).map(_._2.map(_._1).toSet).getOrElse(Set.empty)
+      DirSinkLog.retainedLiveSet(f, path, excluded) ++ head
     val swept = scala.collection.mutable.ArrayBuffer[String]()
 
     def sweepFile(st: org.apache.hadoop.fs.FileStatus, rel: String): Unit =
@@ -1168,10 +1095,6 @@ object DirSink {
         }
         if (!dryRun && f.listStatus(st.getPath).isEmpty)
           f.delete(st.getPath, false)
-      } else if (!st.isDirectory && n.startsWith(ManifestName + ".tmp-")) {
-        // a crashed publish's unrenamed tmp manifest: age-gated sweep
-        // (the LIVE manifest itself is exempt by exact name below)
-        sweepFile(st, n)
       } else if (!st.isDirectory && n == LockName) {
         // NEVER sweep a lock another committer may legitimately hold: a
         // vacuum with olderThanMs below the stale threshold would void
@@ -1199,9 +1122,7 @@ object DirSink {
     * `ALTER TABLE … ADD COLUMNS` ([[GraftCatalog.alterTable]]). */
   def evolveSchema(path: String, next: StructType): Unit =
     withZoneLock(path) {
-      val m = readManifestRaw(path).getOrElse(
-        throw new IllegalArgumentException(
-          s"no ${ManifestName} manifest under $path — nothing was committed"))
+      val m = currentOrThrow(path)
       val nx = asNullable(next)
       if (m.schema.toDDL == nx.toDDL) return
       checkEvolution(m.schema, nx)
@@ -1232,9 +1153,7 @@ object DirSink {
   def alterChecks(path: String,
                   f: Seq[(String, String)] => Seq[(String, String)]): Unit =
     withZoneLock(path) {
-      val m = readManifestRaw(path).getOrElse(
-        throw new IllegalArgumentException(
-          s"no ${ManifestName} manifest under $path — nothing was committed"))
+      val m = currentOrThrow(path)
       val next = f(DirSinkChecks.parseHeader(m.header)).sortBy(_._1)
       val header0 = nextHeader(Some(m))
       val header =
@@ -1300,9 +1219,7 @@ object DirSink {
     * rename (their headers speak logical names; the writer maps). */
   def renameColumn(path: String, from: String, to: String): Unit =
     withZoneLock(path) {
-      val m = readManifestRaw(path).getOrElse(
-        throw new IllegalArgumentException(
-          s"no ${ManifestName} manifest under $path — nothing was committed"))
+      val m = currentOrThrow(path)
       if (!m.schema.fieldNames.contains(from))
         throw new IllegalArgumentException(
           s"column $from is not in the zone schema " +
@@ -1353,18 +1270,11 @@ object DirSink {
         DirSinkLog.DeltaCommit(Nil, Nil), "rename")
     }
 
-  /** DROP COLUMN — schema evolution's other direction: republish the
-    * manifest with the column removed from the
-    * schema line and its entry excised from every per-file stats field
-    * (without the excision a middle drop would shift every later
-    * column's bounds one slot left — the skipper and the DELETE
-    * metadata fast path would then prune files against the WRONG
-    * column's min/max, a silent-wrong-answer class, not a perf bug).
-    * Data files are untouched: Parquet resolves columns BY NAME, so old
-    * files simply stop projecting the dropped chunk. Refused for the bucket column (the layout hashes it) and for the
-    * last remaining column. Like every manifest rewrite, snapshots that
-    * predate the drop see the NEW schema — rewritten history, the
-    * caveat `evolveSchema` already carries. */
+  /** Resolve `TIMESTAMP AS OF t` to a restorable GENERATION (the SQL
+    * RESTORE surface): the newest generation committed at or before t. */
+  private[graft] def genAsOf(path: String, tMillis: Long): Long =
+    DirSinkLog.genAsOfTimestamp(path, tMillis)
+
   /** RESTORE — Delta's `RESTORE TABLE t TO VERSION AS OF g`: make
     * generation g the zone's HEAD again by publishing ONE snapshot
     * commit carrying g's file list, schema, and layout headers
@@ -1380,8 +1290,8 @@ object DirSink {
     *   - the GENERATION COUNTER moves forward (head gen + 1 — history
     *     is append-only; Delta's RESTORE does the same), so
     *     `VERSION AS OF` targets never become ambiguous;
-    *   - the streaming `#emax` high-water never regresses (a replayed
-    *     epoch must STAY replayed: restoring past an epoch-carrying
+    *   - the streaming `#emax` high-water and `#txn` marks never
+    *     regress (a replayed epoch must STAY replayed: restoring past an epoch-carrying
     *     generation must not let a recovering streaming writer
     *     double-publish that epoch), and the `#hist` publish history
     *     is the head's plus this restore, not the era's shorter copy.
@@ -1390,26 +1300,8 @@ object DirSink {
     * tails see the manifest change shape and fail fast — the same
     * restart discipline as OPTIMIZE (StreamRun scenario G). Returns
     * the new head generation. */
-  /** Resolve `TIMESTAMP AS OF t` to a restorable GENERATION (the SQL
-    * RESTORE surface): the newest generation committed at or before t.
-    * A t inside a migrated legacy zone's pre-log line-level history
-    * has no generation to restore to — loud error, not a guess. */
-  private[graft] def genAsOf(path: String, tMillis: Long): Long =
-    DirSinkLog.genAsOfTimestamp(path, tMillis) match {
-      case Some((g, None)) => g
-      case Some((_, Some(_))) => throw new IllegalArgumentException(
-        s"timestamp $tMillis lands inside zone $path's pre-log legacy " +
-          "history — only whole generations are restorable; use " +
-          "VERSION AS OF with a generation from t\\$history")
-      case None => throw new IllegalArgumentException(
-        s"zone $path has no commit log — nothing to restore to")
-    }
-
   def restore(path: String, gen: Long): Long = withZoneLock(path) {
-    val head = readManifestRaw(path).getOrElse(
-      throw new IllegalArgumentException(
-        s"no ${ManifestName} manifest or commit log under $path — " +
-          "nothing was committed"))
+    val head = currentOrThrow(path)
     if (head.gen == gen) head.gen
     else {
       val target = DirSinkLog.at(path, gen) // loud when not retained
@@ -1506,10 +1398,20 @@ object DirSink {
     }
   }
 
+  /** DROP COLUMN — schema evolution's other direction: republish the
+    * manifest with the column removed from the schema line and its
+    * entry excised from every per-file stats field (without the
+    * excision a middle drop would shift every later column's bounds
+    * one slot left — the skipper and the DELETE metadata fast path
+    * would then prune files against the WRONG column's min/max, a
+    * silent-wrong-answer class, not a perf bug). Data files are
+    * untouched: Parquet resolves columns BY NAME, so old files simply
+    * stop projecting the dropped chunk. Refused for the bucket column
+    * (the layout hashes it) and for the last remaining column.
+    * Snapshots that predate the drop keep their own schema
+    * ([[DirSinkSource.eraSchemaOf]]). */
   def dropColumn(path: String, colName: String): Unit = withZoneLock(path) {
-    val m = readManifestRaw(path).getOrElse(
-      throw new IllegalArgumentException(
-        s"no ${ManifestName} manifest under $path — nothing was committed"))
+    val m = currentOrThrow(path)
     if (!m.schema.fieldNames.contains(colName))
       throw new IllegalArgumentException(
         s"column $colName is not in the zone schema " +
@@ -2813,19 +2715,17 @@ class DirSinkBucketRouter(schema: StructType, spec: DirSink.BucketSpec,
   * keyed by epoch — each epoch's staged files carry an `e<epoch>-`
   * prefix, each manifest line a `\t<epochId>` third field, and the
   * driver commit is IDEMPOTENT BY EPOCH ID: on restart-after-crash
-  * Spark replays the last epoch, the commit finds it at or below the
-  * committed-epoch HIGH-WATER MARK ([[DirSink.committedEpochMax]] —
-  * header `#emax` ∪ line epochs, so the guard survives compaction and
-  * DELETE rewriting epoch-carrying lines out of the manifest) and
-  * drops the replayed files — exactly-once output by epoch.
-  * Micro-batch epochs are MONOTONIC per checkpoint, which is what makes
-  * the ≤-mark test sound — PER QUERY ID (round 16): each commit records
-  * its stable query id's own high-water mark in the `#txn` header
-  * ([[DirSink.TxnKey]]), so TWO CONCURRENT streams (distinct
-  * checkpoints, independent epoch counters) interleave on one zone
-  * with each stream's replays judged against its own mark; the legacy
-  * zone-global `#emax` guard applies only to zones with no recorded
-  * `#txn` (pre-round-16 streaming history). `outputMode(complete)`
+  * Spark replays the last epoch, the commit finds it at or below its
+  * stable query id's mark in the `#txn` header ([[DirSink.TxnKey]] —
+  * a header, so the guard survives compaction and DELETE rewriting
+  * epoch-carrying lines out of the manifest) and drops the replayed
+  * files — exactly-once output by epoch. Micro-batch epochs are
+  * MONOTONIC per checkpoint, which is what makes the ≤-mark test
+  * sound; keying the mark by query id lets TWO CONCURRENT streams
+  * (distinct checkpoints, independent epoch counters) interleave on
+  * one zone with each stream's replays judged against its own mark.
+  * The zone-global `#emax` high-water ([[DirSink.committedEpochMax]])
+  * still rides every commit for restore and clone. `outputMode(complete)`
   * routes through `truncate`, making each epoch a whole-table manifest
   * swap. */
 class DirSinkStreamingWrite(path: String, schema: StructType,
@@ -2865,11 +2765,11 @@ class DirSinkStreamingWrite(path: String, schema: StructType,
     if (DirSink.epochReplayed(DirSink.readManifestRaw(path), queryId,
         epochId)) {
       // epoch replay after crash recovery: the generation is already
-      // durable (the high-water mark survives even if maintenance
-      // rewrote the epoch's lines away) — make the retry a no-op and
+      // durable (the `#txn` mark survives even if maintenance rewrote
+      // the epoch's lines away) — make the retry a no-op and
       // drop the replayed files (the quarantine zone's replayed files
       // too: if the crash hit between the two publishes the quarantine
-      // side already committed — its own emax guard below makes its
+      // side already committed — its own `#txn` guard makes its
       // publish idempotent, so dropping the REPLAYED staging is right
       // in both orders)
       staged.foreach(m => f.delete(new Path(root, m.stagedName), false))
@@ -2878,7 +2778,7 @@ class DirSinkStreamingWrite(path: String, schema: StructType,
       return
     }
     // quarantine publishes FIRST, idempotent by the quarantine zone's
-    // own #emax — exactly-once on both zones across replay (see
+    // own #txn mark — exactly-once on both zones across replay (see
     // DirSinkChecks.DeadLetterKey for the crash-order argument)
     deadletter.foreach(dl => DirSinkChecks.publishQuarantine(dl,
       DirSink.quarantinedMsgs(messages), queryId, epoch = Some(epochId)))

@@ -28,8 +28,8 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   *
   * Layout: `<warehouse>/<namespace...>/<table>/` — one directory per
   * table, identity the (namespace, name) path. A table EXISTS iff its
-  * directory holds a committed manifest (`_GRAFT_COMMIT`); CREATE
-  * TABLE writes a zero-file manifest carrying the schema (the same
+  * directory holds a commit log (`_graft_log/`); CREATE TABLE
+  * publishes a zero-file generation carrying the schema (the same
   * bootstrap a fresh streaming write uses), so create-then-insert and
   * CTAS both land on the ordinary commit protocol. All metadata IS the
   * manifest — no side state to drift, and the catalog works unchanged
@@ -133,21 +133,17 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
   }
 
   /** `TIMESTAMP AS OF t` — Spark hands the timestamp in MICROSECONDS
-    * since the epoch; manifest commit timestamps are millis. The schema
-    * is resolved AT the generation t lands on (same era discipline as
-    * `VERSION AS OF`); a legacy zone with no commit log — or a t inside
-    * a migrated zone's pre-log line-level history — keeps the head
-    * schema, which IS that history's schema (pre-log zones never
-    * evolved through the log). */
+    * since the epoch; commit stamps are millis. The schema is resolved
+    * AT the generation t lands on (same era discipline as `VERSION AS
+    * OF`); a t predating every retained commit is an error. */
   override def loadTable(ident: Identifier, timestampMicros: Long): Table = {
     val dir = dirOf(ident)
-    val headSchema = DirSink.readManifest(dir).map(_._1).getOrElse(
-      throw new NoSuchTableException((ident.namespace() :+ ident.name()).toSeq))
+    if (DirSink.readManifest(dir).isEmpty)
+      throw new NoSuchTableException((ident.namespace() :+ ident.name()).toSeq)
     val t = timestampMicros / 1000L
-    val schema = DirSinkLog.genAsOfTimestamp(dir, t)
-      .map { case (g, _) => DirSinkLog.at(dir, g).schema }
-      .getOrElse(headSchema)
-    new DirSinkTable(dir, schema, Map("asOfTimestamp" -> t.toString))
+    new DirSinkTable(dir,
+      DirSinkLog.at(dir, DirSinkLog.genAsOfTimestamp(dir, t)).schema,
+      Map("asOfTimestamp" -> t.toString))
   }
 
   /** The one supported layout transform: `PARTITIONED BY (bucket(n,

@@ -169,6 +169,13 @@ class AnnIndexSpec extends AnyFunSuite {
     }
     assert(roots.distinct.size == roots.size,
       s"distinct corpora must resolve distinct index roots: $roots")
+    // the same corpus under another training version resolves another
+    // root: an index trained by other training code is rebuilt, not read
+    val sim = operators.Similarity
+    val other = sim.annIndexPath(spark, "/root/testdata/sf0.001",
+      version = sim.AnnTrainVersion + 1)
+    assert(!roots.contains(other),
+      s"a training-version bump must resolve a fresh index root: $other")
   }
 
   test("annIndexAppend: frozen-codebook delta assignment ≡ full assignment; base generation survives") {

@@ -14,9 +14,6 @@ import org.scalatest.funsuite.AnyFunSuite
   *     the zone;
   *   - checkpoint cadence: every Kth generation writes a full text
   *     checkpoint plus the columnar (parquet) metadata sidecar;
-  *   - legacy migration: a zone born as a single `_GRAFT_COMMIT`
-  *     manifest migrates into the log on first contact and keeps
-  *     every row;
   *   - retained-generation time travel: `asOfVersion` reproduces any
   *     retained generation EXACTLY — including across row-level DML
   *     and compaction, the histories the old prefix snapshots could
@@ -79,35 +76,6 @@ class DirSinkLogSpec extends AnyFunSuite {
       s"a plan must read O(K) segments, read ${DirSinkLog.lastReplaySegments}")
     // and the replayed state is IDENTICAL to the per-commit truth
     assert(DirSink.readManifest(dir).get._2.size == 25)
-  }
-
-  test("a legacy single-manifest zone migrates into the log on first commit") {
-    import spark.implicits._
-    val dir = tmpDir()
-    // hand-build a LEGACY zone: one parquet data file + _GRAFT_COMMIT
-    TestSession.parquetRowFile(dir, "legacy-f0", 7L, "old")
-    java.nio.file.Files.write(
-      java.nio.file.Paths.get(dir, DirSink.ManifestName),
-      "id BIGINT,v STRING\n#format=parquet\n#gen=3\nlegacy-f0\t1"
-        .getBytes("UTF-8"))
-    assert(spark.read.format(fmt).option("path", dir).load().count() == 1,
-      "the legacy manifest must read as before")
-    // first NEW commit migrates: manifest -> checkpoint at gen 3,
-    // the append lands as segment gen 4, the legacy file goes
-    Seq((8L, "new")).toDF("id", "v").coalesce(1).write.format(fmt)
-      .option("path", dir).mode(SaveMode.Append).save()
-    assert(!new java.io.File(dir, DirSink.ManifestName).exists(),
-      "the legacy manifest is replaced by the log")
-    assert(logFiles(dir).map(_.getName).contains(
-      "00000000000000000003.checkpoint"),
-      "migration preserves the legacy state as a checkpoint at its gen")
-    assert(DirSink.currentGen(dir).contains(4L))
-    val back = spark.read.format(fmt).option("path", dir).load()
-      .as[(Long, String)].collect().toSeq.sortBy(_._1)
-    assert(back == Seq((7L, "old"), (8L, "new")))
-    // and the pre-migration state is now time-travelable
-    assert(spark.read.format(fmt).option("path", dir)
-      .option("asOfVersion", 3).load().count() == 1)
   }
 
   test("asOfVersion reproduces every retained generation exactly, across DELETE") {

@@ -1,6 +1,6 @@
 package graft
 
-import graft.sources.v2.{DirSink, DirSinkParquet}
+import graft.sources.v2.{DirSink, DirSinkLog, DirSinkParquet}
 import org.apache.spark.sql.SaveMode
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -133,26 +133,27 @@ class DirSinkParquetSpec extends AnyFunSuite {
     Seq((1L, "a"), (2L, "b")).toDF("id", "v").coalesce(1)
       .write.format(fmt).option("path", dir).mode(SaveMode.Append).save()
     val name = DirSink.readManifest(dir).get._2.head._1
-    // a hand-made pre-log `_GRAFT_COMMIT` over a real parquet file, but
-    // with no `#format` header: the data plane is undeclared
-    val legacyDir = tmpDir()
+    // a hand-written generation-0 commit segment over a real parquet
+    // file, but with no `#format` header: the data plane is undeclared
+    val bareDir = tmpDir()
     java.nio.file.Files.copy(java.nio.file.Paths.get(dir, name),
-      java.nio.file.Paths.get(legacyDir, name))
-    java.nio.file.Files.write(
-      java.nio.file.Paths.get(legacyDir, DirSink.ManifestName),
-      s"id BIGINT,v STRING\n#gen=0\n$name\t2".getBytes("UTF-8"))
-    val e = intercept[IllegalStateException](DirSink.zoneFormat(legacyDir))
+      java.nio.file.Paths.get(bareDir, name))
+    val seg = java.nio.file.Paths.get(bareDir, DirSinkLog.LogDirName,
+      "00000000000000000000.commit")
+    java.nio.file.Files.createDirectories(seg.getParent)
+    java.nio.file.Files.write(seg,
+      s"id BIGINT,v STRING\n#gen=0\n+$name\t2".getBytes("UTF-8"))
+    val e = intercept[IllegalStateException](DirSink.zoneFormat(bareDir))
     assert(e.getMessage.contains("#format=parquet"), e.getMessage)
     val r = intercept[Exception] {
-      spark.read.format(fmt).option("path", legacyDir).load().count()
+      spark.read.format(fmt).option("path", bareDir).load().count()
     }
     assert(msgs(r).exists(_.contains("#format=parquet")), s"got: $r")
-    // the same manifest WITH the header reads the file as before
-    java.nio.file.Files.write(
-      java.nio.file.Paths.get(legacyDir, DirSink.ManifestName),
-      s"id BIGINT,v STRING\n#format=parquet\n#gen=0\n$name\t2"
+    // the same segment WITH the header reads the file as before
+    java.nio.file.Files.write(seg,
+      s"id BIGINT,v STRING\n#format=parquet\n#gen=0\n+$name\t2"
         .getBytes("UTF-8"))
-    assert(spark.read.format(fmt).option("path", legacyDir).load()
+    assert(spark.read.format(fmt).option("path", bareDir).load()
       .count() == 2)
   }
 

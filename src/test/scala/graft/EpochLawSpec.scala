@@ -12,9 +12,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * crash-recovered run would — under its own STABLE query id, which
   * is what Spark passes to the write), compact}, with the zone's row
   * multiset checked against the expected one after every op — each
-  * writer's `#txn` mark (round 16; `#emax` for legacy zones) must
-  * make every replay a no-op REGARDLESS of how much maintenance
-  * rewrote the epoch-carrying lines away, while TWO CONCURRENT
+  * writer's `#txn` mark (round 16) must make every replay a no-op
+  * REGARDLESS of how much maintenance rewrote the epoch-carrying
+  * lines away, while TWO CONCURRENT
   * writers' independent epoch counters never swallow each other's
   * legitimate commits. */
 class EpochLawSpec extends AnyFunSuite {

@@ -8,10 +8,9 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Regression pins for the round-14 self-review findings — each test
   * reproduces a bug the review caught and the fix closed:
   *
-  *   1. a CHECKPOINT-ONLY log (the legacy-migration crash window) must
-  *      replay, not die on empty.max — a crash between the migration's
-  *      manifest delete and its segment rename would otherwise brick
-  *      the zone permanently;
+  *   1. a CHECKPOINT-ONLY log (no commit segment — no publish writes
+  *      one) is refused loudly, naming the zone, never a bare
+  *      `empty.max`;
   *   2. a change feed FROM THE BIRTH of a vacuumed zone must fail
   *      loudly (the scaladoc promise), never silently truncate to the
   *      anchor's suffix;
@@ -20,9 +19,7 @@ import org.scalatest.funsuite.AnyFunSuite
   *      column's bounds and silently skip matching files;
   *   4. readChangeFeed/startingVersion options are case-insensitive on
   *      BOTH provider surfaces (inferSchema vs getTable disagreeing
-  *      yields a phantom-column non-feed);
-  *   5. TIMESTAMP AS OF inside a migrated legacy zone's pre-log
-  *      history must keep resolving by the line-level prefix rule. */
+  *      yields a phantom-column non-feed). */
 class ReviewFixR14Spec extends AnyFunSuite {
   private lazy val spark = TestSession.spark
   private val fmt = "graft.sources.v2.DirSinkSource"
@@ -35,20 +32,25 @@ class ReviewFixR14Spec extends AnyFunSuite {
       .coalesce(1).write.format(fmt).option("path", dir)
       .mode(if (from == 0) SaveMode.Overwrite else SaveMode.Append).save()
 
-  test("a checkpoint-only log replays (migration-crash window)") {
+  test("a checkpoint-only log is refused loudly, naming the zone") {
     val dir = tmp()
     (0 until 11).foreach(i => append(dir, i * 5L, 5))
     val log = new java.io.File(dir, "_graft_log")
     assert(log.listFiles().exists(_.getName.endsWith(".checkpoint")))
     log.listFiles().filter(_.getName.endsWith(".commit"))
       .foreach(f => assert(f.delete()))
-    val back = spark.read.format(fmt).option("path", dir).load()
-    assert(back.count() == 55,
-      "a bare checkpoint is a valid log state — readers must replay it")
-    assert(DirSink.currentGen(dir).contains(10L))
-    // and the zone accepts new commits from that state
-    append(dir, 55L, 5)
-    assert(spark.read.format(fmt).option("path", dir).load().count() == 60)
+    val e = intercept[IllegalStateException](DirSink.currentGen(dir))
+    assert(e.getMessage.contains(dir) &&
+      e.getMessage.contains("no commit segment"), e.getMessage)
+    val r = intercept[Exception] {
+      spark.read.format(fmt).option("path", dir).load().count()
+    }
+    assert(Iterator.iterate[Throwable](r)(_.getCause).takeWhile(_ != null)
+      .exists(_.isInstanceOf[IllegalStateException]), s"got: $r")
+    // nor does a new commit land on top of it
+    intercept[Exception](append(dir, 55L, 5))
+    assert(!log.listFiles().exists(_.getName.endsWith(".commit")),
+      "a refused log must not gain a commit segment")
   }
 
   test("a change feed from the birth of a vacuumed zone fails loudly") {
@@ -114,29 +116,5 @@ class ReviewFixR14Spec extends AnyFunSuite {
     try q.awaitTermination(120000) finally q.stop()
     assert(got.size == 10 && got.forall(_ == "insert"),
       s"differently-cased options must still yield a real feed: $got")
-  }
-
-  test("TIMESTAMP AS OF inside pre-migration legacy history still resolves") {
-    import spark.implicits._
-    val dir = tmp()
-    TestSession.parquetRowFile(dir, "legacy-f0", 7L, "a")
-    TestSession.parquetRowFile(dir, "legacy-f1", 8L, "b")
-    java.nio.file.Files.write(
-      java.nio.file.Paths.get(dir, DirSink.ManifestName),
-      ("id BIGINT,v STRING\n#format=parquet\n#gen=3\n" +
-        "legacy-f0\t1\tt=1000\nlegacy-f1\t1\tt=2000").getBytes("UTF-8"))
-    // pre-migration: the line-level prefix rule serves t=1500
-    def rowsAt(t: Long): Long =
-      spark.read.format(fmt).option("path", dir)
-        .option("asOfTimestamp", t).load().count()
-    assert(rowsAt(1500L) == 1L)
-    // migrate: the first post-log commit moves history into the log
-    Seq((9L, "c")).toDF("id", "v").coalesce(1).write.format(fmt)
-      .option("path", dir).mode(SaveMode.Append).save()
-    assert(rowsAt(1500L) == 1L,
-      "a timestamp inside the pre-log history must keep resolving " +
-        "after migration (line-level prefix over the checkpoint base)")
-    assert(rowsAt(2500L) == 2L)
-    intercept[IllegalArgumentException] { rowsAt(500L) }
   }
 }

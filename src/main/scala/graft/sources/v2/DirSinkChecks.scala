@@ -271,10 +271,9 @@ object DirSinkChecks {
       val replayed = epoch.exists(e =>
         DirSink.epochReplayed(DirSink.readManifestRaw(dl.qpath),
           queryId, e))
-      if (replayed) {
-        // replayed epoch: the quarantine generation is already durable
-        msgs.foreach(m => f.delete(new Path(root, m.stagedName), false))
-      } else publishQuarantineLocked(dl, msgs, queryId, epoch, f, root, now)
+      // a replayed epoch's quarantine generation is already durable
+      if (replayed) DirSink.abortStaged(dl.qpath, queryId, msgs, epoch)
+      else publishQuarantineLocked(dl, msgs, queryId, epoch, f, root, now)
     }
   }
 
@@ -284,57 +283,28 @@ object DirSinkChecks {
                                       queryId: String, epoch: Option[Long],
                                       f: org.apache.hadoop.fs.FileSystem,
                                       root: Path, now: Long): Unit = {
-      val committed = msgs.map { m =>
-        val fin = s"g$queryId-" +
-          m.stagedName.stripPrefix(s"_staging/$queryId/")
-        if (!f.rename(new Path(root, m.stagedName), new Path(root, fin)))
-          throw new java.io.IOException(
-            s"quarantine publish failed: ${m.stagedName} -> $fin under $root")
-        m.copy(stagedName = fin)
-      }
-      val parent = DirSink.readManifestRaw(dl.qpath)
-      parent.foreach { m =>
-        if (m.schema.toDDL != DirSink.asNullable(dl.qschema).toDDL)
-          DirSink.checkEvolution(m.schema, dl.qschema)
-      }
-      val previous = parent.map(_.lines).getOrElse(Seq.empty)
-      // the committer's per-query mark — same discipline as the clean
-      // zone's commit, so two streams sharing one quarantine replay
-      // independently (round 16)
-      val txn = epoch.fold(
-        parent.map(m => DirSink.parseTxn(m.header)).getOrElse(Map.empty))(
-        e => DirSink.mergeTxn(
-          parent.map(m => DirSink.parseTxn(m.header)).getOrElse(Map.empty),
-          Map(DirSink.txnQid(queryId) -> e)))
-      val header = DirSink.nextHeader(parent, newEpoch = epoch) ++
-        (if (txn.nonEmpty)
-          Some(DirSink.TxnKey -> DirSink.renderTxn(txn)) else None)
-      val lines = committed.map { m =>
-        s"${m.stagedName}\t${m.rows}" +
-          epoch.fold("")(e => s"\t$e") + s"\tt=$now\tb=${m.bytes}" +
-          (if (m.stats.nonEmpty) s"\t${m.stats}" else "")
-      }
-      DirSink.publishCommit(dl.qpath, dl.qschema,
-        DirSink.withHistory(header, "deadletter",
-          previous.size + committed.size),
-        DirSinkLog.DeltaCommit(lines, Nil),
-        epoch.fold(s"$queryId-dl")(e => s"$queryId-dl-e$e"))
-      val stagingDir = new Path(root, s"_staging/$queryId")
-      if (f.exists(stagingDir)) epoch match {
-        case Some(e) =>
-          f.listStatus(stagingDir).foreach { st =>
-            if (st.getPath.getName.startsWith(s"e$e-"))
-              f.delete(st.getPath, false)
-          }
-        case None => f.delete(stagingDir, true)
-      }
-  }
-
-  /** Abort/replay cleanup: delete a write's staged quarantine files. */
-  def dropQuarantineStaging(dl: DeadLetter,
-                            msgs: Seq[DirSinkCommitMessage]): Unit = {
-    val f = DirSink.fs(dl.qpath)
-    msgs.foreach(m => f.delete(new Path(dl.qpath, m.stagedName), false))
+    val parent = DirSink.readManifestRaw(dl.qpath)
+    DirSink.checkAppendSchema(parent, dl.qschema)
+    val committed = DirSink.promote(f, root, queryId, msgs)
+    val previous = parent.map(_.lines).getOrElse(Seq.empty)
+    // the committer's per-query mark — same discipline as the clean
+    // zone's commit, so two streams sharing one quarantine replay
+    // independently (round 16)
+    val txn = epoch.fold(
+      parent.map(m => DirSink.parseTxn(m.header)).getOrElse(Map.empty))(
+      e => DirSink.mergeTxn(
+        parent.map(m => DirSink.parseTxn(m.header)).getOrElse(Map.empty),
+        Map(DirSink.txnQid(queryId) -> e)))
+    val header = DirSink.nextHeader(parent, newEpoch = epoch) ++
+      (if (txn.nonEmpty)
+        Some(DirSink.TxnKey -> DirSink.renderTxn(txn)) else None)
+    DirSink.publishCommit(dl.qpath, dl.qschema,
+      DirSink.withHistory(header, "deadletter",
+        previous.size + committed.size),
+      DirSinkLog.DeltaCommit(
+        committed.map(DirSink.manifestLine(_, now, epoch)), Nil),
+      epoch.fold(s"$queryId-dl")(e => s"$queryId-dl-e$e"))
+    DirSink.dropStaging(f, root, queryId, epoch)
   }
 }
 

@@ -118,19 +118,8 @@ class DirSinkDeltaBatchWrite(path: String, schema: StructType,
       parent =>
         // 1. inserts: rename staged files into place (inside the lock,
         //    like every committer — see DirSinkBatchWrite.commit)
-        val committed = insertMsgs.map { m =>
-          val fin = s"g$queryId-" +
-            m.stagedName.stripPrefix(s"_staging/$queryId/")
-          if (!f.rename(new Path(root, m.stagedName), new Path(root, fin)))
-            throw new java.io.IOException(
-              s"task-file publish failed: ${m.stagedName} -> $fin")
-          m.copy(stagedName = fin)
-        }
-        val insertLines = committed.map { m =>
-          s"${m.stagedName}\t${m.rows}\tt=$now\tb=${m.bytes}" +
-            DirSink.bucketTag(m.bucket) +
-            (if (m.stats.nonEmpty) s"\t${m.stats}" else "")
-        }
+        val insertLines = DirSink.promote(f, root, queryId, insertMsgs)
+          .map(DirSink.manifestLine(_, now))
         // 2. deletes: union each touched file's partials + its
         //    existing vector into ONE new immutable vector
         val byName = parent.lines.map(l => DirSink.parseEntry(l).name ->
@@ -159,18 +148,13 @@ class DirSinkDeltaBatchWrite(path: String, schema: StructType,
           DirSinkLog.DeltaCommit(retagged ++ insertLines,
             partialsByFile.keySet.toSeq))
     }
-    f.delete(new Path(root, s"_staging/$queryId"), true)
-    DirSink.dropStagingRootIfEmpty(f, root)
+    DirSink.dropStaging(f, root, queryId)
   }
 
-  override def abort(messages: Array[WriterCommitMessage]): Unit = {
-    val f = DirSink.fs(path)
-    messages.collect { case m: DirSinkDeltaCommitMessage => m }
-      .flatMap(m => DirSink.flattenMsgs(m.inserts))
-      .foreach(m => f.delete(new Path(path, m.stagedName), false))
-    f.delete(new Path(path, s"_staging/$queryId"), true)
-    DirSink.dropStagingRootIfEmpty(f, new Path(path))
-  }
+  override def abort(messages: Array[WriterCommitMessage]): Unit =
+    DirSink.abortStaged(path, queryId, DirSink.flattenMsgs(
+      messages.collect { case m: DirSinkDeltaCommitMessage => m }
+        .flatMap(_.inserts)))
 }
 
 /** Executor side: inserts lazily open the ordinary staged writer;

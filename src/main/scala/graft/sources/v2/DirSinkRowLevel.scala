@@ -113,20 +113,10 @@ class DirSinkReplaceDataWrite(path: String, schema: StructType,
       s"$queryId-rlo") { parent =>
       // zero-row tasks (a rewrite whose every row was deleted, or an
       // empty partition) contribute no file — publishing them would
-      // accrete empty manifest lines on every no-op DML
-      val committed = DirSink.flattenMsgs(messages).flatMap {
-        case m if m.rows > 0 =>
-          val fin = s"g$queryId-" +
-            m.stagedName.stripPrefix(s"_staging/$queryId/")
-          if (!f.rename(new Path(root, m.stagedName), new Path(root, fin)))
-            throw new java.io.IOException(
-              s"task-file publish failed: ${m.stagedName} -> $fin " +
-                s"under $root")
-          Some(m.copy(stagedName = fin))
-        case m =>
-          f.delete(new Path(root, m.stagedName), false)
-          None
-      }
+      // accrete empty manifest lines on every no-op DML; their staged
+      // files go with the staging below
+      val committed = DirSink.promote(f, root, queryId,
+        DirSink.flattenMsgs(messages).filter(_.rows > 0))
       val kept = parent.lines.count(l =>
         !scannedSet(DirSink.parseEntry(l).name))
       // an O(delta) segment: exactly the scanned groups leave, the
@@ -135,19 +125,12 @@ class DirSinkReplaceDataWrite(path: String, schema: StructType,
       // log (pre-DML snapshots keep reading them) until vacuum.
       (DirSink.withHistory(DirSink.nextHeader(Some(parent)),
         op.command().toString, kept + committed.size),
-        DirSinkLog.DeltaCommit(committed.map { m =>
-          s"${m.stagedName}\t${m.rows}\tt=$now\tb=${m.bytes}" +
-            DirSink.bucketTag(m.bucket) +
-            (if (m.stats.nonEmpty) s"\t${m.stats}" else "") },
+        DirSinkLog.DeltaCommit(committed.map(DirSink.manifestLine(_, now)),
           scanned))
     }
-    f.delete(new Path(root, s"_staging/$queryId"), true)
+    DirSink.dropStaging(f, root, queryId)
   }
 
-  override def abort(messages: Array[WriterCommitMessage]): Unit = {
-    val f = DirSink.fs(path)
-    DirSink.flattenMsgs(messages).foreach(m =>
-      f.delete(new Path(path, m.stagedName), false))
-    f.delete(new Path(path, s"_staging/$queryId"), true)
-  }
+  override def abort(messages: Array[WriterCommitMessage]): Unit =
+    DirSink.abortStaged(path, queryId, DirSink.flattenMsgs(messages))
 }

@@ -42,13 +42,20 @@ import org.apache.spark.unsafe.types.UTF8String
   *     new generation publishes atomically and superseded files are
   *     swept best-effort afterwards.
   *
-  * CONSTRAINT — single writer per directory: append commits read the
-  * live manifest and republish it extended, so two jobs appending to
-  * the same path concurrently would race on the manifest and the loser
-  * commit's files would be orphaned (lost update). Serialize writers
-  * per directory (the standard Hive/Delta-without-a-log constraint); a
-  * deployment needing concurrent appends puts a lock/lease or a
-  * catalog compare-and-swap in front of the manifest publish.
+  * CONCURRENCY — many writers per directory: every publish (batch and
+  * streaming appends, overwrites, quarantine, DDL, staged CTAS) reads
+  * its parent and publishes under [[DirSink.withZoneLock]], so
+  * concurrent appenders serialize and both land. Commits that plan
+  * outside the lock (copy-on-write and merge-on-read DML, DELETE,
+  * OPTIMIZE's bin-packing, REORG PURGE) re-verify the generation they
+  * planned against through [[DirSink.publishAtGen]]; a losing commit
+  * fails loudly with a `ConcurrentModificationException` (DELETE
+  * retries itself; UPDATE/MERGE callers re-run the statement, see
+  * [[DirSink.withDmlRetry]]) and never drops the winner's files.
+  * ZoneConcurrencySpec pins the contract. Every committer shares one
+  * commit path (promote, manifest line, append-schema law, layout
+  * header, staging cleanup — the helpers after
+  * [[DirSink.dropStagingRootIfEmpty]]).
   *
   * All file ops go through the Hadoop [[FileSystem]] resolved from the
   * session configuration (works on hdfs:/s3a: roots, same as the
@@ -489,6 +496,165 @@ object DirSink {
             f.delete(staging, false)
       }
     } catch { case _: java.io.IOException => () } // concurrent writer owns it
+
+  // ------------------------------------------------ the one commit path
+  // Every committer (batch, streaming epoch, quarantine, copy-on-write
+  // and merge-on-read DML, staged CTAS) runs the same steps; each keeps
+  // only its own policy (zero-row rule, epoch replay, `#txn`, remap,
+  // gen verification, existence check).
+
+  /** Promote one write's committed task files from `_staging/<queryId>/`
+    * into the zone root under GLOBALLY UNIQUE final names
+    * (`g<queryId>-<attempt>`: task ids restart per application, so a
+    * bare attempt name could clobber an earlier application's file).
+    * Throws if any rename fails. Callers run it inside their locked
+    * section, after every check that can refuse the commit, so a
+    * refused commit leaves its files staged for abort. */
+  private[v2] def promote(f: FileSystem, root: Path, queryId: String,
+                          staged: Seq[DirSinkCommitMessage])
+      : Seq[DirSinkCommitMessage] =
+    staged.map { m =>
+      val fin = s"g$queryId-" +
+        m.stagedName.stripPrefix(s"_staging/$queryId/")
+      if (!f.rename(new Path(root, m.stagedName), new Path(root, fin)))
+        throw new java.io.IOException(
+          s"task-file publish failed: ${m.stagedName} -> $fin under $root")
+      m.copy(stagedName = fin)
+    }
+
+  /** One committed file's manifest line:
+    * `name \t rows [\t epoch] \t t=<commit ms> \t b=<bytes>`, then the
+    * bucket tag and the stats field. Only streaming epochs (clean and
+    * quarantine zone) carry the epoch. */
+  private[v2] def manifestLine(m: DirSinkCommitMessage, now: Long,
+                               epoch: Option[Long] = None): String =
+    s"${m.stagedName}\t${m.rows}" + epoch.fold("")(e => s"\t$e") +
+      s"\tt=$now\tb=${m.bytes}" + bucketTag(m.bucket) +
+      (if (m.stats.nonEmpty) s"\t${m.stats}" else "")
+
+  /** The append-schema law, checked under the zone lock before
+    * anything is promoted: a write schema that differs from the zone's
+    * must pass the evolution law ([[checkEvolution]]), and a column it
+    * AUTO-ADDS may shadow neither a logical nor a renamed column's
+    * physical name — the ALTER collision rule (a column-mapped zone
+    * would otherwise write two fields under one physical name, and
+    * every later read fails). */
+  private[v2] def checkAppendSchema(parent: Option[Manifest],
+                                    schema: StructType): Unit =
+    parent.foreach { m =>
+      if (m.schema.toDDL != asNullable(schema).toDDL) {
+        checkEvolution(m.schema, schema)
+        val colmap = parseColMap(m.header)
+        val taken = m.schema.fieldNames.toSeq ++
+          m.schema.fieldNames.toSeq.map(c => colmap.getOrElse(c, c))
+        asNullable(schema).fields.drop(m.schema.length).map(_.name)
+          .foreach { n =>
+            if (taken.exists(_.equalsIgnoreCase(n)))
+              throw new IllegalArgumentException(
+                s"cannot auto-add column $n — it collides with an " +
+                  "existing column's logical or physical name")
+          }
+      }
+    }
+
+  /** The header with the write's layout keys: `BucketKey`/`BloomKey`
+    * set from the write, or removed when the write has none (a truncate
+    * that drops a layout property must drop its header). */
+  private[v2] def withLayout(header: Map[String, String],
+                             bucket: Option[BucketSpec],
+                             bloom: Seq[String]): Map[String, String] =
+    header - BucketKey - BloomKey ++
+      bucket.map(b => BucketKey -> b.render) ++
+      (if (bloom.nonEmpty) Some(BloomKey -> bloom.mkString(",")) else None)
+
+  /** Commit/abort cleanup of one write's staging: the whole
+    * `_staging/<queryId>` (loser speculative attempts, partial vectors)
+    * — or, for a streaming epoch, only that epoch's `e<epoch>-` files,
+    * since later epochs of the same query stage there too — then the
+    * `_staging` root if that left it empty. */
+  private[v2] def dropStaging(f: FileSystem, root: Path, queryId: String,
+                              epoch: Option[Long] = None): Unit = {
+    val dir = new Path(root, s"_staging/$queryId")
+    epoch match {
+      case None => f.delete(dir, true)
+      case Some(e) =>
+        if (f.exists(dir)) f.listStatus(dir).foreach { st =>
+          if (st.getPath.getName.startsWith(s"e$e-"))
+            f.delete(st.getPath, false)
+        }
+    }
+    dropStagingRootIfEmpty(f, root)
+  }
+
+  /** Abort: delete the staged files of tasks that already committed
+    * (running tasks clean their own through `DataWriter.abort`), then
+    * the write's staging as on commit. */
+  private[v2] def abortStaged(path: String, queryId: String,
+                              staged: Seq[DirSinkCommitMessage],
+                              epoch: Option[Long] = None): Unit = {
+    val f = fs(path)
+    staged.foreach(m => f.delete(new Path(path, m.stagedName), false))
+    dropStaging(f, new Path(path), queryId, epoch)
+  }
+
+  /** The SCRATCH REWRITE behind copy-on-write DELETE, OPTIMIZE's
+    * bin-packing and REORG PURGE: read `files` through the connector,
+    * apply the caller's `shape` (a filter, a repartition, a z-order),
+    * write the result to a private `_rewrite-<uuid>` zone, and swap it
+    * in with ONE gen-verified delta commit that removes `removed`.
+    *
+    * The scratch zone is written under the parent's PHYSICAL names —
+    * column mapping, bucket column and bloom columns alike: its files
+    * MOVE into the parent manifest, where readers resolve physically
+    * and the layout must stay bucket-pure. The moves happen inside the
+    * gen-verified publish: moved-but-unpublished files in the zone root
+    * would be indistinguishable from garbage to a concurrent TRUNCATE's
+    * sweep, and on a generation conflict nothing has moved yet (the
+    * scratch zone is vacuum-able debris either way). Removed files stay
+    * on disk for the retained log until vacuum. Empty `files` skips the
+    * rewrite (a metadata-only swap). Returns the rewritten file count. */
+  private[v2] def rewriteFiles(spark: org.apache.spark.sql.SparkSession,
+                               path: String, parent: Manifest, op: String,
+                               tmpSuffix: String, files: Seq[String],
+                               removed: Seq[String])
+                              (shape: org.apache.spark.sql.DataFrame =>
+                                org.apache.spark.sql.DataFrame): Int = {
+    val fmt = classOf[DirSinkSource].getName
+    val f = fs(path)
+    val root = new Path(path)
+    val scratch = new Path(root, s"_rewrite-${java.util.UUID.randomUUID()}")
+    val rewritten = if (files.isEmpty) Seq.empty[String] else {
+      val cmap = parseColMap(parent.header)
+      def phys(c: String): String = cmap.getOrElse(c, c)
+      val shaped = shape(spark.read.format(fmt).option("path", path)
+        .option("files", files.mkString(",")).load())
+      (if (cmap.isEmpty) shaped
+       else shaped.toDF(parent.schema.fieldNames.map(phys).toSeq: _*))
+        .write.format(fmt)
+        .option("path", scratch.toString)
+        .option(BucketKey, bucketOf(parent.header)
+          .fold(BucketNone)(b => b.copy(col = phys(b.col)).render))
+        .option(BloomKey, parent.header.get(BloomKey)
+          .fold(BucketNone)(_.split(",").toSeq.map(phys).mkString(",")))
+        .mode(org.apache.spark.sql.SaveMode.Overwrite).save()
+      readManifestRaw(scratch.toString).map(_.lines).getOrElse(Seq.empty)
+    }
+    publishAtGen(path, parent.gen, op, tmpSuffix) { now =>
+      rewritten.foreach { l =>
+        val name = l.split("\t")(0) // g<uuid>-… names: unique in the zone
+        if (!f.rename(new Path(scratch, name), new Path(root, name)))
+          throw new java.io.IOException(
+            s"$op publish failed: $name from $scratch into $root")
+      }
+      // an O(delta) segment: removed files leave, rewritten files
+      // arrive; every other line never re-serializes
+      (withHistory(nextHeader(Some(now)), op,
+        now.lines.size - removed.size + rewritten.size),
+        DirSinkLog.DeltaCommit(rewritten, removed))
+    }
+    f.delete(scratch, true)
+    rewritten.size
+  }
 
   /** Commit publish — one SMALL log segment per publish
     * ([[DirSinkLog.publish]]): O(delta) bytes inside the zone lock for
@@ -1647,12 +1813,10 @@ object DirSink {
     * of fresh small files is the wrong asymptotic, which is exactly
     * why Delta's OPTIMIZE bin-packs below a size threshold by default.
     *
-    * Mechanics mirror the CoW DELETE's rewrite: the small files read
-    * through the connector (optionally range-clustered on `clusterBy`
-    * so the packed tail gains skippable bounds), write to a scratch
-    * zone inheriting the parent's bucket layout / bloom coverage /
-    * column mapping, move in under their globally-unique
-    * names, and ONE gen-verified delta commit swaps small-out /
+    * Mechanics are the CoW DELETE's rewrite ([[rewriteFiles]]): the
+    * small files (optionally range-clustered on `clusterBy` so the
+    * packed tail gains skippable bounds) rewrite through a scratch
+    * zone, and ONE gen-verified delta commit swaps small-out /
     * packed-in — big files' lines (and their stats) never re-serialize,
     * and pre-optimize generations stay time-travelable through the
     * retained log. Files without a recorded size (pre-`b=` lines) count
@@ -1681,15 +1845,9 @@ object DirSink {
     // ceil could emit two sub-threshold files forever
     val outFiles = math.max(1,
       math.floor(smallBytes.toDouble / minFileBytes).toInt)
-    val f = fs(path)
-    val root = new Path(path)
-    val cmap = parseColMap(parent.header)
-    def phys(c: String): String = cmap.getOrElse(c, c)
-    val scratch = new Path(root, s"_rewrite-${java.util.UUID.randomUUID()}")
-    val df0 = spark.read.format(fmt).option("path", path)
-      .option("files", small.map(_.name).mkString(","))
-      .load()
-    val shaped =
+    val names = small.map(_.name)
+    val created = rewriteFiles(spark, path, parent, "OPTIMIZE-SMALL",
+      "optsmall", names, names) { df0 =>
       if (zorderBy.nonEmpty)
         // INCREMENTAL ZORDER (round 16): z-order JUST the packed tail,
         // scaled against the ZONE's global bounds — answered
@@ -1704,30 +1862,8 @@ object DirSink {
         df0.repartitionByRange(outFiles, clusterBy.map(df0.col): _*)
           .sortWithinPartitions(clusterBy.map(df0.col): _*)
       else df0.repartition(outFiles)
-    (if (cmap.isEmpty) shaped
-     else shaped.toDF(parent.schema.fieldNames.map(phys).toSeq: _*))
-      .write.format(fmt)
-      .option("path", scratch.toString)
-      .option(BucketKey, bucketOf(parent.header)
-        .fold(BucketNone)(b => b.copy(col = phys(b.col)).render))
-      .option(BloomKey, parent.header.get(BloomKey)
-        .fold(BucketNone)(_.split(",").toSeq.map(phys).mkString(",")))
-      .mode(org.apache.spark.sql.SaveMode.Overwrite).save()
-    val rewrittenLines = readManifestRaw(scratch.toString)
-      .map(_.lines).getOrElse(Seq.empty)
-    publishAtGen(path, parent.gen, "OPTIMIZE-SMALL", "optsmall") { now =>
-      rewrittenLines.foreach { l =>
-        val name = l.split("\t")(0)
-        if (!f.rename(new Path(scratch, name), new Path(root, name)))
-          throw new java.io.IOException(
-            s"optimize publish failed: $name from $scratch into $root")
-      }
-      (withHistory(nextHeader(Some(now)), "optimize-small",
-        now.lines.size - small.size + rewrittenLines.size),
-        DirSinkLog.DeltaCommit(rewrittenLines, small.map(_.name)))
     }
-    f.delete(scratch, true)
-    (small.size, rewrittenLines.size)
+    (small.size, created)
   }
 
   /** REORG … APPLY (PURGE) — targeted deletion-vector materialization
@@ -1745,46 +1881,14 @@ object DirSink {
     * (files purged, files created). */
   def purgeVectors(spark: org.apache.spark.sql.SparkSession,
                    path: String): (Int, Int) = {
-    val fmt = classOf[DirSinkSource].getName
     val parent = readManifestRaw(path).getOrElse(return (0, 0))
-    val entries = parent.lines.map(parseEntry)
-    val vectored = entries.filter(_.dv.isDefined)
+    val vectored = parent.lines.map(parseEntry).filter(_.dv.isDefined)
     if (vectored.isEmpty) return (0, 0) // nothing to purge: free no-op
-    val f = fs(path)
-    val root = new Path(path)
-    val cmap = parseColMap(parent.header)
-    def phys(c: String): String = cmap.getOrElse(c, c)
-    val scratch = new Path(root, s"_rewrite-${java.util.UUID.randomUUID()}")
-    val df0 = spark.read.format(fmt).option("path", path)
-      .option("files", vectored.map(_.name).mkString(","))
-      .load()
+    val names = vectored.map(_.name)
     // keep the file granularity the zone already had — REORG is a
     // purge, not a re-layout (OPTIMIZE owns sizing/clustering)
-    (if (cmap.isEmpty) df0.repartition(vectored.size)
-     else df0.repartition(vectored.size)
-       .toDF(parent.schema.fieldNames.map(phys).toSeq: _*))
-      .write.format(fmt)
-      .option("path", scratch.toString)
-      .option(BucketKey, bucketOf(parent.header)
-        .fold(BucketNone)(b => b.copy(col = phys(b.col)).render))
-      .option(BloomKey, parent.header.get(BloomKey)
-        .fold(BucketNone)(_.split(",").toSeq.map(phys).mkString(",")))
-      .mode(org.apache.spark.sql.SaveMode.Overwrite).save()
-    val rewrittenLines = readManifestRaw(scratch.toString)
-      .map(_.lines).getOrElse(Seq.empty)
-    publishAtGen(path, parent.gen, "REORG-PURGE", "reorg") { now =>
-      rewrittenLines.foreach { l =>
-        val name = l.split("\t")(0)
-        if (!f.rename(new Path(scratch, name), new Path(root, name)))
-          throw new java.io.IOException(
-            s"reorg publish failed: $name from $scratch into $root")
-      }
-      (withHistory(nextHeader(Some(now)), "reorg-purge",
-        now.lines.size - vectored.size + rewrittenLines.size),
-        DirSinkLog.DeltaCommit(rewrittenLines, vectored.map(_.name)))
-    }
-    f.delete(scratch, true)
-    (vectored.size, rewrittenLines.size)
+    (vectored.size, rewriteFiles(spark, path, parent, "REORG-PURGE",
+      "reorg", names, names)(_.repartition(vectored.size)))
   }
 
   /** The compaction remap chain, oldest first: `old:new` offset pairs
@@ -1999,7 +2103,6 @@ class DirSinkTable(path: String, schema0: StructType,
     if (parsed.isEmpty) return
     val parent = parsed.get
     val manifestSchema = parent.schema
-    val keep = scala.collection.mutable.ArrayBuffer[String]()
     val drop = scala.collection.mutable.ArrayBuffer[String]()
     val split = scala.collection.mutable.ArrayBuffer[String]()
     parent.lines.foreach { line =>
@@ -2007,7 +2110,7 @@ class DirSinkTable(path: String, schema0: StructType,
       if (e.rows == 0L || filters.isEmpty) drop += e.name
       else e.stats.map(DirSinkStats.parse(_, manifestSchema.length)) match {
         case Some(st) if filters.exists(f =>
-          DirSinkStats.canSkip(f, manifestSchema, st)) => keep += line
+          DirSinkStats.canSkip(f, manifestSchema, st)) => () // kept verbatim
         case Some(st) if filters.forall(f =>
           DirSinkStats.allMatch(f, manifestSchema, st)) => drop += e.name
         case _ => split += e.name // undecided (or pre-stats): rewrite
@@ -2023,77 +2126,25 @@ class DirSinkTable(path: String, schema0: StructType,
       deleteWithVectors(parent, filters, drop.toSeq, split.toSeq)
       return
     }
-    val f = DirSink.fs(path)
-    val root = new Path(path)
-    var scratchDir: Option[Path] = None
-    val rewrittenLines: Seq[String] = if (split.isEmpty) Seq.empty else {
-      val spark = org.apache.spark.sql.SparkSession.active
+    // the rewrite runs outside the lock (it can be minutes of I/O) and
+    // publishes gen-verified, so a concurrent append fails this attempt
+    // instead of being silently dropped from the rebuilt manifest. The
+    // dropped/split files STAY on disk — pre-delete generations remain
+    // reconstructible until vacuum retention ages their segments out.
+    DirSink.rewriteFiles(org.apache.spark.sql.SparkSession.active, path,
+      parent, "DELETE", "delete",
+      split.toSeq, (drop ++ split).toSeq) { rows =>
       val cond = filters.flatMap(DirSinkStats.toColumn).reduceOption(_ && _)
         .getOrElse(throw new IllegalArgumentException(
           s"DELETE predicate ${filters.mkString(" AND ")} has an " +
             "untranslatable shape — canDeleteWhere should have refused"))
-      val scratch = new Path(root, s"_rewrite-${java.util.UUID.randomUUID()}")
-      // the rewrite inherits the parent zone's COLUMN MAPPING by
-      // writing the scratch files under PHYSICAL names (the scratch is
-      // its own unmapped zone, but its files MOVE into the mapped
-      // parent manifest, where readers resolve physically); bucket and
-      // bloom option names follow into physical space for the same
-      // reason — stats and rows are positional throughout
-      val cmap = DirSink.parseColMap(parent.header)
-      def phys(c: String): String = cmap.getOrElse(c, c)
-      val surviving = spark.read.format(classOf[DirSinkSource].getName)
-        .option("path", path)
-        .option("files", split.mkString(","))
-        .load()
-        // DELETE removes rows where the predicate is TRUE; a NULL
-        // predicate KEEPS the row — a bare !cond would be NULL there
-        // too and silently delete it with the matches
-        .filter(org.apache.spark.sql.functions.not(
-          org.apache.spark.sql.functions.coalesce(cond,
-            org.apache.spark.sql.functions.lit(false))))
-      (if (cmap.isEmpty) surviving
-       else surviving.toDF(manifestSchema.fieldNames.map(phys).toSeq: _*))
-        .write.format(classOf[DirSinkSource].getName)
-        .option("path", scratch.toString)
-        // the rewrite inherits the parent zone's bucket layout: its
-        // files MOVE into the parent manifest, which must stay
-        // bucket-pure
-        .option(DirSink.BucketKey, DirSink.bucketOf(parent.header)
-          .fold(DirSink.BucketNone)(b => b.copy(col = phys(b.col)).render))
-        .option(DirSink.BloomKey, parent.header.get(DirSink.BloomKey)
-          .fold(DirSink.BucketNone)(_.split(",").toSeq.map(phys)
-            .mkString(",")))
-        .mode(org.apache.spark.sql.SaveMode.Overwrite).save()
-      scratchDir = Some(scratch)
-      DirSink.readManifestLines(scratch.toString)
-        .map(_._2).getOrElse(Seq.empty)
+      // DELETE removes rows where the predicate is TRUE; a NULL
+      // predicate KEEPS the row — a bare !cond would be NULL there
+      // too and silently delete it with the matches
+      rows.filter(org.apache.spark.sql.functions.not(
+        org.apache.spark.sql.functions.coalesce(cond,
+          org.apache.spark.sql.functions.lit(false))))
     }
-    // publish gen-verified: the rewrite above runs outside the lock (it
-    // can be minutes of I/O), so a concurrent append would otherwise be
-    // silently dropped from the rebuilt manifest. The scratch-file MOVES
-    // happen inside the locked build (after the gen check): moved-but-
-    // unpublished files in the zone root would be indistinguishable from
-    // garbage to a concurrent TRUNCATE's sweep — and on a gen conflict
-    // nothing has moved yet, so the retry re-plans against a clean root
-    // (the whole scratch zone is vacuum-able debris either way).
-    DirSink.publishAtGen(path, parent.gen, "DELETE", "delete") { now =>
-      scratchDir.foreach { scratch =>
-        rewrittenLines.foreach { l =>
-          val name = l.split("\t")(0) // g<uuid>-… names: unique in the zone
-          if (!f.rename(new Path(scratch, name), new Path(root, name)))
-            throw new java.io.IOException(
-              s"rewrite publish failed: $name from $scratch into $root")
-        }
-      }
-      // an O(delta) segment: dropped + split files leave, rewritten
-      // files arrive; kept lines never re-serialize. The dropped/split
-      // files themselves STAY on disk — pre-delete generations remain
-      // reconstructible until vacuum retention ages their segments out.
-      (DirSink.withHistory(DirSink.nextHeader(Some(now)), "delete",
-        keep.size + rewrittenLines.size),
-        DirSinkLog.DeltaCommit(rewrittenLines, (drop ++ split).toSeq))
-    }
-    scratchDir.foreach(s => f.delete(s, true))
   }
 
   /** The deletion-vector DELETE tail ([[DirSinkDv]]): ONE distributed
@@ -2518,46 +2569,19 @@ class DirSinkBatchWrite(path: String, schema: StructType, queryId: String,
       DirSink.quarantinedMsgs(messages), queryId, epoch = None))
     val now = System.currentTimeMillis()
     DirSink.withZoneLock(path) {
-      val committed = DirSink.flattenMsgs(messages).map { m =>
-        // final name embeds the per-write queryId UUID: task ids restart
-        // per application, so a bare p<part>-t<task> could collide with
-        // (and silently clobber) a PREVIOUS application's committed file
-        val fin = s"g$queryId-" +
-          m.stagedName.stripPrefix(s"_staging/$queryId/")
-        if (!f.rename(new Path(root, m.stagedName), new Path(root, fin)))
-          throw new java.io.IOException(
-            s"task-file publish failed: ${m.stagedName} -> $fin under $root")
-        m.copy(stagedName = fin)
-      }
       // raw prior lines, preserved verbatim — a batch append after
       // streaming commits must not strip their epoch fields; the header
       // (generation counter, epoch high-water mark) carries forward even
       // across TRUNCATE, so a table overwrite or compaction can never
       // let a recovering streaming writer re-commit an erased epoch
       val parent = DirSink.readManifestRaw(path)
-      if (!truncate) parent.foreach { m =>
-        if (m.schema.toDDL != DirSink.asNullable(schema).toDDL) {
-          // AUTO-WIDEN on append (round 16, reachable via
-          // `option("mergeSchema", "true")` → ACCEPT_ANY_SCHEMA): a
-          // strictly-wider write schema that passes the evolution law
-          // lands schema + data in ONE commit (`publishCommit` below
-          // publishes the write schema); anything else throws here,
-          // PRE-publish — staged files are aborted, zone untouched.
-          // Same collision rule as ALTER: a new column may shadow
-          // neither a logical nor a renamed column's physical name.
-          DirSink.checkEvolution(m.schema, schema)
-          val colmap = DirSink.parseColMap(m.header)
-          val taken = m.schema.fieldNames.toSeq ++
-            m.schema.fieldNames.toSeq.map(c => colmap.getOrElse(c, c))
-          DirSink.asNullable(schema).fields.drop(m.schema.length)
-            .map(_.name).foreach { n =>
-              if (taken.exists(_.equalsIgnoreCase(n)))
-                throw new IllegalArgumentException(
-                  s"cannot auto-add column $n — it collides with an " +
-                    "existing column's logical or physical name")
-            }
-        }
-      }
+      // AUTO-WIDEN on append (reachable via `option("mergeSchema",
+      // "true")` → ACCEPT_ANY_SCHEMA): a strictly-wider write schema
+      // that passes the append law lands schema + data in ONE commit;
+      // anything else throws here, before any file is promoted
+      if (!truncate) DirSink.checkAppendSchema(parent, schema)
+      val committed = DirSink.promote(f, root, queryId,
+        DirSink.flattenMsgs(messages))
       val previous: Seq[String] =
         if (truncate) Seq.empty else parent.map(_.lines).getOrElse(Seq.empty)
       // a COMPACTION's overwrite records its offset remap (`old:new`,
@@ -2566,26 +2590,16 @@ class DirSinkBatchWrite(path: String, schema: StructType, queryId: String,
       // output file count, never a post-hoc manifest line count a
       // concurrent append could inflate (which would migrate a boundary
       // checkpoint past the appended files — an exactly-once violation)
-      val header0 = DirSink.nextHeader(parent, truncate = truncate) ++
-        remapFrom.map { from =>
-          val pair = s"$from:${committed.size}"
-          "remap" -> remapChain.fold(pair)(old => s"$old,$pair")
-        } ++
-        bucket.map(b => DirSink.BucketKey -> b.render) ++
-        (if (bloom.nonEmpty) Some(DirSink.BloomKey -> bloom.mkString(","))
-         else None)
-      // a truncate that drops a layout property must drop its header
-      val header1 = if (bucket.isEmpty) header0 - DirSink.BucketKey
-        else header0
       val header = DirSink.withHistory(
-        if (bloom.isEmpty) header1 - DirSink.BloomKey else header1,
+        DirSink.withLayout(DirSink.nextHeader(parent, truncate = truncate) ++
+          remapFrom.map { from =>
+            val pair = s"$from:${committed.size}"
+            "remap" -> remapChain.fold(pair)(old => s"$old,$pair")
+          }, bucket, bloom),
         if (!truncate) "append"
         else if (remapFrom.isDefined) "compact" else "overwrite",
         previous.size + committed.size)
-      val lines = committed.map { m =>
-        s"${m.stagedName}\t${m.rows}\tt=$now\tb=${m.bytes}" +
-          DirSink.bucketTag(m.bucket) +
-          (if (m.stats.nonEmpty) s"\t${m.stats}" else "") }
+      val lines = committed.map(DirSink.manifestLine(_, now))
       // append = an O(delta) segment; truncate (overwrite/compact) =
       // a snapshot segment. Superseded generations are NOT swept here
       // anymore: their files stay referenced by the retained log, so
@@ -2595,27 +2609,25 @@ class DirSinkBatchWrite(path: String, schema: StructType, queryId: String,
         if (truncate) DirSinkLog.SnapshotCommit(lines)
         else DirSinkLog.DeltaCommit(lines, Nil), queryId)
       // staging leftovers of THIS query (loser speculative attempts)
-      f.delete(new Path(root, s"_staging/$queryId"), true)
-      DirSink.dropStagingRootIfEmpty(f, root)
+      DirSink.dropStaging(f, root, queryId)
     }
   }
 
   /** Job abort: delete the files of tasks that already committed;
     * running tasks clean their own staging through DataWriter.abort. */
   override def abort(messages: Array[WriterCommitMessage]): Unit = {
-    val f = DirSink.fs(path)
-    DirSink.flattenMsgs(messages).foreach(m =>
-      f.delete(new Path(path, m.stagedName), false))
-    deadletter.foreach(dl => DirSinkChecks.dropQuarantineStaging(dl,
+    DirSink.abortStaged(path, queryId, DirSink.flattenMsgs(messages))
+    deadletter.foreach(dl => DirSink.abortStaged(dl.qpath, queryId,
       DirSink.quarantinedMsgs(messages)))
-    f.delete(new Path(path, s"_staging/$queryId"), true)
-    DirSink.dropStagingRootIfEmpty(f, new Path(path))
   }
 }
 
 /** Ships to executors; `parquet` carries the driver-prepared Parquet
   * writer factory + configuration. Built via the companion so every
-  * batch/row-level write path resolves it identically. */
+  * batch, streaming and row-level write path resolves it identically;
+  * a streaming attempt's name carries an `e<epoch>-` prefix. (A
+  * self-contained serializable value: an anonymous factory would drag
+  * its non-serializable write along as the outer reference.) */
 case class DirSinkWriterFactory(
     path: String, schema: StructType, queryId: String,
     parquet: (org.apache.spark.sql.execution.datasources.OutputWriterFactory,
@@ -2624,7 +2636,7 @@ case class DirSinkWriterFactory(
     checks: Seq[DirSinkChecks.Bound],
     deadletter: Option[DirSinkChecks.DeadLetter] = None,
     colmap: Map[String, String] = Map.empty)
-    extends DataWriterFactory {
+    extends DataWriterFactory with StreamingDataWriterFactory {
 
   // a column-mapped zone's files are written under PHYSICAL names
   private def plain(attempt: String, partitionId: Int,
@@ -2633,8 +2645,15 @@ case class DirSinkWriterFactory(
       queryId, attempt, parquet._1, parquet._2, partitionId, taskId)
 
   override def createWriter(partitionId: Int,
-                            taskId: Long): DataWriter[InternalRow] = {
-    val attempt = s"p$partitionId-t$taskId"
+                            taskId: Long): DataWriter[InternalRow] =
+    writer(s"p$partitionId-t$taskId", partitionId, taskId)
+
+  override def createWriter(partitionId: Int, taskId: Long,
+                            epochId: Long): DataWriter[InternalRow] =
+    writer(s"e$epochId-p$partitionId-t$taskId", partitionId, taskId)
+
+  private def writer(attempt: String, partitionId: Int,
+                     taskId: Long): DataWriter[InternalRow] = {
     val inner: DataWriter[InternalRow] = bucket match {
       case Some(spec) => new DirSinkBucketRouter(schema, spec,
         b => plain(s"$attempt-b$b", partitionId, taskId))
@@ -2744,17 +2763,10 @@ class DirSinkStreamingWrite(path: String, schema: StructType,
     if (bloom.nonEmpty) bloom else DirSink.zoneBloom(path)
 
   override def createStreamingWriterFactory(
-      info: PhysicalWriteInfo): StreamingDataWriterFactory = {
-    val colmap =
-      if (truncate) Map.empty[String, String] else DirSink.zoneColMap(path)
-    DirSinkStreamingWriterFactory(path, schema, queryId,
-      DirSinkParquet.writerFactory(
-        DirSink.toPhysical(DirSink.asNullable(schema), colmap),
-        bloomCols.map(c => colmap.getOrElse(c, c))),
-      bucketSpec,
-      DirSinkChecks.bindAll(schema, DirSinkChecks.zoneChecks(path)),
-      deadletter, colmap)
-  }
+      info: PhysicalWriteInfo): StreamingDataWriterFactory =
+    DirSinkWriterFactory.resolved(path, schema, queryId, bucketSpec,
+      bloom = bloomCols, deadletter = deadletter,
+      colmap = if (truncate) Map.empty else null)
 
   override def commit(epochId: Long,
                       messages: Array[WriterCommitMessage]): Unit = {
@@ -2772,9 +2784,9 @@ class DirSinkStreamingWrite(path: String, schema: StructType,
       // side already committed — its own `#txn` guard makes its
       // publish idempotent, so dropping the REPLAYED staging is right
       // in both orders)
-      staged.foreach(m => f.delete(new Path(root, m.stagedName), false))
-      deadletter.foreach(dl => DirSinkChecks.dropQuarantineStaging(dl,
-        DirSink.quarantinedMsgs(messages)))
+      DirSink.abortStaged(path, queryId, staged, Some(epochId))
+      deadletter.foreach(dl => DirSink.abortStaged(dl.qpath, queryId,
+        DirSink.quarantinedMsgs(messages), Some(epochId)))
       return
     }
     // quarantine publishes FIRST, idempotent by the quarantine zone's
@@ -2786,19 +2798,9 @@ class DirSinkStreamingWrite(path: String, schema: StructType,
     // renames, publish, and (complete-mode) sweep all inside the zone
     // lock — the same sweep-vs-rename serialization as the batch commit
     DirSink.withZoneLock(path) {
-      val committed = staged.map { m =>
-        val fin = s"g$queryId-" +
-          m.stagedName.stripPrefix(s"_staging/$queryId/")
-        if (!f.rename(new Path(root, m.stagedName), new Path(root, fin)))
-          throw new java.io.IOException(
-            s"task-file publish failed: ${m.stagedName} -> $fin under $root")
-        m.copy(stagedName = fin)
-      }
       val parent = DirSink.readManifestRaw(path)
-      if (!truncate) parent.foreach { m =>
-        if (m.schema.toDDL != DirSink.asNullable(schema).toDDL)
-          DirSink.checkEvolution(m.schema, schema)
-      }
+      if (!truncate) DirSink.checkAppendSchema(parent, schema)
+      val committed = DirSink.promote(f, root, queryId, staged)
       val previous: Seq[String] =
         if (truncate) Seq.empty else parent.map(_.lines).getOrElse(Seq.empty)
       // this committer's PER-QUERY mark (computed under the lock, from
@@ -2807,89 +2809,34 @@ class DirSinkStreamingWrite(path: String, schema: StructType,
       val txn = DirSink.mergeTxn(
         parent.map(m => DirSink.parseTxn(m.header)).getOrElse(Map.empty),
         Map(DirSink.txnQid(queryId) -> epochId))
-      val header0 = DirSink.nextHeader(parent, newEpoch = Some(epochId),
-        truncate = truncate) +
-        (DirSink.TxnKey -> DirSink.renderTxn(txn)) ++
-        bucketSpec.map(b => DirSink.BucketKey -> b.render) ++
-        (if (bloomCols.nonEmpty)
-          Some(DirSink.BloomKey -> bloomCols.mkString(",")) else None)
-      val header1 = if (bucketSpec.isEmpty) header0 - DirSink.BucketKey
-        else header0
-      val lines = committed.map { m =>
-        s"${m.stagedName}\t${m.rows}\t$epochId\tt=$now\tb=${m.bytes}" +
-          DirSink.bucketTag(m.bucket) +
-          (if (m.stats.nonEmpty) s"\t${m.stats}" else "") }
+      val header = DirSink.withLayout(
+        DirSink.nextHeader(parent, newEpoch = Some(epochId),
+          truncate = truncate) + (DirSink.TxnKey -> DirSink.renderTxn(txn)),
+        bucketSpec, bloomCols)
+      val lines = committed.map(DirSink.manifestLine(_, now, Some(epochId)))
       // append epochs are O(delta) segments; complete-mode epochs are
       // snapshot segments. Superseded generations stay for the retained
       // log (vacuum reclaims them) — complete-mode zones therefore
       // NEED a scheduled vacuum, the same discipline as Delta's
       // complete-output tables.
       DirSink.publishCommit(path, schema,
-        DirSink.withHistory(
-          if (bloomCols.isEmpty) header1 - DirSink.BloomKey else header1,
-          s"epoch-$epochId", previous.size + committed.size),
+        DirSink.withHistory(header, s"epoch-$epochId",
+          previous.size + committed.size),
         if (truncate) DirSinkLog.SnapshotCommit(lines)
         else DirSinkLog.DeltaCommit(lines, Nil),
         s"$queryId-e$epochId")
-      // sweep THIS epoch's staging leftovers only (loser attempts);
-      // never the whole staging dir — a restart's new queryId owns its own
-      val stagingDir = new Path(root, s"_staging/$queryId")
-      if (f.exists(stagingDir))
-        f.listStatus(stagingDir).foreach { st =>
-          if (st.getPath.getName.startsWith(s"e$epochId-"))
-            f.delete(st.getPath, false)
-        }
+      // THIS epoch's staging leftovers only (loser attempts); a
+      // restart's new queryId owns its own staging
+      DirSink.dropStaging(f, root, queryId, Some(epochId))
     }
   }
 
   override def abort(epochId: Long,
                      messages: Array[WriterCommitMessage]): Unit = {
-    val f = DirSink.fs(path)
-    DirSink.flattenMsgs(messages).foreach(m =>
-      f.delete(new Path(path, m.stagedName), false))
-    deadletter.foreach(dl => DirSinkChecks.dropQuarantineStaging(dl,
-      DirSink.quarantinedMsgs(messages)))
-  }
-}
-
-/** Ships to executors: must be a self-contained serializable value
-  * (an anonymous factory would drag the non-serializable
-  * [[DirSinkStreamingWrite]] along as its outer reference). */
-case class DirSinkStreamingWriterFactory(path: String, schema: StructType,
-                                         queryId: String,
-                                         parquet: (
-                                           org.apache.spark.sql.execution
-                                             .datasources.OutputWriterFactory,
-                                           DirSinkParquet.SerializableConf),
-                                         bucket: Option[DirSink.BucketSpec] =
-                                           None,
-                                         checks: Seq[DirSinkChecks.Bound] =
-                                           Seq.empty,
-                                         deadletter: Option[
-                                           DirSinkChecks.DeadLetter] = None,
-                                         colmap: Map[String, String] =
-                                           Map.empty)
-    extends StreamingDataWriterFactory {
-
-  private def plain(attempt: String, partitionId: Int,
-                    taskId: Long): DataWriter[InternalRow] =
-    new DirSinkParquetWriter(path, DirSink.toPhysical(schema, colmap),
-      queryId, attempt, parquet._1, parquet._2, partitionId, taskId)
-
-  override def createWriter(partitionId: Int, taskId: Long,
-                            epochId: Long): DataWriter[InternalRow] = {
-    val attempt = s"e$epochId-p$partitionId-t$taskId"
-    val inner: DataWriter[InternalRow] = bucket match {
-      case Some(spec) => new DirSinkBucketRouter(schema, spec,
-        b => plain(s"$attempt-b$b", partitionId, taskId))
-      case None => plain(attempt, partitionId, taskId)
-    }
-    if (checks.isEmpty) inner
-    else deadletter match {
-      case Some(dl) => new DirSinkChecks.DeadLetterWriter(inner, checks,
-        dl, queryId, attempt, partitionId, taskId)
-      case None => new DirSinkChecks.CheckedWriter(inner, checks)
-    }
+    DirSink.abortStaged(path, queryId, DirSink.flattenMsgs(messages),
+      Some(epochId))
+    deadletter.foreach(dl => DirSink.abortStaged(dl.qpath, queryId,
+      DirSink.quarantinedMsgs(messages), Some(epochId)))
   }
 }
 

@@ -193,14 +193,9 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
       // published through the same atomic pointer swap as every commit
       DirSink.publishCommit(dir, schema,
         DirSink.withHistory(
-          Map("gen" -> "0") ++
-            bucket.map(b => DirSink.BucketKey -> b.render) ++
-            checksHeader(schema, properties) ++
-            {
-              val bl = bloomOf(schema, properties)
-              if (bl.isEmpty) None
-              else Some(DirSink.BloomKey -> bl.mkString(","))
-            },
+          DirSink.withLayout(
+            Map("gen" -> "0") ++ checksHeader(schema, properties),
+            bucket, bloomOf(schema, properties)),
           "create", 0),
         DirSinkLog.SnapshotCommit(Seq.empty), "create")
     }

@@ -95,12 +95,9 @@ class GraftStagedTable(ident: Identifier, dir: String, schema0: StructType,
             stagedQueryId = Some(info.queryId())
           }
 
-          override def abort(messages: Array[WriterCommitMessage]): Unit = {
-            val f = DirSink.fs(dir)
-            DirSink.flattenMsgs(messages).foreach(m =>
-              f.delete(new Path(dir, m.stagedName), false))
-            f.delete(new Path(dir, s"_staging/${info.queryId()}"), true)
-          }
+          override def abort(messages: Array[WriterCommitMessage]): Unit =
+            DirSink.abortStaged(dir, info.queryId(),
+              DirSink.flattenMsgs(messages))
         }
       }
     }
@@ -126,48 +123,30 @@ class GraftStagedTable(ident: Identifier, dir: String, schema0: StructType,
             .NoSuchTableException((ident.namespace() :+ ident.name()).toSeq)
         case _ => ()
       }
-      // staged → final renames, publish, and the superseded-generation
-      // sweep: ONE locked critical section, metadata-only
-      val committed = staged.map { m =>
-        val fin = s"g$qid-" + m.stagedName.stripPrefix(s"_staging/$qid/")
-        if (!f.rename(new Path(root, m.stagedName), new Path(root, fin)))
-          throw new java.io.IOException(
-            s"staged-file publish failed: ${m.stagedName} -> $fin " +
-              s"under $root")
-        m.copy(stagedName = fin)
-      }
-      // the staged definition wins WHOLESALE: its checks replace the
-      // old table's (an atomic REPLACE is a new table at the old name)
-      val header2 = DirSink.nextHeader(parent, truncate = true) ++
-        bucket.map(b => DirSink.BucketKey -> b.render) ++
-        (if (bloom.nonEmpty) Some(DirSink.BloomKey -> bloom.mkString(","))
-         else None)
-      val header1 =
-        if (bloom.isEmpty) header2 - DirSink.BloomKey else header2
-      val header0 =
-        if (checks.isEmpty) header1 - DirSinkChecks.Key
-        else header1 + (DirSinkChecks.Key -> DirSinkChecks.render(checks))
+      // staged → final renames and publish: ONE locked critical
+      // section, metadata-only
+      val committed = DirSink.promote(f, root, qid, staged)
+      // the staged definition wins WHOLESALE: its layout and checks
+      // replace the old table's (an atomic REPLACE is a new table at
+      // the old name)
+      val layout = DirSink.withLayout(
+        DirSink.nextHeader(parent, truncate = true), bucket, bloom)
+      val header =
+        if (checks.isEmpty) layout - DirSinkChecks.Key
+        else layout + (DirSinkChecks.Key -> DirSinkChecks.render(checks))
       val op = if (parent.isDefined) "replace" else "create"
       // a REPLACE is history-replacing by definition: one snapshot
       // segment. The superseded generation's files stay for the
       // retained log (the pre-replace table remains time-travelable)
       // until vacuum retention ages its segments out.
       DirSink.publishCommit(dir, schema0,
-        DirSink.withHistory(
-          if (bucket.isEmpty) header0 - DirSink.BucketKey else header0,
-          op, committed.size),
-        DirSinkLog.SnapshotCommit(committed.map { m =>
-          s"${m.stagedName}\t${m.rows}\tt=$now\tb=${m.bytes}" +
-            DirSink.bucketTag(m.bucket) +
-            (if (m.stats.nonEmpty) s"\t${m.stats}" else "") }), qid)
-      f.delete(new Path(root, s"_staging/$qid"), true)
+        DirSink.withHistory(header, op, committed.size),
+        DirSinkLog.SnapshotCommit(
+          committed.map(DirSink.manifestLine(_, now))), qid)
+      DirSink.dropStaging(f, root, qid)
     }
   }
 
-  override def abortStagedChanges(): Unit = {
-    val f = DirSink.fs(dir)
-    staged.foreach(m => f.delete(new Path(dir, m.stagedName), false))
-    stagedQueryId.foreach(q =>
-      f.delete(new Path(dir, s"_staging/$q"), true))
-  }
+  override def abortStagedChanges(): Unit =
+    DirSink.abortStaged(dir, stagedQueryId.getOrElse("staged"), staged)
 }

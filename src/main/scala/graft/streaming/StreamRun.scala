@@ -741,6 +741,9 @@ object StreamRun {
       (finalM.count(), finalM.select($"id").distinct().count())
     val passM = afterRaceM == 180L && txnM.size == 2 &&
       finalCountM == 210L && distinctM == 210L
+    // one verdict for the JSON and the exit code
+    val pass = passA && passB && passC && passD && passE && passF &&
+      passG && passH && passI && passJ && passK && passL && passM
 
     val json =
       s"""{"sf":"$sfDir","rows_per_drop":${events.count()},
@@ -828,8 +831,7 @@ object StreamRun {
          |"rows_after_restart":$finalCountM,
          |"distinct_ids":$distinctM,
          |"pass":$passM},
-         |"pass":${passA && passB && passC && passD && passE && passF &&
-        passG && passH && passI && passJ && passK && passL && passM}}"""
+         |"pass":$pass}"""
         .stripMargin.replace("\n", "")
     println(s"[streamrun] $json")
     outFile.foreach { f =>
@@ -837,8 +839,6 @@ object StreamRun {
         json.getBytes("UTF-8"))
     }
     spark.stop()
-    if (!(passA && passB && passC && passD && passE && passF && passG &&
-      passH && passI && passJ && passK && passL))
-      sys.exit(1)
+    if (!pass) sys.exit(1)
   }
 }

@@ -131,6 +131,48 @@ class RenameColumnSpec extends AnyFunSuite {
     assert(e.getMessage.contains("pos"))
   }
 
+  test("auto-add under a renamed column's physical name refuses on batch and stream; the zone stays readable and unchanged") {
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    import spark.implicits._
+    val dir = freshZone()
+    DirSink.renameColumn(dir, "v", "weight") // physical name stays 'v'
+    val gen = DirSink.currentGen(dir)
+    // refused by the collision rule itself, not by the evolution law
+    def collision(e: Throwable): Boolean =
+      Iterator.iterate(e)(_.getCause).takeWhile(_ != null)
+        .exists(c => String.valueOf(c.getMessage).contains("collides"))
+    def unchanged(how: String): Unit = {
+      assert(DirSink.currentGen(dir) == gen, s"$how must not publish")
+      val back = load(dir)
+      assert(back.columns.toSeq == Seq("id", "weight"))
+      assert(back.agg(sum("weight")).head.getLong(0) ==
+        (0L until 20L).map(_ * 7).sum, s"$how must leave the zone readable")
+    }
+    // batch: a mergeSchema append whose new (nullable) column is 'v'
+    val batch = intercept[Exception] {
+      spark.range(20, 25).select(col("id"), (col("id") * 7).as("weight"),
+        when(col("id") >= 0, lit(1L)).as("v"))
+        .write.format(fmt).option("path", dir)
+        .option("mergeSchema", "true").mode(SaveMode.Append).save()
+    }
+    assert(collision(batch), s"refused for the wrong reason: $batch")
+    unchanged("a batch collision")
+    // stream: the same append as a micro-batch epoch
+    implicit val sq: org.apache.spark.sql.SQLContext = spark.sqlContext
+    val in = MemoryStream[(Long, Long, Option[Long])]
+    val chk = java.nio.file.Files
+      .createTempDirectory("graft_ren_collide").toString
+    val q = in.toDF().toDF("id", "weight", "v").writeStream
+      .format(fmt).option("path", dir)
+      .option("checkpointLocation", chk).start()
+    try {
+      in.addData((20L, 140L, Some(1L)))
+      val stream = intercept[Exception](q.processAllAvailable())
+      assert(collision(stream), s"refused for the wrong reason: $stream")
+    } finally q.stop()
+    unchanged("a streaming collision")
+  }
+
   test("bucket layout and bloom coverage follow the rename; SPJ headers stay consistent") {
     val dir = java.nio.file.Files.createTempDirectory("graft_ren_bkt")
       .toString

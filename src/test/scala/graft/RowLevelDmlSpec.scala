@@ -46,6 +46,8 @@ class RowLevelDmlSpec extends AnyFunSuite {
     assert(after.size == 3)
     assert(before.toSet.intersect(after.toSet).size == 2,
       s"exactly one file may be rewritten: before=$before after=$after")
+    assert(!new java.io.File(dir, "_staging").exists(),
+      "staging is swept on an UPDATE commit")
     // an UPDATE whose predicate no file can match rewrites nothing
     spark.sql("UPDATE graftcat.dml.u SET v = 'never' WHERE id = 999")
     val untouched = DirSink.readManifest(dir).get._2.map(_._1)
@@ -85,6 +87,8 @@ class RowLevelDmlSpec extends AnyFunSuite {
     val got = spark.sql("SELECT id, v FROM graftcat.dml.m")
       .as[(Long, String)].collect().toSeq.sortBy(_._1)
     assert(got == Seq(1L -> "a", 2L -> "B", 3L -> "c", 4L -> "D"), s"got $got")
+    assert(!new java.io.File(s"$wh/dml/m", "_staging").exists(),
+      "staging is swept on a MERGE commit")
 
     // MERGE with a delete clause
     spark.sql(

@@ -32,6 +32,8 @@ class StagedCtasSpec extends AnyFunSuite {
     val hist = DirSink.history(s"$wh/db/t")
     assert(hist.map(_.op) == Seq("create"),
       s"a staged CTAS is ONE publish, got ${hist.map(_.op)}")
+    assert(!new java.io.File(s"$wh/db/t", "_staging").exists(),
+      "staging is swept on a staged CTAS commit")
     // re-CREATE of an existing name fails and changes nothing
     intercept[Exception] {
       spark.sql(s"CREATE TABLE $cat.db.t AS SELECT 1 AS x")

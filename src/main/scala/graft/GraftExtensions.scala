@@ -57,5 +57,6 @@ object GraftExtensions {
       (BLOOM_CONTAINS, classOf[BloomMightContain], 2,
         a => BloomMightContain(a(0), a(1))),
       (NEAREST, classOf[NearestCentroid], 2, a => NearestCentroid(a(0), a(1))),
+      (NEAREST_K, classOf[NearestK], 3, a => NearestK(a(0), a(1), a(2))),
       (QMEAN_VEC, classOf[QMeanVec], 1, a => QMeanVec(a(0))))
 }

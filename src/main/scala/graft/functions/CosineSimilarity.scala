@@ -5,7 +5,7 @@ import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.functions.call_function
+import org.apache.spark.sql.functions.{call_function, lit}
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
 
 /** Native Catalyst expression: fused cosine similarity over two
@@ -103,7 +103,7 @@ object CosineSimilarity {
   }
 
   /** ARRAY<FLOAT> or ARRAY<DOUBLE>: the vector types the functions accept. */
-  private[functions] def isVector(t: DataType): Boolean = t match {
+  private[graft] def isVector(t: DataType): Boolean = t match {
     case ArrayType(FloatType, _) | ArrayType(DoubleType, _) => true
     case _ => false
   }
@@ -124,6 +124,7 @@ object VectorFunctions {
   val BLOOM_AGG = "graft_bloom_agg"
   val BLOOM_CONTAINS = "graft_bloom_contains"
   val NEAREST = "graft_nearest"
+  val NEAREST_K = "graft_nearest_k"
   val QMEAN_VEC = "graft_qmean_vec"
 
   /** BPE token array of a cleaned-word column. */
@@ -136,6 +137,11 @@ object VectorFunctions {
     * [[NearestCentroid]]). */
   def nearest(e: Column, codebook: Column): Column =
     call_function(NEAREST, e, codebook)
+
+  /** The `k` nearest codebook entries of a vector, best first:
+    * `array<struct(cell, csim)>` (see [[NearestK]]). */
+  def nearestK(e: Column, codebook: Column, k: Int): Column =
+    call_function(NEAREST_K, e, codebook, lit(k))
 
   /** Exact per-dimension mean of a vector column (see [[QMeanVec]]). */
   def qmeanVec(e: Column): Column = call_function(QMEAN_VEC, e)

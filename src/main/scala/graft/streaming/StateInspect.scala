@@ -38,22 +38,24 @@ object StateInspect {
 
   /** Raw state rows of one named state variable of a
     * `transformWithState` operator: `key` / `value` structs shaped by
-    * the processor's encoders, plus `partition_id`. */
+    * the processor's encoders, plus `partition_id` — as committed by
+    * batch `batchId`, or by the latest batch when it is None. */
   def valueState(spark: SparkSession, checkpoint: String,
-                 stateVar: String): DataFrame =
-    spark.read.format("statestore")
+                 stateVar: String, batchId: Option[Long] = None): DataFrame = {
+    val r = spark.read.format("statestore")
       .option("path", checkpoint)
       .option("stateVarName", stateVar)
-      .load()
+    batchId.fold(r)(b => r.option("batchId", b)).load()
+  }
 
   /** [[valueState]] flattened for a long-keyed, long-valued
     * ValueState: `(key, value, ttl_expiration_ms)` — the TTL column is
     * null for non-TTL variables (whose value struct has no
     * `ttlExpirationMs` field and no extra nesting). */
   def longValueState(spark: SparkSession, checkpoint: String,
-                     stateVar: String): DataFrame = {
+                     stateVar: String, batchId: Option[Long] = None): DataFrame = {
     import org.apache.spark.sql.functions._
-    val raw = valueState(spark, checkpoint, stateVar)
+    val raw = valueState(spark, checkpoint, stateVar, batchId)
     val ttl = raw.schema("value").dataType
       .asInstanceOf[org.apache.spark.sql.types.StructType]
       .fieldNames.contains("ttlExpirationMs")

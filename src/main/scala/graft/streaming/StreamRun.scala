@@ -183,15 +183,19 @@ object StreamRun {
     drop2.coalesce(1).write.mode("append").parquet(dirC)
     val qC2 = runTws(c2.size)
     val batchesC2 = dataBatches(qC2)
+    val lastDataC2 =
+      qC2.recentProgress.filter(_.numInputRows > 0).map(_.batchId).maxOption
     qC2.stop()
     val run2 = sinkBuf.synchronized { sinkBuf.toArray }
     // read the checkpoint's state BACK through the statestore source —
-    // the emissions above are the processor's view; this is the store's
+    // the emissions above are the processor's view; this is the store's.
+    // Read it as the last data-carrying batch committed it: a no-data
+    // batch that runs after the 2 s TTL lapses evicts recentCount.
     val stTotal = StateInspect
-      .longValueState(spark, chkC, "totalCount")
+      .longValueState(spark, chkC, "totalCount", lastDataC2)
       .select($"key", $"value").as[(Long, Long)].collect().toMap
     val stRecent = StateInspect
-      .longValueState(spark, chkC, "recentCount")
+      .longValueState(spark, chkC, "recentCount", lastDataC2)
       .select($"key", $"value").as[(Long, Long)].collect().toMap
     val stateVars = StateInspect.stateMetadata(spark, chkC)
       .select($"operatorProperties").as[String].head()

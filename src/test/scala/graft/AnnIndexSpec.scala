@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -16,40 +17,41 @@ class AnnIndexSpec extends AnyFunSuite {
   private lazy val spark = TestSession.spark
   private val dir = "/root/testdata/sf0.001"
 
-  /** Parquet roots scanned by the driver actions `body` runs (the
-    * codebook collects): each action's executed plan, delivered on the
-    * asynchronous listener bus, so wait until `want` shows up or 20 s
-    * pass. */
-  private def actionScans(want: Set[String])(body: => Unit): Set[String] = {
+  /** `generation/part` of every parquet root the SQL actions of `body`
+    * scan in session `s`. A marker action after `body` arrives last on
+    * the listener bus, so every earlier action has been seen. */
+  private def actionParts(s: SparkSession)(body: => Unit): Set[String] = {
     val seen = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+    val marker = s"graft-marker-${java.util.UUID.randomUUID()}"
+    val flushed = new java.util.concurrent.CountDownLatch(1)
     def walk(p: SparkPlan): Unit = {
       p match {
         case a: AdaptiveSparkPlanExec => walk(a.executedPlan)
         case q: QueryStageExec => walk(q.plan)
-        case f: FileSourceScanExec =>
-          f.relation.location.rootPaths.foreach(r => seen.add(r.getName))
+        case f: FileSourceScanExec => f.relation.location.rootPaths
+          .foreach(r => seen.add(s"${r.getParent.getName}/${r.getName}"))
         case _ =>
       }
       p.children.foreach(walk)
     }
     val l = new QueryExecutionListener {
       override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
-        walk(qe.executedPlan)
+        if (qe.logical.toString.contains(marker)) flushed.countDown()
+        else walk(qe.executedPlan)
       override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
     }
-    spark.listenerManager.register(l)
+    s.listenerManager.register(l)
     try {
       body
-      var waited = 0
-      while (!want.forall(seen.contains) && waited < 100) {
-        Thread.sleep(200); waited += 1
-      }
-    } finally spark.listenerManager.unregister(l)
+      s.range(1).select(org.apache.spark.sql.functions.lit(marker)).collect()
+      assert(flushed.await(60, java.util.concurrent.TimeUnit.SECONDS),
+        "the marker action never reached the listener")
+    } finally s.listenerManager.unregister(l)
     seen.asScala.toSet
   }
 
-  private def scanCounts(name: String): Map[String, Int] = {
-    val df = Exec.withLazyPlans(SparkEntry.queries(name)(spark, dir))
+  private def scanCounts(name: String, s: SparkSession = spark): Map[String, Int] = {
+    val df = Exec.withLazyPlans(SparkEntry.queries(name)(s, dir))
     val buf = scala.collection.mutable.Buffer[String]()
     def walk(n: org.apache.spark.sql.execution.SparkPlan): Unit = {
       n match {
@@ -131,13 +133,15 @@ class AnnIndexSpec extends AnyFunSuite {
   test("search plan reads the index, never a training subtree") {
     // build the artifact first so the lazy plan is the steady state
     SparkEntry.queries("q_ann_search_indexed")(spark, dir).count()
-    // the KB-sized codebooks are collected to the driver while the
-    // search frame is built, so they are read by those actions; the
-    // inverted lists and codes are read by the search plan itself
+    // the KB-sized codebooks are collected to the driver while a
+    // session's first search frame is built (a fresh session: the
+    // codebooks are memoized per session), so they are read by those
+    // actions; the inverted lists and codes are read by the search plan
+    val fresh = spark.newSession()
     var scans = Map.empty[String, Int]
-    val collected = actionScans(Set("coarse", "pq")) {
-      scans = scanCounts("q_ann_search_indexed")
-    }
+    val collected = actionParts(fresh) {
+      scans = scanCounts("q_ann_search_indexed", fresh)
+    }.map(p => p.substring(p.lastIndexOf('/') + 1))
     // the raw corpus appears only as the query-slice reads (q + its
     // PQ-subspace view share the scan twice in the lazy tree); the
     // retraining composition plans 16 of them (q_ann_ivfpq's pin)
@@ -223,6 +227,47 @@ class AnnIndexSpec extends AnyFunSuite {
       // the superseded generation stays on disk — it IS the chain's base
       assert(new java.io.File(g1, "codes/_SUCCESS").exists(),
         "append must not destroy the previous generation")
+    } finally vecs.unpersist(false)
+  }
+
+  test("a second search in a session runs no codebook collect") {
+    val s = spark.newSession()
+    SparkEntry.queries("q_ann_search_indexed")(s, dir).count()
+    val root = operators.Similarity.annIndexPath(s, dir)
+    val books = operators.Similarity.annIndexCodebooks(s, root)
+    val parts = actionParts(s) {
+      SparkEntry.queries("q_ann_search_indexed")(s, dir).count()
+    }
+    assert(!parts.exists(p => p.endsWith("/coarse") || p.endsWith("/pq")),
+      s"the second search collected a stored codebook: $parts")
+    val again = operators.Similarity.annIndexCodebooks(s, root)
+    assert((again._1 eq books._1) && (again._2 eq books._2),
+      "the session must reuse its codebooks and their broadcast handles")
+  }
+
+  test("after an append, the search reads the new generation's parts") {
+    import spark.implicits._
+    import operators.Similarity
+    val s = spark.newSession()
+    val vecs = Similarity.ivfVectors(s, dir)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    try {
+      val root = java.nio.file.Files
+        .createTempDirectory("graft_ann_memo").toString + "/idx"
+      Similarity.annIndexBuild(s, root, vecs.filter($"vec_id" % 5 =!= 0))
+      val q = vecs.filter($"vec_id" % 100 === 0)
+      def cands(df: org.apache.spark.sql.DataFrame) =
+        df.select($"cid").as[Long].collect().toSeq
+      val before = cands(Similarity.annIndexSearch(s, root, q))
+      assert(before.nonEmpty && before.forall(_ % 5 != 0),
+        "the base index holds no vec_id % 5 = 0 candidate")
+      val g2 = Similarity.annIndexAppend(s, root, vecs.filter($"vec_id" % 5 === 0))
+      val gen = new java.io.File(g2).getName
+      var after = Seq.empty[Long]
+      val parts = actionParts(s) { after = cands(Similarity.annIndexSearch(s, root, q)) }
+      assert(Set(s"$gen/coarse", s"$gen/pq").subsetOf(parts),
+        s"the search must re-read the codebooks of the new generation: $parts")
+      assert(after.exists(_ % 5 == 0), "the search missed the appended vectors")
     } finally vecs.unpersist(false)
   }
 

@@ -16,7 +16,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * cell into `graft_qmean_vec` — a nested plan the next round consumes.
   * Every trained `(keys…, cid, ce)` must be BIT-identical: unkeyed and
   * keyed (PQ `m`), one and two rounds, a cell that empties out and
-  * drops, and C ≥ N. */
+  * drops, C ≥ N, null elements, 1 and 7 input partitions; a BIGINT
+  * overflow throws in both. */
 class KmeansDriverSpec extends AnyFunSuite {
   private lazy val spark = TestSession.spark
 
@@ -108,6 +109,57 @@ class KmeansDriverSpec extends AnyFunSuite {
       assertSame(Similarity.lloydRound(nm, Similarity.lloydRound(nm, seeds)),
         refRound(nm, refRound(nm, refPqSeeds(nm, 16), "m"), "m"))
     } finally nm.unpersist()
+  }
+
+  /** `small` with null elements in two vectors and one null vector. */
+  private lazy val withNulls: DataFrame = {
+    val schema = org.apache.spark.sql.types.StructType.fromDDL(
+      "vec_id BIGINT, e ARRAY<DOUBLE>")
+    val rows = small.collect().toSeq.map { r =>
+      val e = r.getSeq[Double](1).map(java.lang.Double.valueOf)
+      Row(r.getLong(0),
+        if (r.getLong(0) % 3 == 0) e.updated(2, null) else e)
+    } :+ Row(11L, null)
+    spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), schema)
+  }
+
+  test("the one-job Lloyd round equals the relational round at 1 and 7 partitions") {
+    val nm = Similarity.pqSubspaces(corpus).persist()
+    try {
+      for (parts <- Seq(1, 7)) {
+        // null elements and a null vector, every vector a seed so the
+        // parallel trio's cells empty out and drop
+        val n = withNulls.repartition(parts)
+        val seeds = Similarity.kmeansCodebook(n, 12, 0)
+        val got = Similarity.lloydRound(n, seeds)
+        assertSame(got, refRound(n, seeds.frame(spark)))
+        assert(got.rows.size < seeds.rows.size, s"$parts partitions: no cell emptied out")
+        // keyed (PQ m)
+        val nmp = nm.repartition(parts)
+        val pqSeeds = Codebook.of(refPqSeeds(nmp, 16))
+        assertSame(Similarity.lloydRound(nmp, pqSeeds),
+          refRound(nmp, refPqSeeds(nmp, 16), "m"))
+      }
+    } finally nm.unpersist()
+  }
+
+  test("an overflowing cell sum throws in the one-job round, as in the relational one") {
+    import spark.implicits._
+    def throwsArithmetic(body: => Any): Boolean =
+      try { body; false }
+      catch {
+        case t: Throwable =>
+          Iterator.iterate(t)(_.getCause).takeWhile(_ != null)
+            .exists(_.isInstanceOf[ArithmeticException])
+      }
+    for (parts <- Seq(1, 7)) {
+      val n = Seq(1L -> Seq(1e15), 2L -> Seq(1e15), 3L -> Seq(1e15))
+        .toDF("vec_id", "e").repartition(parts)
+      val seeds = Similarity.kmeansCodebook(n, 1, 0)
+      assert(throwsArithmetic(refRound(n, seeds.frame(spark)).collect()))
+      assert(throwsArithmetic(Similarity.lloydRound(n, seeds)),
+        s"$parts partitions: the BIGINT overflow must throw")
+    }
   }
 
   test("the order of the codebook rows cannot change a graft_nearest result") {

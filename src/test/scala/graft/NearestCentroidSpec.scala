@@ -116,6 +116,11 @@ class NearestCentroidSpec extends AnyFunSuite {
     val nulls = n.select(VectorFunctions.nearest($"e",
       lit(null).cast(cbType)).as("nn")).collect()
     assert(nulls.forall(_.isNullAt(0)))
+    // an empty driver codebook covers no row
+    val none = operators.Similarity.Codebook(StructType(Seq(
+      StructField("cid", LongType), StructField("ce", ArrayType(DoubleType)))), Nil)
+    assert(operators.Similarity.assignCells(n.withColumnRenamed("vid", "vec_id"), none)
+      .count() == 0)
   }
 
   test("real training shape: PQ-subspace and full-vector nearest match") {

@@ -108,39 +108,59 @@ class PlanShapeSpec extends AnyFunSuite {
   }
 
   test("q_ann_ivf broadcasts the codebook at every Lloyd round, never the corpus") {
-    // Training runs on the driver (one collect per Lloyd round), so
-    // guard the two frames it plans: one Lloyd round over an uncached
-    // vector relation, and the search frame ivfRanked returns.
-    import org.apache.spark.sql.execution.{FileSourceScanExec, LocalTableScanExec, SparkPlan}
+    // Training runs on the driver (one job per Lloyd round), and every
+    // task reads the codebook through ONE broadcast handle carried by an
+    // expression. Guard the two frames it plans: a Lloyd round's map
+    // side over an uncached vector relation, and the search frame
+    // ivfRanked returns.
+    import org.apache.spark.sql.execution.{FileSourceScanExec, GenerateExec, LocalTableScanExec, SparkPlan}
     import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.exchange.BroadcastExchangeExec
     import org.apache.spark.sql.execution.joins.{BaseJoinExec, BroadcastNestedLoopJoinExec}
-    import org.apache.spark.sql.catalyst.expressions.AttributeReference
-    import org.apache.spark.sql.catalyst.optimizer.BuildRight
+    import org.apache.spark.sql.catalyst.expressions.{AttributeReference, Literal}
+    import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StructField, StructType}
+    import graft.functions.{CodebookHandle, CosineSimilarity}
     def nodes(p: SparkPlan): Seq[SparkPlan] = p match {
       case a: AdaptiveSparkPlanExec => nodes(a.inputPlan)
       case _ => p +: (p.children ++ p.subqueries).flatMap(nodes)
     }
+    def codebookType(t: DataType): Boolean = t match {
+      case ArrayType(StructType(Array(StructField(_, LongType, _, _),
+          StructField(_, ce, _, _))), _) => CosineSimilarity.isVector(ce)
+      case _ => false
+    }
+    def readsHandleOnly(plan: Seq[SparkPlan], what: String): Unit = {
+      assert(!plan.exists(_.isInstanceOf[BroadcastNestedLoopJoinExec]),
+        s"$what joins the codebook:\n${plan.head}")
+      assert(!plan.exists {
+        case b: BroadcastExchangeExec => nodes(b).exists(_.isInstanceOf[LocalTableScanExec])
+        case _ => false
+      }, s"$what broadcasts a driver relation as a job:\n${plan.head}")
+      val exprs = plan.flatMap(_.expressions)
+      val lits = exprs.flatMap(_.collect {
+        case l: Literal if codebookType(l.dataType) || CosineSimilarity.isVector(l.dataType) => l
+      })
+      assert(lits.isEmpty, s"$what inlines the codebook as a literal")
+      assert(exprs.exists(_.exists(_.isInstanceOf[CodebookHandle])),
+        s"$what reads no codebook handle:\n${plan.head}")
+    }
     val n = operators.Similarity.ivfVectors(spark, dir)
     val cb = operators.Similarity.kmeansCodebook(n, c = 8, iters = 1)
-    val round = operators.Similarity.lloydFrame(n, cb).queryExecution.executedPlan
-    val bnlj = nodes(round).collect { case j: BroadcastNestedLoopJoinExec => j }
-    assert(bnlj.size == 1, s"one codebook broadcast per round:\n$round")
-    val built = nodes(
-      if (bnlj.head.buildSide == BuildRight) bnlj.head.right else bnlj.head.left)
-    assert(built.exists(_.isInstanceOf[LocalTableScanExec]) &&
-      !built.exists(_.isInstanceOf[FileSourceScanExec]),
-      s"the broadcast side must be the driver codebook:\n$round")
-    val r = round.toString()
-    assert(!r.contains("CartesianProduct"), "unbroadcast corpus product")
-    // a Lloyd round is a nearest-centroid map + one exact-mean aggregate:
-    // no posexplode of the vectors into (cell, pos) rows
-    assert(!r.contains("Generate"), "a Lloyd round explodes the vectors")
+    val round = nodes(operators.Similarity.lloydInput(n, cb).queryExecution.executedPlan)
+    readsHandleOnly(round, "a Lloyd round")
+    assert(!round.exists(_.nodeName == "CartesianProduct"), "unbroadcast corpus product")
+    // a Lloyd round is a nearest-centroid map folded into per-cell mean
+    // buffers: no exchange in its plan, no posexplode of the vectors
+    // into (cell, pos) rows
+    assert(!round.exists(_.nodeName.contains("Exchange")), s"a Lloyd round shuffles rows:\n${round.head}")
+    assert(!round.exists(_.nodeName == "Generate"), "a Lloyd round explodes the vectors")
     // the search: candidates keep their vector, the probe rows carry the
     // query's — the corpus is read once for each, never joined back by
     // id. The one equi-join is keyed on the cell, whatever strategy
     // AQE picks for it (the probe side carries no broadcast hint).
     val search = nodes(operators.Similarity
       .ivfRanked(spark, n, c = 8, iters = 2, nprobe = 2).queryExecution.executedPlan)
+    readsHandleOnly(search, "the search")
     val scans = search.collect { case f: FileSourceScanExec => f }
     assert(scans.size == 2, s"candidates + query slice only, got ${scans.size} scans")
     val equiKeys = search.collect {
@@ -151,7 +171,11 @@ class PlanShapeSpec extends AnyFunSuite {
       case _ => false
     }, s"the search frame joins back to the vector relation: $equiKeys")
     assert(!search.exists(_.nodeName == "CartesianProduct"), "unbroadcast search product")
-    assert(!search.exists(_.nodeName == "Generate"), "the search explodes the vectors")
+    // the probes explode their ranked cells; nothing explodes a vector
+    assert(!search.exists {
+      case g: GenerateExec => g.generator.children.exists(c => CosineSimilarity.isVector(c.dataType))
+      case _ => false
+    }, "the search explodes the vectors")
   }
 
   test("q_tfidf partially aggregates tf before any exchange") {
@@ -522,7 +546,10 @@ class PlanShapeSpec extends AnyFunSuite {
     assert(formatted.contains("ReadSchema: struct<vec_id:bigint,embedding:array<float>"),
       "embeddings scan must prune to (vec_id, embedding)")
     val p = plan("q_semdedup")
-    assert(p.contains("BroadcastNestedLoopJoin"),
+    // the assignment reads the codebook's broadcast handle, printed as
+    // codebook#<broadcast id>[C cells]; no nested-loop join reaches it
+    assert(p.contains("graft_nearest(") && p.contains("codebook#") &&
+      !p.contains("BroadcastNestedLoopJoin"),
       "the codebook must broadcast into assignment")
     assert(p.contains("SortMergeJoin") || p.contains("ShuffledHashJoin"),
       "the within-cell pair join must be keyed (shuffle on cell), present")

@@ -99,11 +99,10 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     // events.ts is a NAIVE parquet timestamp: Sessions.local pins UTC, so
     // the bench runs the same workload Verify checks; it also enables the
     // storage-partitioned joins q_dsv2_spj must bench shuffle-free
-    val spark = Sessions.local(cpus.toInt)
+    val spark = Sessions.local()
     // Every unpartitioned window in the registry rides a provably
     // bounded relation (limit-100 rank lists, per-language / per-digit
     // / per-bucket counts, d-row iterate vectors — each site carries a

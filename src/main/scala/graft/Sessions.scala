@@ -17,8 +17,11 @@ import org.apache.spark.sql.SparkSession
   */
 object Sessions {
 
-  def local(cores: Int = Runtime.getRuntime.availableProcessors(),
-            appName: String = "graft"): SparkSession = {
+  /** Cores for the CLI mains' `local[N]`: `$SPARK_GRAFT_CPUS`, else 4
+    * (the bench protocol's width). Read here and nowhere else. */
+  lazy val cpus: Int = sys.env.get("SPARK_GRAFT_CPUS").fold(4)(_.toInt)
+
+  def local(cores: Int = cpus, appName: String = "graft"): SparkSession = {
     val s = SparkSession.builder()
       .master(s"local[$cores]")
       .appName(appName)

@@ -11,10 +11,9 @@ object Verify {
     // Optional extra args: dump only these queries (builder iteration aid;
     // the driver always calls with exactly two args → full dump).
     val only = args.drop(2).toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     // the same session as Bench and the tests: extensions on, UTC, and
     // the shuffle-free q_dsv2_spj plan it benches
-    val spark = Sessions.local(cpus.toInt)
+    val spark = Sessions.local()
     new java.io.File(outDir).mkdirs()
     val failures = SparkEntry.queries.toSeq
       .filter { case (name, _) => only.isEmpty || only(name) }

@@ -25,11 +25,12 @@ import org.apache.spark.unsafe.types.UTF8String
   * // zone columns + _change_type + _commit_version
   * }}}
   *
-  * Offsets are GENERATIONS (the commit log's ordinals), so a
-  * micro-batch is a contiguous generation range and replay-after-crash
-  * re-derives the identical change set from the retained log —
-  * exactly-once without any per-row bookkeeping. Two planning shapes,
-  * chosen per generation ([[DirSinkLog.changesBetween]]):
+  * Offsets are GENERATIONS ([[DirSinkGenOffset]], shared with the row
+  * tail), so a micro-batch is a contiguous generation range and
+  * replay-after-crash re-derives the identical change set from the
+  * retained log — exactly-once without any per-row bookkeeping. Two
+  * planning shapes, chosen per generation
+  * ([[DirSinkLog.changesBetween]]):
   *
   *   - APPEND generations (the overwhelming majority in a landing
   *     zone) plan their added files directly as file partitions —
@@ -53,9 +54,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * Retention and schema discipline are [[ChangeFeed]]'s: a range
   * behind vacuum retention fails loudly; a schema change inside one
   * micro-batch's range is refused (restart the consumer from the
-  * evolve generation). `Trigger.AvailableNow` caps at the head
-  * captured at query start, the same pacing discipline as the row
-  * tail. */
+  * evolve generation). Head, pacing and `Trigger.AvailableNow` are
+  * the row tail's ([[DirSinkGenStream]]). */
 object DirSinkCdf {
   val OptionKey = "readChangeFeed"
   val StartKey = "startingVersion"
@@ -98,12 +98,6 @@ class DirSinkCdfTable(path: String, zoneSchema: StructType,
     }
 }
 
-/** Generation offset: the last CONSUMED generation; a batch covers
-  * `(start, end]`. */
-case class DirSinkCdfOffset(gen: Long) extends StreamOffset {
-  override def json(): String = s"""{"gen":$gen}"""
-}
-
 /** One staged diff file of a rewrite generation: net-change rows as a
   * parquet file under the zone's `_cdf-scratch`, read back
   * executor-side — the driver only ever holds the file NAME. */
@@ -117,50 +111,18 @@ case class DirSinkCdfFilePartition(base: DirSinkFilePartition,
                                    tsMs: Option[Long])
     extends InputPartition
 
+/** Admission (`option("maxGensPerTrigger", k)`): a feed started deep
+  * in a zone's history replays it in bounded, individually
+  * checkpointed ranges of k generations instead of one catch-up
+  * mega-batch. */
 class DirSinkCdfStream(path: String, zoneSchema: StructType,
                        startingVersion: Option[Long],
                        maxGensPerTrigger: Option[Int] = None,
                        checkpointLocation: String = "")
-    extends MicroBatchStream
-    with org.apache.spark.sql.connector.read.streaming.SupportsTriggerAvailableNow {
-  import org.apache.spark.sql.connector.read.streaming.{ReadLimit, ReadMaxFiles}
+    extends DirSinkGenStream(path, maxGensPerTrigger) {
 
-  /** ADMISSION CONTROL (`option("maxGensPerTrigger", k)`): a tail
-    * started deep in a zone's history replays it in bounded,
-    * individually checkpointed generation ranges instead of one
-    * catch-up mega-batch — the same pacing discipline as the row
-    * tail's maxFilesPerTrigger (ReadMaxFiles reused: a "file" here is
-    * a generation). */
-  override def getDefaultReadLimit: ReadLimit =
-    maxGensPerTrigger.map(k => ReadLimit.maxFiles(k))
-      .getOrElse(ReadLimit.allAvailable())
-
-  override def latestOffset(start: StreamOffset,
-                            limit: ReadLimit): StreamOffset = {
-    val h = head
-    if (h > maxSeen) maxSeen = h
-    val avail = availableNowEnd.fold(maxSeen)(math.min(maxSeen, _))
-    val s = start.asInstanceOf[DirSinkCdfOffset].gen
-    val e = limit match {
-      case m: ReadMaxFiles => math.min(avail, s + m.maxFiles())
-      case _ => avail
-    }
-    DirSinkCdfOffset(math.max(s, e))
-  }
-
-  override def reportLatestOffset(): StreamOffset = latestOffset()
-
-  private def head: Long = DirSink.currentGen(path).getOrElse(
-    throw new IllegalArgumentException(
-      s"no committed zone under $path — no change feed to tail"))
-
-  private var availableNowEnd: Option[Long] = None
-  override def prepareForTriggerAvailableNow(): Unit =
-    availableNowEnd = Some(head)
-
-  // monotonic high-water mark, same discipline as the row tail: a
-  // probe racing a publish must never report a regressed offset
-  private var maxSeen = Long.MinValue
+  override protected def admit(start: Long, avail: Long, k: Int): Long =
+    math.min(avail, start + k)
 
   /** Default start = the head AT STREAM START: the feed delivers
     * changes committed after the consumer subscribed (Delta's
@@ -168,21 +130,7 @@ class DirSinkCdfStream(path: String, zoneSchema: StructType,
     * history from generation g inclusive — as far back as retention
     * keeps the log. */
   override def initialOffset(): StreamOffset =
-    DirSinkCdfOffset(startingVersion.map(_ - 1).getOrElse(head))
-
-  override def latestOffset(): StreamOffset = {
-    val h = head
-    if (h > maxSeen) maxSeen = h
-    DirSinkCdfOffset(availableNowEnd.fold(maxSeen)(math.min(maxSeen, _)))
-  }
-
-  override def deserializeOffset(json: String): StreamOffset =
-    DirSinkCdfOffset(
-      json.replaceAll("[^0-9-]", "") match {
-        case "" => throw new IllegalArgumentException(
-          s"malformed CDF offset: $json")
-        case s => s.toLong
-      })
+    DirSinkGenOffset(startingVersion.map(_ - 1).getOrElse(head))
 
   // the last planned range and its partitions: Spark may plan one
   // micro-batch more than once, and each planning would re-run both
@@ -192,8 +140,8 @@ class DirSinkCdfStream(path: String, zoneSchema: StructType,
 
   override def planInputPartitions(start: StreamOffset,
                                    end: StreamOffset): Array[InputPartition] = {
-    val range = (start.asInstanceOf[DirSinkCdfOffset].gen,
-      end.asInstanceOf[DirSinkCdfOffset].gen)
+    val range = (start.asInstanceOf[DirSinkGenOffset].gen,
+      end.asInstanceOf[DirSinkGenOffset].gen)
     planned.collect { case (`range`, parts) => parts }.getOrElse {
       val parts = planRange(range._1, range._2)
       planned = Some(range -> parts)

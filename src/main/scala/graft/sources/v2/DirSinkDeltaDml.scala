@@ -71,7 +71,7 @@ class DirSinkDeltaRowLevelOperation(path: String, schema: StructType,
     Array.empty // the row id alone carries the coordinate
 
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new DirSinkScanBuilder(path, schema, None, None, None, None,
+    new DirSinkScanBuilder(path, schema,
       planListener = Some((gen, _) => plannedGen = Some(gen)))
 
   override def newWriteBuilder(info: LogicalWriteInfo): DeltaWriteBuilder =

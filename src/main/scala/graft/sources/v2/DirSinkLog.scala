@@ -20,10 +20,10 @@ import org.apache.spark.sql.types.StructType
   *   - `<gen %020d>.commit` — ONE small file per publish, named by the
   *     generation counter (the existing `#gen` header is the segment
   *     ordinal). Body: the schema DDL line, the FULL logical header
-  *     (small and bounded: gen/emax/format/bucket/bloom/checks/remap +
+  *     (small and bounded: gen/emax/format/bucket/bloom/checks +
   *     the capped history), then either DELTA lines (`+<file line>`
   *     adds appended at the tail, `-<name>` removes — O(delta) bytes)
-  *     or, for history-replacing commits (overwrite/compact/DROP
+  *     or, for history-replacing commits (overwrite/RESTORE/DROP
   *     COLUMN, marked `#snap=1`), the complete file list.
   *   - `<gen %020d>.checkpoint` — the full state at that generation in
   *     the classic manifest format, written every
@@ -49,10 +49,10 @@ import org.apache.spark.sql.types.StructType
   * RETAINED-GENERATION TIME TRAVEL falls out of the log: any
   * generation whose base + contiguous segment suffix still exist is
   * reconstructible ([[at]]), so `VERSION AS OF g` survives compaction,
-  * DELETE, and row-level DML — the rewitten-history caveat the prefix
-  * snapshots carried is gone for as long as retention keeps the
+  * DELETE, and row-level DML for as long as retention keeps the
   * segments (vacuum's cutoff governs both segments and the superseded
-  * data files they reference; see [[DirSink.vacuum]]).
+  * data files they reference; see [[DirSink.vacuum]]). The streams
+  * address the same generations ([[DirSinkGenOffset]]).
   *
   * The log is the zone's only history: a directory holding a bare
   * `_GRAFT_COMMIT` and no log is refused ([[DirSink.readManifestRaw]]).
@@ -71,7 +71,7 @@ object DirSinkLog {
   val CheckpointInterval = 10L
 
   /** The snapshot marker header: this segment's lines are the COMPLETE
-    * file list (overwrite/compact/DROP COLUMN/CTAS-replace), replacing
+    * file list (overwrite/RESTORE/DROP COLUMN/CTAS-replace), replacing
     * the parent state instead of patching it. Stripped from the
     * logical header on replay. */
   private val SnapKey = "snap"
@@ -536,20 +536,44 @@ object DirSinkLog {
     cache.remove(f.makeQualified(new Path(path)).toString)
   }
 
-  /** One generation's FILE-level change set, for the change-data-feed:
-    * which committed files arrived and which left at `gen`, plus the
-    * schema the generation was written under. Snapshot segments
-    * (overwrite/compact/replace) diff against the parent state — their
-    * removes are every parent file not carried forward. */
+  /** One generation's FILE-level change set, for the change feed and
+    * the row tail: which committed files arrived and which left at
+    * `gen`, the schema the generation was written under, the commit's
+    * history op label ([[DirSink.withHistory]]) and whether it was a
+    * history-replacing snapshot segment (overwrite, RESTORE, DROP
+    * COLUMN, REPLACE). Snapshot segments diff against the parent state
+    * — their removes are every parent file not carried forward. */
   private[graft] case class GenChange(gen: Long, ts: Option[Long],
                                       schemaDdl: String,
+                                      op: String,
+                                      snapshot: Boolean,
                                       addNames: Seq[String],
-                                      removeNames: Seq[String])
+                                      removeNames: Seq[String]) {
+    /** Does this commit drop or rewrite rows a reader has seen?
+      * Appends and metadata-only commits do not, and neither does
+      * row-preserving maintenance ([[DirSink.RowPreservingOps]]);
+      * every other rewrite does. */
+    def rewritesRows: Boolean =
+      !DirSink.RowPreservingOps(op) && (snapshot || removeNames.nonEmpty)
+  }
+
+  /** The commit's own history record's op label (the last `#hist`
+    * entry, written at this generation); empty when it has none. */
+  private def opOf(header: Map[String, String], gen: Long): String =
+    DirSink.historyOf(header).lastOption.filter(_.gen == gen)
+      .fold("")(_.op)
+
+  private def changeOf(c: Seg, p: ParsedSeg, adds: Seq[String],
+                       removes: Seq[String]): GenChange =
+    GenChange(c.gen,
+      p.header.get(TsKey).flatMap(s => scala.util.Try(s.toLong).toOption),
+      p.schema.toDDL, opOf(p.header, c.gen), p.snap, adds, removes)
 
   /** The per-generation change sets in (fromExclusive, toInclusive] —
-    * the raw material of [[ChangeFeed]]. Requires `fromExclusive` (or
-    * the log's birth, when fromExclusive < 0) to still be
-    * reconstructible: snapshot diffs need the parent state. */
+    * the raw material of [[ChangeFeed]] and of both micro-batch
+    * streams. Every commit segment in the range must still be retained
+    * (vacuum truncates from the oldest end); the parent state is
+    * replayed only when a snapshot segment needs it for its diff. */
   private[v2] def changesBetween(path: String, fromExclusive: Long,
                                  toInclusive: Long): Seq[GenChange] = {
     val f = DirSink.fs(path)
@@ -560,44 +584,61 @@ object DirSinkLog {
     if (toInclusive > head) throw new IllegalArgumentException(
       s"endingVersion $toInclusive exceeds zone $path's head " +
         s"generation $head")
-    // parent name-state at fromExclusive (empty before the log's
-    // birth; a generation behind retention fails in at() — loudly)
-    var names: Seq[String] =
-      if (fromExclusive < 0) Seq.empty
-      else at(path, fromExclusive).lines.map(l => DirSink.parseEntry(l).name)
     val commits = segs.filter(s => !s.ckpt && s.gen > fromExclusive &&
       s.gen <= toInclusive)
-    // a feed FROM THE BIRTH (fromExclusive < 0) needs generation 0's
-    // commit segment itself: if vacuum retention truncated it, the
-    // checkpoint-anchored suffix could only yield the changes SINCE
-    // the anchor — silently missing every row that survived into it.
-    // Fail loudly instead (the scaladoc's promise).
-    if (fromExclusive < 0 && commits.headOption.forall(_.gen != 0L))
+    // every generation of the range needs its own commit segment: a
+    // range reaching behind vacuum retention (including a feed from the
+    // birth whose generation 0 was truncated) would otherwise silently
+    // yield only the changes since the oldest retained segment
+    val missing = (math.max(fromExclusive + 1, 0L) to toInclusive)
+      .diff(commits.map(_.gen))
+    if (missing.nonEmpty)
       throw new IllegalArgumentException(
-        s"change feed from generation 0 of zone $path is not " +
-          s"reconstructible: the oldest retained commit segment is " +
+        s"generation ${missing.head} of zone $path is not " +
+          "reconstructible: the oldest retained commit segment is " +
           s"${commits.headOption.map(_.gen).getOrElse(-1L)} (vacuum " +
-          "retention truncated the birth) — start the consumer from a " +
+          "retention truncated the range) — start the consumer from a " +
           "retained generation instead")
+    // parent name-state (empty before the log's birth), replayed on the
+    // first snapshot that needs it and carried forward from there
+    var names: Option[Seq[String]] =
+      if (fromExclusive < 0) Some(Seq.empty) else None
     commits.map { c =>
       val p = parseSegment(readText(f, c.status.getPath), ckpt = false)
-      val ts = p.header.get(TsKey).flatMap(s =>
-        scala.util.Try(s.toLong).toOption)
-      val change =
-        if (p.snap) {
-          val next = p.lines.map(l => DirSink.parseEntry(l).name)
-          val nextSet = next.toSet
-          val gone = names.filterNot(nextSet)
-          val arrived = next.filterNot(names.toSet)
-          names = next
-          GenChange(c.gen, ts, p.schema.toDDL, arrived, gone)
-        } else {
-          val goneSet = p.removes.toSet
-          val adds = p.lines.map(l => DirSink.parseEntry(l).name)
-          names = names.filterNot(goneSet) ++ adds
-          GenChange(c.gen, ts, p.schema.toDDL, adds, p.removes)
-        }
-      change
+      if (p.snap) {
+        val parent = names.getOrElse(
+          at(path, c.gen - 1).lines.map(l => DirSink.parseEntry(l).name))
+        val next = p.lines.map(l => DirSink.parseEntry(l).name)
+        val nextSet = next.toSet
+        val parentSet = parent.toSet
+        names = Some(next)
+        changeOf(c, p, next.filterNot(parentSet), parent.filterNot(nextSet))
+      } else {
+        val goneSet = p.removes.toSet
+        val adds = p.lines.map(l => DirSink.parseEntry(l).name)
+        names = names.map(_.filterNot(goneSet) ++ adds)
+        changeOf(c, p, adds, p.removes)
+      }
     }
+  }
+
+  /** Where a fresh row tail takes its first snapshot: the newest
+    * generation at or below `upTo` whose commit rewrote rows
+    * ([[GenChange.rewritesRows]] — a tail cannot stream through it), or
+    * the oldest generation the retained log can replay, whichever is
+    * newer. Scans commit segments newest first and stops at the first
+    * rewrite; snapshot diffs are never computed (a snapshot segment
+    * rewrites rows unless its op is row-preserving). */
+  private[v2] def tailFloor(path: String, upTo: Long): Long = {
+    val f = DirSink.fs(path)
+    val segs = listSegs(f, path)
+    if (segs.isEmpty) throw new IllegalArgumentException(
+      s"no committed zone under $path — nothing to tail")
+    val oldest = segs.head.gen
+    segs.filter(s => !s.ckpt && s.gen > oldest && s.gen <= upTo)
+      .reverseIterator.find { c =>
+        val p = parseSegment(readText(f, c.status.getPath), ckpt = false)
+        changeOf(c, p, Nil, p.removes).rewritesRows
+      }.fold(oldest)(_.gen)
   }
 }

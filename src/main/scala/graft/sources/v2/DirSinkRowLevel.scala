@@ -61,7 +61,7 @@ class DirSinkRowLevelOperation(path: String, schema: StructType,
       .column(DirSink.FileNameCol))
 
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new DirSinkScanBuilder(path, schema, None, None, None, None,
+    new DirSinkScanBuilder(path, schema,
       planListener = Some((gen, files) =>
         plannedGroups = Some((gen, files))),
       fileFilterOnly = true)

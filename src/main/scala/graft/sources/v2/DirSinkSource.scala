@@ -9,7 +9,7 @@ import org.apache.spark.sql.connector.catalog.{SupportsRead, SupportsWrite, Tabl
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.connector.write._
-import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, ReadLimit, ReadMaxFiles, SupportsAdmissionControl, Offset => StreamOffset}
+import org.apache.spark.sql.connector.read.streaming.MicroBatchStream
 import org.apache.spark.sql.connector.write.streaming.{StreamingDataWriterFactory, StreamingWrite}
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
@@ -47,10 +47,11 @@ import org.apache.spark.unsafe.types.UTF8String
   * its parent and publishes under [[DirSink.withZoneLock]], so
   * concurrent appenders serialize and both land. Commits that plan
   * outside the lock (copy-on-write and merge-on-read DML, DELETE,
-  * OPTIMIZE's bin-packing, REORG PURGE) re-verify the generation they
-  * planned against through [[DirSink.publishAtGen]]; a losing commit
-  * fails loudly with a `ConcurrentModificationException` (DELETE
-  * retries itself; UPDATE/MERGE callers re-run the statement, see
+  * compaction, OPTIMIZE's bin-packing, REORG PURGE) re-verify the
+  * generation they planned against through [[DirSink.publishAtGen]];
+  * a losing commit fails loudly with a
+  * `ConcurrentModificationException` (DELETE retries itself;
+  * UPDATE/MERGE callers re-run the statement, see
   * [[DirSink.withDmlRetry]]) and never drops the winner's files.
   * ZoneConcurrencySpec pins the contract. Every committer shares one
   * commit path (promote, manifest line, append-schema law, layout
@@ -72,7 +73,7 @@ import org.apache.spark.unsafe.types.UTF8String
   *   .mode("append" | "overwrite").save()            // batch write
   * spark.read.format(FMT).option("path", p).load()   // batch read
   * spark.read.format(FMT).option("path", p)
-  *   .option("asOfOffset", k).load()                 // snapshot-as-of
+  *   .option("asOfVersion", g).load()                // generation g
   * df.writeStream.format(FMT).option("path", p)
   *   .option("schema", "<ddl>")                      // fresh-zone boot
   *   .outputMode("append" | "complete").start()      // streaming write
@@ -500,8 +501,8 @@ object DirSink {
   // ------------------------------------------------ the one commit path
   // Every committer (batch, streaming epoch, quarantine, copy-on-write
   // and merge-on-read DML, staged CTAS) runs the same steps; each keeps
-  // only its own policy (zero-row rule, epoch replay, `#txn`, remap,
-  // gen verification, existence check).
+  // only its own policy (zero-row rule, epoch replay, `#txn`, gen
+  // verification, existence check).
 
   /** Promote one write's committed task files from `_staging/<queryId>/`
     * into the zone root under GLOBALLY UNIQUE final names
@@ -690,9 +691,6 @@ object DirSink {
     *               ([[epochReplayed]]): a recovering writer can never
     *               re-commit (duplicate) an epoch that maintenance
     *               erased the evidence of
-    *   - `remap` — compaction offset remaps (`old:new` pairs, comma
-    *               separated): lets a streaming tail that had consumed
-    *               exactly `old` files resume at `new` after a compact
     * Unknown header keys round-trip untouched (forward compatible). */
   /** `ckptBase`/`recentAdds` locate the distributed-prune inputs when
     * this state was replayed from the commit log: the generation of
@@ -794,22 +792,15 @@ object DirSink {
     * parent's full committed-epoch high-water mark (header ∪ line
     * epochs — so a rewrite that DROPS streaming-committed lines still
     * remembers their epochs) max any `newEpoch` being committed now. */
-  /** `truncate = true` additionally DROPS the compaction remap chain:
-    * an overwrite rewrites history, so pre-overwrite offset remaps are
-    * meaningless — keeping them could silently migrate a stale
-    * checkpoint that coincidentally sits on an old compaction boundary
-    * into the unrelated new history. Without the remap the stale tail
-    * falls back to the shrink fail-fast (the epoch mark still carries). */
   private[v2] def nextHeader(parent: Option[Manifest],
                              newEpoch: Option[Long] = None,
                              truncate: Boolean = false): Map[String, String] = {
     val base = parent.map(_.header).getOrElse(Map.empty[String, String])
     val emax = (parent.flatMap(epochMaxOf) ++ newEpoch).reduceOption(_ max _)
     // an overwrite's fresh schema speaks physical == logical again:
-    // the column mapping (like the remap chain and the deletion-vector
-    // flag) describes REPLACED data
-    (if (truncate) base - "remap" - ColMapKey - DirSinkDv.HeaderKey
-     else base) ++
+    // the column mapping (like the deletion-vector flag) describes
+    // REPLACED data
+    (if (truncate) base - ColMapKey - DirSinkDv.HeaderKey else base) ++
       Map("gen" -> parent.map(_.gen + 1).getOrElse(0L).toString) ++
       emax.map(e => "emax" -> e.toString)
   }
@@ -819,16 +810,28 @@ object DirSink {
     * header (`|`-separated, newest last, capped at [[HistoryCap]] —
     * every commit segment carries the full header, so an unbounded
     * history would grow every commit's write cost linearly with age). This
-    * makes time-travel targets DISCOVERABLE: a history row's `n_files`
-    * is exactly the `VERSION AS OF` offset (manifest-prefix count) and
-    * its timestamp the `TIMESTAMP AS OF` target — no more reading
-    * the commit log by hand. Surfaced as [[DirSink.history]] and as
-    * the catalog's `<table>$history` metadata table
+    * makes time-travel targets DISCOVERABLE: a history row's `gen` is
+    * exactly the `VERSION AS OF` generation (`asOfVersion`), its
+    * `n_files` the live file count that generation left, and its
+    * timestamp the `TIMESTAMP AS OF` target — no more reading the
+    * commit log by hand. Surfaced as [[DirSink.history]] and as the
+    * catalog's `<table>$history` metadata table
     * ([[GraftCatalog.loadTable]]). */
   private val HistoryCap = 64
 
   case class HistoryEntry(gen: Long, tsMillis: Long, op: String,
                           nFiles: Long)
+
+  /** History op labels of the maintenance rewrites that keep every
+    * live row: whole-zone compaction, OPTIMIZE's bin-packing and REORG
+    * PURGE. A row tail passes their generations without emitting
+    * anything ([[DirSinkLog.GenChange.rewritesRows]]); every other
+    * rewrite fails it. */
+  private[v2] val CompactOp = "compact"
+  private[v2] val OptimizeSmallOp = "optimize-small"
+  private[v2] val ReorgPurgeOp = "reorg-purge"
+  private[v2] val RowPreservingOps = Set(CompactOp, OptimizeSmallOp,
+    ReorgPurgeOp)
 
   /** Header with this publish recorded. `op` is sanitized so the
     * record's field/entry separators survive round-trip. */
@@ -847,12 +850,15 @@ object DirSink {
     * before history landed surface only the publishes since (the cap
     * bounds it regardless). */
   def history(path: String): Seq[HistoryEntry] =
-    readManifestRaw(path).toSeq.flatMap(_.header.get("hist").toSeq)
-      .flatMap(_.split("\\|").toSeq).flatMap { e =>
-        val p = e.split(":")
-        scala.util.Try(HistoryEntry(p(0).toLong, p(1).toLong, p(2),
-          p(3).toLong)).toOption
-      }
+    readManifestRaw(path).toSeq.flatMap(m => historyOf(m.header))
+
+  /** The `#hist` records of one header, oldest first. */
+  private[v2] def historyOf(header: Map[String, String]): Seq[HistoryEntry] =
+    header.get("hist").toSeq.flatMap(_.split("\\|").toSeq).flatMap { e =>
+      val p = e.split(":")
+      scala.util.Try(HistoryEntry(p(0).toLong, p(1).toLong, p(2),
+        p(3).toLong)).toOption
+    }
 
   /** CALLER-SIDE bounded retry for row-level DML (`UPDATE`/`MERGE`
     * through the catalog): Spark owns a ReplaceData plan's execution,
@@ -991,34 +997,35 @@ object DirSink {
     }
 
   /** Snapshot resolution for a scan — ONE definition shared by the
-    * batch scan and the aggregate-pushdown decision. Three vocabularies:
+    * batch scan and the aggregate-pushdown decision. Two vocabularies,
+    * both GENERATIONS of the commit log (the streams' offsets too):
     *
-    *   - `asOfVersion` g (GENERATION time travel): the state at commit
-    *     log generation g, replayed via [[DirSinkLog.at]] — survives
-    *     history-rewriting maintenance while retention keeps g;
+    *   - `asOfVersion` g: the state at generation g, replayed via
+    *     [[DirSinkLog.at]] — survives history-rewriting maintenance
+    *     while retention keeps g;
     *   - `asOfTimestamp` t: resolved to the newest generation committed
     *     at or before t ([[DirSinkLog.genAsOfTimestamp]]), so it, too,
     *     survives rewrites; a t predating every retained commit is an
     *     error — silently returning an empty corpus would make a
-    *     mis-clocked training cut unfindable;
-    *   - `asOfOffset` k: the file-prefix rule — the streaming tail's
-    *     offset vocabulary ([[sliceEntries]]).
+    *     mis-clocked training cut unfindable.
     *
     * Returns the resolved manifest (schema/header AT the snapshot — a
     * pre-evolution snapshot reads with its own columns and layout)
-    * plus the visible entry list. */
-  private[v2] def resolveState(path: String, asOfOffset: Option[Int],
+    * plus the visible entry list, restricted to `onlyFiles` (the
+    * internal `files` option of the scratch rewrites) when given. */
+  private[v2] def resolveState(path: String,
                                asOfTimestamp: Option[Long],
                                asOfVersion: Option[Long],
                                onlyFiles: Option[Set[String]])
       : (Manifest, Seq[FileEntry]) = {
-    val (m, offset) = (asOfVersion, asOfTimestamp) match {
-      case (Some(g), _) => (DirSinkLog.at(path, g), None)
+    val m = (asOfVersion, asOfTimestamp) match {
+      case (Some(g), _) => DirSinkLog.at(path, g)
       case (None, Some(t)) =>
-        (DirSinkLog.at(path, DirSinkLog.genAsOfTimestamp(path, t)), None)
-      case (None, None) => (currentOrThrow(path), asOfOffset)
+        DirSinkLog.at(path, DirSinkLog.genAsOfTimestamp(path, t))
+      case (None, None) => currentOrThrow(path)
     }
-    (m, sliceEntries(path, m.lines.map(parseEntry), offset, onlyFiles))
+    val all = m.lines.map(parseEntry)
+    (m, onlyFiles.fold(all)(names => all.filter(e => names(e.name))))
   }
 
   /** The zone's current state, or an error when nothing was committed. */
@@ -1027,26 +1034,6 @@ object DirSink {
       throw new IllegalArgumentException(
         s"no ${ManifestName} manifest or commit log under $path — " +
           "nothing was committed"))
-
-  /** The asOfOffset/onlyFiles slice of a zone's entry list.
-    *
-    * `asOfOffset` k: the manifest's file list is append-only, so its
-    * first k lines ARE the zone as a tail reader had consumed it at
-    * stream offset k. Reading past the current size is an error (an
-    * offset from a different zone), not a silent truncation. */
-  private def sliceEntries(path: String, all: Seq[FileEntry],
-                           asOfOffset: Option[Int],
-                           onlyFiles: Option[Set[String]]): Seq[FileEntry] = {
-    val sliced = asOfOffset.fold(all) { k =>
-      if (k > all.size) throw new IllegalArgumentException(
-        s"asOfOffset $k exceeds the zone's ${all.size} committed files " +
-          s"under $path — offsets name a PREFIX of this zone's history")
-      all.take(k)
-    }
-    // `files` option (internal surface, used by the copy-on-write
-    // DELETE): restrict the scan to the named committed files
-    onlyFiles.fold(sliced)(names => sliced.filter(e => names(e.name)))
-  }
 
   /** Epochs whose lines are still IN the manifest (lineage view). */
   def committedEpochs(path: String): Set[Long] =
@@ -1444,8 +1431,8 @@ object DirSink {
   /** RESTORE — Delta's `RESTORE TABLE t TO VERSION AS OF g`: make
     * generation g the zone's HEAD again by publishing ONE snapshot
     * commit carrying g's file list, schema, and layout headers
-    * (format / bucket / bloom / checks / `#colmap` / `remap` all
-    * travel back — the era IS the state), as far back as vacuum
+    * (format / bucket / bloom / checks / `#colmap` all travel back —
+    * the era IS the state), as far back as vacuum
     * retention keeps g reconstructible. Nothing is copied or
     * rewritten: g's files were never deleted while g is retained (the
     * vacuum live-set theorem), so restore is an O(file-list) metadata
@@ -1462,10 +1449,10 @@ object DirSink {
     *     double-publish that epoch), and the `#hist` publish history
     *     is the head's plus this restore, not the era's shorter copy.
     *
-    * Restoring to the current generation is a no-op. Running row
-    * tails see the manifest change shape and fail fast — the same
-    * restart discipline as OPTIMIZE (StreamRun scenario G). Returns
-    * the new head generation. */
+    * Restoring to the current generation is a no-op. A running row
+    * tail fails at the restore's generation (history replaced under
+    * it) and restarts from a fresh checkpoint. Returns the new head
+    * generation. */
   def restore(path: String, gen: Long): Long = withZoneLock(path) {
     val head = currentOrThrow(path)
     if (head.gen == gen) head.gen
@@ -1509,9 +1496,8 @@ object DirSink {
     * layout, bloom coverage, CHECK constraints, per-file stats/bytes/
     * epoch fields (the `#emax` law survives — a replayed epoch stays
     * replayed on the clone too). What resets: history (fresh `#hist`
-    * with a `clone` record; provenance in `#clonesrc=<src>@<gen>`),
-    * the generation counter (the clone's own log starts at 0), and
-    * the compaction remap chain (it describes the SOURCE's history).
+    * with a `clone` record; provenance in `#clonesrc=<src>@<gen>`) and
+    * the generation counter (the clone's own log starts at 0).
     * The clone declares the `absolute-paths` reader feature
     * ([[DirSinkProtocol]]) so a build that resolves names differently
     * refuses instead of misreading.
@@ -1553,7 +1539,7 @@ object DirSink {
       }
       val declared = m.header.get(DirSinkProtocol.ReaderKey)
         .toSet[String].flatMap(_.split(",")).filter(_.nonEmpty)
-      val header = (m.header - "hist" - "remap") +
+      val header = (m.header - "hist") +
         ("gen" -> "0") + ("clonesrc" -> s"$src@${m.gen}") +
         (DirSinkProtocol.ReaderKey ->
           (declared + "absolute-paths").toSeq.sorted.mkString(","))
@@ -1633,24 +1619,6 @@ object DirSink {
       DirSinkLog.SnapshotCommit(lines), "dropcol")
   }
 
-  /** COMPACT (OPTIMIZE) — the small-files sweep of the table format:
-    * rewrite the zone's committed files into `targetFiles` larger ones
-    * through the connector's own read + overwrite-write paths, so the
-    * result is ONE atomic manifest swap (readers see the old generation
-    * until the instant the new one publishes; a crash mid-compact
-    * leaves the old generation fully readable and the staging debris
-    * for [[vacuum]]). With `clusterBy` the rewrite RANGE-CLUSTERS and
-    * sorts on those columns — each output file covers a tight key
-    * range, so the per-file min/max stats ([[DirSinkStats]]) turn every
-    * later range predicate into file-level skipping: compaction is what
-    * MAKES data skipping effective on a zone built from thousands of
-    * unordered micro-batch appends (Delta `OPTIMIZE … ZORDER BY`'s
-    * one-dimensional core). At 100 TB the streaming landing zone runs
-    * this on a schedule; the single-writer-per-directory constraint
-    * applies (don't compact under a live appender), and `asOfOffset`
-    * snapshots are REWRITTEN HISTORY after a compact — record the
-    * compaction in the deployment's catalog the way any
-    * manifest-rewriting OPTIMIZE is. */
   /** N-dimensional Morton interleave as PURE integer SQL arithmetic
     * (the 2-D form Layouts proved, generalized): each dim contributes
     * bit i at position `dims·i + j`. `bits·dims ≤ 62` keeps the z-value
@@ -1757,50 +1725,43 @@ object DirSink {
     }
   }
 
+  /** COMPACT (OPTIMIZE) — the small-files sweep of the table format:
+    * rewrite the zone's committed files into `targetFiles` larger ones
+    * through the scratch rewrite every maintenance commit shares
+    * ([[rewriteFiles]]): ONE gen-verified delta commit, labelled
+    * [[CompactOp]], swaps every file out and the rewritten ones in
+    * (readers see the old generation until the instant the new one
+    * publishes; a crash mid-compact leaves the old generation fully
+    * readable and the scratch debris for [[vacuum]]). A commit that
+    * lands between the rewrite's read and its publish fails the
+    * compaction with a `ConcurrentModificationException` — it never
+    * drops the appended rows. With `clusterBy` the rewrite
+    * RANGE-CLUSTERS and sorts on those columns — each output file
+    * covers a tight key range, so the per-file min/max stats
+    * ([[DirSinkStats]]) turn every later range predicate into
+    * file-level skipping: compaction is what MAKES data skipping
+    * effective on a zone built from thousands of unordered
+    * micro-batch appends (Delta `OPTIMIZE … ZORDER BY`'s
+    * one-dimensional core). With `zorderBy` the rewrite clusters on a
+    * Morton z-value instead ([[zShape]]). The compaction is
+    * row-preserving, so a live row tail passes its generation without
+    * emitting anything, and pre-compact generations stay
+    * time-travelable through the retained log. */
   def compact(spark: org.apache.spark.sql.SparkSession, path: String,
               targetFiles: Int, clusterBy: Seq[String] = Nil,
               zorderBy: Seq[String] = Nil): Unit = {
     require(clusterBy.isEmpty || zorderBy.isEmpty,
       "compact takes clusterBy OR zorderBy, not both")
-    val fmt = classOf[DirSinkSource].getName
-    val parent0 = readManifestRaw(path)
-    val before = parent0.map(_.lines.size).getOrElse(0)
-    // the overwrite below goes through the truncate path, which DROPS
-    // the remap header (user overwrites rewrite history); a compaction
-    // is row-preserving, so ITS chain must survive — captured here and
-    // restored in the remap publish
-    val priorChain = parent0.flatMap(_.header.get("remap"))
-    val df = spark.read.format(fmt).option("path", path).load()
-    // MULTI-DIMENSIONAL clustering (Delta's OPTIMIZE ZORDER): scale each
-    // dimension linearly to 16 bits against its global bounds (one agg
-    // pass), interleave to a z-value, range-partition AND sort on it —
-    // every output file covers a tight HYPER-RECTANGLE, so the per-file
-    // min/max stats skip on predicates over ANY of the dimensions, not
-    // just a 1-D sort's leading column. Linear scaling (not rank) is
-    // the standard trade: heavy skew dilutes the grid but never breaks
-    // correctness — the stats stay exact bounds of whatever landed.
-    val shaped =
+    val parent = currentOrThrow(path)
+    val names = parent.lines.map(parseEntry(_).name)
+    rewriteFiles(spark, path, parent, CompactOp, "compact", names,
+      names) { df =>
       if (zorderBy.nonEmpty) zShape(df, df, zorderBy, targetFiles)
       else if (clusterBy.nonEmpty)
         df.repartitionByRange(targetFiles, clusterBy.map(df.col): _*)
           .sortWithinPartitions(clusterBy.map(df.col): _*)
       else df.repartition(targetFiles)
-    // the OFFSET REMAP (`before` files → `after` files) publishes IN the
-    // overwrite commit itself (one atomic manifest swap — see the
-    // truncate path of [[DirSinkBatchWrite.commit]]): the new side is
-    // the commit's OWN output file count, so a concurrent append landing
-    // after the overwrite can never inflate it and silently migrate a
-    // boundary checkpoint past the appended files. A streaming tail
-    // whose checkpoint had consumed EXACTLY the whole pre-compact zone
-    // resumes at the post-compact count — checkpoint migration across
-    // maintenance instead of scenario G's terminal fail-fast. (A tail
-    // stopped mid-history still fails: its unread suffix was rewritten,
-    // and exactly-once can't survive that; quiesce-then-compact is the
-    // documented recipe.)
-    shaped.write.format(fmt).option("path", path)
-      .option("compactRemapFrom", before.toString)
-      .option("compactRemapChain", priorChain.getOrElse(""))
-      .mode(org.apache.spark.sql.SaveMode.Overwrite).save()
+    }
   }
 
   /** INCREMENTAL OPTIMIZE (bin-packing) — rewrite ONLY the committed
@@ -1820,10 +1781,8 @@ object DirSink {
     * packed-in — big files' lines (and their stats) never re-serialize,
     * and pre-optimize generations stay time-travelable through the
     * retained log. Files without a recorded size (pre-`b=` lines) count
-    * as small — rewriting them records their size. A tail's
-    * checkpoint: the same rewritten-history rule as DELETE (quiesce or
-    * restart; no remap is recorded — only whole-zone compaction has
-    * the exactly-consumed-boundary migration argument).
+    * as small — rewriting them records their size. The rewrite is
+    * row-preserving ([[OptimizeSmallOp]]): a live row tail passes it.
     *
     * Returns (files rewritten, files created). */
   def compactSmall(spark: org.apache.spark.sql.SparkSession, path: String,
@@ -1846,7 +1805,7 @@ object DirSink {
     val outFiles = math.max(1,
       math.floor(smallBytes.toDouble / minFileBytes).toInt)
     val names = small.map(_.name)
-    val created = rewriteFiles(spark, path, parent, "OPTIMIZE-SMALL",
+    val created = rewriteFiles(spark, path, parent, OptimizeSmallOp,
       "optsmall", names, names) { df0 =>
       if (zorderBy.nonEmpty)
         // INCREMENTAL ZORDER (round 16): z-order JUST the packed tail,
@@ -1877,7 +1836,8 @@ object DirSink {
     * so the rewrite materializes exactly the LIVE rows; the vector
     * sidecar files themselves stay on disk for retained-generation
     * time travel (pre-purge `VERSION AS OF` still serves them) until
-    * vacuum ages their referencing segments out. Returns
+    * vacuum ages their referencing segments out. Row-preserving
+    * ([[ReorgPurgeOp]]): a live row tail passes it. Returns
     * (files purged, files created). */
   def purgeVectors(spark: org.apache.spark.sql.SparkSession,
                    path: String): (Int, Int) = {
@@ -1887,24 +1847,14 @@ object DirSink {
     val names = vectored.map(_.name)
     // keep the file granularity the zone already had — REORG is a
     // purge, not a re-layout (OPTIMIZE owns sizing/clustering)
-    (vectored.size, rewriteFiles(spark, path, parent, "REORG-PURGE",
+    (vectored.size, rewriteFiles(spark, path, parent, ReorgPurgeOp,
       "reorg", names, names)(_.repartition(vectored.size)))
   }
-
-  /** The compaction remap chain, oldest first: `old:new` offset pairs
-    * a resuming tail applies transitively ([[DirSinkMicroBatchStream]]). */
-  private[graft] def offsetRemaps(path: String): Seq[(Int, Int)] =
-    readManifestRaw(path).flatMap(_.header.get("remap")).toSeq
-      .flatMap(_.split(",").toSeq).flatMap { p =>
-        val c = p.indexOf(':')
-        scala.util.Try((p.substring(0, c).toInt,
-          p.substring(c + 1).toInt)).toOption
-      }
 }
 
 /** `pinned` carries catalog-level TIME TRAVEL (`VERSION AS OF` /
   * `TIMESTAMP AS OF` resolve through [[GraftCatalog.loadTable]] into
-  * `asOfOffset` / `asOfTimestamp`) into every scan of this table
+  * `asOfVersion` / `asOfTimestamp`) into every scan of this table
   * instance; per-read options still win for the path-addressed API. */
 class DirSinkTable(path: String, schema0: StructType,
                    pinned: Map[String, String] = Map.empty) extends Table
@@ -2039,8 +1989,6 @@ class DirSinkTable(path: String, schema0: StructType,
   override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder = {
     DirSink.checkFormat(Option(info.options.get(DirSink.FormatKey)))
     new DirSinkWriteBuilder(path, info.schema(), info.queryId(),
-      Option(info.options.get("compactRemapFrom")).map(_.toInt),
-      Option(info.options.get("compactRemapChain")).filter(_.nonEmpty),
       Option(info.options.get(DirSink.BucketKey)).orElse(
         pinned.get(DirSink.BucketKey)),
       Option(info.options.get(DirSink.BloomKey)).orElse(
@@ -2228,15 +2176,13 @@ class DirSinkTable(path: String, schema0: StructType,
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder = {
     def opt(k: String): Option[String] =
       Option(options.get(k)).orElse(pinned.get(k))
-    val asOfOffset = opt("asOfOffset").map(_.toInt)
     val asOfTimestamp = opt("asOfTimestamp").map(_.toLong)
     val asOfVersion = opt("asOfVersion").map(_.toLong)
-    if (Seq(asOfOffset, asOfTimestamp, asOfVersion).count(_.isDefined) > 1)
+    if (asOfTimestamp.isDefined && asOfVersion.isDefined)
       throw new IllegalArgumentException(
-        "asOfOffset, asOfTimestamp, and asOfVersion are mutually " +
-          "exclusive — a snapshot read names ONE point in the zone's " +
-          "history")
-    new DirSinkScanBuilder(path, schema0, asOfOffset, asOfTimestamp,
+        "asOfTimestamp and asOfVersion are mutually exclusive — a " +
+          "snapshot read names ONE point in the zone's history")
+    new DirSinkScanBuilder(path, schema0, asOfTimestamp,
       opt("maxFilesPerTrigger").map(_.toInt),
       opt("files")
         .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet),
@@ -2261,9 +2207,8 @@ class DirSinkTable(path: String, schema0: StructType,
   *     zone reads 2 columns.
   */
 class DirSinkScanBuilder(path: String, schema: StructType,
-                         asOfOffset: Option[Int],
-                         asOfTimestamp: Option[Long],
-                         maxFilesPerTrigger: Option[Int],
+                         asOfTimestamp: Option[Long] = None,
+                         maxFilesPerTrigger: Option[Int] = None,
                          onlyFiles: Option[Set[String]] = None,
                          planListener: Option[(Long, Seq[String]) => Unit] =
                            None,
@@ -2327,8 +2272,7 @@ class DirSinkScanBuilder(path: String, schema: StructType,
     // rather than risk a whole-zone answer to a subset question
     if (onlyFiles.isDefined) return None
     val (m, entries) =
-      try DirSink.resolveState(path, asOfOffset, asOfTimestamp,
-        asOfVersion, onlyFiles)
+      try DirSink.resolveState(path, asOfTimestamp, asOfVersion, onlyFiles)
       catch { case _: IllegalArgumentException => return None }
     val mschema = m.schema
 
@@ -2415,7 +2359,7 @@ class DirSinkScanBuilder(path: String, schema: StructType,
       new DirSinkAggScan(path, aggSchema, values, desc)
     case None =>
       new DirSinkScan(path, schema, required, skipFilters,
-        asOfOffset, asOfTimestamp, maxFilesPerTrigger, onlyFiles,
+        asOfTimestamp, maxFilesPerTrigger, onlyFiles,
         planListener, fileFilterOnly, asOfVersion, headDecode)
   }
 }
@@ -2475,13 +2419,7 @@ case class DirSinkAggPartition(ddl: String, values: Seq[Option[String]])
     extends InputPartition
 
 
-/** `remapFrom`/`remapChain` are [[DirSink.compact]]'s internal options:
-  * a compaction's overwrite publishes its offset-remap header IN THE
-  * SAME atomic manifest swap as the rewritten file list (see the
-  * truncate path of [[DirSinkBatchWrite.commit]]). */
 class DirSinkWriteBuilder(path: String, schema: StructType, queryId: String,
-                          remapFrom: Option[Int] = None,
-                          remapChain: Option[String] = None,
                           bucketOption: Option[String] = None,
                           bloomOption: Option[String] = None,
                           deadLetterOption: Option[String] = None)
@@ -2507,8 +2445,7 @@ class DirSinkWriteBuilder(path: String, schema: StructType, queryId: String,
     private val dl = DirSinkChecks.resolveDeadLetter(path, deadLetterOption,
       schema, DirSinkChecks.zoneChecks(path))
     override def toBatch: BatchWrite =
-      new DirSinkBatchWrite(path, schema, queryId, doTruncate,
-        remapFrom, remapChain, bkt, blm, dl)
+      new DirSinkBatchWrite(path, schema, queryId, doTruncate, bkt, blm, dl)
     override def toStreaming: StreamingWrite =
       new DirSinkStreamingWrite(path, schema, queryId, doTruncate, bkt,
         blm, dl)
@@ -2533,8 +2470,6 @@ case class DirSinkBucketedCommitMessage(parts: Seq[DirSinkCommitMessage])
 
 class DirSinkBatchWrite(path: String, schema: StructType, queryId: String,
                         truncate: Boolean,
-                        remapFrom: Option[Int] = None,
-                        remapChain: Option[String] = None,
                         bucket: Option[DirSink.BucketSpec] = None,
                         bloom: Seq[String] = Seq.empty,
                         deadletter: Option[DirSinkChecks.DeadLetter] = None)
@@ -2572,7 +2507,7 @@ class DirSinkBatchWrite(path: String, schema: StructType, queryId: String,
       // raw prior lines, preserved verbatim — a batch append after
       // streaming commits must not strip their epoch fields; the header
       // (generation counter, epoch high-water mark) carries forward even
-      // across TRUNCATE, so a table overwrite or compaction can never
+      // across TRUNCATE, so a table overwrite can never
       // let a recovering streaming writer re-commit an erased epoch
       val parent = DirSink.readManifestRaw(path)
       // AUTO-WIDEN on append (reachable via `option("mergeSchema",
@@ -2584,24 +2519,14 @@ class DirSinkBatchWrite(path: String, schema: StructType, queryId: String,
         DirSink.flattenMsgs(messages))
       val previous: Seq[String] =
         if (truncate) Seq.empty else parent.map(_.lines).getOrElse(Seq.empty)
-      // a COMPACTION's overwrite records its offset remap (`old:new`,
-      // appended to the surviving chain) in the SAME atomic publish as
-      // the rewritten file list: the new side is THIS commit's own
-      // output file count, never a post-hoc manifest line count a
-      // concurrent append could inflate (which would migrate a boundary
-      // checkpoint past the appended files — an exactly-once violation)
       val header = DirSink.withHistory(
-        DirSink.withLayout(DirSink.nextHeader(parent, truncate = truncate) ++
-          remapFrom.map { from =>
-            val pair = s"$from:${committed.size}"
-            "remap" -> remapChain.fold(pair)(old => s"$old,$pair")
-          }, bucket, bloom),
-        if (!truncate) "append"
-        else if (remapFrom.isDefined) "compact" else "overwrite",
+        DirSink.withLayout(DirSink.nextHeader(parent, truncate = truncate),
+          bucket, bloom),
+        if (truncate) "overwrite" else "append",
         previous.size + committed.size)
       val lines = committed.map(DirSink.manifestLine(_, now))
-      // append = an O(delta) segment; truncate (overwrite/compact) =
-      // a snapshot segment. Superseded generations are NOT swept here
+      // append = an O(delta) segment; truncate (overwrite) = a
+      // snapshot segment. Superseded generations are NOT swept here
       // anymore: their files stay referenced by the retained log, so
       // `VERSION AS OF` survives the rewrite — reclamation is vacuum's
       // job (retention-governed), the Delta discipline.
@@ -2925,19 +2850,17 @@ private[v2] object DirSinkFilePartition {
   * here, or the caller's path is wrong) — mapping it to an empty table
   * would turn a mid-publish crash or a typo into silent zero rows.
   *
-  * SNAPSHOT READS (`option("asOfOffset", k)`): the manifest's file list
-  * is append-only, so its first k lines ARE the zone as a tail reader
-  * had consumed it at stream offset k — one offset vocabulary for both
-  * surfaces. Record `committedOffset` (= manifest line count) when a
-  * training run cuts its corpus, and any later batch read of that
-  * offset reproduces the exact snapshot regardless of subsequent
-  * appends. Reading past the current size is an error (an offset from
-  * a different zone), not a silent truncation. */
+  * SNAPSHOT READS (`option("asOfVersion", g)`): the zone as commit-log
+  * generation g left it — the same generation vocabulary as the
+  * streams' offsets. Record the generation when a training run cuts
+  * its corpus, and any later batch read of it reproduces the exact
+  * snapshot regardless of later commits, for as long as retention
+  * keeps g. A generation past the head is an error, not a silent
+  * truncation. */
 class DirSinkScan(path: String, schema: StructType,
                   required: StructType,
                   skipFilters: Array[org.apache.spark.sql.sources.Filter] =
                     Array.empty,
-                  asOfOffset: Option[Int] = None,
                   asOfTimestamp: Option[Long] = None,
                   maxFilesPerTrigger: Option[Int] = None,
                   onlyFiles: Option[Set[String]] = None,
@@ -2951,7 +2874,7 @@ class DirSinkScan(path: String, schema: StructType,
   override def readSchema(): StructType = required
   override def toBatch: Batch = this
   override def description(): String =
-    s"DirSinkScan($path${asOfOffset.map(k => s", asOf=$k").getOrElse("")}" +
+    s"DirSinkScan($path" +
       (if (skipFilters.nonEmpty)
         s", skip=[${skipFilters.mkString(", ")}]" else "") + ")"
 
@@ -3008,13 +2931,12 @@ class DirSinkScan(path: String, schema: StructType,
 
   /** The snapshot-resolved state (one read per scan): the manifest AT
     * the requested point in history ([[DirSink.resolveState]] — the
-    * current head, a generation, a timestamp-resolved generation, or a
-    * prefix), whose GENERATION is the optimistic-concurrency token a
+    * current head, a generation, or a timestamp-resolved generation),
+    * whose GENERATION is the optimistic-concurrency token a
     * row-level operation's commit verifies, and whose header carries
     * the BUCKET layout the snapshot was written under. */
   private lazy val resolved: (DirSink.Manifest, Seq[DirSink.FileEntry]) =
-    DirSink.resolveState(path, asOfOffset, asOfTimestamp, asOfVersion,
-      onlyFiles)
+    DirSink.resolveState(path, asOfTimestamp, asOfVersion, onlyFiles)
 
   private[graft] def manifestGen: Long = resolved._1.gen
   private def zoneBucketSpec: Option[DirSink.BucketSpec] =
@@ -3281,298 +3203,4 @@ case class DirSinkParquetReaderFactory(
       override def close(): Unit = () // the closure's task listener closes
     }
   }
-}
-
-/** STREAMING READ — tail the landing zone: the manifest's file list is
-  * APPEND-ONLY under append/streaming commits, so "files committed so
-  * far" is a total order and the stream offset is simply the manifest
-  * line count. Each micro-batch reads exactly the files in
-  * (startOffset, endOffset] — one partition per file, the same
-  * executor-side reader as the batch scan — giving a downstream job
-  * exactly-once consumption of everything upstream commits (batch
-  * appends and streaming epochs alike), with crash recovery from the
-  * checkpointed offset.
-  *
-  * CONSTRAINT: tailing assumes append-only commits. An `overwrite`
-  * swap rewrites history out from under the offset; a shrinking
-  * manifest is detected and fails the stream (a same-length overwrite
-  * is indistinguishable from an append and stays on the reader — the
-  * documented cost of offsets-as-counts; a deployment that needs
-  * overwrite-under-tail moves to generation-id offsets, which the
-  * manifest's epoch field already carries). */
-/** `files` counts manifest lines consumed; `compactions` is the offset's
-  * COORDINATE EPOCH — how many of the zone's compaction remaps
-  * ([[DirSink.offsetRemaps]]) this offset has already been migrated
-  * through. The epoch is what keeps migration unambiguous: after a
-  * 6-file zone compacts to 2 and grows back to 6, a checkpointed `6`
-  * could mean either side of the compact — `6@0` (pre-compact, migrate)
-  * and `6@1` (post-compact, don't) cannot be confused. Serializes as
-  * the bare count while no compaction has ever happened, so existing
-  * checkpoints parse unchanged (their zones, by the old fail-fast rule,
-  * have never compacted under a tail — epoch 0 is exactly right).
-  *
-  * `prefixFp` (round 15) closes the count-offset's documented blind
-  * spot — a SAME-LENGTH rewrite (a deletion-vector DELETE re-tags a
-  * line: remove + re-add, count unchanged; a row-level DML can land
-  * count-neutral too) used to be indistinguishable from an append, so
-  * a re-added consumed file could silently re-emit past the offset.
-  * The offset now carries a fingerprint of the first `files` line
-  * NAMES; batch planning recomputes it against the live manifest and
-  * a mismatch fails the stream loudly (the restart-the-tail
-  * discipline every rewrite-under-tail case already follows). Old
-  * checkpoints without the field parse unchanged and skip the check;
-  * migration across a compaction drops it (the remap proved
-  * whole-zone consumption; the next trigger re-stamps). */
-case class DirSinkOffset(files: Int, compactions: Int = 0,
-                         prefixFp: Option[String] = None)
-    extends StreamOffset {
-  override def json(): String = {
-    val base =
-      if (compactions == 0) files.toString else s"$files@$compactions"
-    prefixFp.fold(base)(fp => s"$base#$fp")
-  }
-}
-
-object DirSinkOffset {
-  def parse(json: String): DirSinkOffset = {
-    val hash = json.indexOf('#')
-    val (core, fp) =
-      if (hash < 0) (json, None)
-      else (json.substring(0, hash),
-        Some(json.substring(hash + 1).trim).filter(_.nonEmpty))
-    val at = core.indexOf('@')
-    if (at < 0) DirSinkOffset(core.trim.toInt, 0, fp)
-    else DirSinkOffset(core.substring(0, at).trim.toInt,
-      core.substring(at + 1).trim.toInt, fp)
-  }
-
-  /** Fingerprint of a consumed prefix: order-sensitive hash of the
-    * first n manifest line names. */
-  private[v2] def fpOf(names: Seq[String]): String =
-    java.lang.Long.toHexString(
-      scala.util.hashing.MurmurHash3.orderedHash(names).toLong & 0xffffffffL)
-}
-
-class DirSinkMicroBatchStream(path: String, schema: StructType,
-                              required: StructType,
-                              maxFilesPerTrigger: Option[Int] = None)
-    extends MicroBatchStream with SupportsAdmissionControl
-    with org.apache.spark.sql.connector.read.streaming.SupportsTriggerAvailableNow {
-
-  /** `Trigger.AvailableNow` support: capture the zone's size ONCE at
-    * query start; every later `latestOffset(start, limit)` caps at it.
-    * Without this, Spark wraps the stream and takes ALL available data
-    * as one micro-batch — ignoring `maxFilesPerTrigger`, so a deep-
-    * backlog catch-up replay loses its bounded-batch pacing exactly in
-    * the run-to-completion mode where it matters most. */
-  private var availableNowEnd: Option[Int] = None
-  override def prepareForTriggerAvailableNow(): Unit =
-    availableNowEnd = Some(fileList.size)
-
-  private def fileList: Seq[(String, Long)] =
-    DirSink.readManifest(path).map(_._2).getOrElse(Seq.empty)
-
-  /** Full entries (deletion-vector tags included): the batch planner
-    * needs each file's vector so a FRESH tail over a vectored zone
-    * skips the dead positions — emitting them would be wrong DATA,
-    * not merely replayed data (the prefix fingerprint protects
-    * in-flight consumption; this protects new subscribers). */
-  private def entryList: Seq[DirSink.FileEntry] =
-    DirSink.readManifestEntries(path).map(_._2).getOrElse(Seq.empty)
-
-  /** ADMISSION CONTROL (`option("maxFilesPerTrigger", k)`): without a
-    * read limit, a tail started against a zone with a deep backlog
-    * takes the ENTIRE history as one micro-batch — unbounded executor
-    * memory and a checkpoint that only advances if the whole backlog
-    * succeeds. The limit caps each batch at k committed files past the
-    * start offset, so catch-up proceeds in bounded, individually
-    * checkpointed steps (the FileStreamSource discipline). */
-  override def getDefaultReadLimit: ReadLimit =
-    maxFilesPerTrigger.map(k => ReadLimit.maxFiles(k))
-      .getOrElse(ReadLimit.allAvailable())
-
-  /** CHECKPOINT MIGRATION across compaction: [[DirSink.compact]] records
-    * `old:new` manifest-count pairs in the manifest header; an offset at
-    * coordinate epoch `cc` replays the remap chain from entry `cc`
-    * onward. Each entry migrates ONLY the exactly-fully-consumed offset
-    * (`files == old` — the tail had read the whole pre-compact zone):
-    * that consumption is preserved verbatim by a row-preserving rewrite,
-    * so resuming at `new` is exactly-once by construction. An offset
-    * stopped MID-history fails loudly: its unread suffix was rewritten
-    * into files that also contain rows it already emitted, and no
-    * count-based offset can split those apart — the documented recipe
-    * is quiesce-the-tail (catch up or stop at a batch boundary equal to
-    * the zone size), compact, restart. */
-  private def migrated(o: DirSinkOffset,
-                       remaps: Seq[(Int, Int)]): DirSinkOffset = {
-    var files = o.files
-    // an offset AHEAD of the zone's remap chain proves the chain was
-    // dropped out from under the checkpoint (a user overwrite rewrote
-    // history — truncate drops the remap header). Clamping it down
-    // would silently resume by count inside the rewritten history and
-    // emit unrelated rows; fail fast instead.
-    if (o.compactions > remaps.size)
-      throw new IllegalStateException(
-        s"checkpoint offset ${o.json()} is at coordinate epoch " +
-          s"${o.compactions} but zone $path records only ${remaps.size} " +
-          "compaction remaps — the zone's history was rewritten (an " +
-          "overwrite dropped the remap chain) under this checkpoint; " +
-          "restart from a fresh checkpoint (accepting a re-read)")
-    var cc = o.compactions
-    while (cc < remaps.size) {
-      val (old, nw) = remaps(cc)
-      if (files != old)
-        throw new IllegalStateException(
-          s"zone $path was compacted (manifest $old -> $nw files) under a " +
-            s"checkpoint stopped mid-history at $files/$old — a count " +
-            "offset cannot be migrated into rewritten history. Quiesce " +
-            "the tail to the zone boundary before compacting, or restart " +
-            "from a fresh checkpoint (accepting a re-read).")
-      files = nw
-      cc += 1
-    }
-    DirSinkOffset(files, cc)
-  }
-
-  private def currentRemaps: Seq[(Int, Int)] = DirSink.offsetRemaps(path)
-
-  override def latestOffset(start: StreamOffset,
-                            limit: ReadLimit): StreamOffset = {
-    val remaps = currentRemaps
-    val current = latestOffset().asInstanceOf[DirSinkOffset].files
-    val avail = availableNowEnd.fold(current)(math.min(current, _))
-    val s = migrated(start.asInstanceOf[DirSinkOffset], remaps).files
-    val end = limit match {
-      case m: ReadMaxFiles => math.min(avail, s + m.maxFiles())
-      case _ => avail
-    }
-    val files = fileList
-    val fp = if (files.size >= end)
-      Some(DirSinkOffset.fpOf(files.take(end).map(_._1))) else None
-    DirSinkOffset(end, remaps.size, fp)
-  }
-
-  override def reportLatestOffset(): StreamOffset = latestOffset()
-
-  /** Offsets must be MONOTONIC even though the manifest probe isn't:
-    * on the local filesystem the checksummed FileContext rename is
-    * internally delete-then-rename, so a probe racing a publish can
-    * transiently see NO manifest. Reporting that as offset 0 would
-    * regress below the committed offset and make Spark re-plan from
-    * the start — duplicate reads. The high-water mark rides through
-    * the window (one publish long); HDFS renames are atomic so the
-    * window doesn't exist there. */
-  private var maxSeen = 0
-
-  /** A FRESH tail starts at the zone's CURRENT coordinate epoch: its
-    * zero is in post-compaction coordinates, so no remap entry recorded
-    * before it started can ever apply to it. */
-  override def initialOffset(): StreamOffset =
-    DirSinkOffset(0, currentRemaps.size)
-  override def latestOffset(): StreamOffset = {
-    val files = fileList
-    if (files.size > maxSeen) maxSeen = files.size
-    // stamp the consumed-prefix fingerprint when the live list covers
-    // it (a transient publish window may momentarily show fewer lines
-    // than the high-water mark — skip stamping rather than lie)
-    val fp = if (files.size >= maxSeen)
-      Some(DirSinkOffset.fpOf(files.take(maxSeen).map(_._1))) else None
-    DirSinkOffset(maxSeen, currentRemaps.size, fp)
-  }
-  override def deserializeOffset(json: String): StreamOffset =
-    DirSinkOffset.parse(json)
-
-  override def planInputPartitions(start: StreamOffset,
-                                   end: StreamOffset): Array[InputPartition] = {
-    val remaps = currentRemaps
-    val s = migrated(start.asInstanceOf[DirSinkOffset], remaps).files
-    // an end offset from a PRE-compaction WAL entry (crash between the
-    // offset write and the batch commit) migrates the same way the
-    // start does; max() guards against a degenerate inverted pair
-    val e = math.max(s,
-      migrated(end.asInstanceOf[DirSinkOffset], remaps).files)
-    // ride out an in-flight publish (the same transient window as
-    // above) before declaring the manifest truncated. ONE manifest
-    // snapshot feeds BOTH the fingerprint check and the partition
-    // slice below — a DML commit landing between two separate reads
-    // would reorder the list AFTER the fingerprint passed, silently
-    // re-emitting consumed lines (the exact hazard the fingerprint
-    // exists to close).
-    var entries = entryList
-    val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
-    while (entries.size < e && System.nanoTime() < deadline) {
-      Thread.sleep(50)
-      entries = entryList
-    }
-    if (entries.size < e)
-      throw new IllegalStateException(
-        s"manifest under $path shrank (${entries.size} < $e): streaming " +
-          "read requires append-only commits — no overwrite under a tail")
-    val files = entries.map(en => (en.name, en.rows))
-    // PREFIX-INTEGRITY check (round 15): a same-length rewrite — a
-    // deletion-vector DELETE re-tagging consumed lines, a
-    // count-neutral row-level DML — reorders the manifest without
-    // shrinking it; a count offset alone would silently re-emit the
-    // re-added lines. Verify each offset's fingerprint against the
-    // live prefix (skipped when the offset predates the field or was
-    // minted in pre-migration coordinates).
-    def checkFp(o: DirSinkOffset, what: String): Unit =
-      o.prefixFp.foreach { fp =>
-        if (o.compactions == remaps.size &&
-          DirSinkOffset.fpOf(files.take(o.files).map(_._1)) != fp)
-          throw new IllegalStateException(
-            s"zone $path rewrote lines inside the tail's consumed " +
-              s"prefix ($what offset ${o.json()}): a row-level DML or " +
-              "deletion-vector DELETE landed under the stream. Restart " +
-              "the tail from a fresh checkpoint (accepting a re-read) " +
-              "or quiesce it before running DML on a tailed zone.")
-      }
-    checkFp(start.asInstanceOf[DirSinkOffset], "start")
-    checkFp(end.asInstanceOf[DirSinkOffset], "end")
-    // partitions slice the SAME snapshot the fingerprint blessed, WITH
-    // tags: a vectored file's dead positions must be skipped even by a
-    // fresh tail (wrong data, not just replay)
-    entries.slice(s, e).map { en =>
-      DirSinkFilePartition(path, en.name, dv = en.dv.map(_._1)): InputPartition
-    }.toArray
-  }
-
-  /** The zone's column mapping AT SUBSCRIPTION, like the schema: the
-    * stream decodes with subscription-time logical names, so it must
-    * map them through the subscription-time `#colmap` — a mid-stream
-    * RENAME re-keys the head's map by the NEW names, and resolving it
-    * per batch would silently NULL every mapped column (physical names
-    * are stable for a file's whole life, so the pinned map stays
-    * correct for files written before AND after the rename; a restart
-    * re-reads both schema and map together). */
-  private lazy val subscriptionColMap: Map[String, String] =
-    DirSink.zoneColMap(path)
-
-  /** Streaming batches keep ONE partition per committed file (offsets
-    * are file counts; landing-zone files are micro-batch-sized), read
-    * through the same parquet reader as the batch scan. */
-  override def createReaderFactory(): PartitionReaderFactory = {
-    val data0 = DirSink.asNullable(required)
-    // a vectored zone needs the parquet row index to skip dead
-    // positions (same plumbing as the batch scan); a vector landing
-    // AFTER this factory is built fails the reader loudly (its
-    // partition carries a dv the schema lacks) — never silently
-    // emits deleted rows
-    val data =
-      if (entryList.forall(_.dv.isEmpty)) data0
-      else StructType(data0.fields :+
-        org.apache.spark.sql.types.StructField(
-          org.apache.spark.sql.execution.datasources.parquet
-            .ParquetFileFormat.ROW_INDEX_TEMPORARY_COLUMN_NAME,
-          LongType, nullable = true))
-    val colmap = subscriptionColMap
-    DirSinkParquetReaderFactory(
-      DirSinkParquet.readerClosure(
-        DirSink.toPhysical(DirSink.asNullable(schema), colmap),
-        DirSink.toPhysical(data, colmap), Seq.empty),
-      data0.toDDL, data.toDDL)
-  }
-
-  override def commit(end: StreamOffset): Unit = ()
-  override def stop(): Unit = ()
 }

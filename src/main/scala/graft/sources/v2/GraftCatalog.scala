@@ -117,10 +117,9 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
     * the target, and the snapshot SURVIVES history-rewriting
     * maintenance (OPTIMIZE/DELETE/MERGE) for as long as vacuum
     * retention keeps g's segments — the round-13 verdict's
-    * retained-generation ask. (The path-addressed `asOfOffset` option
-    * keeps its streaming-aligned file-prefix vocabulary.) The schema
-    * is resolved AT the target generation, so a snapshot from before
-    * an ADD/DROP COLUMN reads with its own columns. */
+    * retained-generation ask. The schema is resolved AT the target
+    * generation, so a snapshot from before an ADD/DROP COLUMN reads
+    * with its own columns. */
   override def loadTable(ident: Identifier, version: String): Table = {
     val dir = dirOf(ident)
     if (DirSink.readManifest(dir).isEmpty)

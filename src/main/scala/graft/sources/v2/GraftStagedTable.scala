@@ -27,8 +27,8 @@ import org.apache.spark.sql.types.StructType
   *   2. `commitStagedChanges()` re-checks the mode's existence
   *      contract and publishes the replacement manifest (truncate
   *      semantics: fresh file list, parent generation + epoch
-  *      high-water mark carried, compaction remap chain dropped —
-  *      exactly an overwrite's header law) under the zone lock, then
+  *      high-water mark carried — exactly an overwrite's header law)
+  *      under the zone lock, then
   *      sweeps the superseded generation;
   *   3. `abortStagedChanges()` deletes the renamed-but-unpublished
   *      files — readers never saw them.

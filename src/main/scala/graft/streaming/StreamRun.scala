@@ -376,16 +376,15 @@ object StreamRun {
       codebooksFrozen && live != g0 && chainLen == 3 &&
       retrainedF && chainAfterMaintain == 1 && maintainCovers
 
-    // ---- scenario G (round 11): MAINTENANCE UNDER A TAIL — the
-    // documented constraint, exercised: a zone is tailed with
-    // maxFilesPerTrigger=1; after the first micro-batch a COMPACTION
-    // rewrites the manifest (3 files -> 1). The tail's next planning
-    // call sees the manifest SHRINK below its consumed offset and FAILS
-    // FAST (offsets-as-counts cannot survive rewritten history) instead
-    // of silently rereading rewritten files as if they were new. The
-    // second half is the deployment answer: compaction BETWEEN tails —
-    // a fresh-checkpoint tail over the compacted zone reads every row
-    // exactly once.
+    // ---- scenario G (round 11): MAINTENANCE UNDER A TAIL — a zone is
+    // tailed with maxFilesPerTrigger=1; after the first micro-batch a
+    // COMPACTION rewrites the zone's 3 files into 1, mid-history. The
+    // tail addresses commit-log generations: it keeps reading the two
+    // appends it had not reached (their files stay on disk for the
+    // retained log), then passes the compaction's generation without
+    // emitting anything (row-preserving maintenance). Every row
+    // arrives exactly once and the stream never fails. A fresh tail
+    // over the compacted zone reads every row once too.
     val zoneG = Files.createTempDirectory("graft_streamrun_maint")
       .toString + "/z"
     val chkG1 = Files.createTempDirectory("graft_streamrun_maint_chk1").toString
@@ -408,22 +407,13 @@ object StreamRun {
         if (id == 0) graft.sources.v2.DirSink.compact(spark, zoneG, 1)
         ()
       }
-      .trigger(Trigger.AvailableNow())
       .start()
-    val errG = try { qG.awaitTermination(120000); None } catch {
+    val errG = try { qG.processAllAvailable(); None } catch {
       case e: org.apache.spark.sql.streaming.StreamingQueryException =>
-        def chain(t: Throwable): Seq[Throwable] =
-          if (t == null) Seq.empty else t +: chain(t.getCause)
-        Some(chain(e).flatMap(c => Option(c.getMessage)).mkString(" | "))
+        Some(e.getMessage)
     } finally qG.stop()
-    // round 12: a MID-HISTORY tail now fails with the migration error
-    // (the remap header migrates only boundary checkpoints); a zone
-    // without a remap still fails with the shrink message — both are
-    // the same fail-fast contract
-    val shrinkDetected = errG.exists(m =>
-      (m.contains("shrank") && m.contains("append-only")) ||
-        m.contains("mid-history"))
-    // between-tails: a fresh tail over the compacted zone is clean
+    val filesAfterG = graft.sources.v2.DirSink
+      .readManifest(zoneG).map(_._2.size).getOrElse(-1)
     val seenG2 = scala.collection.mutable.ArrayBuffer[Long]()
     val qG2 = spark.readStream.format(fmt).option("path", zoneG).load()
       .writeStream
@@ -435,17 +425,15 @@ object StreamRun {
       .start()
     qG2.awaitTermination(120000)
     qG2.stop()
-    val passG = shrinkDetected && seenG.sum < totalG &&
+    val passG = errG.isEmpty && filesAfterG == 1 && seenG.sum == totalG &&
       seenG2.sum == totalG
 
-    // ---- scenario H (round 12): CHECKPOINT MIGRATION across
-    // compaction — scenario G's terminal fail-fast, solved for the
-    // quiesced case: a tail consumes the WHOLE zone and stops; the zone
-    // compacts (manifest 3 files -> 1, compact() records the offset
-    // remap in the header); the SAME checkpoint restarts against the
-    // compacted zone, new rows land, and the tail must emit EXACTLY the
-    // new rows — zero rereads of rewritten history, zero loss. The
-    // accounting is row-exact: run-1 rows + run-2 rows == zone rows.
+    // ---- scenario H (round 12): RESTART ACROSS a compaction — a tail
+    // consumes the WHOLE zone and stops; the zone compacts (3 files ->
+    // 1); the SAME checkpoint restarts against the compacted zone, new
+    // rows land, and the tail must emit EXACTLY the new rows — zero
+    // rereads of rewritten history, zero loss. The accounting is
+    // row-exact: run-1 rows + run-2 rows == zone rows.
     val zoneH = Files.createTempDirectory("graft_streamrun_mig")
       .toString + "/z"
     val chkH = Files.createTempDirectory("graft_streamrun_mig_chk").toString
@@ -466,7 +454,7 @@ object StreamRun {
       .start()
     qH1.awaitTermination(120000)
     qH1.stop()
-    graft.sources.v2.DirSink.compact(spark, zoneH, 1) // quiesced: migrate
+    graft.sources.v2.DirSink.compact(spark, zoneH, 1)
     val filesAfterH = graft.sources.v2.DirSink
       .readManifest(zoneH).map(_._2.size).getOrElse(-1)
     rowsH.filter($"event_id" % 4 === 3).coalesce(1).write.format(fmt)
@@ -791,16 +779,17 @@ object StreamRun {
          |"pass":$passF},
          |"scenario_maintenance_under_tail":{
          |"committed_rows":$totalG,
-         |"rows_before_shrink":${seenG.sum},
-         |"shrink_detected_failfast":$shrinkDetected,
+         |"tail_rows_through_compact":${seenG.sum},
+         |"tail_failed":${errG.isDefined},
+         |"files_after_compact":$filesAfterG,
          |"fresh_tail_rows_after_compact":${seenG2.sum},
          |"pass":$passG},
-         |"scenario_checkpoint_migration":{
+         |"scenario_restart_across_compact":{
          |"rows_before_compact":$preH,
          |"run1_rows":${seenH1.sum},
          |"files_after_compact":$filesAfterH,
          |"rows_appended_after_compact":${totalH - preH},
-         |"run2_rows_after_migration":${seenH2.sum},
+         |"run2_rows_after_compact":${seenH2.sum},
          |"pass":$passH},
          |"scenario_governed_zone":{
          |"valid_rows_landed":$landedI,

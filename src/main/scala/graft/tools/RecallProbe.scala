@@ -13,8 +13,7 @@ import org.apache.spark.sql.functions._
 object RecallProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val spark =
-      graft.Sessions.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "8").toInt)
+    val spark = graft.Sessions.local()
     spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
 

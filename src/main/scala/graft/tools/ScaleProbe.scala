@@ -65,8 +65,7 @@ object ScaleProbe {
   def main(args: Array[String]): Unit = {
     val ks = if (args.nonEmpty) args.toSeq.map(_.toInt) else Seq(1, 2, 4)
     val base = "/root/testdata/sf0.1"
-    val spark =
-      graft.Sessions.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt)
+    val spark = graft.Sessions.local()
     spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
 

@@ -8,8 +8,7 @@ object TimeQ {
   def main(args: Array[String]): Unit = {
     val dir = args(0)
     val names = args.drop(1)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = graft.Sessions.local(cpus.toInt)
+    val spark = graft.Sessions.local()
     spark.sparkContext.setLogLevel("ERROR")
     graft.sources.Tables.schemas.keys.foreach { t =>
       graft.sources.Tables.load(spark, dir, t).count()

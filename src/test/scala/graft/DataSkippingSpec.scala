@@ -290,12 +290,13 @@ class DataSkippingSpec extends AnyFunSuite {
     val dir = tmpDir()
     Seq((1L, "a")).toDF("id", "v").coalesce(1)
       .write.format(fmt).option("path", dir).mode(SaveMode.Append).save()
+    val first = DirSink.currentGen(dir).get
     Seq((100L, "b")).toDF("id", "v").coalesce(1)
       .write.format(fmt).option("path", dir).mode(SaveMode.Append).save()
     val snap = spark.read.format(fmt).option("path", dir)
-      .option("asOfOffset", 1).load().filter(col("id") > 50)
+      .option("asOfVersion", first).load().filter(col("id") > 50)
     assert(plannedFiles(snap) == 0,
-      "the only file in the snapshot prefix prunes under id>50")
+      "the only file in the first generation prunes under id>50")
     assert(snap.count() == 0)
   }
 }

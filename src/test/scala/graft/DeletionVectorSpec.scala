@@ -195,36 +195,35 @@ class DeletionVectorSpec extends AnyFunSuite {
   }
 
   test("a vector DELETE under a running tail fails the stream loudly — never a silent re-emit") {
-    import graft.sources.v2.{DirSinkMicroBatchStream, DirSinkOffset}
+    import graft.sources.v2.DirSinkMicroBatchStream
     val dir = tmp()
-    build(dir) // 4 files
+    build(dir) // 4 files, generations 0..3
     val schema = StructType.fromDDL("id BIGINT, v BIGINT")
     val stream = new DirSinkMicroBatchStream(dir, schema, schema)
     val s0 = stream.initialOffset()
-    val eAll = stream.latestOffset()
-      .asInstanceOf[DirSinkOffset]
-    assert(eAll.files == 4 && eAll.prefixFp.isDefined,
-      s"offsets are fingerprint-stamped: ${eAll.json()}")
-    // the fingerprint survives the checkpoint round trip
-    assert(DirSinkOffset.parse(eAll.json()) == eAll)
-    // a partially-consumed offset (2 of 4 files)
-    val e2 = stream.latestOffset(s0,
-      org.apache.spark.sql.connector.read.streaming.ReadLimit.maxFiles(2))
-      .asInstanceOf[DirSinkOffset]
-    assert(stream.planInputPartitions(s0, e2).length == 2)
-    // a vector DELETE re-tags a CONSUMED file's line (ids 30,31 live
-    // in file 1): remove + re-add — count unchanged, order changed
+    // a fresh tail's first batch: the snapshot of all 4 files
+    val eAll = stream.latestOffset(s0,
+      org.apache.spark.sql.connector.read.streaming.ReadLimit.allAvailable())
+    assert(eAll.json() == """{"gen":3}""", eAll.json())
+    assert(stream.deserializeOffset(eAll.json()) == eAll,
+      "the offset survives the checkpoint round trip")
+    assert(stream.planInputPartitions(s0, eAll).length == 4)
+    // a vector DELETE re-tags CONSUMED files' lines (ids 30,31 live in
+    // file 1): the next batch reaches its generation and fails, naming
+    // it — the tail never re-reads the re-tagged file
     withDv {
       table(dir).deleteWhere(Array[Filter](
         In("id", Array(30L, 31L).map(_.asInstanceOf[AnyRef]))))
     }
     val e = intercept[IllegalStateException] {
-      stream.planInputPartitions(s0, e2)
+      stream.planInputPartitions(eAll, stream.latestOffset(eAll,
+        org.apache.spark.sql.connector.read.streaming.ReadLimit
+          .allAvailable()))
     }
-    assert(e.getMessage.contains("rewrote lines inside"), e.getMessage)
-    // a FRESH tail (post-DML offsets) reads the live rows exactly —
-    // end to end through a real streaming query: emitting a dead
-    // position would be wrong DATA, not merely replayed data
+    assert(e.getMessage.contains("generation 4 (delete)"), e.getMessage)
+    // a FRESH tail reads the live rows exactly — end to end through a
+    // real streaming query: emitting a dead position would be wrong
+    // DATA, not merely replayed data
     val fresh = new DirSinkMicroBatchStream(dir, schema, schema)
     val parts = fresh.planInputPartitions(fresh.initialOffset(),
       fresh.latestOffset())

@@ -228,7 +228,7 @@ class DirSinkSpec extends AnyFunSuite {
         .as[(Long, String)].collect().toSeq.sorted
       assert(got() == Seq((1L, "a"), (2L, "b")))
       // a batch append lands while the tail is live: only the NEW
-      // generation's rows arrive (offset = manifest file count)
+      // generation's rows arrive (offset = commit-log generation)
       Seq((3L, "c")).toDF("id", "v").write.format(fmt)
         .option("path", dir).mode(SaveMode.Append).save()
       q.processAllAvailable()
@@ -314,33 +314,34 @@ class DirSinkSpec extends AnyFunSuite {
     } finally q.stop()
   }
 
-  test("asOfOffset snapshot read: the manifest prefix reproduces the zone at a recorded offset") {
+  test("asOfVersion snapshot read: a recorded generation reproduces the zone") {
     import spark.implicits._
     val dir = tmpDir()
     Seq((1L, "a")).toDF("id", "v").coalesce(1).write.format(fmt)
       .option("path", dir).mode(SaveMode.Append).save()
+    val first = DirSink.currentGen(dir).get
     Seq((2L, "b")).toDF("id", "v").coalesce(1).write.format(fmt)
       .option("path", dir).mode(SaveMode.Append).save()
-    // a training run cuts its corpus here and records the offset
-    val cut = DirSink.readManifest(dir).get._2.size
+    // a training run cuts its corpus here and records the generation
+    val cut = DirSink.currentGen(dir).get
     Seq((3L, "c")).toDF("id", "v").coalesce(1).write.format(fmt)
       .option("path", dir).mode(SaveMode.Append).save()
-    def read(asOf: Option[Int]) = {
+    def read(asOf: Option[Long]) = {
       val r = spark.read.format(fmt).option("path", dir)
-      asOf.foreach(k => r.option("asOfOffset", k))
+      asOf.foreach(g => r.option("asOfVersion", g))
       r.load().as[(Long, String)].collect().toSeq.sorted
     }
     assert(read(None) == Seq((1L, "a"), (2L, "b"), (3L, "c")))
     assert(read(Some(cut)) == Seq((1L, "a"), (2L, "b")),
-      "the recorded offset must reproduce the snapshot despite later appends")
-    assert(read(Some(1)) == Seq((1L, "a")))
+      "the recorded generation must reproduce the snapshot despite later appends")
+    assert(read(Some(first)) == Seq((1L, "a")))
     val e = intercept[Exception] {
       spark.read.format(fmt).option("path", dir)
-        .option("asOfOffset", 99).load().count()
+        .option("asOfVersion", 99).load().count()
     }
-    assert(e.getMessage.contains("asOfOffset") ||
-      Option(e.getCause).exists(_.getMessage.contains("asOfOffset")),
-      s"reading past the zone's history must error, got $e")
+    assert(e.getMessage.contains("exceeds") ||
+      Option(e.getCause).exists(_.getMessage.contains("exceeds")),
+      s"reading past the zone's head generation must error, got $e")
   }
 
   test("end-to-end streaming write: a watermarked tumbling aggregate lands through the sink") {

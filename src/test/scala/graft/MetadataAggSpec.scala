@@ -50,9 +50,10 @@ class MetadataAggSpec extends AnyFunSuite {
     assert(r.getLong(2) == 1L && r.getLong(3) == 100L)
     assert(r.getTimestamp(4).toString == "2024-02-01 00:00:00.0" &&
       r.getTimestamp(5).toString == "2024-02-04 00:00:00.0")
-    // snapshot-sliced metadata aggregate: the first 2 committed files
+    // snapshot metadata aggregate: generation 1 holds the first 2
+    // committed files
     val r2 = spark.read.format(fmt).option("path", dir)
-      .option("asOfOffset", 2).load()
+      .option("asOfVersion", 1).load()
       .agg(count(lit(1)), max($"id")).head
     assert(r2.getLong(0) == 50L && r2.getLong(1) == 50L)
     // string bounds fold in UTF8 binary order, same as the skipper

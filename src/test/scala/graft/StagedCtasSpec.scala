@@ -87,23 +87,27 @@ class StagedCtasSpec extends AnyFunSuite {
     assert(onDisk == live, s"orphans after replace: ${onDisk -- live}")
   }
 
-  test("CREATE OR REPLACE preserves the epoch high-water mark and drops the remap chain") {
+  test("CREATE OR REPLACE preserves the epoch high-water mark") {
     val (cat, wh) = freshCat()
     val dir = s"$wh/db/z"
-    import spark.implicits._
-    // seed a zone with a streaming-style epoch line, via the path API
-    spark.range(10).toDF("k")
-      .write.format("graft.sources.v2.DirSinkSource")
-      .option("path", dir).mode(org.apache.spark.sql.SaveMode.Append).save()
-    DirSink.compact(spark, dir, targetFiles = 1)
-    assert(DirSink.offsetRemaps(dir).nonEmpty)
+    // seed a zone with a streaming epoch line, via the path API
+    val schema = org.apache.spark.sql.types.StructType.fromDDL("k BIGINT")
+    val sw = new graft.sources.v2.DirSinkStreamingWrite(dir, schema,
+      "ctas-seed", truncate = false)
+    val w = sw.createStreamingWriterFactory(null).createWriter(0, 0L, 3L)
+    w.write(new org.apache.spark.sql.catalyst.expressions
+      .GenericInternalRow(Array[Any](7L)))
+    sw.commit(3L, Array(w.commit()))
+    val gen = DirSink.currentGen(dir).get
+    assert(DirSink.committedEpochMax(dir).contains(3L))
     spark.sql(s"CREATE OR REPLACE TABLE $cat.db.z AS " +
       "SELECT id AS k FROM range(5)")
     assert(spark.table(s"$cat.db.z").count() == 5)
-    // replace = user history rewrite: remap chain must be gone (the
-    // same law as a batch overwrite), generation monotone
-    assert(DirSink.offsetRemaps(dir).isEmpty,
-      "a staged replace rewrites history — stale remaps must drop")
+    // replace = user history rewrite (the same header law as a batch
+    // overwrite): the epoch mark survives, the generation moves forward
+    assert(DirSink.committedEpochMax(dir).contains(3L),
+      "a replay of epoch 3 must stay a no-op after the replace")
+    assert(DirSink.currentGen(dir).get > gen)
   }
 
   test("staged CTAS with a bucket transform records the layout and keeps purity") {

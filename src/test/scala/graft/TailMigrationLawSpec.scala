@@ -1,36 +1,35 @@
 package graft
 
-import graft.sources.v2.{DirSink, DirSinkFilePartition, DirSinkMicroBatchStream, DirSinkOffset}
+import graft.sources.v2.{DirSink, DirSinkFilePartition, DirSinkMicroBatchStream}
 import org.apache.spark.sql.SaveMode
-import org.apache.spark.sql.connector.read.streaming.ReadLimit
+import org.apache.spark.sql.connector.read.streaming.{Offset, ReadLimit}
 import org.apache.spark.sql.types.StructType
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Randomized LAW spec for streaming-offset migration across
-  * compaction: 40 seeded-random op sequences of
-  * {append, consume-all, quiesced-compact}, each followed by a
-  * simulated tail restart (fresh stream instance, checkpointed offset
-  * carried over — exactly what Spark's checkpoint does), with the
-  * EXACTLY-ONCE accounting checked after every step:
+/** Randomized LAW spec for a row tail under maintenance: 40
+  * seeded-random sequences of {append, compact, optimize-small,
+  * partial consume, restart}, in any order — maintenance lands
+  * wherever the tail happens to be, mid-history included — then a
+  * drain, with the EXACTLY-ONCE accounting checked at the end:
   *
-  *   rows consumed  ==  rows committed, each exactly once.
+  *   rows consumed  ==  rows committed, each exactly once, and no
+  *   batch ever fails.
   *
-  * The tail drives [[DirSinkMicroBatchStream]] directly (latestOffset →
+  * A partial consume reads one batch of at most 1–3 files; a restart
+  * is a fresh stream instance resumed from the checkpointed offset's
+  * JSON, exactly as Spark's checkpoint does. The tail drives
+  * [[DirSinkMicroBatchStream]] directly (latestOffset →
   * planInputPartitions → the real partition reader), so the law runs
-  * hundreds of migration decisions per suite run without Spark
-  * streaming's per-query startup cost. Compaction only ever happens
-  * with the tail at the zone boundary (the documented quiesce recipe);
-  * the mid-history refusal has its own directed test in
-  * TailMigrationSpec. */
+  * hundreds of planning decisions per suite run without Spark
+  * streaming's per-query startup cost. */
 class TailMigrationLawSpec extends AnyFunSuite {
   private lazy val spark = TestSession.spark
   private val fmt = "graft.sources.v2.DirSinkSource"
   private val schema = StructType.fromDDL("id BIGINT, v STRING")
 
-  private def readBatch(dir: String, stream: DirSinkMicroBatchStream,
-                        from: DirSinkOffset): (DirSinkOffset, Seq[Long]) = {
-    val end = stream.latestOffset(from, ReadLimit.allAvailable())
-      .asInstanceOf[DirSinkOffset]
+  private def readBatch(stream: DirSinkMicroBatchStream, from: Offset,
+                        limit: ReadLimit): (Offset, Seq[Long]) = {
+    val end = stream.latestOffset(from, limit)
     val parts = stream.planInputPartitions(from, end)
     // the stream's own factory: the same parquet reader as the batch scan
     val factory = stream.createReaderFactory()
@@ -55,8 +54,8 @@ class TailMigrationLawSpec extends AnyFunSuite {
       val committed = scala.collection.mutable.ArrayBuffer[Long]()
       val consumed = scala.collection.mutable.ArrayBuffer[Long]()
       var stream = new DirSinkMicroBatchStream(dir, schema, schema)
-      var offset = stream.initialOffset().asInstanceOf[DirSinkOffset]
-      var atBoundary = true // no unconsumed suffix yet
+      var offset = stream.initialOffset()
+      val ops = scala.collection.mutable.ArrayBuffer[String]()
 
       def append(): Unit = {
         val k = rnd.nextInt(3) + 1
@@ -65,38 +64,40 @@ class TailMigrationLawSpec extends AnyFunSuite {
           .write.format(fmt).option("path", dir)
           .mode(SaveMode.Append).save()
         committed ++= rows
-        atBoundary = false
       }
-      def consume(): Unit = {
-        val (end, ids) = readBatch(dir, stream, offset)
+      def consume(limit: ReadLimit): Boolean = {
+        val (end, ids) = readBatch(stream, offset, limit)
+        val moved = end.json() != offset.json()
         offset = end
         consumed ++= ids
-        atBoundary = true
-      }
-      def compactAndRestart(): Unit = {
-        if (!atBoundary) consume() // the quiesce recipe
-        DirSink.compact(spark, dir,
-          targetFiles = rnd.nextInt(2) + 1)
-        // restart: a FRESH stream instance resumes from the carried
-        // offset, exactly as a checkpointed query restart does
-        stream = new DirSinkMicroBatchStream(dir, schema, schema)
+        moved
       }
 
       append() // a zone exists before anything tails it
-      (1 to 10).foreach { _ =>
-        rnd.nextInt(3) match {
-          case 0 => append()
-          case 1 => consume()
-          case 2 => if (committed.nonEmpty) compactAndRestart() else append()
+      (1 to 12).foreach { _ =>
+        rnd.nextInt(5) match {
+          case 0 => ops += "append"; append()
+          case 1 =>
+            val k = rnd.nextInt(3) + 1
+            ops += s"consume($k)"; consume(ReadLimit.maxFiles(k))
+          case 2 =>
+            val n = rnd.nextInt(2) + 1
+            ops += s"compact($n)"; DirSink.compact(spark, dir, n)
+          case 3 =>
+            ops += "optimize-small"; DirSink.compactSmall(spark, dir, 1L << 30)
+          case 4 =>
+            ops += "restart"
+            stream = new DirSinkMicroBatchStream(dir, schema, schema)
+            offset = stream.deserializeOffset(offset.json())
         }
       }
-      consume() // drain
+      while (consume(ReadLimit.allAvailable())) () // drain
 
       assert(consumed.sorted == committed.sorted,
-        s"case $caseId: exactly-once broken — committed " +
-          s"${committed.size} rows ${committed.sorted.take(20)}…, consumed " +
-          s"${consumed.size} rows ${consumed.sorted.take(20)}… " +
-          s"(offset $offset, remaps ${DirSink.offsetRemaps(dir)})")
+        s"case $caseId (${ops.mkString(", ")}): exactly-once broken — " +
+          s"committed ${committed.size} rows ${committed.sorted.take(20)}…, " +
+          s"consumed ${consumed.size} rows ${consumed.sorted.take(20)}… " +
+          s"(offset ${offset.json()})")
       assert(consumed.distinct.size == consumed.size,
         s"case $caseId: duplicate emission — ${consumed.size} consumed, " +
           s"${consumed.distinct.size} distinct")

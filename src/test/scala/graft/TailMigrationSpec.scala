@@ -1,25 +1,62 @@
 package graft
 
-import graft.sources.v2.{DirSink, DirSinkMicroBatchStream, DirSinkOffset}
+import graft.sources.v2.{DirSink, DirSinkCdfStream, DirSinkDv, DirSinkFilePartition, DirSinkMicroBatchStream, DirSinkTable}
 import org.apache.spark.sql.SaveMode
+import org.apache.spark.sql.connector.read.streaming.{Offset, ReadLimit}
+import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.sources.{Filter, In}
 import org.apache.spark.sql.types.StructType
 import org.scalatest.funsuite.AnyFunSuite
 
-/** CHECKPOINT MIGRATION across compaction (round-11 verdict task 7 —
-  * scenario G's fail-fast was correct but terminal): `compact()` records
-  * an `old:new` offset remap in the manifest header, and a restarting
-  * tail whose checkpoint had consumed EXACTLY the whole pre-compact zone
-  * resumes at the post-compact count — no reread, no loss. Offsets carry
-  * a coordinate EPOCH (`files@compactions`) so a post-compact offset
-  * that numerically equals the pre-compact count can never be
-  * mis-migrated; a checkpoint stopped MID-history still fails loudly
-  * (its unread suffix was rewritten — exactly-once cannot survive it). */
+/** A ROW TAIL ACROSS MAINTENANCE AND REWRITES. The tail addresses the
+  * zone by commit-log generation ([[DirSinkGenOffset]]): appends give
+  * their files, row-preserving maintenance (compact, OPTIMIZE's
+  * bin-packing, REORG PURGE) gives nothing, and any other rewrite fails
+  * the stream naming the generation and its op. So maintenance may
+  * land anywhere under a live tail, and a fresh tail starts from a
+  * snapshot no older than the newest rewrite. The specs drive the
+  * stream through its public interface (offsets as JSON). */
 class TailMigrationSpec extends AnyFunSuite {
   private lazy val spark = TestSession.spark
   private val fmt = "graft.sources.v2.DirSinkSource"
+  private val schema = StructType.fromDDL("id BIGINT, v BIGINT")
 
   private def tmpDir(): String =
     java.nio.file.Files.createTempDirectory("graft_tailmig").toString
+
+  private def append(dir: String, from: Long, until: Long): Unit =
+    spark.range(from, until).select(col("id"), (col("id") % 7).as("v"))
+      .coalesce(1).write.format(fmt).option("path", dir)
+      .mode(SaveMode.Append).save()
+
+  private def withDv[T](body: => T): T = {
+    spark.conf.set(DirSinkDv.EnabledKey, "true")
+    try body finally spark.conf.unset(DirSinkDv.EnabledKey)
+  }
+
+  private def deleteIds(dir: String, ids: Long*): Unit =
+    new DirSinkTable(dir, schema).deleteWhere(Array[Filter](
+      In("id", ids.map(_.asInstanceOf[AnyRef]).toArray)))
+
+  /** One micro-batch under `limit`, read through the stream's own
+    * reader factory: (end offset, ids read). */
+  private def batch(stream: DirSinkMicroBatchStream, from: Offset,
+                    limit: ReadLimit): (Offset, Seq[Long]) = {
+    val end = stream.latestOffset(from, limit)
+    val factory = stream.createReaderFactory()
+    val ids = stream.planInputPartitions(from, end).toSeq.flatMap { p =>
+      val r = factory.createReader(p.asInstanceOf[DirSinkFilePartition])
+      val buf = scala.collection.mutable.ArrayBuffer[Long]()
+      while (r.next()) buf += r.get().getLong(0)
+      r.close()
+      buf
+    }
+    (end, ids)
+  }
+
+  private def liveIds(dir: String): Seq[Long] =
+    spark.read.format(fmt).option("path", dir).load()
+      .select("id").collect().map(_.getLong(0)).toSeq.sorted
 
   test("quiesce → compact → restart: the tail resumes with no reread and no loss") {
     import spark.implicits._
@@ -38,9 +75,8 @@ class TailMigrationSpec extends AnyFunSuite {
         .outputMode("append").start()
       try q.processAllAvailable() finally q.stop()
     }
-    runTail() // consumes the whole 3-file zone; checkpoint offset = 3
+    runTail() // consumes the whole 3-file zone
     assert(spark.read.format(fmt).option("path", out).load().count() == 3)
-    // the documented recipe: tail quiesced at the zone boundary → compact
     DirSink.compact(spark, in, targetFiles = 1)
     assert(DirSink.readManifest(in).get._2.size == 1)
     Seq((4L, "v4")).toDF("id", "v").coalesce(1)
@@ -50,128 +86,182 @@ class TailMigrationSpec extends AnyFunSuite {
       .as[(Long, String)].collect().toSeq.sortBy(_._1)
     assert(back == (1 to 4).map(i => (i.toLong, s"v$i")),
       s"exactly-once across the compaction: got $back")
-    // a second compaction chains: the remap header accumulates and a
-    // boundary checkpoint still migrates through BOTH hops
+    // a second compaction: the restart passes both compaction
+    // generations without re-reading anything
     DirSink.compact(spark, in, targetFiles = 1)
     Seq((5L, "v5")).toDF("id", "v").coalesce(1)
       .write.format(fmt).option("path", in).mode(SaveMode.Append).save()
     runTail()
     assert(spark.read.format(fmt).option("path", out).load().count() == 5,
-      "the remap chain must migrate across repeated compactions")
+      "a restart must pass repeated compactions")
   }
 
-  test("mid-history checkpoint fails loudly instead of resuming into rewritten history") {
-    import spark.implicits._
-    val in = tmpDir()
-    (1 to 3).foreach { i =>
-      Seq((i.toLong, s"v$i")).toDF("id", "v").coalesce(1)
-        .write.format(fmt).option("path", in).mode(SaveMode.Append).save()
+  test("a one-file-per-trigger tail reads every row once through compact, OPTIMIZE and REORG mid-history") {
+    val dir = tmpDir()
+    (0 until 4).foreach(k => append(dir, k * 25L, k * 25L + 25L))
+    withDv(deleteIds(dir, 10L, 60L)) // vectors on two files
+    (100L until 115L by 5).foreach(a => append(dir, a, a + 5))
+    val stream = new DirSinkMicroBatchStream(dir, schema, schema, Some(1))
+    val limit = stream.getDefaultReadLimit
+    val seen = scala.collection.mutable.ArrayBuffer[Long]()
+    var offset = stream.initialOffset()
+    def step(): Boolean = {
+      val (end, ids) = batch(stream, offset, limit)
+      val moved = end.json() != offset.json()
+      offset = end
+      seen ++= ids
+      moved
     }
-    DirSink.compact(spark, in, targetFiles = 1) // remap records 3 -> 1
-    val schema = StructType.fromDDL("id BIGINT, v STRING")
-    val stream = new DirSinkMicroBatchStream(in, schema, schema)
-    // a checkpoint stopped at 2/3 files (coordinate epoch 0): its unread
-    // third file was rewritten into the compacted file that ALSO holds
-    // rows it already emitted — no count offset can resume exactly-once
-    val e = intercept[IllegalStateException] {
-      stream.latestOffset(DirSinkOffset(2, 0),
-        org.apache.spark.sql.connector.read.streaming.ReadLimit.allAvailable())
-    }
-    assert(e.getMessage.contains("mid-history"), e.getMessage)
-    // the boundary checkpoint (3@0) migrates to (1@1); a POST-compact
-    // offset that happens to read 3 again (3@1) is left alone
-    assert(stream.latestOffset(DirSinkOffset(3, 0),
-      org.apache.spark.sql.connector.read.streaming.ReadLimit.allAvailable())
-      .asInstanceOf[DirSinkOffset].copy(prefixFp = None)
-      == DirSinkOffset(1, 1),
-      "the fingerprint (round 15) rides on top of the migration")
-    (4 to 6).foreach { i =>
-      Seq((i.toLong, s"v$i")).toDF("id", "v").coalesce(1)
-        .write.format(fmt).option("path", in).mode(SaveMode.Append).save()
-    }
-    // zone is back to 4 files; an epoch-1 offset of 3 means "3 files of
-    // the POST-compact zone" and must NOT be remapped back to 1
-    val fresh = new DirSinkMicroBatchStream(in, schema, schema)
-    val end = fresh.latestOffset(DirSinkOffset(3, 1),
-      org.apache.spark.sql.connector.read.streaming.ReadLimit.allAvailable())
-      .asInstanceOf[DirSinkOffset]
-    assert(end.copy(prefixFp = None) == DirSinkOffset(4, 1),
-      s"post-compact offsets must stay in their coordinates, got $end")
-    // offset serialization: bare count at epoch 0 (legacy checkpoints
-    // parse unchanged), files@epoch once a compaction has happened
-    assert(DirSinkOffset(3, 0).json() == "3")
-    assert(DirSinkOffset.parse("3") == DirSinkOffset(3, 0))
-    assert(DirSinkOffset(1, 2).json() == "1@2")
-    assert(DirSinkOffset.parse("1@2") == DirSinkOffset(1, 2))
-    // round 15: the prefix fingerprint serializes after '#' and the
-    // legacy forms above stay byte-identical (old checkpoints parse)
-    assert(DirSinkOffset(3, 0, Some("ab12")).json() == "3#ab12")
-    assert(DirSinkOffset.parse("3#ab12") ==
-      DirSinkOffset(3, 0, Some("ab12")))
-    assert(DirSinkOffset.parse("1@2#ff") ==
-      DirSinkOffset(1, 2, Some("ff")))
+    step() // the snapshot at the vector DELETE, its vectors applied
+    assert(seen.size == 98, s"first batch: the vectored snapshot, got ${seen.size}")
+    val (purged, _) = DirSink.purgeVectors(spark, dir)
+    assert(purged == 2)
+    step() // the first append after the snapshot
+    val (packed, _) = DirSink.compactSmall(spark, dir, 1L << 30)
+    assert(packed > 1)
+    step()
+    append(dir, 115L, 120L)
+    DirSink.compact(spark, dir, targetFiles = 2)
+    while (step()) ()
+    assert(seen.distinct.size == seen.size,
+      s"a row was emitted twice: ${seen.diff(seen.distinct)}")
+    assert(seen.sorted == liveIds(dir),
+      "the tail must deliver exactly the live rows")
+    assert(seen.size == 118)
   }
 
-  test("OVERWRITE clears the remap chain: rewritten history never mis-migrates a stale checkpoint") {
-    import spark.implicits._
-    val in = tmpDir()
-    (1 to 3).foreach { i =>
-      Seq((i.toLong, s"v$i")).toDF("id", "v").coalesce(1)
-        .write.format(fmt).option("path", in).mode(SaveMode.Append).save()
+  test("a fresh tail over a history with an UPDATE and a vector DELETE reads exactly the live rows") {
+    val wh = tmpDir()
+    val cat = s"tailcat_${math.abs(wh.hashCode)}"
+    spark.conf.set(s"spark.sql.catalog.$cat", "graft.sources.v2.GraftCatalog")
+    spark.conf.set(s"spark.sql.catalog.$cat.warehouse", wh)
+    spark.sql(s"CREATE NAMESPACE IF NOT EXISTS $cat.db")
+    spark.sql(s"CREATE TABLE $cat.db.t (id BIGINT, v BIGINT)")
+    val dir = s"$wh/db/t"
+    (0 until 3).foreach(k => append(dir, k * 10L, k * 10L + 10L))
+    spark.sql(s"UPDATE $cat.db.t SET v = v + 100 WHERE id < 5")
+    withDv(deleteIds(dir, 12L, 25L))
+    append(dir, 30L, 35L)
+    val chk = tmpDir()
+    def run(): Seq[(Long, Long)] = {
+      val got = scala.collection.mutable.ArrayBuffer[(Long, Long)]()
+      val q = spark.readStream.format(fmt).option("path", dir)
+        .option("maxFilesPerTrigger", 1).load()
+        .writeStream
+        .foreachBatch { (b: org.apache.spark.sql.DataFrame, _: Long) =>
+          got ++= b.collect().map(r => (r.getLong(0), r.getLong(1))); ()
+        }
+        .option("checkpointLocation", chk)
+        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+        .start()
+      try q.awaitTermination(120000) finally q.stop()
+      got.toSeq.sorted
     }
-    DirSink.compact(spark, in, targetFiles = 1) // remap 3 -> 1 recorded
-    assert(DirSink.offsetRemaps(in) == Seq((3, 1)))
-    // a USER overwrite rewrites history: the chain must not survive —
-    // otherwise a stale pre-overwrite checkpoint at the old boundary
-    // (3) would silently "migrate" into the unrelated new zone
-    Seq((9L, "new")).toDF("id", "v").write.format(fmt)
-      .option("path", in).mode(SaveMode.Overwrite).save()
-    assert(DirSink.offsetRemaps(in).isEmpty,
-      "overwrite must drop pre-overwrite compaction remaps")
-    // ...while compaction's own internal overwrite preserves the chain
-    // across repeated compactions (pinned by the chained test above)
+    def live = spark.read.format(fmt).option("path", dir).load().collect()
+      .map(r => (r.getLong(0), r.getLong(1))).toSeq.sorted
+    val first = run()
+    assert(first.size == 33 && first == live,
+      s"the tail must read the live rows once: got $first, live $live")
+    assert(first.filter(_._1 < 5).forall(_._2 >= 100), "the UPDATE's values")
+    // the vectors' merge-on-read debt is paid under the live checkpoint:
+    // the purge rewrites files the tail has read, and the restart
+    // passes it, delivering only the rows appended after it
+    DirSink.purgeVectors(spark, dir)
+    append(dir, 35L, 40L)
+    val second = run()
+    assert(second == (35L until 40L).map(i => (i, i % 7)),
+      s"after the purge: exactly the new rows, got $second")
+    assert((first ++ second).sorted == live)
   }
 
-  test("an offset AHEAD of the remap chain fails fast (history was rewritten)") {
-    import spark.implicits._
-    val in = tmpDir()
-    (1 to 2).foreach { i =>
-      Seq((i.toLong, s"v$i")).toDF("id", "v").coalesce(1)
-        .write.format(fmt).option("path", in).mode(SaveMode.Append).save()
+  test("a rewrite under a live tail fails it at that generation, naming the op, and re-emits nothing") {
+    val wh = tmpDir()
+    val cat = s"tailcat_${math.abs(wh.hashCode)}"
+    spark.conf.set(s"spark.sql.catalog.$cat", "graft.sources.v2.GraftCatalog")
+    spark.conf.set(s"spark.sql.catalog.$cat.warehouse", wh)
+    spark.sql(s"CREATE NAMESPACE IF NOT EXISTS $cat.db")
+    val rewrites: Seq[(String, String, String => Unit)] = Seq(
+      ("upd", "update", _ =>
+        spark.sql(s"UPDATE $cat.db.upd SET v = v + 1 WHERE id = 3")),
+      ("mrg", "merge", _ => spark.sql(
+        s"MERGE INTO $cat.db.mrg t USING (SELECT 3L AS id, 0L AS v) s " +
+          "ON t.id = s.id WHEN MATCHED THEN UPDATE SET *")),
+      ("cow", "delete", dir => deleteIds(dir, 3L)),
+      ("vec", "delete", dir => withDv(deleteIds(dir, 3L))),
+      ("ovw", "overwrite", dir =>
+        spark.range(5).select(col("id"), col("id").as("v"))
+          .write.format(fmt).option("path", dir)
+          .mode(SaveMode.Overwrite).save()),
+      ("rst", "restore-1", dir => DirSink.restore(dir, 1L)),
+      ("drp", "drop-v", dir => DirSink.dropColumn(dir, "v")))
+    rewrites.foreach { case (name, op, rewrite) =>
+      spark.sql(s"CREATE TABLE $cat.db.$name (id BIGINT, v BIGINT)")
+      val dir = s"$wh/db/$name"
+      append(dir, 0L, 10L) // generation 1
+      val stream = new DirSinkMicroBatchStream(dir, schema, schema)
+      val (consumed, ids) = batch(stream, stream.initialOffset(),
+        ReadLimit.allAvailable())
+      assert(ids.sorted == (0L until 10L))
+      append(dir, 10L, 20L) // generation 2: read by the next batch
+      rewrite(dir)
+      val g = DirSink.currentGen(dir).get
+      val e = intercept[IllegalStateException](
+        batch(stream, consumed, ReadLimit.allAvailable()))
+      assert(e.getMessage.contains(s"generation $g ($op)"),
+        s"$name: ${e.getMessage}")
+      // paced, the tail still delivers the append before the rewrite —
+      // and then fails at the rewrite, never re-emitting a row
+      val paced = new DirSinkMicroBatchStream(dir, schema, schema, Some(1))
+      val (upTo, more) = batch(paced, consumed, paced.getDefaultReadLimit)
+      assert(upTo.json() == """{"gen":2}""" &&
+        more.sorted == (10L until 20L), s"$name: ${upTo.json()}")
+      intercept[IllegalStateException](
+        batch(paced, upTo, paced.getDefaultReadLimit))
     }
-    // a checkpoint that had migrated through a compaction (epoch 1)
-    // whose remap a user OVERWRITE then dropped: the zone now records
-    // ZERO remaps, so coordinate epoch 1 proves rewritten history —
-    // clamping it down would resume by count inside unrelated files
-    val stream = new graft.sources.v2.DirSinkMicroBatchStream(
-      in, org.apache.spark.sql.types.StructType.fromDDL(
-        "id BIGINT, v STRING"),
-      org.apache.spark.sql.types.StructType.fromDDL("id BIGINT, v STRING"))
-    val stale = DirSinkOffset(1, 1)
-    val e = intercept[IllegalStateException] {
-      stream.latestOffset(stale,
-        org.apache.spark.sql.connector.read.streaming.ReadLimit.allAvailable())
-    }
-    assert(e.getMessage.contains("coordinate epoch"),
-      s"must name the rewritten-history cause, got: ${e.getMessage}")
   }
 
-  test("compaction publishes its remap ATOMICALLY with the overwrite (one generation)") {
-    import spark.implicits._
-    val in = tmpDir()
-    (1 to 4).foreach { i =>
-      Seq((i.toLong, s"v$i")).toDF("id", "v").coalesce(1)
-        .write.format(fmt).option("path", in).mode(SaveMode.Append).save()
+  test("stream offsets parse strictly: only {\"gen\":<long>}, retired forms refuse") {
+    val dir = tmpDir()
+    val tail = new DirSinkMicroBatchStream(dir, schema, schema)
+    val cdf = new DirSinkCdfStream(dir, schema, None)
+    Seq(tail.deserializeOffset _, cdf.deserializeOffset _).foreach { de =>
+      assert(de("""{"gen":12}""").json() == """{"gen":12}""")
+      assert(de(""" { "gen" : -1 } """).json() == """{"gen":-1}""")
+      Seq("3", "1@2", "3#ab12", "3@1#ab12", """{"gen":1,"x":2}""",
+        """{"gen":"1"}""", """{"gen":99999999999999999999}""", "")
+        .foreach { j =>
+          val e = intercept[IllegalArgumentException](de(j))
+          assert(e.getMessage.contains("fresh checkpoint"), s"$j: $e")
+        }
     }
-    val genBefore = DirSink.currentGen(in).get
-    DirSink.compact(spark, in, targetFiles = 2)
-    val genAfter = DirSink.currentGen(in).get
-    // ONE publish carries both the rewritten file list and the remap —
-    // there is no post-overwrite window in which a concurrent append
-    // could inflate the remap's new side (the exactly-once hazard)
-    assert(genAfter == genBefore + 1,
-      s"compact must publish exactly once, gen $genBefore -> $genAfter")
-    assert(DirSink.offsetRemaps(in) == Seq((4, 2)))
-    assert(spark.read.format(fmt).option("path", in).load().count() == 4)
+  }
+
+  test("a compaction never drops an append that lands inside its window") {
+    val dir = tmpDir()
+    spark.range(0L, 3000000L, 1L, 2).select(col("id"), (col("id") % 7).as("v"))
+      .write.format(fmt).option("path", dir).mode(SaveMode.Append).save()
+    val started = new java.util.concurrent.CountDownLatch(1)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        started.countDown()
+    }
+    spark.sparkContext.addSparkListener(listener)
+    val outcome = try {
+      val compaction = scala.concurrent.Future(
+        scala.util.Try(DirSink.compact(spark, dir, targetFiles = 1)))(
+        scala.concurrent.ExecutionContext.global)
+      assert(started.await(120, java.util.concurrent.TimeUnit.SECONDS))
+      append(dir, -5L, 0L) // lands while the compaction is rewriting
+      scala.concurrent.Await.result(compaction,
+        scala.concurrent.duration.Duration(300, "s"))
+    } finally spark.sparkContext.removeSparkListener(listener)
+    outcome.failed.foreach { e =>
+      assert(e.isInstanceOf[java.util.ConcurrentModificationException], e)
+    }
+    val zone = spark.read.format(fmt).option("path", dir).load()
+    assert(zone.filter(col("id") < 0).count() == 5,
+      s"the appended rows must survive the compaction ($outcome)")
+    assert(zone.count() == 3000005L)
   }
 }

@@ -6,13 +6,14 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** TIMESTAMP TIME TRAVEL (round-11 verdict task 4): every commit stamps
   * its manifest lines with wall-clock millis (`t=` field), and
-  *   - `option("asOfTimestamp", t)` resolves to the longest manifest
-  *     prefix committed at or before t (the "read the corpus as of the
-  *     training-run cut at 14:02" read, no offset bookkeeping needed),
-  *   - catalog tables get the SQL forms: `VERSION AS OF k` (offset
-  *     vocabulary) and `TIMESTAMP AS OF ts`.
+  *   - `option("asOfTimestamp", t)` resolves to the newest generation
+  *     committed at or before t (the "read the corpus as of the
+  *     training-run cut at 14:02" read, no generation bookkeeping
+  *     needed),
+  *   - catalog tables get the SQL forms: `VERSION AS OF g` (the
+  *     generation, as `asOfVersion`) and `TIMESTAMP AS OF ts`.
   * A timestamp before the zone's first commit errors, mirroring
-  * asOfOffset's too-far guard. */
+  * asOfVersion's past-the-head guard. */
 class TimeTravelSpec extends AnyFunSuite {
   private lazy val spark = TestSession.spark
   private val fmt = "graft.sources.v2.DirSinkSource"
@@ -47,10 +48,10 @@ class TimeTravelSpec extends AnyFunSuite {
     val e = intercept[Exception] { read(before) }
     assert(e.getMessage.contains("asOfTimestamp") ||
       Option(e.getCause).exists(_.getMessage.contains("asOfTimestamp")))
-    // offset and timestamp are mutually exclusive
+    // version and timestamp are mutually exclusive
     intercept[Exception] {
       spark.read.format(fmt).option("path", dir)
-        .option("asOfOffset", 1).option("asOfTimestamp", cut).load().count()
+        .option("asOfVersion", 0).option("asOfTimestamp", cut).load().count()
     }
   }
 
@@ -66,7 +67,7 @@ class TimeTravelSpec extends AnyFunSuite {
     s.sql("CREATE TABLE graftcat.tt.t (id BIGINT, v STRING)")
     s.sql("INSERT INTO graftcat.tt.t VALUES (1, 'a')")
     val wh = s.conf.get("spark.sql.catalog.graftcat.warehouse")
-    val v1 = DirSink.readManifest(s"$wh/tt/t").get._2.size // after 1st insert
+    val v1 = DirSink.currentGen(s"$wh/tt/t").get // after 1st insert
     Thread.sleep(20)
     val cutMs = System.currentTimeMillis()
     Thread.sleep(20)

@@ -73,6 +73,8 @@ class VacuumSpec extends AnyFunSuite {
     import spark.implicits._
     val dir = tmpDir()
     write(dir)
+    val first = DirSink.currentGen(dir).get
+    val firstFiles = DirSink.readManifest(dir).get._2.map(_._1)
     Seq((3L, "gen2")).toDF("id", "v").coalesce(1)
       .write.format(fmt).option("path", dir).mode(SaveMode.Append).save()
     // aggressive retention may truncate the LOG (old segments fold
@@ -83,9 +85,15 @@ class VacuumSpec extends AnyFunSuite {
       graft.sources.v2.DirSinkLog.LogDirName + "/")),
       s"vacuum(0) on an append-only zone may only touch the log: $swept")
     assert(spark.read.format(fmt).option("path", dir).load().count() == 3)
-    // the asOf snapshot still resolves its prefix file
-    assert(spark.read.format(fmt).option("path", dir)
-      .option("asOfOffset", 1).load().count() == 2)
+    // the first generation's files are still on disk (the head holds
+    // them), though vacuum(0) retired the generation itself
+    assert(firstFiles.forall(n =>
+      java.nio.file.Files.exists(java.nio.file.Paths.get(dir, n))))
+    val e = intercept[Exception] {
+      spark.read.format(fmt).option("path", dir)
+        .option("asOfVersion", first).load().count()
+    }
+    assert(e.getMessage.contains("reconstructible"), e.getMessage)
   }
 
   test("a path that was never committed vacuums to nothing (no manifest, no error)") {

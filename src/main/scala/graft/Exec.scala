@@ -1,6 +1,7 @@
 package graft
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame, Observation}
+import org.apache.spark.sql.functions.col
 
 /** Result-lifecycle seam for declared queries.
   *
@@ -32,7 +33,8 @@ import org.apache.spark.sql.DataFrame
   *    sort-merge joins over 36 scans and ran 2.9× slower).
   *  - Raw eager `localCheckpoint(true)` remains ONLY where lineage
   *    growth is unbounded or super-polynomial in rounds (BPE's ~50
-  *    training rounds, the connected-components while-loop): there the
+  *    training rounds, and every [[fixpoint]] loop — connected
+  *    components and the converged graph APIs): there the
   *    un-truncated lazy tree would stall the DRIVER in plan
   *    canonicalization before a single task runs, so truncation must
   *    fire even during plan inspection — which is why those loop BODIES
@@ -135,6 +137,59 @@ object Exec {
     val cores = df.sparkSession.sparkContext.defaultParallelism
     if (df.rdd.getNumPartitions < cores) df.repartition(cores) else df
   }
+
+  /** Outcome of a [[fixpoint]] loop: the final relation, the rounds run,
+    * and why the loop stopped. `converged`: the stop rule saw the
+    * fixpoint; `cycled`: it saw a cycle instead (synchronous LPA's
+    * 2-cycle); both false: the `maxRounds` backstop fired and the result
+    * is NOT a fixpoint. */
+  final case class FixpointResult(result: DataFrame, rounds: Int,
+                                  converged: Boolean, cycled: Boolean)
+
+  /** What a [[fixpoint]] stop rule saw in the witness history. */
+  sealed trait Stop
+  case object Settled extends Stop
+  case object Cycled extends Stop
+
+  /** Stop rule of a monotone loop: settled once two successive rounds
+    * observe the same witness. */
+  val unchanged: PartialFunction[List[Any], Stop] = {
+    case w :: p :: _ if w == p => Settled
+  }
+
+  /** The observed-witness fixpoint loop. Round r is
+    * `step(prev).observe(witness).localCheckpoint(true)` — ONE job: the
+    * witness (one aggregate over the round's output, e.g. a count or an
+    * order-free sum) rides the checkpoint that materializes the round, so
+    * there is no second "did anything change?" job, no driver collect of
+    * row data, and lineage is truncated so round r never replans rounds
+    * 1..r−1. The state keeps `init`'s columns: a step may emit extra
+    * columns for its witness, and they are dropped before the
+    * checkpoint.
+    *
+    * After each round `stop` sees the witness values of every round so
+    * far, newest first; the loop ends when it answers, or after
+    * `maxRounds` rounds. The persisted inputs in `held` are released
+    * when the loop ends, however it ends. */
+  def fixpoint(init: DataFrame, maxRounds: Int, held: Seq[DataFrame],
+               step: DataFrame => DataFrame, witness: Column)(
+      stop: PartialFunction[List[Any], Stop]): FixpointResult =
+    try {
+      require(maxRounds >= 1, "a fixpoint loop needs at least one round")
+      val cols = init.columns.map(col)
+      var cur = init.localCheckpoint(true)
+      var history = List.empty[Any]
+      var verdict = Option.empty[Stop]
+      while (verdict.isEmpty && history.length < maxRounds) {
+        val obs = Observation()
+        cur = step(cur).observe(obs, witness.as("w")).select(cols: _*)
+          .localCheckpoint(true)
+        history = obs.get("w") :: history
+        verdict = stop.lift(history)
+      }
+      FixpointResult(cur, history.length, verdict.contains(Settled),
+        verdict.contains(Cycled))
+    } finally held.foreach(_.unpersist(false))
 
   // A KEYED fanOut variant (hash-repartition on the downstream group-by
   // key so the consumer's aggregate shares the exchange, guide §2.4) was

@@ -8,9 +8,13 @@ import java.nio.file.{Files, Paths}
 object Verify {
   def main(args: Array[String]): Unit = {
     val (sfDir, outDir) = (args(0), args(1))
-    // Optional extra args: dump only these queries (builder iteration aid;
-    // the driver always calls with exactly two args → full dump).
+    // Optional extra args: dump only these queries (a subset check; the
+    // full dump takes exactly two args). A name that matches no query
+    // fails the run before any dump is touched.
     val only = args.drop(2).toSet
+    val unknown = only -- SparkEntry.queries.keySet
+    require(unknown.isEmpty,
+      s"unknown queries: ${unknown.toSeq.sorted.mkString(", ")}")
     // the same session as Bench and the tests: extensions on, UTC, and
     // the shuffle-free q_dsv2_spj plan it benches
     val spark = Sessions.local()

@@ -38,6 +38,56 @@ object Graphs extends QueryModule {
   private val Scale = 1000000000000L // 1e-12 rank units
   private val Iters = 3
 
+  /** The derived link graph of one corpus — the single generator every
+    * graph query reads (see the object doc for its shape). Relations the
+    * graph persists are released when the [[linkGraph]] block exits:
+    * the nodes and the symmetrized edges, each on first use, and every
+    * relation a query [[hold]]s. A query that reads [[nodes]] reads
+    * them before it holds anything derived from the edges: a persist
+    * plans its relation at once, and only then does that cache read
+    * the node cache instead of the table. */
+  private[graft] final class LinkGraph private[Graphs] (docs: DataFrame) {
+    private val held = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+
+    /** Persist `df` until the [[linkGraph]] block exits. */
+    def hold(df: DataFrame): DataFrame = {
+      held += df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      df
+    }
+
+    /** One row: node count `n` and smallest id `mn`. */
+    val stats: DataFrame =
+      docs.agg(count(lit(1)).as("n"), min(col("doc_id")).as("mn"))
+
+    /** Node relation (doc_id), persisted on first use. */
+    lazy val nodes: DataFrame = hold(docs)
+
+    /** Directed edges (src, dst), two out-links per page minus
+      * self-links; a pair both maps produce appears twice. */
+    val edges: DataFrame = docs.crossJoin(broadcast(stats))
+      .withColumn("j", col("doc_id") - col("mn"))
+      .select(col("doc_id").as("src"), explode(array(
+        col("mn") + expr("j div 3"),
+        col("mn") + (col("j") * col("j") + 1) % col("n"))).as("dst"))
+      .filter(col("src") =!= col("dst"))
+
+    /** Symmetrized distinct edges (src, dst), persisted on first use. */
+    lazy val undirected: DataFrame = hold(edges
+      .union(edges.select(col("dst").as("src"), col("src").as("dst")))
+      .distinct())
+
+    private[Graphs] def release(): Unit =
+      held.reverseIterator.foreach(_.unpersist(false))
+  }
+
+  /** Run `body` over the corpus's [[LinkGraph]] and release what it
+    * persisted when `body` returns or throws. */
+  private[graft] def linkGraph[A](s: SparkSession, dir: String)(
+      body: LinkGraph => A): A = {
+    val g = new LinkGraph(Tables.load(s, dir, "documents").select(col("doc_id")))
+    try body(g) finally g.release()
+  }
+
   /** Rank update over a caller-managed (cached) node/edge pair:
     * base + damped in-mass, all integer. Package-private so the
     * PlanShapeSpec loop-body sweep inspects the REAL per-round fragment
@@ -55,32 +105,22 @@ object Graphs extends QueryModule {
           expr("(85 * coalesce(inm, CAST(0 AS BIGINT))) div 100")).as("pr"))
   }
 
-  private def qPagerank(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val nodes = Tables.load(s, dir, "documents").select($"doc_id")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val stats = nodes.agg(count(lit(1)).as("n"), min($"doc_id").as("mn"))
-    val e0 = nodes.crossJoin(broadcast(stats))
-      .withColumn("j", $"doc_id" - $"mn")
-      .select($"doc_id".as("src"), explode(array(
-        $"mn" + expr("j div 3"),
-        $"mn" + ($"j" * $"j" + 1) % $"n")).as("dst"))
-      .filter($"src" =!= $"dst")
-    val outdeg = e0.groupBy($"src").agg(count(lit(1)).as("outdeg"))
-    val edges = e0.join(outdeg, Seq("src"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val r0 = nodes.crossJoin(broadcast(stats))
+  private def qPagerank(s: SparkSession, dir: String): DataFrame =
+    linkGraph(s, dir) { g =>
+      import s.implicits._
+      val nodes = g.nodes
+      val outdeg = g.edges.groupBy($"src").agg(count(lit(1)).as("outdeg"))
+      val edges = g.hold(g.edges.join(outdeg, Seq("src")))
+      val r0 = nodes.crossJoin(broadcast(g.stats))
         .select($"doc_id", expr(s"($Scale div n)").as("pr"))
       val rN = (1 to Iters).foldLeft(r0) { (r, _) =>
-        prIteration(nodes, edges, stats, r)
+        prIteration(nodes, edges, g.stats, r)
       }
       rN.select($"doc_id", $"pr",
           ($"pr".cast("double") / lit(Scale.toDouble)).as("rank"))
         .orderBy($"doc_id")
         .transform(graft.Exec.seal)
-    } finally { edges.unpersist(false); nodes.unpersist(false) }
-  }
+    }
 
   /** One unrolled power iteration as a DuckDB CTE (HUGEINT sums cast
     * back to BIGINT so `//` stays in 64-bit like Spark's `div`). */
@@ -170,33 +210,18 @@ object Graphs extends QueryModule {
     * on node keys over a DISTINCT oriented edge list (persisted once,
     * three consumers — without the persist each join arm would
     * re-derive the generator + distinct + orientation). */
-  private def qTriangles(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    // persisted like qPagerank's nodes: stats and the edge generator
-    // would otherwise each replan their own parquet scan
-    val d = Tables.load(s, dir, "documents").select($"doc_id")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val stats = d.agg(count(lit(1)).as("n"), min($"doc_id").as("mn"))
-    val e0 = d.crossJoin(broadcast(stats))
-      .withColumn("j", $"doc_id" - $"mn")
-      .select($"doc_id".as("src"), explode(array(
-        $"mn" + expr("j div 3"),
-        $"mn" + ($"j" * $"j" + 1) % $"n")).as("dst"))
-      .filter($"src" =!= $"dst")
-    // u feeds the degree union twice and the orientation join once —
-    // persist it or the generator+distinct replans three times
-    val u = e0
-      .select(least($"src", $"dst").as("a"), greatest($"src", $"dst").as("b"))
-      .distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val o = orientByDegree(u)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      closeTriangles(o)
+  private def qTriangles(s: SparkSession, dir: String): DataFrame =
+    linkGraph(s, dir) { g =>
+      import s.implicits._
+      // u feeds the degree union twice and the orientation join once —
+      // hold it or the generator+distinct replans three times
+      val u = g.hold(g.edges
+        .select(least($"src", $"dst").as("a"), greatest($"src", $"dst").as("b"))
+        .distinct())
+      closeTriangles(g.hold(orientByDegree(u)))
         .orderBy($"a", $"b", $"c")
         .transform(graft.Exec.seal)
-    } finally { o.unpersist(false); u.unpersist(false); d.unpersist(false) }
-  }
+    }
 
   /** q_label_prop — synchronous label propagation (community detection)
     * over the same derived link graph, SYMMETRIZED: three fixed rounds
@@ -211,29 +236,15 @@ object Graphs extends QueryModule {
     * windows, no driver loops over data; rounds are FIXED (3), matching
     * what an unrolled oracle can replay. All-integer, zero float-parity
     * surface. Edges/labels-relation persisted across rounds. */
-  private def qLabelProp(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val d = Tables.load(s, dir, "documents").select($"doc_id")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val stats = d.agg(count(lit(1)).as("n"), min($"doc_id").as("mn"))
-    val e0 = d.crossJoin(broadcast(stats))
-      .withColumn("j", $"doc_id" - $"mn")
-      .select($"doc_id".as("src"), explode(array(
-        $"mn" + expr("j div 3"),
-        $"mn" + ($"j" * $"j" + 1) % $"n")).as("dst"))
-      .filter($"src" =!= $"dst")
-    val eu = e0.select($"src", $"dst")
-      .union(e0.select($"dst".as("src"), $"src".as("dst")))
-      .distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val l0 = d.select($"doc_id", $"doc_id".as("lbl"))
-      val l3 = (1 to 3).foldLeft(l0)((lbl, _) => lpaStep(eu, lbl))
+  private def qLabelProp(s: SparkSession, dir: String): DataFrame =
+    linkGraph(s, dir) { g =>
+      import s.implicits._
+      val l0 = g.nodes.select($"doc_id", $"doc_id".as("lbl"))
+      val l3 = (1 to 3).foldLeft(l0)((lbl, _) => lpaStep(g.undirected, lbl))
       l3.select($"doc_id", $"lbl".as("community"))
         .orderBy($"doc_id")
         .transform(graft.Exec.seal)
-    } finally { eu.unpersist(false); d.unpersist(false) }
-  }
+    }
 
   /** q_graph_bfs — multi-source breadth-first distances over the same
     * symmetrized derived link graph as [[qLabelProp]]: every node's hop
@@ -249,32 +260,19 @@ object Graphs extends QueryModule {
     * node id, map-side-combinable min) — the textbook iterative-relaxation
     * BFS; rounds are FIXED (3), so the driver loop iterates rounds, never
     * rows, and an unrolled oracle replays it. All-integer distances; no
-    * float surface at all. */
-  private def qGraphBfs(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val d = Tables.load(s, dir, "documents").select($"doc_id")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val stats = d.agg(count(lit(1)).as("n"), min($"doc_id").as("mn"))
-    val e0 = d.crossJoin(broadcast(stats))
-      .withColumn("j", $"doc_id" - $"mn")
-      .select($"doc_id".as("src"), explode(array(
-        $"mn" + expr("j div 3"),
-        $"mn" + ($"j" * $"j" + 1) % $"n")).as("dst"))
-      .filter($"src" =!= $"dst")
-    val eu = e0.select($"src", $"dst")
-      .union(e0.select($"dst".as("src"), $"src".as("dst")))
-      .distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val b0 = d.filter($"doc_id" % 31 === 5)
+    * float surface at all; each round is [[ssspStep]] at unit weight. */
+  private def qGraphBfs(s: SparkSession, dir: String): DataFrame =
+    linkGraph(s, dir) { g =>
+      import s.implicits._
+      val b0 = g.nodes.filter($"doc_id" % 31 === 5)
         .select($"doc_id", lit(0L).as("dist"))
-      // seal each round: bfsStep consumes `reached` twice (join + union),
+      val ew = g.undirected.withColumn("w", lit(1L))
+      // seal each round: ssspStep consumes `reached` twice (join + union),
       // so the raw tree doubles per round — 2³ replans by round 3
       val b3 = (1 to 3).foldLeft(b0)((reached, _) =>
-        graft.Exec.seal(bfsStep(eu, reached)))
+        graft.Exec.seal(ssspStep(ew, reached)))
       b3.orderBy($"doc_id").transform(graft.Exec.seal)
-    } finally { eu.unpersist(false); d.unpersist(false) }
-  }
+    }
 
   /** q_graph_jaccard — neighborhood (co-citation) similarity over the
     * symmetrized link graph: for every pair of pages sharing ≥ 2
@@ -301,27 +299,15 @@ object Graphs extends QueryModule {
     * is one double division, round6'd. */
   private[graft] val JaccardHubCap = 256L
 
-  private def qGraphJaccard(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val d = Tables.load(s, dir, "documents").select($"doc_id")
-    val stats = d.agg(count(lit(1)).as("n"), min($"doc_id").as("mn"))
-    val e0 = d.crossJoin(broadcast(stats))
-      .withColumn("j", $"doc_id" - $"mn")
-      .select($"doc_id".as("src"), explode(array(
-        $"mn" + expr("j div 3"),
-        $"mn" + ($"j" * $"j" + 1) % $"n")).as("dst"))
-      .filter($"src" =!= $"dst")
-    // eu0 feeds the cap's count aggregate plus its cold/hot split —
-    // persist it or the generator+distinct replans three times
-    val eu0 = e0.select($"src", $"dst")
-      .union(e0.select($"dst".as("src"), $"src".as("dst")))
-      .distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // cap per wedge center (dst): the join on w below fans out as
-    // in-deg(w)² — the capped relation bounds that by cap² per hub
-    val eu = Baskets.capPerItem(eu0, "dst", "src", JaccardHubCap)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
+  private def qGraphJaccard(s: SparkSession, dir: String): DataFrame =
+    linkGraph(s, dir) { g =>
+      import s.implicits._
+      // cap per wedge center (dst): the join on w below fans out as
+      // in-deg(w)² — the capped relation bounds that by cap² per hub.
+      // The persisted symmetrized edges feed the cap's count aggregate
+      // plus its cold/hot split.
+      val eu = g.hold(
+        Baskets.capPerItem(g.undirected, "dst", "src", JaccardHubCap))
       val l = eu.select($"dst".as("w"), $"src".as("a"))
       val r = eu.select($"dst".as("w"), $"src".as("b"))
       val inter = l.join(r, Seq("w")).filter($"a" < $"b")
@@ -337,8 +323,7 @@ object Graphs extends QueryModule {
             ($"deg_a" + $"deg_b" - $"common").cast("double")).as("jaccard"))
         .orderBy($"doc_a", $"doc_b")
         .transform(graft.Exec.seal)
-    } finally { eu.unpersist(false); eu0.unpersist(false) }
-  }
+    }
 
   /** q_kcore — three peeling rounds toward the 3-core of the link graph:
     * each round drops nodes whose degree in the current induced subgraph
@@ -353,34 +338,20 @@ object Graphs extends QueryModule {
     * endpoints, then a map-combinable degree count and the ≥ k filter —
     * node-relation state only, no per-round edge rewrite. Output is the
     * surviving nodes with their last-round induced degree; all-integer. */
-  private def qKcore(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val d = Tables.load(s, dir, "documents").select($"doc_id")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val stats = d.agg(count(lit(1)).as("n"), min($"doc_id").as("mn"))
-    val e0 = d.crossJoin(broadcast(stats))
-      .withColumn("j", $"doc_id" - $"mn")
-      .select($"doc_id".as("src"), explode(array(
-        $"mn" + expr("j div 3"),
-        $"mn" + ($"j" * $"j" + 1) % $"n")).as("dst"))
-      .filter($"src" =!= $"dst")
-    val eu = e0.select($"src", $"dst")
-      .union(e0.select($"dst".as("src"), $"src".as("dst")))
-      .distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val n0 = d.select($"doc_id")
+  private def qKcore(s: SparkSession, dir: String): DataFrame =
+    linkGraph(s, dir) { g =>
+      import s.implicits._
+      val n0 = g.nodes.select($"doc_id")
       // seal each round: kcoreStep consumes `nodes` twice (two
       // semi-joins), so the raw tree doubles per round
       val last = (1 to 3).foldLeft((n0, n0)) { case ((nodes, _), _) =>
-        val kept = graft.Exec.seal(kcoreStep(eu, nodes, 3))
+        val kept = graft.Exec.seal(kcoreStep(g.undirected, nodes, 3))
         (kept.select($"src".as("doc_id")), kept)
       }._2
       last.select($"src".as("doc_id"), $"degree")
         .orderBy($"doc_id")
         .transform(graft.Exec.seal)
-    } finally { eu.unpersist(false); d.unpersist(false) }
-  }
+    }
 
   /** One synchronous label-propagation round: adopt the most frequent
     * neighbor label, ties to the smallest. Consumes `lbl` once — the
@@ -394,19 +365,6 @@ object Graphs extends QueryModule {
       .groupBy($"src")
       .agg(max(struct($"c", (-$"lbl").as("nl"))).as("x"))
       .select($"src".as("doc_id"), (-$"x.nl").as("lbl"))
-  }
-
-  /** One BFS relaxation over a symmetrized edge list: offer every
-    * neighbor distance+1, keep the per-node min. Shared by the
-    * fixed-round declared query (oracle-unrollable) and
-    * [[bfsConverged]]; package-private so the PlanShapeSpec loop-body
-    * sweep inspects the real per-round fragment. */
-  private[graft] def bfsStep(eu: DataFrame, reached: DataFrame): DataFrame = {
-    val s = eu.sparkSession; import s.implicits._
-    val relaxed = eu.join(reached, eu("dst") === reached("doc_id"))
-      .select(eu("src").as("doc_id"), ($"dist" + 1L).as("dist"))
-    reached.union(relaxed)
-      .groupBy($"doc_id").agg(min($"dist").as("dist"))
   }
 
   /** One k-core peel round: restrict the edge list to live endpoints
@@ -441,19 +399,11 @@ object Graphs extends QueryModule {
     * broadcast. Edges and nodes persist across rounds ([[qPagerank]]
     * lifecycle), each half-round result is sealed (consumed by the next
     * join AND the final assembly). */
-  private def qHits(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val d = Tables.load(s, dir, "documents").select($"doc_id")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val stats = d.agg(count(lit(1)).as("n"), min($"doc_id").as("mn"))
-    val ef = d.crossJoin(broadcast(stats))
-      .withColumn("j", $"doc_id" - $"mn")
-      .select($"doc_id".as("src"), explode(array(
-        $"mn" + expr("j div 3"),
-        $"mn" + ($"j" * $"j" + 1) % $"n")).as("dst"))
-      .filter($"src" =!= $"dst")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
+  private def qHits(s: SparkSession, dir: String): DataFrame =
+    linkGraph(s, dir) { g =>
+      import s.implicits._
+      val d = g.nodes
+      val ef = g.hold(g.edges)
       val h0 = d.select($"doc_id", lit(1000000L).as("h"))
       val (hN, aN) = (1 to 2).foldLeft((h0, h0.select($"doc_id",
         lit(0L).as("a")))) { case ((h, _), _) =>
@@ -479,13 +429,14 @@ object Graphs extends QueryModule {
             .as("auth_score"))
         .orderBy($"doc_id")
         .transform(graft.Exec.seal)
-    } finally { ef.unpersist(false); d.unpersist(false) }
-  }
+    }
 
-  /** One weighted relaxation over a symmetrized weighted edge list:
-    * offer every neighbor dist + w, keep the per-node min. The weighted
-    * generalization of [[bfsStep]]; package-private for the
-    * PlanShapeSpec loop-body sweep. */
+  /** One relaxation over a symmetrized weighted edge list (src, dst, w):
+    * offer every neighbor dist + w, keep the per-node min. BFS is this
+    * step at w = 1. Shared by the fixed-round declared queries
+    * (oracle-unrollable) and [[bfsConverged]]; package-private so the
+    * PlanShapeSpec loop-body sweep inspects the real per-round
+    * fragment. */
   private[graft] def ssspStep(ew: DataFrame, reached: DataFrame): DataFrame = {
     val s = ew.sparkSession; import s.implicits._
     val relaxed = ew.join(reached, ew("dst") === reached("doc_id"))
@@ -509,52 +460,28 @@ object Graphs extends QueryModule {
     * equi-join with a map-side-combinable min keyed by node id; the
     * frontier relation holds only REACHED nodes; all-integer distances,
     * zero float surface. */
-  private def qSsspWeighted(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val d = Tables.load(s, dir, "documents").select($"doc_id")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val stats = d.agg(count(lit(1)).as("n"), min($"doc_id").as("mn"))
-    val e0 = d.crossJoin(broadcast(stats))
-      .withColumn("j", $"doc_id" - $"mn")
-      .select($"doc_id".as("src"), explode(array(
-        $"mn" + expr("j div 3"),
-        $"mn" + ($"j" * $"j" + 1) % $"n")).as("dst"))
-      .filter($"src" =!= $"dst")
-    val ew = e0.select($"src", $"dst")
-      .union(e0.select($"dst".as("src"), $"src".as("dst")))
-      .distinct()
-      .withColumn("w", lit(1L) + ($"src" + $"dst") % 7L)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val r0 = d.filter($"doc_id" % 31 === 5)
+  private def qSsspWeighted(s: SparkSession, dir: String): DataFrame =
+    linkGraph(s, dir) { g =>
+      import s.implicits._
+      val r0 = g.nodes.filter($"doc_id" % 31 === 5)
         .select($"doc_id", lit(0L).as("dist"))
+      val ew = g.undirected.withColumn("w", lit(1L) + ($"src" + $"dst") % 7L)
       // seal each round: ssspStep consumes `reached` twice (join +
       // union), the [[qGraphBfs]] doubling
       val r3 = (1 to 3).foldLeft(r0)((reached, _) =>
         graft.Exec.seal(ssspStep(ew, reached)))
       r3.orderBy($"doc_id").transform(graft.Exec.seal)
-    } finally { ew.unpersist(false); d.unpersist(false) }
-  }
+    }
 
   // ---- convergence-detected variants --------------------------------
   //
   // The declared queries above run FIXED rounds so a DuckDB oracle can
   // unroll them; these API variants run the SAME per-round fragments to
-  // their fixpoint, detected by an observed metric riding each round's
-  // eager localCheckpoint — the connectedComponentsLoop pattern
-  // (Similarity.scala): one job per round, no second "did anything
-  // change?" job, no driver collect of row data, lineage truncated so
-  // round r never replans rounds 1..r−1. GraphsSpec proves each on a
-  // hand-built graph where fixed-round ≠ fixpoint (a long path for BFS
-  // and pagerank, a peel chain for k-core).
-
-  /** Outcome of a convergence-detected loop: the final relation, rounds
-    * run, and whether the loop actually stopped on its witness —
-    * `converged = false` means the `maxRounds` backstop fired and the
-    * result is NOT a fixpoint (the round-7 review: a bare DataFrame
-    * made a bailout indistinguishable from convergence). */
-  final case class FixpointResult(result: DataFrame, rounds: Int,
-                                  converged: Boolean)
+  // their fixpoint through graft.Exec.fixpoint — one job per round, the
+  // witness riding the round's checkpoint — and each API's convergence
+  // test is a stop rule over the witness history. GraphsSpec proves each
+  // on a hand-built graph where fixed-round ≠ fixpoint (a long path for
+  // BFS and pagerank, a peel chain for k-core).
 
   /** k-core fixpoint: peel with [[kcoreStep]] until the surviving-node
     * count stalls. Peeling only ever REMOVES nodes, so an unchanged
@@ -566,77 +493,44 @@ object Graphs extends QueryModule {
     * @return surviving (doc_id, degree) — degree in the induced core
     */
   def kcoreConverged(edges: DataFrame, k: Int,
-                     maxRounds: Int = 10000): FixpointResult = {
-    require(maxRounds >= 1, "kcoreConverged needs at least one round")
+                     maxRounds: Int = 10000): graft.Exec.FixpointResult = {
     val s = edges.sparkSession; import s.implicits._
     val eu = edges.select($"src", $"dst")
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      var nodes = eu.select($"src".as("doc_id")).distinct()
-        .localCheckpoint(true)
-      var kept: DataFrame = nodes.withColumn("degree", lit(0L))
-        .select($"doc_id".as("src"), $"degree")
-      var prev = -1L
-      var cur = nodes.count()
-      var rounds = 0
-      while (cur != prev && rounds < maxRounds) {
-        prev = cur; rounds += 1
-        val obs = org.apache.spark.sql.Observation()
-        kept = kcoreStep(eu, nodes, k)
-          .observe(obs, count(lit(1)).as("c"))
-          .localCheckpoint(true)
-        nodes = kept.select($"src".as("doc_id"))
-        cur = obs.get("c").asInstanceOf[Long]
-      }
-      FixpointResult(kept.select($"src".as("doc_id"), $"degree"),
-        rounds, cur == prev)
-    } finally eu.unpersist(false)
+    val nodes = eu.select($"src").distinct().withColumn("degree", lit(0L))
+    // round 1 compares with the input's node count (counted once, by the
+    // stop rule after that round): an input that is already a k-core
+    // stops after one round
+    lazy val n0 = nodes.count()
+    val res = graft.Exec.fixpoint(nodes, maxRounds, Seq(eu),
+      kept => kcoreStep(eu, kept.select($"src".as("doc_id")), k),
+      count(lit(1)))(graft.Exec.unchanged.orElse {
+      case List(c) if c == n0 => graft.Exec.Settled
+    })
+    res.copy(result = res.result.select($"src".as("doc_id"), $"degree"))
   }
 
-  /** Multi-source BFS fixpoint: relax with [[bfsStep]] until the
-    * (reached count, Σ dist) pair stalls. Distances only DECREASE per
-    * node and the reached set only GROWS, so an unchanged pair means no
-    * node was added (count) and no distance dropped (sum) — an exact
-    * witness. Rounds are O(eccentricity of the seed set).
+  /** Multi-source BFS fixpoint: relax with [[ssspStep]] at unit weight
+    * until the (reached count, Σ dist) pair stalls. Distances only
+    * DECREASE per node and the reached set only GROWS, so an unchanged
+    * pair means no node was added (count) and no distance dropped
+    * (sum) — an exact witness. Rounds are O(eccentricity of the seed
+    * set).
     *
     * @param edges symmetrized DISTINCT edge list (src, dst)
     * @param seeds seed nodes (doc_id), distance 0
     * @return reached (doc_id, dist); unreached nodes are absent
     */
   def bfsConverged(edges: DataFrame, seeds: DataFrame,
-                   maxRounds: Int = 10000): FixpointResult = {
-    require(maxRounds >= 1, "bfsConverged needs at least one round")
+                   maxRounds: Int = 10000): graft.Exec.FixpointResult = {
     val s = edges.sparkSession; import s.implicits._
     val eu = edges.select($"src", $"dst")
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      var reached = seeds.select($"doc_id", lit(0L).as("dist"))
-        .localCheckpoint(true)
-      var prev = (-1L, -1L)
-      var cur = (0L, 0L)
-      var rounds = 0
-      while (cur != prev && rounds < maxRounds) {
-        prev = cur; rounds += 1
-        val obs = org.apache.spark.sql.Observation()
-        reached = bfsStep(eu, reached)
-          .observe(obs, count(lit(1)).as("c"), sum($"dist").as("s"))
-          .localCheckpoint(true)
-        cur = (obs.get("c").asInstanceOf[Long],
-          Option(obs.get("s")).map(_.asInstanceOf[Long]).getOrElse(0L))
-      }
-      FixpointResult(reached, rounds, cur == prev)
-    } finally eu.unpersist(false)
+    val ew = eu.withColumn("w", lit(1L))
+    graft.Exec.fixpoint(seeds.select($"doc_id", lit(0L).as("dist")),
+      maxRounds, Seq(eu), ssspStep(ew, _),
+      struct(count(lit(1)), sum($"dist")))(graft.Exec.unchanged)
   }
-
-  /** Outcome of [[labelPropConverged]]: the final labels, rounds run,
-    * whether the loop stopped on a detected 2-cycle (synchronous LPA's
-    * known oscillation on bipartite structure), and whether it reached
-    * a true fixpoint. `converged` is true ONLY when the digest witness
-    * fired without cycling — an exit on the maxRounds backstop leaves
-    * both flags false, so the three outcomes (fixpoint / 2-cycle /
-    * round-limit) are distinguishable without inferring from `rounds`. */
-  final case class LpaResult(labels: DataFrame, rounds: Int,
-                             cycled: Boolean, converged: Boolean)
 
   /** Label propagation to convergence: iterate [[lpaStep]] until the
     * assignment stalls — or until it 2-CYCLES, which synchronous LPA
@@ -650,39 +544,23 @@ object Graphs extends QueryModule {
     * of per-node changes is ~2⁻⁶⁴ per round.
     *
     * @param edges symmetrized DISTINCT edge list (src, dst)
+    * @return final (doc_id, lbl)
     */
   def labelPropConverged(edges: DataFrame,
-                         maxRounds: Int = 10000): LpaResult = {
-    require(maxRounds >= 1, "labelPropConverged needs at least one round")
+                         maxRounds: Int = 10000): graft.Exec.FixpointResult = {
     val s = edges.sparkSession; import s.implicits._
     val eu = edges.select($"src", $"dst")
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      var lbl = eu.select($"src".as("doc_id")).distinct()
-        .withColumn("lbl", $"doc_id").localCheckpoint(true)
-      // sentinels never equal a real digest except with ~2⁻⁶⁴ chance
-      var prev = -1L // digest two rounds ago
-      var cur = -2L  // digest one round ago
-      var rounds = 0
-      var cycled = false
-      var done = false
-      while (!done && rounds < maxRounds) {
-        rounds += 1
-        val obs = org.apache.spark.sql.Observation()
-        // hashes reduced mod a prime before the sum: a raw Σ xxhash64
-        // overflows Long under ANSI; the reduced sum stays order-free
-        // and under 2⁶³ up to ~9·10⁹ nodes
-        lbl = lpaStep(eu, lbl)
-          .observe(obs,
-            sum(xxhash64($"doc_id", $"lbl") % lit(1000000007L)).as("d"))
-          .localCheckpoint(true)
-        val d = Option(obs.get("d")).map(_.asInstanceOf[Long]).getOrElse(0L)
-        if (d == cur) done = true
-        else if (d == prev) { done = true; cycled = true }
-        prev = cur; cur = d
-      }
-      LpaResult(lbl, rounds, cycled, converged = done && !cycled)
-    } finally eu.unpersist(false)
+    graft.Exec.fixpoint(
+      eu.select($"src".as("doc_id")).distinct().withColumn("lbl", $"doc_id"),
+      maxRounds, Seq(eu), lpaStep(eu, _),
+      // hashes reduced mod a prime before the sum: a raw Σ xxhash64
+      // overflows Long under ANSI; the reduced sum stays order-free
+      // and under 2⁶³ up to ~9·10⁹ nodes
+      sum(xxhash64($"doc_id", $"lbl") % lit(1000000007L)))(
+      graft.Exec.unchanged.orElse {
+        case d :: _ :: dd :: _ if d == dd => graft.Exec.Cycled
+      })
   }
 
   /** PageRank to tolerance: iterate [[prIteration]] until the total
@@ -704,8 +582,7 @@ object Graphs extends QueryModule {
     */
   def pagerankConverged(edges: DataFrame, nodes: DataFrame,
                         tolUnits: Long = 1000000L,
-                        maxRounds: Int = 100): FixpointResult = {
-    require(maxRounds >= 1, "pagerankConverged needs at least one round")
+                        maxRounds: Int = 100): graft.Exec.FixpointResult = {
     val s = edges.sparkSession; import s.implicits._
     val nd = nodes.select($"doc_id")
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -713,24 +590,15 @@ object Graphs extends QueryModule {
     val outdeg = edges.groupBy($"src").agg(count(lit(1)).as("outdeg"))
     val ed = edges.select($"src", $"dst").join(outdeg, Seq("src"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      var r = nd.crossJoin(broadcast(stats))
-        .select($"doc_id", expr(s"($Scale div n)").as("pr"))
-        .localCheckpoint(true)
-      var delta = Long.MaxValue
-      var rounds = 0
-      while (delta > tolUnits && rounds < maxRounds) {
-        rounds += 1
-        val obs = org.apache.spark.sql.Observation()
-        r = prIteration(nd, ed, stats, r)
-          .join(r.select($"doc_id", $"pr".as("graft_pr_prev")), Seq("doc_id"))
-          .observe(obs, sum(abs($"pr" - $"graft_pr_prev")).as("d"))
-          .select($"doc_id", $"pr")
-          .localCheckpoint(true)
-        delta = Option(obs.get("d")).map(_.asInstanceOf[Long]).getOrElse(0L)
-      }
-      FixpointResult(r, rounds, delta <= tolUnits)
-    } finally { ed.unpersist(false); nd.unpersist(false) }
+    graft.Exec.fixpoint(
+      nd.crossJoin(broadcast(stats))
+        .select($"doc_id", expr(s"($Scale div n)").as("pr")),
+      maxRounds, Seq(ed, nd),
+      r => prIteration(nd, ed, stats, r)
+        .join(r.select($"doc_id", $"pr".as("graft_pr_prev")), Seq("doc_id")),
+      coalesce(sum(abs($"pr" - $"graft_pr_prev")), lit(0L))) {
+      case (d: Long) :: _ if d <= tolUnits => graft.Exec.Settled
+    }
   }
 
   /** One unrolled peel round as DuckDB CTEs: restrict edges to live
@@ -824,23 +692,11 @@ object Graphs extends QueryModule {
     * node-sized state, and every aggregate map-side combines to
     * community-sized rows. No window, no fact-sized state beyond the
     * edge list the community query already builds. */
-  private def qGraphModularity(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val d = Tables.load(s, dir, "documents").select($"doc_id")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val stats = d.agg(count(lit(1)).as("n"), min($"doc_id").as("mn"))
-    val e0 = d.crossJoin(broadcast(stats))
-      .withColumn("j", $"doc_id" - $"mn")
-      .select($"doc_id".as("src"), explode(array(
-        $"mn" + expr("j div 3"),
-        $"mn" + ($"j" * $"j" + 1) % $"n")).as("dst"))
-      .filter($"src" =!= $"dst")
-    val eu = e0.select($"src", $"dst")
-      .union(e0.select($"dst".as("src"), $"src".as("dst")))
-      .distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val l0 = d.select($"doc_id", $"doc_id".as("lbl"))
+  private def qGraphModularity(s: SparkSession, dir: String): DataFrame =
+    linkGraph(s, dir) { g =>
+      import s.implicits._
+      val l0 = g.nodes.select($"doc_id", $"doc_id".as("lbl"))
+      val eu = g.undirected
       val lbl = graft.Exec.seal(
         (1 to 3).foldLeft(l0)((l, _) => lpaStep(eu, l)))
       val m2 = eu.agg(count(lit(1)).as("m2"))
@@ -863,8 +719,7 @@ object Graphs extends QueryModule {
               / ($"m2" * $"m2").cast("double")).as("q_contrib"))
         .orderBy($"community")
         .transform(graft.Exec.seal)
-    } finally { eu.unpersist(false); d.unpersist(false) }
-  }
+    }
 
   val queries: Map[String, Q] = Map(
     "q_hits" -> (qHits _),
@@ -877,17 +732,28 @@ object Graphs extends QueryModule {
     "q_kcore" -> (qKcore _),
     "q_triangles" -> (qTriangles _))
 
-  val oracles: Map[String, String] = Map(
-    "q_hits" ->
-      s"""WITH d AS (SELECT doc_id FROM documents),
+  /** The [[LinkGraph]] as DuckDB CTEs, the prefix of every graph
+    * oracle: `d` nodes, `s` stats and `e0` the raw generator, self-links
+    * included. [[EfCte]] adds `ef`, the directed edges; [[EuCtes]] adds
+    * `ef` and `eu`, the symmetrized distinct edges. */
+  private val LinkCtes = """WITH d AS (SELECT doc_id FROM documents),
          s AS (SELECT count(*) n, min(doc_id) mn FROM d),
          e0 AS (
            SELECT doc_id src, mn + ((doc_id - mn) // 3) dst
            FROM d CROSS JOIN s
            UNION ALL
            SELECT doc_id, mn + ((doc_id - mn) * (doc_id - mn) + 1) % n
-           FROM d CROSS JOIN s),
-         ef AS (SELECT src, dst FROM e0 WHERE src <> dst),
+           FROM d CROSS JOIN s),"""
+  private val EfCte = """
+         ef AS (SELECT src, dst FROM e0 WHERE src <> dst),"""
+  private val EuCtes = EfCte + """
+         eu AS (SELECT DISTINCT src, dst FROM
+                  (SELECT src, dst FROM ef
+                   UNION ALL SELECT dst, src FROM ef)),"""
+
+  val oracles: Map[String, String] = Map(
+    "q_hits" ->
+      s"""$LinkCtes$EfCte
          h0 AS (SELECT doc_id, CAST(1000000 AS BIGINT) h FROM d),
          ${(1 to 2).map(duckHitsIter).mkString(",\n")},
          sc AS (SELECT h2.doc_id, h2.h, a2.a
@@ -900,36 +766,14 @@ object Graphs extends QueryModule {
         "CAST(a AS DOUBLE) / CAST(amax AS DOUBLE)")} AS auth_score
          FROM sc CROSS JOIN mx ORDER BY doc_id""",
     "q_sssp_weighted" ->
-      s"""WITH d AS (SELECT doc_id FROM documents),
-         s AS (SELECT count(*) n, min(doc_id) mn FROM d),
-         e0 AS (
-           SELECT doc_id src, mn + ((doc_id - mn) // 3) dst
-           FROM d CROSS JOIN s
-           UNION ALL
-           SELECT doc_id, mn + ((doc_id - mn) * (doc_id - mn) + 1) % n
-           FROM d CROSS JOIN s),
-         ef AS (SELECT src, dst FROM e0 WHERE src <> dst),
-         eu AS (SELECT DISTINCT src, dst FROM
-                  (SELECT src, dst FROM ef
-                   UNION ALL SELECT dst, src FROM ef)),
+      s"""$LinkCtes$EuCtes
          ew AS (SELECT src, dst, 1 + (src + dst) % 7 w FROM eu),
          w0 AS (SELECT doc_id, CAST(0 AS BIGINT) dist FROM d
                 WHERE doc_id % 31 = 5),
          ${(1 to 3).map(duckSsspIter).mkString(",\n")}
          SELECT doc_id, dist FROM w3 ORDER BY doc_id""",
     "q_graph_jaccard" ->
-      s"""WITH d AS (SELECT doc_id FROM documents),
-         s AS (SELECT count(*) n, min(doc_id) mn FROM d),
-         e0 AS (
-           SELECT doc_id src, mn + ((doc_id - mn) // 3) dst
-           FROM d CROSS JOIN s
-           UNION ALL
-           SELECT doc_id, mn + ((doc_id - mn) * (doc_id - mn) + 1) % n
-           FROM d CROSS JOIN s),
-         ef AS (SELECT src, dst FROM e0 WHERE src <> dst),
-         eu AS (SELECT DISTINCT src, dst FROM
-                  (SELECT src, dst FROM ef
-                   UNION ALL SELECT dst, src FROM ef)),
+      s"""$LinkCtes$EuCtes
          euc AS (${Baskets.capSql("eu", "dst", "src", JaccardHubCap)}),
          inter AS (
            SELECT l.src a, r.src b, count(*) common
@@ -946,68 +790,24 @@ object Graphs extends QueryModule {
          JOIN deg db ON b = db.src
          ORDER BY doc_a, doc_b""",
     "q_kcore" ->
-      s"""WITH d AS (SELECT doc_id FROM documents),
-         s AS (SELECT count(*) n, min(doc_id) mn FROM d),
-         e0 AS (
-           SELECT doc_id src, mn + ((doc_id - mn) // 3) dst
-           FROM d CROSS JOIN s
-           UNION ALL
-           SELECT doc_id, mn + ((doc_id - mn) * (doc_id - mn) + 1) % n
-           FROM d CROSS JOIN s),
-         ef AS (SELECT src, dst FROM e0 WHERE src <> dst),
-         eu AS (SELECT DISTINCT src, dst FROM
-                  (SELECT src, dst FROM ef
-                   UNION ALL SELECT dst, src FROM ef)),
+      s"""$LinkCtes$EuCtes
          n0 AS (SELECT doc_id FROM d),
          ${(1 to 3).map(duckPeel).mkString(",\n")}
          SELECT src AS doc_id, degree FROM deg3 WHERE degree >= 3
          ORDER BY doc_id""",
     "q_graph_bfs" ->
-      s"""WITH d AS (SELECT doc_id FROM documents),
-         s AS (SELECT count(*) n, min(doc_id) mn FROM d),
-         e0 AS (
-           SELECT doc_id src, mn + ((doc_id - mn) // 3) dst
-           FROM d CROSS JOIN s
-           UNION ALL
-           SELECT doc_id, mn + ((doc_id - mn) * (doc_id - mn) + 1) % n
-           FROM d CROSS JOIN s),
-         ef AS (SELECT src, dst FROM e0 WHERE src <> dst),
-         eu AS (SELECT DISTINCT src, dst FROM
-                  (SELECT src, dst FROM ef
-                   UNION ALL SELECT dst, src FROM ef)),
+      s"""$LinkCtes$EuCtes
          b0 AS (SELECT doc_id, CAST(0 AS BIGINT) dist FROM d
                 WHERE doc_id % 31 = 5),
          ${(1 to 3).map(duckBfsIter).mkString(",\n")}
          SELECT doc_id, dist FROM b3 ORDER BY doc_id""",
     "q_label_prop" ->
-      s"""WITH d AS (SELECT doc_id FROM documents),
-         s AS (SELECT count(*) n, min(doc_id) mn FROM d),
-         e0 AS (
-           SELECT doc_id src, mn + ((doc_id - mn) // 3) dst
-           FROM d CROSS JOIN s
-           UNION ALL
-           SELECT doc_id, mn + ((doc_id - mn) * (doc_id - mn) + 1) % n
-           FROM d CROSS JOIN s),
-         ef AS (SELECT src, dst FROM e0 WHERE src <> dst),
-         eu AS (SELECT DISTINCT src, dst FROM
-                  (SELECT src, dst FROM ef
-                   UNION ALL SELECT dst, src FROM ef)),
+      s"""$LinkCtes$EuCtes
          l0 AS (SELECT doc_id, doc_id lbl FROM d),
          ${(1 to 3).map(duckLpaIter).mkString(",\n")}
          SELECT doc_id, lbl AS community FROM l3 ORDER BY doc_id""",
     "q_graph_modularity" ->
-      s"""WITH d AS (SELECT doc_id FROM documents),
-         s AS (SELECT count(*) n, min(doc_id) mn FROM d),
-         e0 AS (
-           SELECT doc_id src, mn + ((doc_id - mn) // 3) dst
-           FROM d CROSS JOIN s
-           UNION ALL
-           SELECT doc_id, mn + ((doc_id - mn) * (doc_id - mn) + 1) % n
-           FROM d CROSS JOIN s),
-         ef AS (SELECT src, dst FROM e0 WHERE src <> dst),
-         eu AS (SELECT DISTINCT src, dst FROM
-                  (SELECT src, dst FROM ef
-                   UNION ALL SELECT dst, src FROM ef)),
+      s"""$LinkCtes$EuCtes
          l0 AS (SELECT doc_id, doc_id lbl FROM d),
          ${(1 to 3).map(duckLpaIter).mkString(",\n")},
          m AS (SELECT count(*) m2 FROM eu),
@@ -1029,14 +829,7 @@ object Graphs extends QueryModule {
          FROM dl LEFT JOIN wi ON dl.lbl = wi.lbl CROSS JOIN m
          ORDER BY community""",
     "q_triangles" ->
-      """WITH d AS (SELECT doc_id FROM documents),
-         s AS (SELECT count(*) n, min(doc_id) mn FROM d),
-         e0 AS (
-           SELECT doc_id src, mn + ((doc_id - mn) // 3) dst
-           FROM d CROSS JOIN s
-           UNION ALL
-           SELECT doc_id, mn + ((doc_id - mn) * (doc_id - mn) + 1) % n
-           FROM d CROSS JOIN s),
+      s"""$LinkCtes
          u AS (SELECT DISTINCT least(src, dst) a, greatest(src, dst) b
                FROM e0 WHERE src <> dst)
          SELECT e1.a AS a, e1.b AS b, e2.b AS c
@@ -1045,14 +838,7 @@ object Graphs extends QueryModule {
          JOIN u e3 ON e3.a = e1.a AND e3.b = e2.b
          ORDER BY 1, 2, 3""",
     "q_pagerank" ->
-      s"""WITH d AS (SELECT doc_id FROM documents),
-         s AS (SELECT count(*) n, min(doc_id) mn FROM d),
-         e0 AS (
-           SELECT doc_id src, mn + ((doc_id - mn) // 3) dst
-           FROM d CROSS JOIN s
-           UNION ALL
-           SELECT doc_id, mn + ((doc_id - mn) * (doc_id - mn) + 1) % n
-           FROM d CROSS JOIN s),
+      s"""$LinkCtes
          e1 AS (SELECT src, dst FROM e0 WHERE src <> dst),
          od AS (SELECT src, count(*) outdeg FROM e1 GROUP BY src),
          e AS (SELECT e1.src, e1.dst, od.outdeg FROM e1 JOIN od USING (src)),

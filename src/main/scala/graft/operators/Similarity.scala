@@ -99,13 +99,17 @@ object Similarity extends QueryModule {
     * probing, binds; `q_ann_rerank` closes that gap to 1.00. The
     * gate, not the fixture numbers, is the deliverable; the oracle
     * pins both measurements bit-exactly. */
-  private def qAnnRecall(s: SparkSession, dir: String): DataFrame = {
+  private def qAnnRecall(s: SparkSession, dir: String): DataFrame =
+    recallAt5(s, dir, qAnnSearchIndexed(s, dir))
+
+  /** The recall@5 gate of an approximate top-5 (qid, cid): per query,
+    * the share of the exact [[qSimilarityTopk]] neighbors it found. */
+  private def recallAt5(s: SparkSession, dir: String,
+                        approx: DataFrame): DataFrame = {
     import s.implicits._
-    val exact = qSimilarityTopk(s, dir).select($"qid", $"cid")
-    val approx = qAnnSearchIndexed(s, dir)
-      .select($"qid".as("aqid"), $"cid".as("acid"))
-    exact
-      .join(approx, $"qid" === $"aqid" && $"cid" === $"acid", "left")
+    val a = approx.select($"qid".as("aqid"), $"cid".as("acid"))
+    qSimilarityTopk(s, dir).select($"qid", $"cid")
+      .join(a, $"qid" === $"aqid" && $"cid" === $"acid", "left")
       .groupBy($"qid")
       .agg(count($"acid").as("n_hit"))
       .select($"qid", $"n_hit",
@@ -122,20 +126,8 @@ object Similarity extends QueryModule {
     * two measured points tell a deployment WHICH knob to turn. Same
     * query sample, same join/aggregate shape, same honest-fixture
     * caveat as [[qAnnRecall]]. */
-  private def qAnnRecallIvf(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val exact = qSimilarityTopk(s, dir).select($"qid", $"cid")
-    val approx = qAnnIvf(s, dir)
-      .select($"qid".as("aqid"), $"cid".as("acid"))
-    exact
-      .join(approx, $"qid" === $"aqid" && $"cid" === $"acid", "left")
-      .groupBy($"qid")
-      .agg(count($"acid").as("n_hit"))
-      .select($"qid", $"n_hit",
-        graft.Det.round6($"n_hit".cast("double") / lit(5.0))
-          .as("recall_at_5"))
-      .orderBy($"qid")
-  }
+  private def qAnnRecallIvf(s: SparkSession, dir: String): DataFrame =
+    recallAt5(s, dir, qAnnIvf(s, dir))
 
   /** q_ann_recall_lsh — the recall@5 gate over the SimHash-bucket LSH
     * path, the third measured point beside [[qAnnRecall]] (IVF-PQ) and
@@ -145,20 +137,8 @@ object Similarity extends QueryModule {
     * family, at which knob settings, earns its candidate-generation
     * savings on THIS corpus. Same join/aggregate shape and honest
     * near-random-fixture caveat as the other two. */
-  private def qAnnRecallLsh(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val exact = qSimilarityTopk(s, dir).select($"qid", $"cid")
-    val approx = qAnnLsh(s, dir)
-      .select($"qid".as("aqid"), $"cid".as("acid"))
-    exact
-      .join(approx, $"qid" === $"aqid" && $"cid" === $"acid", "left")
-      .groupBy($"qid")
-      .agg(count($"acid").as("n_hit"))
-      .select($"qid", $"n_hit",
-        graft.Det.round6($"n_hit".cast("double") / lit(5.0))
-          .as("recall_at_5"))
-      .orderBy($"qid")
-  }
+  private def qAnnRecallLsh(s: SparkSession, dir: String): DataFrame =
+    recallAt5(s, dir, qAnnLsh(s, dir))
 
   /** q_bitext_mine — margin-based parallel-pair mining (the
     * LASER/CCMatrix training-data op, Artetxe & Schwenk 2019,
@@ -1829,7 +1809,18 @@ object Similarity extends QueryModule {
     val prevShuf = s.conf.get(shufKey)
     s.conf.set(shufKey, parts.toString)
     try {
-      connectedComponentsLoop(s, edges)
+      // Convergence WITHOUT a second job or a self-join: labels only ever
+      // DECREASE and the id set is fixed, so Σlbl is strictly monotone
+      // and stalls exactly at the fixpoint. TWO hops per round:
+      // propagation is monotone, so a double hop is still exact — and it
+      // halves the round count on a shallow graph (round 2 cost this
+      // loop 5.4s at sf0.1 with the old join + filter + count shape).
+      // Σlbl stays < 2^63 up to ~10^9 vertices at max doc_id ~10^9; past
+      // that, widen to DECIMAL.
+      graft.Exec.fixpoint(
+        edges.select($"a".as("id")).distinct().withColumn("lbl", $"id"),
+        Int.MaxValue, Seq(edges), ls => ccHop(edges, ccHop(edges, ls)),
+        sum($"lbl"))(graft.Exec.unchanged).result
     } finally s.conf.set(shufKey, prevShuf)
   }
 
@@ -1845,36 +1836,6 @@ object Similarity extends QueryModule {
       .select(edges("a").as("id"), $"lbl")
       .unionByName(ls)
       .groupBy($"id").agg(min($"lbl").as("lbl"))
-  }
-
-  private def connectedComponentsLoop(s: SparkSession,
-                                      edges: DataFrame): DataFrame = {
-    import s.implicits._
-    var labels = edges.select($"a".as("id")).distinct()
-      .withColumn("lbl", $"id").localCheckpoint(true)
-    def hop(ls: DataFrame): DataFrame = ccHop(edges, ls)
-    // Convergence WITHOUT a second job or a self-join: labels only ever
-    // DECREASE and the id set is fixed, so Σlbl is strictly monotone and
-    // stalls exactly at the fixpoint. The sum rides the checkpoint
-    // materialization as an observed metric — each round is ONE job: two
-    // hops + checkpoint (round 2 cost this loop 5.4s at sf0.1 with the
-    // old join + filter + count shape). Σlbl stays < 2^63 up to ~10^9
-    // vertices at max doc_id ~10^9; past that, widen to DECIMAL.
-    var prevSum = -1L
-    var curSum = 0L
-    while (curSum != prevSum) {
-      prevSum = curSum
-      val obs = org.apache.spark.sql.Observation()
-      // TWO hops per materialization: propagation is monotone, so a
-      // double hop is still exact — and it halves the round count on a
-      // shallow graph
-      labels = hop(hop(labels))
-        .observe(obs, sum($"lbl").as("s"))
-        .localCheckpoint(true)
-      curSum = obs.get("s").asInstanceOf[Long]
-    }
-    edges.unpersist()
-    labels
   }
 
   private def qDedupClusters(s: SparkSession, dir: String): DataFrame = {

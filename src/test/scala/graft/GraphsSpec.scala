@@ -10,6 +10,35 @@ class GraphsSpec extends AnyFunSuite {
   private val dir = TestSession.sfDir
   private val Scale = 1000000000000L
 
+  /** The derived link graph rebuilt driver-side — the one plain-Scala
+    * replay of the generator every Graphs query reads: node ids, the
+    * directed edges (src ≠ dst; a pair both maps produce appears twice)
+    * and the symmetrized distinct edges. */
+  private lazy val (ids, ef, eu) = {
+    import spark.implicits._
+    val ids = graft.sources.Tables.load(spark, dir, "documents")
+      .select($"doc_id").as[Long].collect()
+    val (n, mn) = (ids.length.toLong, ids.min)
+    val ef = ids.flatMap { i =>
+      val j = i - mn
+      Seq(i -> (mn + j / 3), i -> (mn + (j * j + 1) % n))
+    }.filter { case (s, d) => s != d }
+    (ids, ef, (ef ++ ef.map(_.swap)).distinct)
+  }
+
+  test("linkGraph: nodes, directed and symmetrized edges equal the plain-Scala replay") {
+    import spark.implicits._
+    val (nodes, directed, sym) = graft.operators.Graphs.linkGraph(spark, dir) { g =>
+      (g.nodes.as[Long].collect(), g.edges.as[(Long, Long)].collect(),
+        g.undirected.as[(Long, Long)].collect())
+    }
+    assert(nodes.sorted.sameElements(ids.sorted), "node set")
+    // compared as multisets: a pair both maps produce appears twice
+    assert(directed.sorted.sameElements(ef.sorted), "directed edges")
+    assert(sym.sorted.sameElements(eu.sorted), "symmetrized distinct edges")
+    assert(sym.forall { case (a, b) => a != b } && sym.length == sym.distinct.length)
+  }
+
   test("pagerank covers every node, respects the damping floor, conserves mass") {
     import spark.implicits._
     val rows = SparkEntry.queries("q_pagerank")(spark, dir)
@@ -38,15 +67,7 @@ class GraphsSpec extends AnyFunSuite {
     val tris = SparkEntry.queries("q_triangles")(spark, dir)
       .as[(Long, Long, Long)].collect()
     assert(tris.nonEmpty)
-    // rebuild the undirected edge set the same way the query derives it
-    val ids = graft.sources.Tables.load(spark, dir, "documents")
-      .select($"doc_id").as[Long].collect()
-    val (n, mn) = (ids.length.toLong, ids.min)
-    val edges = ids.flatMap { i =>
-      val j = i - mn
-      Seq(mn + j / 3, mn + (j * j + 1) % n).filter(_ != i)
-        .map(d => (math.min(i, d), math.max(i, d)))
-    }.toSet
+    val edges = ef.map { case (i, d) => (math.min(i, d), math.max(i, d)) }.toSet
     tris.foreach { case (a, b, c) =>
       assert(a < b && b < c, "triples must be canonical")
       assert(edges((a, b)) && edges((b, c)) && edges((a, c)),
@@ -62,15 +83,7 @@ class GraphsSpec extends AnyFunSuite {
     import spark.implicits._
     val got = SparkEntry.queries("q_graph_bfs")(spark, dir)
       .as[(Long, Long)].collect().toMap
-    // rebuild the symmetrized edge set the same way the query derives it
-    val ids = graft.sources.Tables.load(spark, dir, "documents")
-      .select($"doc_id").as[Long].collect()
-    val (n, mn) = (ids.length.toLong, ids.min)
-    val adj = ids.flatMap { i =>
-      val j = i - mn
-      Seq(mn + j / 3, mn + (j * j + 1) % n).filter(_ != i)
-        .flatMap(d => Seq(i -> d, d -> i))
-    }.groupBy(_._1).map { case (k, vs) => k -> vs.map(_._2).toSet }
+    val adj = eu.groupBy(_._1).map { case (k, vs) => k -> vs.map(_._2).toSet }
     var dist = ids.filter(_ % 31 == 5).map(_ -> 0L).toMap
     assert(dist.nonEmpty, "seed set must be non-empty at this SF")
     for (_ <- 1 to 3) {
@@ -100,14 +113,6 @@ class GraphsSpec extends AnyFunSuite {
     val got = SparkEntry.queries("q_graph_jaccard")(spark, dir)
       .as[(Long, Long, Long, Long, Long, Double)].collect()
     assert(got.nonEmpty)
-    val ids = graft.sources.Tables.load(spark, dir, "documents")
-      .select($"doc_id").as[Long].collect()
-    val (n, mn) = (ids.length.toLong, ids.min)
-    val eu = ids.flatMap { i =>
-      val j = i - mn
-      Seq(mn + j / 3, mn + (j * j + 1) % n).filter(_ != i)
-        .flatMap(d => Seq(i -> d, d -> i))
-    }.distinct
     val adj = eu.groupBy(_._1).map { case (k, vs) => k -> vs.map(_._2).toSet }
     def r6(x: Double) = math.floor(x * 1e6 + 0.5) / 1e6
     val want = (for {
@@ -126,14 +131,6 @@ class GraphsSpec extends AnyFunSuite {
     import spark.implicits._
     val got = SparkEntry.queries("q_kcore")(spark, dir)
       .as[(Long, Long)].collect().toMap
-    val ids = graft.sources.Tables.load(spark, dir, "documents")
-      .select($"doc_id").as[Long].collect()
-    val (n, mn) = (ids.length.toLong, ids.min)
-    val eu = ids.flatMap { i =>
-      val j = i - mn
-      Seq(mn + j / 3, mn + (j * j + 1) % n).filter(_ != i)
-        .flatMap(d => Seq(i -> d, d -> i))
-    }.distinct
     var nodes = ids.toSet
     var lastDeg = Map.empty[Long, Int]
     for (_ <- 1 to 3) {
@@ -220,7 +217,8 @@ class GraphsSpec extends AnyFunSuite {
       s"fixpoint must reach every node at its true distance: $conv")
     val threeRounds = (1 to 3).foldLeft(
       seeds.select($"doc_id", org.apache.spark.sql.functions.lit(0L).as("dist")))(
-      (r, _) => graft.operators.Graphs.bfsStep(eu, r))
+      (r, _) => graft.operators.Graphs.ssspStep(
+        eu.withColumn("w", org.apache.spark.sql.functions.lit(1L)), r))
       .as[(Long, Long)].collect().toMap
     assert(threeRounds == (0L to 3L).map(i => i -> i).toMap,
       "the fixed-round form must stop at 3 hops on this path")
@@ -256,7 +254,7 @@ class GraphsSpec extends AnyFunSuite {
     val fix = graft.operators.Graphs.labelPropConverged(euTri, maxRounds = 50)
     assert(fix.converged && !fix.cycled && fix.rounds < 50,
       "triangle must reach a witnessed fixpoint")
-    val mt = fix.labels.as[(Long, Long)].collect().toMap
+    val mt = fix.result.as[(Long, Long)].collect().toMap
     assert(mt.values.toSet.size == 1, s"one community expected: $mt")
     // synchronous LPA on an isolated edge swaps labels forever — the
     // digest-vs-two-rounds-ago witness must catch it, not maxRounds
@@ -278,15 +276,7 @@ class GraphsSpec extends AnyFunSuite {
     val dir = TestSession.sfDir
     val labels = SparkEntry.queries("q_label_prop")(spark, dir)
       .as[(Long, Long)].collect().toMap
-    // rebuild the SAME derived symmetrized edge list in plain Scala
-    val ids = graft.sources.Tables.load(spark, dir, "documents")
-      .select($"doc_id").as[Long].collect().sorted
-    val n = ids.length; val mn = ids.min
-    val dirEdges = ids.flatMap { id =>
-      val j = id - mn
-      Seq(id -> (mn + j / 3), id -> (mn + (j * j + 1) % n))
-    }.filter { case (a, b) => a != b }
-    val eu = (dirEdges ++ dirEdges.map(_.swap)).distinct
+    val n = ids.length
     val m2 = eu.length.toLong
     val deg = eu.groupBy(_._1).view.mapValues(_.size.toLong).toMap
     def r6(x: Double) = math.floor(x * 1e6 + 0.5) / 1e6
@@ -331,15 +321,7 @@ class GraphsSpec extends AnyFunSuite {
     // law fixed-round ⊇ fixpoint (peeling is monotone, so more rounds
     // only shrink) plus the core property (every survivor has induced
     // degree ≥ 3 within the survivor set)
-    val ids = graft.sources.Tables.load(spark, dir, "documents")
-      .select($"doc_id").as[Long].collect()
-    val (n, mn) = (ids.length.toLong, ids.min)
-    val und = ids.flatMap { i =>
-      val j = i - mn
-      Seq(mn + j / 3, mn + (j * j + 1) % n).filter(_ != i).map(d => (i, d))
-    }
-    val eu = (und ++ und.map(_.swap)).distinct.toSeq.toDF("src", "dst")
-    val res = graft.operators.Graphs.kcoreConverged(eu, 3)
+    val res = graft.operators.Graphs.kcoreConverged(eu.toSeq.toDF("src", "dst"), 3)
     assert(res.converged, "corpus graph must reach its 3-core fixpoint")
     val core = res.result.as[(Long, Long)].collect().toMap
     val threeRound = SparkEntry.queries("q_kcore")(spark, dir)
@@ -347,7 +329,7 @@ class GraphsSpec extends AnyFunSuite {
     assert(core.keySet.subsetOf(threeRound.keySet),
       "fixpoint core must nest inside the fixed-round peel")
     // induced-degree law on the fixpoint
-    val es = eu.as[(Long, Long)].collect().toSet
+    val es = eu.toSet
     core.keys.foreach { v =>
       val indeg = core.keys.count(u => u != v && es((v, u)))
       assert(indeg >= 3, s"node $v has induced degree $indeg < 3")
@@ -387,25 +369,10 @@ class GraphsSpec extends AnyFunSuite {
         "proves nothing)")
   }
 
-  /** The derived directed link graph, rebuilt driver-side exactly as
-    * every Graphs query derives it. */
-  private def derivedEdges(): (Array[Long], Array[(Long, Long)]) = {
-    import spark.implicits._
-    val ids = graft.sources.Tables.load(spark, dir, "documents")
-      .select($"doc_id").as[Long].collect()
-    val (n, mn) = (ids.length.toLong, ids.min)
-    val ef = ids.flatMap { i =>
-      val j = i - mn
-      Seq(i -> (mn + j / 3), i -> (mn + (j * j + 1) % n))
-    }.filter { case (s, d) => s != d }
-    (ids, ef)
-  }
-
   test("hits: exact match with a 2-round driver-side replica; max scores are 1") {
     import spark.implicits._
     val got = SparkEntry.queries("q_hits")(spark, dir)
       .as[(Long, Long, Long, Double, Double)].collect()
-    val (ids, ef) = derivedEdges()
     assert(got.length == ids.length)
     var h = ids.map(_ -> 1000000L).toMap
     var a = Map.empty[Long, Long].withDefaultValue(0L)
@@ -434,9 +401,7 @@ class GraphsSpec extends AnyFunSuite {
     import spark.implicits._
     val got = SparkEntry.queries("q_sssp_weighted")(spark, dir)
       .as[(Long, Long)].collect().toMap
-    val (ids, ef) = derivedEdges()
-    val ew = (ef ++ ef.map(e => (e._2, e._1))).distinct
-      .map { case (s, d) => (s, d, 1L + (s + d) % 7L) }
+    val ew = eu.map { case (s, d) => (s, d, 1L + (s + d) % 7L) }
     var dist = ids.filter(_ % 31 == 5).map(_ -> 0L).toMap
     (1 to 3).foreach { _ =>
       val relaxed = ew.flatMap { case (s, d, w) =>

@@ -676,8 +676,8 @@ class PlanShapeSpec extends AnyFunSuite {
         Seq((1L, 1L), (2L, 2L)).toDF("id", "lbl")),
       "bpe-best-pair" -> graft.operators.TextOps.bpeBestPair(
         Seq(("(a)(b)(c)", 3L), ("(b)(c)", 2L)).toDF("enc", "wc")),
-      "bfs-step" -> graft.operators.Graphs.bfsStep(
-        eu, Seq((1L, 0L)).toDF("doc_id", "dist")),
+      "bfs-step" -> graft.operators.Graphs.ssspStep(
+        eu.withColumn("w", lit(1L)), Seq((1L, 0L)).toDF("doc_id", "dist")),
       "kcore-step" -> graft.operators.Graphs.kcoreStep(
         eu, Seq(1L, 2L, 3L).toDF("doc_id"), 2),
       "pagerank-iteration" -> {

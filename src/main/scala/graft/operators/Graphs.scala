@@ -49,9 +49,12 @@ object Graphs extends QueryModule {
   private[graft] final class LinkGraph private[Graphs] (docs: DataFrame) {
     private val held = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
 
-    /** Persist `df` until the [[linkGraph]] block exits. */
+    /** Persist `df` until the [[linkGraph]] block exits. A relation that
+      * is already cached (an identity transform of a held one) is left to
+      * its owner. */
     def hold(df: DataFrame): DataFrame = {
-      held += df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      if (df.storageLevel == org.apache.spark.storage.StorageLevel.NONE)
+        held += df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       df
     }
 

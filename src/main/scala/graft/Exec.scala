@@ -1,7 +1,8 @@
 package graft
 
 import org.apache.spark.sql.{Column, DataFrame, Observation}
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.functions.{col, count, lit}
+import org.apache.spark.sql.graft.SizedCheckpoint
 
 /** Result-lifecycle seam for declared queries.
   *
@@ -165,7 +166,12 @@ object Exec {
     * row data, and lineage is truncated so round r never replans rounds
     * 1..r−1. The state keeps `init`'s columns: a step may emit extra
     * columns for its witness, and they are dropped before the
-    * checkpoint.
+    * checkpoint. The same job counts the state's rows, and the state's
+    * size estimate is that count times its row width
+    * ([[org.apache.spark.sql.graft.SizedCheckpoint]]): a checkpoint
+    * otherwise keeps its origin plan's estimate, and a step that joins
+    * the previous state twice (PageRank's Σ|Δpr|) would square it every
+    * round until planning stalls in the estimate's arithmetic.
     *
     * After each round `stop` sees the witness values of every round so
     * far, newest first; the loop ends when it answers, or after
@@ -177,14 +183,22 @@ object Exec {
     try {
       require(maxRounds >= 1, "a fixpoint loop needs at least one round")
       val cols = init.columns.map(col)
-      var cur = init.localCheckpoint(true)
+      // one job: the state's columns checkpointed, with the row count and
+      // `metrics` observed on the way
+      def materialize(df: DataFrame, metrics: Column*): (DataFrame, Map[String, Any]) = {
+        val obs = Observation()
+        val cp = df.observe(obs, count(lit(1)).as("rows"), metrics: _*)
+          .select(cols: _*).localCheckpoint(true)
+        val seen = obs.get
+        (SizedCheckpoint(cp, seen("rows").asInstanceOf[Long]), seen)
+      }
+      var cur = materialize(init)._1
       var history = List.empty[Any]
       var verdict = Option.empty[Stop]
       while (verdict.isEmpty && history.length < maxRounds) {
-        val obs = Observation()
-        cur = step(cur).observe(obs, witness.as("w")).select(cols: _*)
-          .localCheckpoint(true)
-        history = obs.get("w") :: history
+        val (next, seen) = materialize(step(cur), witness.as("w"))
+        cur = next
+        history = seen("w") :: history
         verdict = stop.lift(history)
       }
       FixpointResult(cur, history.length, verdict.contains(Settled),
@@ -199,5 +213,5 @@ object Exec {
   // control): the exchange it removes is KB-sized while the downstream
   // aggregate loses its partial/final overlap. Removed rather than kept
   // as dead API; the record lives here, at the would-be call site
-  // (Similarity.pqCodesLookups), and in OPTIMIZATION_r17.md.
+  // (Similarity.IvfPq.train and encode), and in OPTIMIZATION_r17.md.
 }

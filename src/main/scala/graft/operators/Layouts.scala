@@ -33,7 +33,7 @@ object Layouts extends QueryModule {
     *    never race on each other's `overwrite` — the round-6 red suite
     *    was exactly two JVMs overwriting one shared bucketed table.
     * The build amortizes within a JVM (verify / bench each build once);
-    * [[reapStaleRoots]] deletes dead processes' roots once per JVM so a
+    * [[graft.Artifacts.reap]] deletes dead processes' roots once per JVM so a
     * long-lived host doesn't accumulate one full layout copy per past
     * run (round-6 review). Local-fs
     * tooling only (tests/verify/bench read testdata from local disk); a
@@ -49,83 +49,8 @@ object Layouts extends QueryModule {
       "_" + ProcessHandle.current().pid()
   }
 
-  /** One-shot per JVM: delete `/tmp/graft_layout_*_<pid>` roots, and
-    * under published `/tmp/graft_ann_index_*` roots the UNREFERENCED
-    * `gen-<pid>` generation dirs (crash-orphaned or race-loser builds —
-    * see [[graft.Artifacts.buildOnce]]) whose owning process is gone.
-    * The pid suffix is the owning JVM's isolation key, so a dead pid's
-    * dir can never be written again — reaping it is safe; a LIVE pid's
-    * dir is never touched, and the generation the pointer references is
-    * never touched regardless of pid (it IS the shared artifact —
-    * cross-session reuse is its point). Failures are ignored: cleanup
-    * is best-effort hygiene, never a correctness dependency. */
-  private[operators] lazy val reapStaleRoots: Unit = {
-    val tmpRoots = Option(new java.io.File("/tmp").listFiles())
-      .getOrElse(Array.empty)
-    def deadPidSuffix(name: String, sep: Char): Boolean = {
-      val pid = name.substring(name.lastIndexOf(sep) + 1)
-      pid.toLongOption.exists(p =>
-        p != ProcessHandle.current().pid() && ProcessHandle.of(p).isEmpty)
-    }
-    val staleLayouts = tmpRoots
-      .filter(f => f.getName.startsWith("graft_layout_") &&
-        deadPidSuffix(f.getName, '_'))
-    val staleGens = tmpRoots
-      .filter(_.getName.startsWith("graft_ann_index_"))
-      .flatMap { root =>
-        def readLine(f: java.io.File): String =
-          try {
-            if (f.isFile)
-              new String(java.nio.file.Files.readAllBytes(f.toPath),
-                "UTF-8").trim
-            else ""
-          } catch { case scala.util.control.NonFatal(_) => "" }
-        // the live generation AND its whole _PARENT chain are the
-        // artifact (delta appends union the chain at read time) —
-        // protect every member, reap only dead-pid gens OUTSIDE it
-        val protectedGens = {
-          val out = scala.collection.mutable.Set[String]()
-          var cur = readLine(new java.io.File(root, graft.Artifacts.Pointer))
-          while (cur.nonEmpty && !out.contains(cur)) {
-            out += cur
-            cur = readLine(new java.io.File(new java.io.File(root, cur),
-              "_PARENT"))
-          }
-          out
-        }
-        Option(root.listFiles()).getOrElse(Array.empty)
-          .filter { g =>
-            // gen names: gen-<pid> (buildOnce) or gen-<pid>-<seq>
-            // (publish) — the pid is always the SECOND dash segment
-            val pid = g.getName.split('-').lift(1).flatMap(_.toLongOption)
-            g.isDirectory && g.getName.startsWith("gen-") &&
-              !protectedGens.contains(g.getName) && pid.exists(p =>
-                p != ProcessHandle.current().pid() &&
-                  ProcessHandle.of(p).isEmpty)
-          }
-      }
-    (staleLayouts ++ staleGens).foreach { f =>
-      {
-        // NonFatal, not IOException: Files.walk consumption surfaces a
-        // concurrent reaper's deletions as UncheckedIOException (a
-        // RuntimeException) — two JVMs racing on the same dead root is
-        // exactly the scenario here, and best-effort means neither may
-        // crash the query build. The stream must also be closed, or the
-        // directory handles leak per reap.
-        try {
-          import java.nio.file.{Files, Path}
-          import java.util.Comparator
-          val walk = Files.walk(f.toPath)
-          try walk.sorted(Comparator.reverseOrder[Path]())
-            .forEach(p => Files.deleteIfExists(p))
-          finally walk.close()
-        } catch { case scala.util.control.NonFatal(_) => () }
-      }
-    }
-  }
-
   private[operators] def layoutRoot(dir: String): String = {
-    reapStaleRoots
+    graft.Artifacts.reapTmp
     s"/tmp/graft_layout_${layoutKey(dir)}"
   }
 

@@ -344,20 +344,19 @@ object StreamRun {
     // chain-resolved read: each append published a DELTA generation
     // linking its parent (O(k) write); the union must equal the full
     // frozen-codebook assignment
-    val (coarseL, chainCells, pqL, chainCodes) =
-      Similarity.annIndexParts(spark, idxRoot)
+    val opened = Similarity.annIndexOpen(spark, idxRoot)
     def sortedRows(df: org.apache.spark.sql.DataFrame) =
       df.collect().toSeq.map(_.toSeq).sortBy(_.toString)
-    val cellsMatch = sortedRows(chainCells) ==
+    val cellsMatch = sortedRows(opened.cells) ==
       sortedRows(Similarity.assignCells(vecsAll, Similarity.Codebook.of(coarse0)))
-    val codesMatch = sortedRows(chainCodes) ==
+    val codesMatch = sortedRows(opened.codes) ==
       sortedRows(Similarity.pqAssign(Similarity.pqSubspaces(vecsAll),
         Similarity.Codebook.of(pq0))
         .select($"vec_id", $"m", $"cell".as("code")))
     val codebooksFrozen =
-      sortedRows(coarseL) == sortedRows(coarse0) &&
-        sortedRows(pqL) == sortedRows(pq0)
-    val chainLen = Similarity.annIndexChain(spark, idxRoot, live).size
+      sortedRows(opened.coarse.frame(spark)) == sortedRows(coarse0) &&
+        sortedRows(opened.pq.frame(spark)) == sortedRows(pq0)
+    val chainLen = graft.Artifacts.chain(spark, idxRoot).size
     // round 16: AUTO-RETRAIN through the maintenance operator — by now
     // the chain has appended 2/3 of the corpus over a 1/3 base, far
     // past the 20%-of-base backstop, so ONE more maintained delta must
@@ -367,8 +366,7 @@ object StreamRun {
     val corpusF = vecsAll.union(extraF)
     val (liveM, retrainedF) =
       Similarity.annIndexMaintain(spark, idxRoot, extraF, corpusF)
-    val chainAfterMaintain =
-      Similarity.annIndexChain(spark, idxRoot, liveM).size
+    val chainAfterMaintain = graft.Artifacts.chain(spark, idxRoot).size
     val maintainedCells = spark.read.parquet(s"$liveM/cells").count()
     val maintainCovers = maintainedCells == corpusF.count()
     vecsAll.unpersist(false)

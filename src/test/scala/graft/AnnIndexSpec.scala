@@ -205,23 +205,22 @@ class AnnIndexSpec extends AnyFunSuite {
       // write, the log-structured shape) and links its parent
       assert(spark.read.parquet(s"$g2/cells").count() == deltaVecs.count(),
         "a delta generation must not rewrite the base assignments")
-      assert(Similarity.annIndexChain(spark, root, g2) == Seq(g2, g1),
+      assert(Artifacts.chain(spark, root) == Seq(g2, g1),
         "the parent chain must walk live -> base")
       // chain-resolved (base + delta) assignments ≡ assigning ALL
       // vectors against the SAME frozen codebooks — the append loses
       // nothing vs a full re-assignment pass
-      val (coarse, chainCells, pqCent, chainCodes) =
-        Similarity.annIndexParts(spark, root)
-      val wantCells = Similarity.assignCells(vecs, Similarity.Codebook.of(coarse))
+      val opened = Similarity.annIndexOpen(spark, root)
+      val wantCells = Similarity.assignCells(vecs, opened.coarse)
         .as[(Long, Long)].collect().toSeq.sorted
-      val gotCells = chainCells
+      val gotCells = opened.cells
         .as[(Long, Long)].collect().toSeq.sorted
       assert(gotCells == wantCells)
       val wantCodes = Similarity
-        .pqAssign(Similarity.pqSubspaces(vecs), Similarity.Codebook.of(pqCent))
+        .pqAssign(Similarity.pqSubspaces(vecs), opened.pq)
         .select($"vec_id", $"m", $"cell".as("code"))
         .as[(Long, Int, Long)].collect().toSeq.sorted
-      val gotCodes = chainCodes
+      val gotCodes = opened.codes
         .as[(Long, Int, Long)].collect().toSeq.sorted
       assert(gotCodes == wantCodes)
       // the superseded generation stays on disk — it IS the chain's base
@@ -234,14 +233,14 @@ class AnnIndexSpec extends AnyFunSuite {
     val s = spark.newSession()
     SparkEntry.queries("q_ann_search_indexed")(s, dir).count()
     val root = operators.Similarity.annIndexPath(s, dir)
-    val books = operators.Similarity.annIndexCodebooks(s, root)
+    val books = operators.Similarity.annIndexOpen(s, root)
     val parts = actionParts(s) {
       SparkEntry.queries("q_ann_search_indexed")(s, dir).count()
     }
     assert(!parts.exists(p => p.endsWith("/coarse") || p.endsWith("/pq")),
       s"the second search collected a stored codebook: $parts")
-    val again = operators.Similarity.annIndexCodebooks(s, root)
-    assert((again._1 eq books._1) && (again._2 eq books._2),
+    val again = operators.Similarity.annIndexOpen(s, root)
+    assert((again.coarse eq books.coarse) && (again.pq eq books.pq),
       "the session must reuse its codebooks and their broadcast handles")
   }
 

@@ -40,8 +40,7 @@ class AnnMaintainSpec extends AnyFunSuite {
     .createTempDirectory("graft_annmaint").toString + "/idx"
 
   private def chainLen(root: String): Int =
-    Similarity.annIndexChain(spark, root,
-      Artifacts.ready(spark, root).get).size
+    Artifacts.chain(spark, root).size
 
   private def sortedRows(df: org.apache.spark.sql.DataFrame) =
     df.collect().toSeq.map(_.toSeq).sortBy(_.toString)
@@ -72,12 +71,12 @@ class AnnMaintainSpec extends AnyFunSuite {
     // is bit-identical (deterministic training)
     val fresh = freshRoot()
     Similarity.annIndexBuild(spark, fresh, corpus)
-    val (cM, cellsM, pqM, codesM) = Similarity.annIndexParts(spark, root)
-    val (cF, cellsF, pqF, codesF) = Similarity.annIndexParts(spark, fresh)
-    assert(sortedRows(cM) == sortedRows(cF), "coarse codebooks differ")
-    assert(sortedRows(pqM) == sortedRows(pqF), "pq codebooks differ")
-    assert(sortedRows(cellsM) == sortedRows(cellsF), "cells differ")
-    assert(sortedRows(codesM) == sortedRows(codesF), "codes differ")
+    val m = Similarity.annIndexOpen(spark, root)
+    val f = Similarity.annIndexOpen(spark, fresh)
+    assert(m.coarse.rows == f.coarse.rows, "coarse codebooks differ")
+    assert(m.pq.rows == f.pq.rows, "pq codebooks differ")
+    assert(sortedRows(m.cells) == sortedRows(f.cells), "cells differ")
+    assert(sortedRows(m.codes) == sortedRows(f.codes), "codes differ")
     // the drift table resets with the collapse: one self-referencing
     // generation, no standing verdict
     val d = Similarity.annIndexDrift(spark, root)

@@ -90,4 +90,40 @@ class ArtifactsSpec extends AnyFunSuite {
     assert(!new java.io.File(ourGen).exists(),
       "the loser's generation must be dropped, not left to accumulate")
   }
+
+  test("the reaper deletes dead processes' scratch outside the live chain, nothing else") {
+    val tmp = java.nio.file.Files.createTempDirectory("graft_reap").toFile
+    val dead = {
+      val p = new ProcessBuilder("true").start()
+      p.waitFor()
+      p.pid()
+    }
+    assert(ProcessHandle.of(dead).isEmpty, s"pid $dead of a finished child is still live")
+    val me = ProcessHandle.current().pid()
+    def dir(parent: java.io.File, name: String): java.io.File = {
+      val f = new java.io.File(parent, name)
+      f.mkdirs()
+      java.nio.file.Files.write(new java.io.File(f, "data").toPath, "x".getBytes)
+      f
+    }
+    def line(f: java.io.File, name: String, v: String): Unit =
+      java.nio.file.Files.write(new java.io.File(f, name).toPath, v.getBytes)
+    val idx = new java.io.File(tmp, "graft_ann_index_0123")
+    // the live chain: a delta on a base, both of the dead pid; the
+    // base links back to the delta, and the walk stops on the repeat
+    val base = dir(idx, s"gen-$dead")
+    val delta = dir(idx, s"gen-$dead-1")
+    line(delta, "_PARENT", base.getName)
+    line(base, "_PARENT", delta.getName)
+    line(idx, Artifacts.Pointer, delta.getName)
+    val orphan = dir(idx, s"gen-$dead-2")
+    val mine = dir(idx, s"gen-$me-3")
+    val deadLayout = dir(tmp, s"graft_layout_abc_$dead")
+    val myLayout = dir(tmp, s"graft_layout_abc_$me")
+    Artifacts.reap(tmp)
+    Seq(base, delta, mine, myLayout).foreach(f =>
+      assert(f.exists(), s"${f.getName} must survive"))
+    Seq(orphan, deadLayout).foreach(f =>
+      assert(!f.exists(), s"${f.getName} must be reaped"))
+  }
 }

@@ -299,6 +299,22 @@ class GraphsSpec extends AnyFunSuite {
     assert(got.map(_._2).sum == n, "communities partition the nodes")
   }
 
+  test("pagerankConverged: the state's size estimate stays rows × row width") {
+    // each round's checkpoint used to keep its origin plan's estimate,
+    // and Σ|Δpr| joins the previous state twice, so the estimate was
+    // squared every round (its digit count doubling) until planning
+    // stalled in the arithmetic
+    val res = graft.operators.Graphs.linkGraph(spark, dir) { g =>
+      graft.operators.Graphs.pagerankConverged(g.edges, g.nodes,
+        tolUnits = 0L, maxRounds = 12)
+    }
+    val rows = res.result.count()
+    val width = 8 + res.result.schema.fields.map(_.dataType.defaultSize).sum
+    val est = res.result.queryExecution.optimizedPlan.stats.sizeInBytes
+    assert(rows > 0 && est <= BigInt(4) * rows * width,
+      s"state estimate $est B after ${res.rounds} rounds of $rows rows × $width B")
+  }
+
   test("converged-loop APIs fail fast on a degenerate round budget") {
     import spark.implicits._
     val eu = Seq((1L, 2L), (2L, 1L)).toDF("src", "dst")

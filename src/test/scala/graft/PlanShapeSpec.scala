@@ -107,6 +107,23 @@ class PlanShapeSpec extends AnyFunSuite {
       p.contains("BroadcastHashJoin"), "no equi-join on the bin key found")
   }
 
+  test("q_ann_search_indexed joins the ADC lookup table on (qid, m, code), after the probed pairs") {
+    // pairs ⨝ codes first, then the lookups on (qid, m, code): a join of
+    // the codes with the lookups on (m, code) alone would build |Q|·N·M
+    // rows before the pairs cut them down
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.joins.BaseJoinExec
+    def joinKeys(p: SparkPlan): Seq[Set[String]] = (p match {
+      case a: AdaptiveSparkPlanExec => joinKeys(a.inputPlan)
+      case j: BaseJoinExec => Seq(j.leftKeys.flatMap(_.references.map(_.name)).toSet)
+      case _ => Nil
+    }) ++ p.children.flatMap(joinKeys)
+    val keys = joinKeys(planOf("q_ann_search_indexed"))
+    assert(keys.contains(Set("qid", "m", "code")), s"no (qid, m, code) join: $keys")
+    assert(!keys.contains(Set("m", "code")), s"a join keyed on (m, code) alone: $keys")
+  }
+
   test("q_ann_ivf broadcasts the codebook at every Lloyd round, never the corpus") {
     // Training runs on the driver (one job per Lloyd round), and every
     // task reads the codebook through ONE broadcast handle carried by an
